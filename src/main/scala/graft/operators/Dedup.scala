@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   *    verification restricted to candidates;
   *  - SimHash: per-row 64-bit sketch via the same kernel family,
   *    near-dup = equal sketch (or banded Hamming buckets);
-  *  - exact n-gram Jaccard: explode distinct shingles → self-join on
-  *    shingle → per-pair intersection counts; the O(pairs) step only
-  *    materializes pairs that share ≥1 shingle.
+  *  - exact n-gram Jaccard / containment ([[Dedup.setSimPairs]]):
+  *    explode distinct shingles → self-join on shingle → per-pair
+  *    intersection counts; the O(pairs) step only materializes pairs
+  *    that share ≥1 shingle.
   */
 object Dedup {
 
@@ -162,7 +163,7 @@ object Dedup {
 
   /** Candidate near-duplicate pairs via MinHash LSH, with the MinHash
     * Jaccard estimate. `threshold` filters on the estimate;
-    * verification against exact Jaccard is [[jaccardPairs]]'s job.
+    * verification against exact Jaccard is [[verifyCandidates]]' job.
     */
   def minHashCandidates(
       df: DataFrame,
@@ -538,94 +539,105 @@ object Dedup {
       .distinct()
   }
 
-  // ── exact n-gram Jaccard ──────────────────────────────────────────
-  /** Exact word-k-gram Jaccard for all pairs sharing at least one
-    * shingle. shuffle profile: explode shingles (map-side), self-join
-    * grouped on the shingle hash, then per-pair count aggregation.
-    * At corpus scale, run AFTER LSH restricts the pair set; standalone
-    * it is the oracle-verifiable ground truth.
+  // ── exact set-similarity joins ────────────────────────────────────
+  /** The similarity a [[setSimPairs]] join scores pairs by. `scores`
+    * are its output columns over the pair's shared-gram count
+    * `n_common` and set sizes `n_a`/`n_b`; a pair is kept iff any score
+    * reaches the threshold. `probesFull`: on the prefix route a
+    * document's prefix probes the other side's FULL postings, not just
+    * its prefix.
     */
-  def jaccardPairs(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int = 3,
-      threshold: Double = 0.0
-  ): DataFrame = {
-    // join on the 8-byte shingle hash, not the shingle string — the
-    // shuffle moves fixed-width keys; xxhash64 collisions are
-    // negligible for intersection COUNTING at these cardinalities.
-    // localCheckpoint: this frame feeds three consumers (sizes + both
-    // self-join sides); materializing once replaces three evaluations
-    // of the regex-split/shingle/hash pipeline with one.
-    val sh = df
-      .select(col(idCol).as("id"),
-        explode(graft.functions.Sketches.gramXxHashesCol(col(textCol), k)).as("h"))
-      .localCheckpoint()
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n")) // shingles are distinct already
-    val pairs = sh.alias("x")
-      .join(sh.alias("y"), col("x.h") === col("y.h") && col("x.id") < col("y.id"))
-      .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .agg(count(lit(1)).as("n_common"))
-    pairs
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-      .withColumn("jaccard", col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "n_common", "jaccard")
-  }
+  sealed abstract class SetSimMeasure(
+      private[graft] val probesFull: Boolean, private[graft] val scores: (String, Column)*)
+
+  /** |A∩B| / |A∪B|: reported as `jaccard`. Prefix ⋈ prefix. */
+  case object Jaccard extends SetSimMeasure(false,
+    "jaccard" -> col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
 
   /** Asymmetric near-dup: n-gram CONTAINMENT (Broder's measure).
     * Jaccard misses a short document wholly embedded in a much longer
     * one (the union term drowns the overlap); containment
     * |A∩B| / |A| is direction-aware and catches exactly that quote /
-    * excerpt / page-within-crawl shape. Emits both directions and
-    * filters on the larger; same fixed-width hash-join scale shape as
-    * [[jaccardPairs]] — the shuffle key is the 8-byte shingle hash.
+    * excerpt / page-within-crawl shape. Reports both directions
+    * (`cont_a`, `cont_b`) and keeps a pair on the larger. Prefix ⋈ FULL
+    * postings: a qualifying pair must share a gram in the SMALLER doc's
+    * prefix, but not necessarily in the larger doc's.
     */
-  def containmentPairs(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int = 3,
-      threshold: Double = 0.5
-  ): DataFrame = {
-    val sh = df
-      .select(col(idCol).as("id"),
-        explode(graft.functions.Sketches.gramXxHashesCol(col(textCol), k)).as("h"))
-      .localCheckpoint()
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))
-    val pairs = sh.alias("x")
+  case object Containment extends SetSimMeasure(true,
+    "cont_a" -> col("n_common").cast("double") / col("n_a"),
+    "cont_b" -> col("n_common").cast("double") / col("n_b"))
+
+  // NaN fails both comparisons; above 1 the prefix length goes negative
+  private def requireThreshold(threshold: Double): Unit =
+    require(threshold >= 0 && threshold <= 1, s"threshold must be in [0, 1], got $threshold")
+
+  // join on the 8-byte shingle hash, not the shingle string — the
+  // shuffle moves fixed-width keys; xxhash64 collisions are negligible
+  // for intersection COUNTING at these cardinalities. k = 0 would emit
+  // only the empty gram: every document the same one-element set,
+  // every pair a silent jaccard 1.0.
+  private def gramHashes(textCol: String, k: Int): Column = {
+    require(k >= 1, s"shingle width k must be >= 1, got $k")
+    explode(graft.functions.Sketches.gramXxHashesCol(col(textCol), k)).as("h")
+  }
+
+  /** (id, h): one row per distinct gram hash of each document. */
+  private def postings(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
+    df.select(col(idCol).as("id"), gramHashes(textCol, k))
+
+  private def sizesOf(sh: DataFrame): DataFrame =
+    sh.groupBy("id").agg(count(lit(1)).as("n")) // postings are distinct already
+
+  /** The scoring core of every exact pair join: self-join the postings
+    * grouped on the gram hash, count per pair, keep only `cand` pairs
+    * when given, join both sides' sizes, score and filter by `measure`.
+    * `sizes` is (id, n, extra…); each extra column comes out per side
+    * after the scores (m → m_a, m_b).
+    */
+  private def scored(sh: DataFrame, sizes: DataFrame, measure: SetSimMeasure,
+      threshold: Double, cand: Option[DataFrame] = None): DataFrame = {
+    val counts = sh.alias("x")
       .join(sh.alias("y"), col("x.h") === col("y.h") && col("x.id") < col("y.id"))
       .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .agg(count(lit(1)).as("n_common"))
-    pairs
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-      .withColumn("cont_a", col("n_common").cast("double") / col("n_a"))
-      .withColumn("cont_b", col("n_common").cast("double") / col("n_b"))
-      .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)
-      .select("id_a", "id_b", "n_common", "cont_a", "cont_b")
+    def side(s: String) = sizes.select(sizes.columns.toSeq.map(c => col(c).as(s"${c}_$s")): _*)
+    val joined = cand.fold(counts)(counts.join(_, Seq("id_a", "id_b"), "left_semi"))
+      .join(side("a"), "id_a")
+      .join(side("b"), "id_b")
+    val extra = sizes.columns.drop(2).flatMap(c => Seq(s"${c}_a", s"${c}_b"))
+    measure.scores.foldLeft(joined) { case (d, (name, c)) => d.withColumn(name, c) }
+      .filter(measure.scores.map { case (name, _) => col(name) >= threshold }.reduce(_ || _))
+      .select((Seq("id_a", "id_b", "n_common") ++ measure.scores.map(_._1) ++ extra).map(col): _*)
   }
 
-  // ── size gates for the exact-pair family ──────────────────────────
-  /** Exact fan-out of the all-shingle self-join [[jaccardPairs]] /
-    * [[containmentPairs]] would execute: Σ_h n_h² over the shingle-
-    * hash postings (ordered-pair count, which upper-bounds the
-    * unordered `id_a < id_b` join). ONE narrow pass — explode to
-    * 8-byte hashes, partial-aggregated count per hash, one scalar sum
-    * — so the gate costs a corpus scan, never the join it is guarding
-    * against. This is the "pre-filter before joining facts" discipline
-    * (reference `create_f_get_event_changes.sql:26-60`) applied to the
-    * one operator family whose cost is quadratic in duplicate
-    * multiplicity.
+  /** Exact verification confined to the candidate neighborhood: the
+    * postings are semi-joined down to documents in some `cand` pair
+    * before the pair-counting join, so the quadratic step only ever
+    * touches the candidates, never the corpus.
     */
-  def exactPairFanout(df: DataFrame, idCol: String, textCol: String, k: Int = 3): Long =
+  private def verified(
+      sh: DataFrame, cand: DataFrame, measure: SetSimMeasure, threshold: Double): DataFrame = {
+    val ids = cand.select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
+    val shC = sh.join(ids, Seq("id"), "left_semi").localCheckpoint()
+    scored(shC, sizesOf(shC), measure, threshold, Some(cand))
+  }
+
+  /** Exact fan-out of the all-pairs self-join [[setSimPairs]] would
+    * execute: Σ_h n_h² over the shingle-hash postings (ordered-pair
+    * count, which upper-bounds the unordered `id_a < id_b` join). ONE
+    * narrow pass — explode to 8-byte hashes, partial-aggregated count
+    * per hash, one scalar sum — so the gate costs a corpus scan, never
+    * the join it is guarding against. This is the "pre-filter before
+    * joining facts" discipline (reference
+    * `create_f_get_event_changes.sql:26-60`) applied to the one
+    * operator family whose cost is quadratic in duplicate multiplicity.
+    */
+  def exactPairFanout(df: DataFrame, textCol: String, k: Int = 3): Long =
     // n² and its sum run in DECIMAL: a single hyper-frequent shingle at
     // corpus scale squares past 2^63, and an ANSI overflow inside the
     // GATE would kill exactly the oversized run it is supposed to
     // reroute. Saturate to Long.MaxValue — "too big" is all callers ask.
-    df.select(explode(graft.functions.Sketches.gramXxHashesCol(col(textCol), k)).as("h"))
+    df.select(gramHashes(textCol, k))
       .groupBy("h").agg(count(lit(1)).cast("decimal(19,0)").as("n"))
       .agg(sum(col("n") * col("n")).as("f"))
       .collect().headOption.flatMap(r => Option(r.get(0))).map {
@@ -635,171 +647,22 @@ object Dedup {
         case other => other.toString.toLong
       }.getOrElse(0L)
 
-  /** Exact containment pairs with PREFIX FILTERING — the asymmetric
-    * counterpart of [[jaccardPairsPrefix]], same results as
-    * [[containmentPairs]] at the same threshold (spec-proven).
-    *
-    * Bound: a pair qualifies iff n_common ≥ t·min(n_a, n_b). Sort each
-    * doc's grams rarest-first (global df asc, hash asc); the SMALLER
-    * doc s then has ⌈t·n_s⌉ ≤ n_common common grams, of which at most
-    * ⌈t·n_s⌉ − 1 fit in its suffix of that size — so at least one
-    * common gram lies inside s's own prefix of length
-    * n_s − ⌈t·n_s⌉ + 1. Joining every doc's prefix against the FULL
-    * postings therefore catches every qualifying pair (with the
-    * prefix side playing the smaller role); frequent grams still
-    * join, but only through the few docs rare-poor enough to carry
-    * them in a prefix — the posting-squared term collapses to
-    * Σ_h pfx_h·n_h. Verification is exact and confined to the
-    * candidate neighborhood, as in [[jaccardPairsPrefix]].
+  /** Rarest-first PREFIX of each document's postings: its first
+    * n − ⌈t·n⌉ + 1 grams under one GLOBAL order (corpus df asc, hash
+    * asc), so frequent grams fall outside most prefixes and never join.
+    * Flat window form: one exchange on id, one in-partition sort by
+    * (df, h), `row_number` against the partition count. The r13 form
+    * built a per-document ARRAY (collect_list, sort_array, slice,
+    * explode); at sf1 those corpus-sized transient arrays were the
+    * 2.5 s GC spikes and the 23.6→57.0 s spread in the dd22 candidate
+    * stage. r14 measured this form slower than the array form for
+    * containment at sf1 (29.3 → 38.3 s); it serves both measures
+    * anyway, because on the search_mix benchmark (4 vCPUs) dd23 on it
+    * stays within its run-to-run spread (2.57 vs 2.56 s median, IQR
+    * 0.13 s) with the same job count and 3% less shuffle.
     */
-  def containmentPairsPrefix(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int = 3,
-      threshold: Double = 0.5
-  ): DataFrame = {
-    require(threshold > 0, "prefix filtering needs a positive threshold")
-    val sh = df
-      .select(col(idCol).as("id"),
-        explode(graft.functions.Sketches.gramXxHashesCol(col(textCol), k)).as("h"))
-      .localCheckpoint()
+  private[graft] def prefixPostings(sh: DataFrame, threshold: Double): DataFrame = {
     val dfreq = sh.groupBy("h").agg(count(lit(1)).as("df"))
-    // the ARRAY prefix (collect_list → sort_array → slice), NOT the
-    // window form jaccardPairsPrefix uses: measured at sf1 (r14 A/B,
-    // same host) the window prefix REGRESSED containment 29.3 → 38.3 s
-    // while improving jaccard — the asymmetric prefix ⋈ full join
-    // evaluates the prefix only half as often, so the array build
-    // amortizes where the full-posting window sort does not
-    val ordered = sh
-      .join(dfreq, "h")
-      .groupBy("id")
-      .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("g"),
-        count(lit(1)).as("n"))
-    val plen = (col("n") - ceil(col("n") * threshold) + 1).cast("int")
-    val prefix = ordered
-      .select(col("id"), explode(slice(col("g"), lit(1), plen)).as("p"))
-      .select(col("id"), col("p.h").as("h"))
-    // prefix side ⋈ FULL postings (not prefix ⋈ prefix): only the
-    // smaller doc of a qualifying pair is guaranteed a prefix hit.
-    // Checkpointed (r14): `cand` feeds BOTH the id semi-join and the
-    // final pair filter — unmaterialized, the whole prefix+join
-    // candidate pipeline executed twice per run
-    val cand = prefix.alias("a")
-      .join(sh.alias("b"), col("a.h") === col("b.h") && col("a.id") =!= col("b.id"))
-      .select(least(col("a.id"), col("b.id")).as("id_a"),
-        greatest(col("a.id"), col("b.id")).as("id_b"))
-      .distinct()
-      .localCheckpoint()
-    val ids = cand.select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-    val shC = sh.join(ids, Seq("id"), "left_semi").localCheckpoint()
-    val sizes = shC.groupBy("id").agg(count(lit(1)).as("n"))
-    shC.alias("x")
-      .join(shC.alias("y"), col("x.h") === col("y.h") && col("x.id") < col("y.id"))
-      .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .agg(count(lit(1)).as("n_common"))
-      .join(cand, Seq("id_a", "id_b"), "left_semi")
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-      .withColumn("cont_a", col("n_common").cast("double") / col("n_a"))
-      .withColumn("cont_b", col("n_common").cast("double") / col("n_b"))
-      .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)
-      .select("id_a", "id_b", "n_common", "cont_a", "cont_b")
-  }
-
-  /** Size-gated exact Jaccard pairs (VERDICT r12 item 1): measure the
-    * self-join fan-out FIRST ([[exactPairFanout]], one narrow pass);
-    * under `maxFanout` run the plain all-shingle join, over it route
-    * through the prefix-filtered form — same exact output either way
-    * (both are [[jaccardPairs]]-equal at the same threshold), so the
-    * gate trades plan shape, never answers. A zero/negative threshold
-    * over the cap is REFUSED loudly: with no threshold there is no
-    * prefix bound, and silently running a posting-squared join over an
-    * oversized corpus is exactly the 100 TB failure this gate exists
-    * to prevent — LSH-restrict the pair set (dd01 → verify) instead.
-    */
-  def jaccardPairsGated(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int = 3,
-      threshold: Double = 0.5,
-      maxFanout: Long = 2000000000L
-  ): DataFrame = {
-    // maxFanout <= 0 decides the route with NO probe: fan ≥ 0 always,
-    // and fan = 0 (an empty/shingle-free corpus) yields an empty result
-    // from either path — so the probe scan would be paid only to learn
-    // nothing (guide §1.2: don't compute things you throw away). The
-    // probe IS kept when threshold <= 0 (no prefix bound exists), so
-    // the degenerate maxFanout=0 + threshold=0 + empty-corpus combo
-    // still takes the exact path and returns empty instead of hitting
-    // the prefix require (ADVICE r13).
-    val fan =
-      if (maxFanout <= 0 && threshold > 0) Long.MaxValue
-      else exactPairFanout(df, idCol, textCol, k)
-    if (fan <= maxFanout) jaccardPairs(df, idCol, textCol, k, threshold)
-    else {
-      require(threshold > 0,
-        s"exact-pair fan-out $fan exceeds maxFanout=$maxFanout and threshold=0 " +
-          "admits no prefix bound: restrict candidates first (minHashCandidates " +
-          "→ exact verify) or raise the threshold")
-      jaccardPairsPrefix(df, idCol, textCol, k, threshold)
-    }
-  }
-
-  /** Size-gated exact containment pairs — [[jaccardPairsGated]]'s
-    * asymmetric sibling, routing oversized corpora through
-    * [[containmentPairsPrefix]] (exact, prefix-pruned on the smaller
-    * side of each pair).
-    */
-  def containmentPairsGated(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int = 3,
-      threshold: Double = 0.5,
-      maxFanout: Long = 2000000000L
-  ): DataFrame = {
-    // see jaccardPairsGated: maxFanout <= 0 needs no probe scan when
-    // a positive threshold admits the prefix bound
-    val fan =
-      if (maxFanout <= 0 && threshold > 0) Long.MaxValue
-      else exactPairFanout(df, idCol, textCol, k)
-    if (fan <= maxFanout) containmentPairs(df, idCol, textCol, k, threshold)
-    else {
-      require(threshold > 0,
-        s"exact-pair fan-out $fan exceeds maxFanout=$maxFanout and threshold=0 " +
-          "admits no prefix bound: restrict candidates first (minHashCandidates " +
-          "→ exact verify) or raise the threshold")
-      containmentPairsPrefix(df, idCol, textCol, k, threshold)
-    }
-  }
-
-  /** Exact Jaccard self-join with PREFIX FILTERING (the PPJoin family,
-    * Xiao et al.): a pair can reach jaccard ≥ t only if the two
-    * documents share a token inside their first |x| − ⌈t·|x|⌉ + 1
-    * grams under one GLOBAL token order — so candidate generation
-    * joins only those prefixes instead of every gram occurrence.
-    * Rarest-first order (global df asc, hash asc) keeps prefix
-    * postings short where it matters: frequent grams fall outside
-    * most prefixes and never join. Same results as [[jaccardPairs]]
-    * at the same threshold (spec-proven); at high thresholds the
-    * self-join shuffles a small fraction of the postings.
-    */
-  /** Rarest-first PREFIX of each document's postings — the shared
-    * candidate-generation core of [[jaccardPairsPrefix]] /
-    * [[containmentPairsPrefix]]. r14 (VERDICT r13 item 4): the r13
-    * form built a per-document ARRAY (collect_list of every
-    * (df, h) struct, sort_array, slice, explode) — at sf1 those
-    * corpus-sized transient arrays were the 2.5 s GC spikes and the
-    * 23.6→57.0 s spread in the dd22 candidate stage. The window form
-    * keeps every row flat: one exchange on id, one in-partition sort
-    * by (df, h), `row_number` against the partition count — the
-    * identical prefix set ((df, h) is a unique per-doc order), with no
-    * array ever allocated.
-    */
-  private def prefixPostings(
-      sh: DataFrame, dfreq: DataFrame, threshold: Double): DataFrame = {
     val byDoc = Window.partitionBy("id").orderBy(col("df").asc, col("h").asc)
     sh.join(dfreq, "h")
       .withColumn("rn", row_number().over(byDoc))
@@ -808,44 +671,88 @@ object Dedup {
       .select("id", "h")
   }
 
-  def jaccardPairsPrefix(
+  /** Exact word-k-gram set-similarity self-join: every pair
+    * `id_a < id_b` sharing at least one shingle whose `measure` score
+    * reaches `threshold`, as (id_a, id_b, n_common, <measure scores>).
+    * At corpus scale, run AFTER LSH restricts the pair set
+    * ([[verifyCandidates]]); standalone it is the oracle-verifiable
+    * ground truth.
+    *
+    * `maxFanout` picks the route; every route returns the same rows
+    * (spec-proven), so the choice trades plan shape, never answers:
+    *  - `Long.MaxValue`: all pairs, no probe — self-join every posting
+    *    on the gram hash, count per pair;
+    *  - `≤ 0` with a positive threshold: the prefix route, no probe;
+    *  - otherwise the size gate (VERDICT r12 item 1): measure
+    *    [[exactPairFanout]] first (one narrow pass); up to `maxFanout`
+    *    run all pairs, above it the prefix route.
+    * A zero threshold over the cap is REFUSED loudly: with no threshold
+    * there is no prefix bound, and silently running a posting-squared
+    * join over an oversized corpus is exactly the 100 TB failure the
+    * gate exists to prevent — LSH-restrict the pair set (dd01 → verify)
+    * instead.
+    *
+    * Prefix route (the PPJoin family, Xiao et al.): a side of size n
+    * with n_common ≥ ⌈t·n⌉ fits at most ⌈t·n⌉ − 1 common grams in its
+    * suffix, so one lies in its [[prefixPostings]]. Jaccard ≥ t forces
+    * that on BOTH sides, and under one global order the two prefixes
+    * share a gram: prefix ⋈ prefix. Containment forces it only on the
+    * smaller side: prefix ⋈ full postings, where frequent grams still
+    * join, but only through the few docs rare-poor enough to carry them
+    * in a prefix — the posting-squared term collapses to Σ_h pfx_h·n_h.
+    * The candidates are then exact-verified.
+    */
+  def setSimPairs(
       df: DataFrame,
       idCol: String,
       textCol: String,
+      measure: SetSimMeasure,
+      threshold: Double,
       k: Int = 3,
-      threshold: Double = 0.5
+      maxFanout: Long = 2000000000L
   ): DataFrame = {
-    require(threshold > 0, "prefix filtering needs a positive threshold")
-    val sh = df
-      .select(col(idCol).as("id"),
-        explode(graft.functions.Sketches.gramXxHashesCol(col(textCol), k)).as("h"))
-      .localCheckpoint()
-    val dfreq = sh.groupBy("h").agg(count(lit(1)).as("df"))
-    val prefix = prefixPostings(sh, dfreq, threshold)
-    // checkpointed (r14): `cand` feeds BOTH the id semi-join and the
-    // final pair filter — unmaterialized, the prefix windows and the
-    // candidate join executed twice per run
-    val cand = prefix.alias("a")
-      .join(prefix.alias("b"),
-        col("a.h") === col("b.h") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-      .localCheckpoint()
-    // exact verification confined to the candidate neighborhood
-    val ids = cand.select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-    val shC = sh.join(ids, Seq("id"), "left_semi").localCheckpoint()
-    val sizes = shC.groupBy("id").agg(count(lit(1)).as("n"))
-    shC.alias("x")
-      .join(shC.alias("y"), col("x.h") === col("y.h") && col("x.id") < col("y.id"))
-      .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .agg(count(lit(1)).as("n_common"))
-      .join(cand, Seq("id_a", "id_b"), "left_semi")
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-      .withColumn("jaccard",
-        col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "n_common", "jaccard")
+    requireThreshold(threshold)
+    // maxFanout <= 0 decides the route with NO probe: fan ≥ 0 always,
+    // and fan = 0 (an empty/shingle-free corpus) yields an empty result
+    // from either path — so the probe scan would be paid only to learn
+    // nothing (guide §1.2: don't compute things you throw away). The
+    // probe IS kept when threshold <= 0 (no prefix bound exists), so
+    // the degenerate maxFanout=0 + threshold=0 + empty-corpus combo
+    // still takes the exact path and returns empty (ADVICE r13).
+    val fan =
+      if (maxFanout == Long.MaxValue) 0L
+      else if (maxFanout <= 0 && threshold > 0) Long.MaxValue
+      else exactPairFanout(df, textCol, k)
+    require(fan <= maxFanout || threshold > 0,
+      s"exact-pair fan-out $fan exceeds maxFanout=$maxFanout and threshold=0 " +
+        "admits no prefix bound: restrict candidates first (minHashCandidates " +
+        "→ exact verify) or raise the threshold")
+    // localCheckpoint: the postings feed the sizes, both self-join sides
+    // and (prefix route) the prefix and the verify semi-join;
+    // materializing once replaces repeated evaluations of the
+    // regex-split/shingle/hash pipeline with one
+    val sh = postings(df, idCol, textCol, k).localCheckpoint()
+    if (fan <= maxFanout) scored(sh, sizesOf(sh), measure, threshold)
+    else {
+      val prefix = prefixPostings(sh, threshold)
+      // prefix ⋈ prefix is symmetric: a.id < b.id names each pair once,
+      // and grouping on (a.id, b.id) keeps the join's partitioning on
+      // a.id, so the distinct needs no exchange. prefix ⋈ full is not:
+      // the pair is ordered by value
+      val (probed, lo, hi) =
+        if (measure.probesFull)
+          (sh, least(col("a.id"), col("b.id")), greatest(col("a.id"), col("b.id")))
+        else (prefix, col("a.id"), col("b.id"))
+      // checkpointed (r14): `cand` feeds BOTH the id semi-join and the
+      // final pair filter — unmaterialized, the prefix windows and the
+      // candidate join executed twice per run
+      val cand = prefix.alias("a")
+        .join(probed.alias("b"), col("a.h") === col("b.h") && lo < hi)
+        .select(lo.as("id_a"), hi.as("id_b"))
+        .distinct()
+        .localCheckpoint()
+      verified(sh, cand, measure, threshold)
+    }
   }
 
   // ── identical-shingle-set class collapse ──────────────────────────
@@ -885,9 +792,7 @@ object Dedup {
       textCol: String,
       k: Int = 3
   ): ShingleClasses = {
-    val sh = df
-      .select(col(idCol).as("id"),
-        explode(graft.functions.Sketches.gramXxHashesCol(col(textCol), k)).as("h"))
+    val sh = postings(df, idCol, textCol, k)
       .localCheckpoint() // class fingerprints + rep postings read it
     val perDoc = sh.groupBy("id")
       .agg(xxhash64(sort_array(collect_list(col("h")))).as("fp"),
@@ -905,25 +810,17 @@ object Dedup {
 
   /** Exact Jaccard pairs between class REPRESENTATIVES at `threshold`,
     * carrying each side's class multiplicity — the collapsed form of
-    * [[jaccardPairs]] (see [[shingleClasses]]): (rep_a, rep_b, jac,
-    * m_a, m_b), where the pair stands for m_a·m_b document pairs of
-    * identical jaccard. Intra-class pairs (jaccard exactly 1.0,
-    * C(m,2) per class) are NOT included — callers add them from
-    * `classes` arithmetic.
+    * the all-pairs [[setSimPairs]] (see [[shingleClasses]]): (rep_a,
+    * rep_b, n_common, jaccard, m_a, m_b), where the pair stands for
+    * m_a·m_b document pairs of identical jaccard. Intra-class pairs
+    * (jaccard exactly 1.0, C(m,2) per class) are NOT included — callers
+    * add them from `classes` arithmetic.
     */
   def repJaccardPairs(sc: ShingleClasses, threshold: Double): DataFrame = {
-    val sizes = sc.classes.select(col("rep").as("id"), col("n"), col("m"))
-    val pairs = sc.repSh.alias("x")
-      .join(sc.repSh.alias("y"), col("x.h") === col("y.h") && col("x.id") < col("y.id"))
-      .groupBy(col("x.id").as("rep_a"), col("y.id").as("rep_b"))
-      .agg(count(lit(1)).as("n_common"))
-    pairs
-      .join(sizes.select(col("id").as("rep_a"), col("n").as("n_a"), col("m").as("m_a")), "rep_a")
-      .join(sizes.select(col("id").as("rep_b"), col("n").as("n_b"), col("m").as("m_b")), "rep_b")
-      .withColumn("jaccard",
-        col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .select("rep_a", "rep_b", "n_common", "jaccard", "m_a", "m_b")
+    requireThreshold(threshold)
+    scored(sc.repSh, sc.classes.select(col("rep").as("id"), col("n"), col("m")), Jaccard, threshold)
+      .withColumnRenamed("id_a", "rep_a")
+      .withColumnRenamed("id_b", "rep_b")
   }
 
   /** Exact n-gram decontamination (the GPT-3 appendix-C / PaLM
@@ -1157,10 +1054,8 @@ object Dedup {
   }
 
   /** Exact-Jaccard verification RESTRICTED to a candidate pair set —
-    * the post-LSH step of the dedup pipeline. The shingle explode is
-    * semi-joined down to documents that appear in some candidate pair
-    * before the pair-counting join, so the quadratic step only ever
-    * touches the (tiny) candidate neighborhood, never the corpus.
+    * the post-LSH step of the dedup pipeline: (id_a, id_b, jaccard) for
+    * the `candidates` pairs (id_a, id_b) reaching `threshold`.
     */
   def verifyCandidates(
       df: DataFrame,
@@ -1170,26 +1065,8 @@ object Dedup {
       k: Int = 3,
       threshold: Double = 0.5
   ): DataFrame = {
-    val ids = candidates
-      .select(explode(array(col("id_a"), col("id_b"))).as("id"))
-      .distinct()
-    val sh = df
-      .select(col(idCol).as("id"),
-        explode(graft.functions.Sketches.gramXxHashesCol(col(textCol), k)).as("h"))
-      .join(ids, Seq("id"), "left_semi")
-      .localCheckpoint()
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))
-    val counts = sh.alias("x")
-      .join(sh.alias("y"), col("x.h") === col("y.h") && col("x.id") < col("y.id"))
-      .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .agg(count(lit(1)).as("n_common"))
-      .join(candidates, Seq("id_a", "id_b"), "left_semi")
-    counts
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-      .withColumn("jaccard",
-        col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
+    requireThreshold(threshold)
+    verified(postings(df, idCol, textCol, k), candidates, Jaccard, threshold)
       .select("id_a", "id_b", "jaccard")
   }
 

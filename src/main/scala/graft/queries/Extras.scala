@@ -159,8 +159,8 @@ object Extras {
       // member joins its rep's component. rep = MIN member id, so the
       // component label (min reachable doc id) expands unchanged:
       // min over a component's docs = min over its classes' reps.
-      // (Not jaccardPairsPrefix: at 0.2 the prefix keeps 80% of
-      // postings and re-does the full join — see NOTES "round-8
+      // (Not setSimPairs' prefix route: at 0.2 the prefix keeps 80%
+      // of postings and re-does the full join — see NOTES "round-8
       // dd05/td53".)
       val scs = Dedup.shingleClasses(t.documents, "doc_id", "text", k = 3)
       val cross = Dedup.repJaccardPairs(scs, threshold = 0.2)

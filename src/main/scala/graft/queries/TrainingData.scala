@@ -174,7 +174,8 @@ object TrainingData {
     (spark, dir) => {
       val t = Tables(spark, dir)
       Query.checkpointSort(
-        Dedup.jaccardPairs(t.documents, "doc_id", "text", k = 3, threshold = 0.2),
+        Dedup.setSimPairs(t.documents, "doc_id", "text", Dedup.Jaccard, threshold = 0.2,
+          k = 3, maxFanout = Long.MaxValue),
         "id_a", "id_b")
     }
   )
@@ -3903,8 +3904,8 @@ object TrainingData {
     }
   )
 
-  /** Prefix-filtered exact Jaccard join
-    * ([[Dedup.jaccardPairsPrefix]]): candidates come from joining
+  /** Prefix-filtered exact Jaccard join ([[Dedup.setSimPairs]]'s
+    * prefix route, forced by `maxFanout = 0`): candidates come from joining
     * only each document's rarest-first gram PREFIX (the PPJoin bound)
     * instead of every posting — the scale path for exact similarity
     * self-joins at high thresholds. The oracle is the plain
@@ -3927,7 +3928,8 @@ object TrainingData {
     (spark, dir) => {
       val t = Tables(spark, dir)
       Query.checkpointSort(
-        Dedup.jaccardPairsPrefix(t.documents, "doc_id", "text", k = 3, threshold = 0.5),
+        Dedup.setSimPairs(t.documents, "doc_id", "text", Dedup.Jaccard, threshold = 0.5,
+          k = 3, maxFanout = 0L),
         "id_a", "id_b")
     }
   )
@@ -4128,7 +4130,8 @@ object TrainingData {
     }
   )
 
-  /** Asymmetric containment near-dup ([[Dedup.containmentPairs]]):
+  /** Asymmetric containment near-dup ([[Dedup.setSimPairs]] with
+    * [[Dedup.Containment]], all-pairs route):
     * catches a short document embedded in a longer one, which Jaccard
     * structurally misses (td06 at the same corpus finds only the
     * symmetric pairs). Both directions reported; filter on the max.
@@ -4150,20 +4153,22 @@ object TrainingData {
     (spark, dir) => {
       val t = Tables(spark, dir)
       Query.checkpointSort(
-        Dedup.containmentPairs(t.documents, "doc_id", "text", k = 3, threshold = 0.5),
+        Dedup.setSimPairs(t.documents, "doc_id", "text", Dedup.Containment, threshold = 0.5,
+          k = 3, maxFanout = Long.MaxValue),
         "id_a", "id_b")
     }
   )
 
-  /** Size-GATED exact Jaccard ([[Dedup.jaccardPairsGated]], VERDICT
+  /** Size-GATED exact Jaccard ([[Dedup.setSimPairs]]' gate, VERDICT
     * r12 item 1): the engine measures the all-shingle self-join's
     * fan-out first (Σ n_h², one narrow pass) and routes oversized
     * corpora through the prefix-filtered form instead. `maxFanout = 0`
     * here FORCES the over-cap route, so the green oracle row is the
     * proof that the gate's reroute is exact — the SQL is the plain
     * all-pairs ground truth at the same threshold, identical to what
-    * the under-cap route must produce. GateSpec covers the routing
-    * logic itself (both branches + the loud threshold-0 refusal).
+    * the under-cap route must produce. OperatorsSpec's size-gate test
+    * covers the routing itself (both branches + the loud threshold-0
+    * refusal).
     */
   val dd22GatedJaccard = Query(
     "dd22_gated_jaccard",
@@ -4181,15 +4186,15 @@ object TrainingData {
     (spark, dir) => {
       val t = Tables(spark, dir)
       Query.checkpointSort(
-        Dedup.jaccardPairsGated(t.documents, "doc_id", "text", k = 3,
-          threshold = 0.5, maxFanout = 0L),
+        Dedup.setSimPairs(t.documents, "doc_id", "text", Dedup.Jaccard, threshold = 0.5,
+          k = 3, maxFanout = 0L),
         "id_a", "id_b")
     }
   )
 
-  /** Size-GATED exact containment ([[Dedup.containmentPairsGated]]) —
-    * dd22's asymmetric sibling. The over-cap route is
-    * [[Dedup.containmentPairsPrefix]]: prefixes are pruned against the
+  /** Size-GATED exact containment ([[Dedup.setSimPairs]] with
+    * [[Dedup.Containment]]) — dd22's asymmetric sibling. The over-cap
+    * route is the containment prefix route: prefixes are pruned against the
     * SMALLER side of each pair (a qualifying pair must share a gram in
     * the smaller doc's rarest-first prefix), joined against full
     * postings, then exact-verified. `maxFanout = 0` forces that route;
@@ -4213,8 +4218,8 @@ object TrainingData {
     (spark, dir) => {
       val t = Tables(spark, dir)
       Query.checkpointSort(
-        Dedup.containmentPairsGated(t.documents, "doc_id", "text", k = 3,
-          threshold = 0.5, maxFanout = 0L),
+        Dedup.setSimPairs(t.documents, "doc_id", "text", Dedup.Containment, threshold = 0.5,
+          k = 3, maxFanout = 0L),
         "id_a", "id_b")
     }
   )

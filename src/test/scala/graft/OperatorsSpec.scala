@@ -55,7 +55,8 @@ class OperatorsSpec extends SparkSpec {
 
   test("minhash LSH candidates achieve full recall vs exact jaccard >= 0.5 (sf0.001)") {
     val truth = Dedup
-      .jaccardPairs(docs, "doc_id", "text", k = 3, threshold = 0.5)
+      .setSimPairs(docs, "doc_id", "text", Dedup.Jaccard, threshold = 0.5, k = 3,
+        maxFanout = Long.MaxValue)
       .select("id_a", "id_b")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -74,7 +75,8 @@ class OperatorsSpec extends SparkSpec {
     val est = Dedup
       .minHashCandidates(docs, "doc_id", "text", threshold = 0.35)
       .withColumnRenamed("est_jaccard", "est")
-    val exact = Dedup.jaccardPairs(docs, "doc_id", "text", k = 3, threshold = 0.0)
+    val exact = Dedup.setSimPairs(docs, "doc_id", "text", Dedup.Jaccard, threshold = 0.0, k = 3,
+      maxFanout = Long.MaxValue)
     val joined = est
       .join(exact, Seq("id_a", "id_b"))
       .select(abs(col("est") - col("jaccard")).as("err"))
@@ -778,17 +780,25 @@ class OperatorsSpec extends SparkSpec {
 
   test("prefix-filtered jaccard join equals the full join at thresholds 0.3/0.5/0.7") {
     Seq(0.3, 0.5, 0.7).foreach { t =>
-      val full = Dedup.jaccardPairs(docs, "doc_id", "text", k = 3, threshold = t)
+      val full = Dedup.setSimPairs(docs, "doc_id", "text", Dedup.Jaccard, threshold = t, k = 3,
+        maxFanout = Long.MaxValue)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-      val pref = Dedup.jaccardPairsPrefix(docs, "doc_id", "text", k = 3, threshold = t)
+      val pref = Dedup.setSimPairs(docs, "doc_id", "text", Dedup.Jaccard, threshold = t, k = 3,
+        maxFanout = 0L)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
       assert(pref == full, s"threshold $t: prefix filter must be lossless " +
         s"(missing=${full -- pref} extra=${pref -- full})")
     }
     // and the prefix postings really are smaller than the full postings
-    val shCount = docs.select(explode(
-      graft.functions.Sketches.gramXxHashesCol(col("text"), 3))).count()
+    val sh = docs.select(col("doc_id").as("id"),
+      explode(graft.functions.Sketches.gramXxHashesCol(col("text"), 3)).as("h"))
+    val shCount = sh.count()
     assert(shCount > 0)
+    Seq(0.3, 0.5, 0.7).foreach { t =>
+      val pfxCount = Dedup.prefixPostings(sh, t).count()
+      assert(pfxCount > 0 && pfxCount < shCount,
+        s"threshold $t: prefix postings $pfxCount vs full postings $shCount")
+    }
   }
 
   test("containmentPairs catches an excerpt Jaccard misses") {
@@ -800,11 +810,13 @@ class OperatorsSpec extends SparkSpec {
       (1L, long), (2L, excerpt),
       (3L, "entirely disjoint vocabulary about streams windows and state stores")
     ).toDF("doc_id", "text")
-    val got = Dedup.containmentPairs(corpus, "doc_id", "text", k = 3, threshold = 0.9)
+    val got = Dedup.setSimPairs(corpus, "doc_id", "text", Dedup.Containment, threshold = 0.9,
+      k = 3, maxFanout = Long.MaxValue)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(4))).toMap
     assert(got.keySet == Set((1L, 2L)))
     assert(got((1L, 2L)) == 1.0) // excerpt fully contained
-    val jac = Dedup.jaccardPairs(corpus, "doc_id", "text", k = 3, threshold = 0.5)
+    val jac = Dedup.setSimPairs(corpus, "doc_id", "text", Dedup.Jaccard, threshold = 0.5, k = 3,
+      maxFanout = Long.MaxValue)
     assert(jac.count() == 0, "jaccard at 0.5 must miss the asymmetric pair")
   }
 
@@ -817,9 +829,11 @@ class OperatorsSpec extends SparkSpec {
     val extra = Seq((9001L, long), (9002L, excerpt)).toDF("doc_id", "text")
     val corpus = docs.select("doc_id", "text").unionByName(extra)
     Seq(0.3, 0.5, 0.7).foreach { t =>
-      val full = Dedup.containmentPairs(corpus, "doc_id", "text", k = 3, threshold = t)
+      val full = Dedup.setSimPairs(corpus, "doc_id", "text", Dedup.Containment, threshold = t,
+        k = 3, maxFanout = Long.MaxValue)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val pref = Dedup.containmentPairsPrefix(corpus, "doc_id", "text", k = 3, threshold = t)
+      val pref = Dedup.setSimPairs(corpus, "doc_id", "text", Dedup.Containment, threshold = t,
+        k = 3, maxFanout = 0L)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(pref == full, s"threshold $t: containment prefix filter must be lossless " +
         s"(missing=${full -- pref} extra=${pref -- full})")
@@ -833,34 +847,84 @@ class OperatorsSpec extends SparkSpec {
       .select(explode(graft.functions.Sketches.gramXxHashesCol(col("text"), 3)).as("h"))
       .groupBy("h").count()
       .collect().map(r => { val n = r.getLong(1); n * n }).sum
-    val fan = Dedup.exactPairFanout(docs, "doc_id", "text", k = 3)
+    val fan = Dedup.exactPairFanout(docs, "text", k = 3)
     assert(fan == expected, s"fanout $fan != independent Σ n² $expected")
     assert(fan > 0)
 
     // over the cap + no threshold = no prefix bound: the gate must
     // REFUSE loudly rather than run the posting-squared join
     val e = intercept[IllegalArgumentException] {
-      Dedup.jaccardPairsGated(docs, "doc_id", "text", k = 3,
-        threshold = 0.0, maxFanout = 0L)
+      Dedup.setSimPairs(docs, "doc_id", "text", Dedup.Jaccard, threshold = 0.0, k = 3,
+        maxFanout = 0L)
     }
     assert(e.getMessage.contains("maxFanout"))
     // under the cap, threshold 0 is the plain exact join — allowed
-    assert(Dedup.jaccardPairsGated(docs, "doc_id", "text", k = 3,
-      threshold = 0.0, maxFanout = Long.MaxValue).count() ==
-      Dedup.jaccardPairs(docs, "doc_id", "text", k = 3, threshold = 0.0).count())
+    assert(Dedup.setSimPairs(docs, "doc_id", "text", Dedup.Jaccard, threshold = 0.0, k = 3,
+      maxFanout = fan).count() ==
+      Dedup.setSimPairs(docs, "doc_id", "text", Dedup.Jaccard, threshold = 0.0, k = 3,
+      maxFanout = Long.MaxValue).count())
 
     // both routes agree with the ungated form (the oracle rows dd22/
     // dd23 prove the same at sf0.01 against DuckDB)
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val base = key(Dedup.jaccardPairs(docs, "doc_id", "text", k = 3, threshold = 0.5))
-    assert(key(Dedup.jaccardPairsGated(docs, "doc_id", "text", k = 3,
-      threshold = 0.5, maxFanout = 0L)) == base, "over-cap route (prefix) drifted")
-    assert(key(Dedup.jaccardPairsGated(docs, "doc_id", "text", k = 3,
-      threshold = 0.5, maxFanout = Long.MaxValue)) == base, "under-cap route drifted")
-    val baseC = key(Dedup.containmentPairs(docs, "doc_id", "text", k = 3, threshold = 0.5))
-    assert(key(Dedup.containmentPairsGated(docs, "doc_id", "text", k = 3,
-      threshold = 0.5, maxFanout = 0L)) == baseC, "over-cap containment route drifted")
+    val base = key(Dedup.setSimPairs(docs, "doc_id", "text", Dedup.Jaccard, threshold = 0.5, k = 3,
+      maxFanout = Long.MaxValue))
+    assert(key(Dedup.setSimPairs(docs, "doc_id", "text", Dedup.Jaccard, threshold = 0.5, k = 3,
+      maxFanout = 0L)) == base, "over-cap route (prefix) drifted")
+    assert(key(Dedup.setSimPairs(docs, "doc_id", "text", Dedup.Jaccard, threshold = 0.5, k = 3,
+      maxFanout = fan)) == base, "under-cap route drifted")
+    val baseC = key(Dedup.setSimPairs(docs, "doc_id", "text", Dedup.Containment, threshold = 0.5,
+      k = 3, maxFanout = Long.MaxValue))
+    assert(key(Dedup.setSimPairs(docs, "doc_id", "text", Dedup.Containment, threshold = 0.5,
+      k = 3, maxFanout = 0L)) == baseC, "over-cap containment route drifted")
+  }
+
+  test("set-similarity join rejects a threshold outside [0, 1] or NaN on every route") {
+    for {
+      m <- Seq(Dedup.Jaccard, Dedup.Containment)
+      fanout <- Seq(Long.MaxValue, 0L)
+      t <- Seq(1.5, Double.NaN, -0.1)
+    } {
+      val e = intercept[IllegalArgumentException] {
+        Dedup.setSimPairs(docs, "doc_id", "text", m, threshold = t, k = 3, maxFanout = fanout)
+      }
+      assert(e.getMessage.contains("threshold"), s"$m maxFanout=$fanout t=$t: ${e.getMessage}")
+    }
+    val cand = Seq((1L, 2L)).toDF("id_a", "id_b")
+    intercept[IllegalArgumentException] {
+      Dedup.verifyCandidates(docs, "doc_id", "text", cand, k = 3, threshold = Double.NaN)
+    }
+    val scs = Dedup.shingleClasses(docs, "doc_id", "text", k = 3)
+    intercept[IllegalArgumentException](Dedup.repJaccardPairs(scs, threshold = 1.5))
+    scs.release()
+    // the bounds themselves are valid thresholds
+    Seq(0.0, 1.0).foreach { t =>
+      Dedup.setSimPairs(docs, "doc_id", "text", Dedup.Containment, threshold = t, k = 3,
+        maxFanout = Long.MaxValue).count()
+    }
+    assert(Dedup.setSimPairs(docs, "doc_id", "text", Dedup.Jaccard, threshold = 1.0, k = 3,
+      maxFanout = 0L).collect().forall(_.getDouble(3) == 1.0))
+  }
+
+  test("shingle width below 1 is rejected by every posting consumer") {
+    // k = 0 emits only the empty gram: every doc would share one
+    // one-element set and every pair would report jaccard 1.0
+    val cand = Seq((1L, 2L)).toDF("id_a", "id_b")
+    val calls: Seq[(String, () => Any)] = Seq(
+      "setSimPairs" -> (() => Dedup.setSimPairs(docs, "doc_id", "text", Dedup.Jaccard,
+        threshold = 0.5, k = 0, maxFanout = Long.MaxValue)),
+      "setSimPairs prefix" -> (() => Dedup.setSimPairs(docs, "doc_id", "text",
+        Dedup.Containment, threshold = 0.5, k = 0, maxFanout = 0L)),
+      "setSimPairs gated" -> (() => Dedup.setSimPairs(docs, "doc_id", "text", Dedup.Jaccard,
+        threshold = 0.5, k = 0, maxFanout = 1000L)),
+      "verifyCandidates" -> (() => Dedup.verifyCandidates(docs, "doc_id", "text", cand, k = 0)),
+      "shingleClasses" -> (() => Dedup.shingleClasses(docs, "doc_id", "text", k = 0)),
+      "exactPairFanout" -> (() => Dedup.exactPairFanout(docs, "text", k = -1)))
+    calls.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("k must be >= 1"), s"$name: ${e.getMessage}")
+    }
   }
 
   test("shingle class collapse: expanded pair/flagged counts equal the direct join at every cut") {
@@ -883,7 +947,8 @@ class OperatorsSpec extends SparkSpec {
     val cross = Dedup.repJaccardPairs(scs, threshold = 0.2).collect()
       .map(r => (r.getAs[Long]("rep_a"), r.getAs[Long]("rep_b"),
         r.getAs[Double]("jaccard"), r.getAs[Long]("m_a"), r.getAs[Long]("m_b")))
-    val direct = Dedup.jaccardPairs(corpus, "doc_id", "text", k = 3, threshold = 0.2)
+    val direct = Dedup.setSimPairs(corpus, "doc_id", "text", Dedup.Jaccard, threshold = 0.2,
+      k = 3, maxFanout = Long.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
     val intra = classes.map { case (_, m) => m * (m - 1) / 2 }.sum
     Seq(0.2, 0.5, 0.8).foreach { cut =>
@@ -905,7 +970,8 @@ class OperatorsSpec extends SparkSpec {
     // expanded through classes, equals CC over the direct pair list
     import graft.operators.Graph
     val directComp = Graph.connectedComponents(
-      Dedup.jaccardPairs(corpus, "doc_id", "text", k = 3, threshold = 0.2)
+      Dedup.setSimPairs(corpus, "doc_id", "text", Dedup.Jaccard, threshold = 0.2, k = 3,
+        maxFanout = Long.MaxValue)
         .select(col("id_a").as("src"), col("id_b").as("dst")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val crossE = Dedup.repJaccardPairs(scs, threshold = 0.2)

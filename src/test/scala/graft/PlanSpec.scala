@@ -213,9 +213,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("prefix-jaccard candidate and verify joins are equi-joins, never cartesian") {
-    val p = plan(graft.operators.Dedup
-      .jaccardPairsPrefix(Tables(spark, sf).documents, "doc_id", "text", k = 3, threshold = 0.5))
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
+    import graft.operators.Dedup
+    // jaccard joins prefix ⋈ prefix, containment prefix ⋈ full postings
+    Seq(Dedup.Jaccard, Dedup.Containment).foreach { m =>
+      val p = plan(Dedup.setSimPairs(Tables(spark, sf).documents, "doc_id", "text", m,
+        threshold = 0.5, k = 3, maxFanout = 0L))
+      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
+    }
   }
 
   test("conversion-window probe joins on user with the time range as a residual") {
