@@ -1,13 +1,22 @@
 package graft.ingest
 
+import java.io.{BufferedReader, InputStream, InputStreamReader}
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.LocalDate
 
+import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 import scala.util.matching.Regex
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.Functions
 import graft.model._
 import graft.registry.DatasetRegistry
@@ -23,14 +32,15 @@ object FilePatternScanner {
     val dir = Paths.get(directory)
     if (!Files.isDirectory(dir)) return Seq.empty
     val re: Regex = pattern.r
-    Files
-      .list(dir)
-      .iterator()
-      .asScala
-      .filter(p => Files.isRegularFile(p))
-      .filter(p => re.findPrefixOf(p.getFileName.toString).isDefined) // re.match semantics
-      .toSeq
-      .sortBy(_.getFileName.toString)
+    Using.resource(Files.list(dir)) { entries =>
+      entries
+        .iterator()
+        .asScala
+        .filter(p => Files.isRegularFile(p))
+        .filter(p => re.findPrefixOf(p.getFileName.toString).isDefined) // re.match semantics
+        .toSeq
+        .sortBy(_.getFileName.toString)
+    }
   }
 }
 
@@ -55,15 +65,23 @@ final case class ImportResult(files: Seq[FileResult]) {
   *  1. discover files (regex pattern, S3);
   *  2. per file: extract label + dataset date from the filename (T4/T5),
   *     register a dataset version (Q22/Q29) — displacing prior actives
-  *     (the single-active invariant, Q23/Q27);
-  *  3. branch: invalid-marker file (T9) or headerless/0-row file (T12)
-  *     → mark the dataset Empty and archive;
-  *  4. otherwise: read CSV all-string (S1, schema-on-write parity),
-  *     normalize headers (T1), stamp `datasetid` + metadata columns
-  *     (T3), reconcile against the target schema per the configured
-  *     strategy (T2/Q25/Q26), optionally enforce VARCHAR-length
-  *     truncation (T6), append to the target (K1), archive the file
-  *     (K5).
+  *     (the single-active invariant, Q23/Q27) — in a registry commit
+  *     that runs no Spark job;
+  *  3. take the header from the file's first non-blank line, on the
+  *     driver; no such line (T12) → mark the dataset Empty and archive;
+  *     an XLS/XLSX file carrying the invalid marker (T9) → Empty too
+  *     (one probe job, spreadsheets only);
+  *  4. otherwise: read CSV all-string under that header (S1,
+  *     schema-on-write parity), normalize headers (T1), stamp
+  *     `datasetid` (T3), reconcile against the target columns per the
+  *     configured strategy (T2/Q25/Q26) — the columns are cached per
+  *     target and re-read with mergeSchema only when another writer
+  *     changed the target — optionally enforce VARCHAR-length
+  *     truncation (T6), and append to the target (K1): the file's one
+  *     Spark job;
+  *  5. count the appended rows from the new partition's parquet
+  *     footers, on the driver: 0 rows (T12) → Empty, else Active; archive
+  *     the file (K5).
   *
   * Scale design: the target table is parquet partitioned by
   * `datasetid`, so registry-driven version pruning is file pruning;
@@ -130,45 +148,42 @@ final class GenericImporter(
     )
     // Register first (reference inserts the dataset row before reading
     // the file: generic_import.py:585-604), then branch on content.
+    // Registry commits run no Spark job.
     val id = registry.insert(dsDate, label, typeId, sourceId)
 
-    if (oversized) {
-      registry.setStatus(id, DatasetStatus.Failed)
+    def finish(status: DatasetStatus): FileResult = {
+      registry.setStatus(id, status)
       archive(file, config)
-      return FileResult(fname, id, DatasetStatus.Failed, 0, Nil, Map.empty)
+      FileResult(fname, id, status, 0, Nil, Map.empty)
     }
 
-    val df0 =
-      try readAllString(readable)
-      catch {
-        case _: Exception =>
-          registry.setStatus(id, DatasetStatus.Empty)
-          archive(file, config)
-          return FileResult(fname, id, DatasetStatus.Empty, 0, Nil, Map.empty)
-      }
+    if (oversized) return finish(DatasetStatus.Failed)
 
-    // T9 invalid-content + T12 headerless/empty branches → Empty + archive
-    val isEmptyBranch =
-      df0.columns.isEmpty || df0.isEmpty ||
-        ((config.fileType == "XLS" || config.fileType == "XLSX") &&
-          Functions.containsMarker(df0, InvalidMarker))
-    if (isEmptyBranch) {
-      registry.setStatus(id, DatasetStatus.Empty)
-      archive(file, config)
-      return FileResult(fname, id, DatasetStatus.Empty, 0, Nil, Map.empty)
+    // T12 headerless file → Empty
+    val schema =
+      try headerSchema(readable)
+      catch { case _: Exception => None }
+    val df = schema match {
+      case Some(s) if s.nonEmpty => readAllString(readable, s)
+      case _                     => return finish(DatasetStatus.Empty)
     }
 
-    val normalized = Functions.normalizeColumns(df0)
+    // T9 invalid-content branch → Empty (the XLS/XLSX-only second job)
+    if ((config.fileType == "XLS" || config.fileType == "XLSX") &&
+        Functions.containsMarker(df, InvalidMarker))
+      return finish(DatasetStatus.Empty)
+
+    val normalized = Functions.normalizeColumns(df)
     val stamped = normalized.withColumn("datasetid", lit(id))
 
     val tgt = targetPath(config.targetTable)
-    val existing = existingColumns(tgt)
+    val dirs = partitionDirs(tgt)
+    val existing = existingColumns(tgt, dirs)
     val (toWrite, newCols) = reconcile(stamped, existing, config.strategy) match {
       case Right(v) => v
-      case Left(_) =>
-        registry.setStatus(id, DatasetStatus.Failed)
-        archive(file, config)
-        return FileResult(fname, id, DatasetStatus.Failed, 0, Nil, Map.empty)
+      // a 0-row file is Empty whatever its header (the branch order
+      // before the write-first path); this rare path pays the probe job
+      case Left(_) => return finish(if (df.isEmpty) DatasetStatus.Empty else DatasetStatus.Failed)
     }
 
     val (finalDf, truncated) =
@@ -178,17 +193,15 @@ final class GenericImporter(
         (Functions.truncateTo(toWrite, lengths), Functions.truncationCounts(toWrite, lengths))
       } else (toWrite, Map.empty[String, Long])
 
-    val rows = finalDf.count()
-    if (rows == 0) {
-      registry.setStatus(id, DatasetStatus.Empty)
-      archive(file, config)
-      return FileResult(fname, id, DatasetStatus.Empty, 0, Nil, Map.empty)
-    }
-
+    // Write first, then count what landed: a 0-row partitioned write
+    // creates no `datasetid=<id>` dir, so nothing reaches the target.
     finalDf.write
       .mode(SaveMode.Append)
       .partitionBy("datasetid")
       .parquet(tgt)
+    val rows = writtenRows(tgt, id)
+    if (rows == 0) return finish(DatasetStatus.Empty)
+    columnCache(tgt) = (dirs + partitionDir(id), mergedColumns(existing, finalDf.columns.toSeq))
     archive(file, config)
     FileResult(fname, id, DatasetStatus.Active, rows, newCols, truncated)
   }
@@ -205,27 +218,98 @@ final class GenericImporter(
       .withColumn("datasetid", col("datasetid").cast("long"))
 
   def targetExists(table: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(targetPath(table))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p)
+    val p = new HPath(targetPath(table))
+    fsOf(p).exists(p)
+  }
+
+  private def csvReader = spark.read.option("header", "true").option("inferSchema", "false")
+
+  /** The file's column names as Spark's own CSV header inference names
+    * them (quoting, dedup suffixes, `_c<i>` for empty cells), without a
+    * Spark job: the header is the first non-blank line, read on the
+    * driver the way Spark's line reader sees it (codec by extension,
+    * leading UTF-8 BOM dropped, malformed bytes replaced), and parsed
+    * from a one-line local Dataset. None = no header line at all.
+    */
+  private def headerSchema(file: Path): Option[StructType] = {
+    val p = new HPath(file.toUri)
+    val header = Using.Manager { use =>
+      val raw = use(fsOf(p).open(p))
+      val in = Option(new CompressionCodecFactory(spark.sparkContext.hadoopConfiguration).getCodec(p))
+        .fold[InputStream](raw)(codec => use(codec.createInputStream(raw)))
+      // a Charset-built reader replaces malformed bytes, as Spark does
+      // (Files.newBufferedReader would throw instead)
+      val reader = use(new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8)))
+      Iterator.continually(reader.readLine()).takeWhile(_ != null).zipWithIndex
+        .map { case (l, i) => if (i == 0) l.stripPrefix("\uFEFF") else l }
+        .find(_.trim.nonEmpty)
+    }.get
+    header.map(line => csvReader.csv(spark.createDataset(Seq(line))(Encoders.STRING)).schema)
   }
 
   /** S1 parity: header row is the schema, every payload column lands as
     * a string (inferSchema stays off by design — schema-on-write with
-    * all-VARCHAR columns is the reference's model, SURVEY §1.2).
+    * all-VARCHAR columns is the reference's model, SURVEY §1.2). The
+    * reader skips the header line itself.
     */
-  private def readAllString(file: Path): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("inferSchema", "false")
-      .csv(file.toString)
+  private def readAllString(file: Path, schema: StructType): DataFrame =
+    csvReader.schema(schema).csv(file.toString)
 
-  private def existingColumns(tgt: String): Option[Seq[String]] = {
-    val p = new org.apache.hadoop.fs.Path(tgt)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(spark.read.option("mergeSchema", "true").parquet(tgt).columns.toSeq)
-    else None
+  private def fsOf(p: HPath) = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def partitionDir(id: Long): String = s"datasetid=$id"
+
+  /** Names of the target's dataset partition dirs (empty when none). */
+  private def partitionDirs(tgt: String): Set[String] = {
+    val p = new HPath(tgt)
+    val fs = fsOf(p)
+    if (!fs.exists(p)) Set.empty
+    else fs.listStatus(p).iterator
+      .collect { case st if st.isDirectory => st.getPath.getName }
+      .filter(_.startsWith("datasetid="))
+      .toSet
+  }
+
+  /** Target columns per target, keyed by the partition dirs they were
+    * computed from. This importer's own appends update the entry; any
+    * other change to the listing (another writer) misses it and pays
+    * the mergeSchema read again.
+    */
+  private val columnCache = TrieMap.empty[String, (Set[String], Seq[String])]
+
+  /** None until some dataset has landed in the target. */
+  private def existingColumns(tgt: String, dirs: Set[String]): Option[Seq[String]] =
+    if (dirs.isEmpty) None
+    else columnCache.get(tgt) match {
+      case Some((seen, cols)) if seen == dirs => Some(cols)
+      case _ =>
+        val cols = spark.read.option("mergeSchema", "true").parquet(tgt).columns.toSeq
+        columnCache(tgt) = (dirs, cols)
+        Some(cols)
+    }
+
+  /** The merged target columns after appending `written`: existing data
+    * columns, then new ones, then the `datasetid` partition column.
+    */
+  private def mergedColumns(existing: Option[Seq[String]], written: Seq[String]): Seq[String] = {
+    val data = existing.getOrElse(Nil).filterNot(_ == "datasetid")
+    data ++ written.filterNot(c => c == "datasetid" || data.exists(_.equalsIgnoreCase(c))) :+ "datasetid"
+  }
+
+  /** Rows in the `datasetid=<id>` partition, summed from the parquet
+    * footers on the driver. The partition belongs to this one dataset
+    * id, so the sum is exactly what this import wrote.
+    */
+  private def writtenRows(tgt: String, id: Long): Long = {
+    val p = new HPath(tgt, partitionDir(id))
+    val fs = fsOf(p)
+    if (!fs.exists(p)) 0L
+    else fs.listStatus(p).iterator
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+      .map { st =>
+        Using.resource(ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf)))(_.getRecordCount)
+      }
+      .sum
   }
 
   /** Strategy semantics (create_importconfig_table.sql:13-17):

@@ -2,7 +2,16 @@ package graft.registry
 
 import java.sql.{Date, Timestamp}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import scala.util.Using
+
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.parquet.schema.Type.Repetition.{OPTIONAL, REQUIRED}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import graft.model.{DatasetMeta, DatasetStatus}
 
@@ -19,7 +28,9 @@ import graft.model.{DatasetMeta, DatasetStatus}
   * protocol. Every mutation here is optimistic-CAS over versioned
   * snapshots at `<path>.versions/`:
   *   1. read the latest COMMITTED snapshot (version v = marker + data);
-  *   2. apply the mutation and write the result to a unique tmp dir;
+  *   2. apply the mutation and write the result to a unique tmp dir —
+  *      one parquet file written on the driver by parquet-hadoop (no
+  *      Spark job; readers still load it with `spark.read.parquet`);
   *   3. claim version v+1 by ATOMIC EXCLUSIVE CREATE of
   *      `commit-{v+1}` (O_EXCL on local filesystems,
   *      create-no-overwrite on HDFS — both are real cross-process CAS);
@@ -67,6 +78,16 @@ final class DatasetRegistry(spark: SparkSession, path: String) {
       val rows = spark.read.parquet(dataDir(v).toString).as[DatasetMeta].collect().toSeq
       rowCache = Some((v, rows))
       rows
+  }
+
+  /** Rows of the committed head; before the first commit, those of the
+    * legacy bare table, if any.
+    */
+  private def currentRows(): Seq[DatasetMeta] = {
+    val v = committedMax()
+    if (v > 0) snapshotRows(v)
+    else if (legacyExists()) spark.read.parquet(path).as[DatasetMeta].collect().toSeq
+    else Nil
   }
 
   private def fs =
@@ -161,14 +182,9 @@ final class DatasetRegistry(spark: SparkSession, path: String) {
         // loop back out to the grace wait rather than sleep in-lock
         if (target > 1 && !fs.exists(dataDir(target - 1))) None
         else {
-          val base = committedMax()
-          val rows =
-            if (base > 0) snapshotRows(base)
-            else if (legacyExists()) spark.read.parquet(path).as[DatasetMeta].collect().toSeq
-            else Nil
-          val (newRows, result) = f(rows)
+          val (newRows, result) = f(currentRows())
           val tmp = new HPath(s"$versionsDir/.tmp-${java.util.UUID.randomUUID()}")
-          spark.createDataset(newRows).coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+          writeSnapshot(newRows, tmp)
           if (tryClaim(commitMarker(target)) && fs.rename(tmp, dataDir(target))) {
             // rename fails only when the slot was tombstoned while we
             // stalled between claim and rename (the zombie case) — then
@@ -188,6 +204,40 @@ final class DatasetRegistry(spark: SparkSession, path: String) {
       }
     }
     throw new IllegalStateException("registry: 100 failed commit attempts under contention")
+  }
+
+  /** Write `rows` as one parquet file under the fresh dir `tmp`, on the
+    * driver: a commit runs no Spark job. The file carries the schema
+    * Spark's `DatasetMeta` encoder reads back (dates as DATE,
+    * timestamps as UTC-adjusted micros), and values go through the
+    * same Catalyst conversions the encoder uses, so `spark.read.parquet`
+    * returns the rows unchanged.
+    */
+  private def writeSnapshot(rows: Seq[DatasetMeta], tmp: HPath): Unit = {
+    val factory = new SimpleGroupFactory(DatasetRegistry.SnapshotSchema)
+    val writer = ExampleParquetWriter
+      .builder(new HPath(tmp, "part-00000.snappy.parquet"))
+      .withConf(spark.sparkContext.hadoopConfiguration)
+      .withType(DatasetRegistry.SnapshotSchema)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .build()
+    Using.resource(writer) { w =>
+      rows.foreach { m =>
+        val g = factory.newGroup()
+          .append("datasetid", m.datasetid)
+          .append("datasetdate", DateTimeUtils.fromJavaDate(m.datasetdate))
+          .append("label", m.label)
+          .append("datasettypeid", m.datasettypeid)
+          .append("datasourceid", m.datasourceid)
+          .append("datastatusid", m.datastatusid)
+          .append("efffromdate", DateTimeUtils.fromJavaTimestamp(m.efffromdate))
+        m.effthrudate.foreach(t => g.append("effthrudate", DateTimeUtils.fromJavaTimestamp(t)))
+        g.append("isactive", m.isactive)
+          .append("createddate", DateTimeUtils.fromJavaTimestamp(m.createddate))
+          .append("createdby", m.createdby)
+        w.write(g)
+      }
+    }
   }
 
   /** Drop committed snapshots older than the last `keepVersions`. Only
@@ -220,15 +270,12 @@ final class DatasetRegistry(spark: SparkSession, path: String) {
     */
   def vacuum(): Unit = lock.synchronized(prune())
 
-  def load(): Dataset[DatasetMeta] = {
-    val v = committedMax()
-    // snapshot rows come from the immutable-version cache when this
-    // instance already read/wrote version v (control-plane sized by
-    // contract; see rowCache)
-    if (v > 0) spark.createDataset(snapshotRows(v))
-    else if (legacyExists()) spark.read.parquet(path).as[DatasetMeta]
-    else spark.emptyDataset[DatasetMeta]
-  }
+  /** The committed rows as a Dataset, for callers that join facts.
+    * Rows come from the immutable-version cache when this instance
+    * already read or wrote the head (control-plane sized by contract;
+    * see rowCache).
+    */
+  def load(): Dataset[DatasetMeta] = spark.createDataset(currentRows())
 
   def exists(): Boolean = committedMax() > 0 || legacyExists()
 
@@ -314,32 +361,28 @@ final class DatasetRegistry(spark: SparkSession, path: String) {
     * ever registered, in effective order, with its window and status.
     */
   def history(label: String, datasettypeid: Int): Seq[DatasetMeta] =
-    load()
+    currentRows()
       .filter(m => m.label == label && m.datasettypeid == datasettypeid)
-      .collect()
       .sortBy(m => (m.datasetdate.getTime, m.efffromdate.getTime))
-      .toSeq
 
   /** Latest active dataset date for a type — the reference's
     * `MAX(datasetdate)` scalar CTE (meetmax_url_download.py:52-58).
+    * This and the other lookups filter the snapshot rows on the driver
+    * (control-plane sized by contract), so they plan no Spark query.
     */
   def latestActiveDate(datasettypeid: Int): Option[Date] =
-    active()
-      .filter(_.datasettypeid == datasettypeid)
-      .collect()
+    currentRows()
+      .filter(m => m.isactive && m.datasettypeid == datasettypeid)
       .map(_.datasetdate)
-      .sortBy(_.getTime)
-      .lastOption
+      .maxByOption(_.getTime)
 
   /** Resolve the active datasetids for (type, date) — broadcast these
     * into fact scans for version pruning.
     */
   def activeIds(datasettypeid: Int, date: Date): Seq[Long] =
-    active()
-      .filter(m => m.datasettypeid == datasettypeid && m.datasetdate == date)
-      .collect()
+    currentRows()
+      .filter(m => m.isactive && m.datasettypeid == datasettypeid && m.datasetdate == date)
       .map(_.datasetid)
-      .toSeq
 
   /** Prune a fact frame to the latest active version of a type. The
     * id set is tiny → `isin` literal pushdown, which reaches parquet
@@ -353,4 +396,28 @@ final class DatasetRegistry(spark: SparkSession, path: String) {
         val ids = activeIds(datasettypeid, d)
         facts.filter(col("datasetid").isin(ids: _*))
     }
+}
+
+object DatasetRegistry {
+
+  /** Parquet schema of a snapshot file: [[DatasetMeta]]'s fields in
+    * order, every field required but the `Option` one.
+    */
+  private val SnapshotSchema: MessageType = {
+    val ts = LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS)
+    val str = LogicalTypeAnnotation.stringType()
+    Types.buildMessage()
+      .addField(Types.primitive(INT64, REQUIRED).named("datasetid"))
+      .addField(Types.primitive(INT32, REQUIRED).as(LogicalTypeAnnotation.dateType()).named("datasetdate"))
+      .addField(Types.primitive(BINARY, REQUIRED).as(str).named("label"))
+      .addField(Types.primitive(INT32, REQUIRED).named("datasettypeid"))
+      .addField(Types.primitive(INT32, REQUIRED).named("datasourceid"))
+      .addField(Types.primitive(INT32, REQUIRED).named("datastatusid"))
+      .addField(Types.primitive(INT64, REQUIRED).as(ts).named("efffromdate"))
+      .addField(Types.primitive(INT64, OPTIONAL).as(ts).named("effthrudate"))
+      .addField(Types.primitive(BOOLEAN, REQUIRED).named("isactive"))
+      .addField(Types.primitive(INT64, REQUIRED).as(ts).named("createddate"))
+      .addField(Types.primitive(BINARY, REQUIRED).as(str).named("createdby"))
+      .named("spark_schema")
+  }
 }

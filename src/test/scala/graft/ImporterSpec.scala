@@ -2,9 +2,13 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import java.time.LocalDate
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Functions
 import graft.ingest.{FilePatternScanner, GenericImporter}
 import graft.model._
 import graft.registry.DatasetRegistry
@@ -59,6 +63,129 @@ class ImporterSpec extends SparkSpec {
     write(src, "20250401T120000_Other.csv", "a\n1\n")
     val found = FilePatternScanner.scan(src.toString, """\d{8}T\d{6}_MeetMaxURLCheck\.csv""")
     assert(found.map(_.getFileName.toString) == Seq("20250401T120000_MeetMaxURLCheck.csv"))
+  }
+
+  test("FilePatternScanner closes its directory handle on every scan") {
+    val (_, _, src, _, _) = env()
+    write(src, "20250401T120000_MeetMaxURLCheck.csv", "a\n1\n")
+    val fdDir = new java.io.File("/proc/self/fd")
+    assume(fdDir.isDirectory, "open-fd count needs procfs")
+    def openFds(): Int = fdDir.list().length
+    val before = openFds()
+    (1 to 2000).foreach(_ => FilePatternScanner.scan(src.toString, """\d{8}T\d{6}_MeetMaxURLCheck\.csv"""))
+    val grown = openFds() - before
+    // other threads of the shared session may open a few files meanwhile
+    assert(grown < 100, s"2000 scans left $grown more open fds")
+  }
+
+  /** Spark jobs `body` starts, counted by a listener scoped to a job
+    * group of its own. Listener delivery is asynchronous, so a sentinel
+    * job in a second group runs after `body`: events arrive in order,
+    * and once the sentinel's start is seen every job of `body` was.
+    */
+  private def jobsIn[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"budget-${java.util.UUID.randomUUID()}"
+    val sentinel = s"$group-sentinel"
+    val jobs = new AtomicInteger(0)
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`)    => jobs.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _                =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job budget")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "job budget sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("job budget: one Spark job per CSV import, two per spreadsheet, none per registry commit") {
+    val (imp, reg, src, arch, _) = env()
+    val cfg = urlCheckConfig(src, arch)
+    // first import creates the target; the second appends to it
+    for (name <- Seq("20250401T120000_MeetMaxURLCheck.csv", "20250402T120000_MeetMaxURLCheck.csv")) {
+      val (r, jobs) = jobsIn(imp.importFile(cfg, write(src, name, f1Csv), 2, 1))
+      assert(r.status == DatasetStatus.Active && r.rowsLoaded == 4)
+      assert(jobs == 1, s"$name: a non-empty CSV import ran $jobs Spark jobs")
+    }
+    val (h, hJobs) = jobsIn(imp.importFile(cfg,
+      write(src, "20250403T120000_MeetMaxURLCheck.csv", "EventID,Title\n"), 2, 1))
+    assert(h.status == DatasetStatus.Empty)
+    assert(hJobs <= 1, s"a header-only CSV import ran $hJobs Spark jobs")
+    val xlsxCfg = cfg.copy(filePattern = """\d{8}T\d{6}_MeetMax_\d+\.xlsx""", fileType = "XLSX",
+      labelSource = MetaSource.Filename, labelLocation = Some("2"), targetTable = "public.tmeetmaxevent")
+    val xlsx = Files.write(src.resolve("20250401T120000_MeetMax_5.xlsx"),
+      xlsxBytes(f2SheetXml, Seq("EventID", "Company Name", "Flag")))
+    val (x, xJobs) = jobsIn(imp.importFile(xlsxCfg, xlsx, 3, 1))
+    assert(x.status == DatasetStatus.Active && x.rowsLoaded == 2)
+    assert(xJobs <= 2, s"an XLSX import ran $xJobs Spark jobs")
+    val (id, insertJobs) = jobsIn(reg.insert(java.sql.Date.valueOf("2025-05-01"), "X", 9, 1))
+    val (_, statusJobs) = jobsIn(reg.setStatus(id, DatasetStatus.Empty))
+    assert(insertJobs == 0 && statusJobs == 0,
+      s"registry commits ran Spark jobs: insert $insertJobs, setStatus $statusJobs")
+  }
+
+  test("header and row count match Spark's CSV reader on tricky files") {
+    val utf8 = (s: String) => s.getBytes("UTF-8")
+    val cases: Seq[(String, Array[Byte])] = Seq(
+      "quoted header with a comma" -> utf8("\"Last, First\",Id\nDoe,1\nRoe,2\n"),
+      "duplicate and case-duplicate names" -> utf8("a,A,b,b,c\n1,2,3,4,5\n"),
+      "empty header cells" -> utf8("a,,c,\n1,2,3,4\n"),
+      "leading blank lines" -> utf8("\n  \n\na,b\n1,2\n"),
+      "CRLF line endings" -> utf8("a,b\r\n1,2\r\n3,4\r\n"),
+      "UTF-8 BOM" -> (Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++ utf8("a,b\n1,2\n")),
+      "invalid UTF-8 byte" -> (utf8("a") ++ Array(0xFF.toByte) ++ utf8("z,b\n1,2\n")),
+      "whitespace-only data line" -> utf8("a,b\n1,2\n   \n3,4\n"),
+      "header-only file" -> utf8("a,b\n"),
+      "zero-byte file" -> Array.emptyByteArray)
+    for ((name, bytes) <- cases) {
+      val (imp, _, src, arch, root) = env()
+      val ref = Files.write(Files.createDirectories(root.resolve("ref")).resolve("ref.csv"), bytes)
+      val sparkDf = spark.read.option("header", "true").csv(ref.toString)
+      val wantCols = sparkDf.columns.map(Functions.normalizeName).toSeq
+      val wantRows = if (wantCols.isEmpty) 0L else sparkDf.count()
+      val wantStatus = if (wantRows == 0) DatasetStatus.Empty else DatasetStatus.Active
+      val f = Files.write(src.resolve("20250401T120000_MeetMaxURLCheck.csv"), bytes)
+      val r = imp.importFile(urlCheckConfig(src, arch), f, 2, 1)
+      assert(r.status == wantStatus, s"$name: status")
+      assert(r.rowsLoaded == wantRows, s"$name: rowsLoaded")
+      if (wantStatus == DatasetStatus.Active) {
+        val got = imp.readTarget("public.tmeetmaxurlcheck").drop("datasetid")
+        assert(got.columns.toSeq == wantCols, s"$name: columns")
+        assert(got.collect().map(_.toSeq).toSet == sparkDf.collect().map(_.toSeq).toSet, s"$name: rows")
+      } else assert(!imp.targetExists("public.tmeetmaxurlcheck") ||
+        !Files.exists(Paths.get(s"$root/warehouse/public_tmeetmaxurlcheck/datasetid=${r.datasetid}")),
+        s"$name: an Empty import wrote data")
+    }
+  }
+
+  test("header-only files: Empty under FailOnMissing, and no new column under Evolve") {
+    val (imp, _, src, arch, root) = env()
+    write(src, "20250401T120000_MeetMaxURLCheck.csv", "EventID,Title\n1,A\n")
+    imp.run(urlCheckConfig(src, arch), 2, 1)
+    // header-only and missing a target column: Empty, not Failed
+    write(src, "20250402T120000_MeetMaxURLCheck.csv", "EventID\n")
+    val strict = imp.run(urlCheckConfig(src, arch, ImportStrategy.FailOnMissing), 2, 1).files.head
+    assert(strict.status == DatasetStatus.Empty)
+    // header-only with a new column under Evolve: no partition, no column
+    write(src, "20250403T120000_MeetMaxURLCheck.csv", "EventID,Title,Late Col\n")
+    val evolved = imp.run(urlCheckConfig(src, arch), 2, 1).files.head
+    assert(evolved.status == DatasetStatus.Empty && evolved.rowsLoaded == 0)
+    assert(!Files.exists(Paths.get(s"$root/warehouse/public_tmeetmaxurlcheck/datasetid=${evolved.datasetid}")))
+    assert(imp.readTarget("public.tmeetmaxurlcheck").columns.toSet == Set("eventid", "title", "datasetid"))
+    // the next real file still evolves from the unchanged target
+    write(src, "20250404T120000_MeetMaxURLCheck.csv", "EventID,Title,Late Col\n2,B,x\n")
+    val next = imp.run(urlCheckConfig(src, arch), 2, 1).files.head
+    assert(next.status == DatasetStatus.Active && next.newColumns == Seq("late_col"))
   }
 
   test("golden F1 import: registry row, normalized columns, datasetid stamp, archive move") {

@@ -1,9 +1,9 @@
 package graft
 
 import java.nio.file.Files
-import java.sql.Date
+import java.sql.{Date, Timestamp}
 
-import graft.model.DatasetStatus
+import graft.model.{DatasetMeta, DatasetStatus}
 import graft.registry.DatasetRegistry
 
 class RegistrySpec extends SparkSpec {
@@ -363,5 +363,46 @@ class RegistrySpec extends SparkSpec {
     assert(reg.load().count() == n)
     info(s"growth audit: ${n + 10} mutations → $dirsAfter dirs, $bytesAfter bytes " +
       s"(${bytesAfter / math.max(1, dirsAfter)} B/snapshot); post-vacuum $dirsVac dirs")
+  }
+
+  test("snapshot round-trip: a fresh instance loads exactly the committed rows") {
+    // seed rows with sub-millisecond timestamps and an open window
+    // through a Spark-written legacy table; the next commit rewrites
+    // them, with the new row, in the driver-written snapshot format
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-registry-roundtrip").toString
+    val path = s"$dir/registry"
+    val t1 = Timestamp.valueOf("2025-04-01 09:30:15.123456")
+    val t2 = Timestamp.valueOf("2025-04-02 00:00:00.000001")
+    val seed = Seq(
+      DatasetMeta(1L, Date.valueOf("1999-12-31"), "A", 1, 1, DatasetStatus.Inactive.id,
+        t1, Some(t2), isactive = false, t1, "seed"),
+      DatasetMeta(2L, Date.valueOf("2025-04-01"), "A", 1, 2, DatasetStatus.Active.id,
+        t2, None, isactive = true, t2, "seed"))
+    spark.createDataset(seed).coalesce(1).write.parquet(path)
+    val reg = new DatasetRegistry(spark, path)
+    val id = reg.insert(Date.valueOf("2025-04-03"), "B", 2, 1)
+    reg.setStatus(id, DatasetStatus.Empty)
+    val inMemory = reg.load().collect().sortBy(_.datasetid).toSeq
+    val fresh = new DatasetRegistry(spark, path).load().collect().sortBy(_.datasetid).toSeq
+    assert(fresh == inMemory)
+    assert(fresh.take(2) == seed)
+    assert(fresh.count(_.effthrudate.isEmpty) == 2)
+    assert(fresh.last.datastatusid == DatasetStatus.Empty.id && fresh.last.isactive)
+  }
+
+  test("lookups read the committed head across instances") {
+    val dir = Files.createTempDirectory("graft-registry-lookups").toString
+    val writer = new DatasetRegistry(spark, s"$dir/registry")
+    val reader = new DatasetRegistry(spark, s"$dir/registry")
+    assert(reader.latestActiveDate(1).isEmpty && reader.activeIds(1, d).isEmpty)
+    val id1 = writer.insert(d, "A", 1, 1)
+    val id2 = writer.insert(Date.valueOf("2025-04-02"), "A", 1, 1)
+    writer.insert(Date.valueOf("2025-04-09"), "A", 2, 1) // another type
+    assert(reader.latestActiveDate(1).contains(Date.valueOf("2025-04-02")))
+    assert(reader.activeIds(1, d) == Seq(id1))
+    val id3 = writer.insert(d, "A", 1, 1) // displaces id1
+    assert(reader.activeIds(1, d) == Seq(id3))
+    assert(reader.history("A", 1).map(_.datasetid) == Seq(id1, id3, id2))
   }
 }
