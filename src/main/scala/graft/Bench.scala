@@ -60,9 +60,13 @@ object Bench {
   /** One measured execution: wall seconds plus the JVM-GC time and
     * executor spill bytes it absorbed — the two counters that explain
     * a container-contention outlier after the fact (a median that
-    * doubles while gc_ms/spill_mb explode is environment, not plan).
+    * doubles while gc_ms/spill_mb explode is environment, not plan) —
+    * and the generated classes Janino compiled during it (0 once the
+    * warmups filled Spark's codegen cache; see
+    * [[Sessions.CodegenCacheEntries]]).
     */
-  private final case class RunStat(sec: Double, gcMs: Long, spillMb: Long, shuffleMb: Long)
+  private final case class RunStat(
+      sec: Double, gcMs: Long, spillMb: Long, shuffleMb: Long, compiles: Long)
 
   def main(args: Array[String]): Unit = {
     val wallT0 = System.nanoTime()
@@ -101,6 +105,10 @@ object Bench {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
         .map(_.getCollectionTime.max(0L)).sum
     }
+
+    // JVM-wide count of Janino compilations of generated classes
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
     val pool = Executors.newCachedThreadPool()
 
@@ -172,9 +180,10 @@ object Bench {
     def measured(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         dir: String): RunStat = {
       val gc0 = gcMillis(); val sp0 = spillBytes.get(); val sh0 = shuffleBytes.get()
+      val cc0 = compiles()
       val sec = guarded(name)(fn(spark, dir).count())
       RunStat(sec, gcMillis() - gc0, (spillBytes.get() - sp0) >> 20,
-        (shuffleBytes.get() - sh0) >> 20)
+        (shuffleBytes.get() - sh0) >> 20, compiles() - cc0)
     }
 
     /** One warmup + `runs` measured executions of every query in
@@ -286,7 +295,8 @@ object Bench {
           ",\"sec\":[" + secs(ts).map(f).mkString(",") + "]" +
           ",\"gc_ms\":[" + ts.map(_.gcMs).mkString(",") + "]" +
           ",\"spill_mb\":[" + ts.map(_.spillMb).mkString(",") + "]" +
-          ",\"shuffle_mb\":[" + ts.map(_.shuffleMb).mkString(",") + "]}"
+          ",\"shuffle_mb\":[" + ts.map(_.shuffleMb).mkString(",") + "]" +
+          ",\"codegen_compiles\":[" + ts.map(_.compiles).mkString(",") + "]}"
       }.mkString("{", ",", "}")
     def totalOf(results: Seq[(String, Seq[RunStat])]): Double =
       results.map { case (_, ts) => median(secs(ts)) }.filter(_ >= 0).sum
@@ -351,9 +361,9 @@ object Bench {
       val fp = dirFingerprint(sf1Dir) + s"|cpus=$cpus|runs=$sf1Runs|timeout=$TimeoutSec"
       def parseRuns(fields: Array[String]): Option[Seq[RunStat]] =
         try {
-          val Array(ss, gg, pp, hh) = fields.map(_.split(",").filter(_.nonEmpty))
+          val Array(ss, gg, pp, hh, cc) = fields.map(_.split(",").filter(_.nonEmpty))
           val stats = ss.indices.map(i =>
-            RunStat(ss(i).toDouble, gg(i).toLong, pp(i).toLong, hh(i).toLong))
+            RunStat(ss(i).toDouble, gg(i).toLong, pp(i).toLong, hh(i).toLong, cc(i).toLong))
           // never resume a row containing a failed run: re-measure it
           if (stats.nonEmpty && stats.forall(_.sec >= 0)) Some(stats) else None
         } catch { case _: Throwable => None }
@@ -363,7 +373,7 @@ object Bench {
           import scala.jdk.CollectionConverters._
           java.nio.file.Files.readAllLines(progressPath).asScala.toSeq
             .map(_.split("\t", -1))
-            .collect { case a if a.length == 6 && a(0) == fp =>
+            .collect { case a if a.length == 7 && a(0) == fp =>
               parseRuns(a.drop(2)).map(a(1) -> _)
             }.flatten.toMap
         }
@@ -371,7 +381,8 @@ object Bench {
         try {
           val line = Seq(fp, name,
             ts.map(t => f(t.sec)).mkString(","), ts.map(_.gcMs).mkString(","),
-            ts.map(_.spillMb).mkString(","), ts.map(_.shuffleMb).mkString(",")
+            ts.map(_.spillMb).mkString(","), ts.map(_.shuffleMb).mkString(","),
+            ts.map(_.compiles).mkString(",")
           ).mkString("\t") + "\n"
           java.nio.file.Files.writeString(progressPath, line,
             java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)

@@ -33,6 +33,15 @@ object Ivf {
     s
   }
 
+  /** The search-side parameter checks shared by every IVF route
+    * (here and [[IvfPq]]): a `k` or `nprobe` below 1 would return an
+    * empty frame instead of an answer.
+    */
+  private[operators] def requireProbe(k: Int, nprobe: Int): Unit = {
+    require(k >= 1, s"k must be at least 1, got $k")
+    require(nprobe >= 1, s"nprobe must be at least 1, got $nprobe")
+  }
+
   private def toVec(df: DataFrame, idCol: String, vecCol: String) = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -64,10 +73,14 @@ object Ivf {
       k: Int,
       iters: Int = 5
   ): Model = {
+    require(k >= 1, s"k must be at least 1, got $k")
+    require(iters >= 0, s"iters must be at least 0, got $iters")
     val spark = df.sparkSession
     import spark.implicits._
     val data = toVec(df, idCol, vecCol)
     var centroids = data.orderBy(col(idCol)).take(k).map(_._2)
+    require(centroids.length == k,
+      s"IVF training needs at least k=$k vectors, found only ${centroids.length}")
     for (_ <- 0 until iters) {
       val bc = spark.sparkContext.broadcast(centroids)
       val assigned = data.mapPartitions { rows =>
@@ -199,6 +212,7 @@ object Ivf {
       nprobe: Int,
       roundTo: Int = 4
   ): DataFrame = {
+    requireProbe(k, nprobe)
     val probed = toVec(queries, idCol, vecCol).collect()
       .flatMap { case (_, qv) => model.nearest(qv, nprobe) }
       .distinct.sorted
@@ -234,6 +248,7 @@ object Ivf {
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.VectorKernels
+    requireProbe(k, nprobe)
     val spark = indexed.sparkSession
     import spark.implicits._
     val bcModel = spark.sparkContext.broadcast(model)
@@ -288,6 +303,8 @@ object Ivf {
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.VectorKernels
+    requireProbe(k, nprobe)
+    require(shortlist >= 1, s"shortlist must be at least 1, got $shortlist")
     val spark = indexed.sparkSession
     import spark.implicits._
     val bcModel = spark.sparkContext.broadcast(model)

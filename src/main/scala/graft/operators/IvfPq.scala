@@ -43,6 +43,7 @@ object IvfPq {
       nprobe: Int,
       roundTo: Int = 4
   ): DataFrame = {
+    Ivf.requireProbe(k, nprobe)
     val spark = indexed.sparkSession
     import spark.implicits._
     val bcCoarse = spark.sparkContext.broadcast(coarse)
@@ -135,6 +136,7 @@ object IvfPq {
       nprobe: Int,
       roundTo: Int = 4
   ): DataFrame = {
+    Ivf.requireProbe(k, nprobe)
     val spark = indexed.sparkSession
     import spark.implicits._
     val bcCoarse = spark.sparkContext.broadcast(coarse)

@@ -42,6 +42,9 @@ object Pq {
   def train(
       df: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int, iters: Int, dim: Int): Model = {
+    require(m >= 1, s"m must be at least 1, got $m")
+    require(k >= 1, s"k must be at least 1, got $k")
+    require(iters >= 0, s"iters must be at least 0, got $iters")
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
     val d = dim / m
     val spark = df.sparkSession

@@ -2,10 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import java.time.LocalDate
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Functions
@@ -76,36 +73,6 @@ class ImporterSpec extends SparkSpec {
     val grown = openFds() - before
     // other threads of the shared session may open a few files meanwhile
     assert(grown < 100, s"2000 scans left $grown more open fds")
-  }
-
-  /** Spark jobs `body` starts, counted by a listener scoped to a job
-    * group of its own. Listener delivery is asynchronous, so a sentinel
-    * job in a second group runs after `body`: events arrive in order,
-    * and once the sentinel's start is seen every job of `body` was.
-    */
-  private def jobsIn[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"budget-${java.util.UUID.randomUUID()}"
-    val sentinel = s"$group-sentinel"
-    val jobs = new AtomicInteger(0)
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`)    => jobs.incrementAndGet()
-          case Some(`sentinel`) => drained.countDown()
-          case _                =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "job budget")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "job budget sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("job budget: one Spark job per CSV import, two per spreadsheet, none per registry commit") {

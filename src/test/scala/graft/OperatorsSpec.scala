@@ -425,6 +425,80 @@ class OperatorsSpec extends SparkSpec {
     assert(model.centroids.map(_.toSeq).toSeq == model2.centroids.map(_.toSeq).toSeq)
   }
 
+  test("IVF and PQ reject degenerate parameters before any Spark job runs") {
+    import graft.operators.{Ivf, IvfPq, Pq}
+    // models built by hand and lazy frames: setting up runs no job
+    val dim = 64
+    val coarse = Ivf.Model(Array.fill(2)(Array.fill(dim)(0.0)))
+    val pq = Pq.Model(Array.fill(4)(Array.fill(16)(Array.fill(dim / 4)(0.0))))
+    val indexed = Ivf.index(emb, "vec_id", "embedding", coarse)
+    val encoded = Pq.encode(emb, "vec_id", "embedding", pq)
+    val queries = emb.filter(col("vec_id") < 5)
+    val mn = Array.fill(dim)(0.0)
+    val step = Array.fill(dim)(1.0)
+    val cases: Seq[(String, String, () => Any)] = Seq(
+      ("Ivf.train k=0", "k must be at least 1",
+        () => Ivf.train(emb, "vec_id", "embedding", k = 0, iters = 1)),
+      ("Ivf.train iters=-1", "iters must be at least 0",
+        () => Ivf.train(emb, "vec_id", "embedding", k = 2, iters = -1)),
+      ("Ivf.search k=0", "k must be at least 1",
+        () => Ivf.search(indexed, queries, "vec_id", "embedding", coarse, k = 0, nprobe = 1)),
+      ("Ivf.search nprobe=0", "nprobe must be at least 1",
+        () => Ivf.search(indexed, queries, "vec_id", "embedding", coarse, k = 3, nprobe = 0)),
+      ("Ivf.searchStored k=0", "k must be at least 1",
+        () => Ivf.searchStored(spark, "/nonexistent", queries, "vec_id", "embedding", coarse,
+          k = 0, nprobe = 1)),
+      ("Ivf.searchStored nprobe=0", "nprobe must be at least 1",
+        () => Ivf.searchStored(spark, "/nonexistent", queries, "vec_id", "embedding", coarse,
+          k = 3, nprobe = 0)),
+      ("Ivf.searchSq8 k=0", "k must be at least 1",
+        () => Ivf.searchSq8(indexed, emb, queries, "vec_id", "embedding", coarse, mn, step,
+          shortlist = 10, k = 0, nprobe = 1)),
+      ("Ivf.searchSq8 nprobe=0", "nprobe must be at least 1",
+        () => Ivf.searchSq8(indexed, emb, queries, "vec_id", "embedding", coarse, mn, step,
+          shortlist = 10, k = 3, nprobe = 0)),
+      ("Ivf.searchSq8 shortlist=0", "shortlist must be at least 1",
+        () => Ivf.searchSq8(indexed, emb, queries, "vec_id", "embedding", coarse, mn, step,
+          shortlist = 0, k = 3, nprobe = 1)),
+      ("IvfPq.search k=0", "k must be at least 1",
+        () => IvfPq.search(indexed, encoded, queries, "vec_id", "embedding", coarse, pq,
+          k = 0, nprobe = 1)),
+      ("IvfPq.search nprobe=0", "nprobe must be at least 1",
+        () => IvfPq.search(indexed, encoded, queries, "vec_id", "embedding", coarse, pq,
+          k = 3, nprobe = 0)),
+      ("IvfPq.residualSearch k=0", "k must be at least 1",
+        () => IvfPq.residualSearch(indexed, encoded, queries, "vec_id", "embedding", coarse, pq,
+          k = 0, nprobe = 1)),
+      ("IvfPq.residualSearch nprobe=0", "nprobe must be at least 1",
+        () => IvfPq.residualSearch(indexed, encoded, queries, "vec_id", "embedding", coarse, pq,
+          k = 3, nprobe = 0)),
+      ("Pq.train m=0", "m must be at least 1",
+        () => Pq.train(emb, "vec_id", "embedding", m = 0, k = 16, iters = 1, dim = dim)),
+      ("Pq.train k=0", "k must be at least 1",
+        () => Pq.train(emb, "vec_id", "embedding", m = 4, k = 0, iters = 1, dim = dim)),
+      ("Pq.train iters=-1", "iters must be at least 0",
+        () => Pq.train(emb, "vec_id", "embedding", m = 4, k = 16, iters = -1, dim = dim)))
+    for ((name, msg, call) <- cases) {
+      val (e, jobs) = jobsIn(intercept[IllegalArgumentException](call()))
+      assert(e.getMessage.contains(msg), s"$name: ${e.getMessage}")
+      assert(jobs == 0, s"$name ran $jobs Spark jobs before rejecting")
+    }
+    // too few vectors is known only after the init take(k): same
+    // rejection and wording for IVF as for PQ, before any Lloyd pass
+    val three = emb.orderBy("vec_id").limit(3)
+    for (train <- Seq[() => Any](
+        () => Ivf.train(three, "vec_id", "embedding", k = 8, iters = 1),
+        () => Pq.train(three, "vec_id", "embedding", m = 4, k = 8, iters = 1, dim = dim))) {
+      val e = intercept[IllegalArgumentException](train())
+      assert(e.getMessage.contains("needs at least k=8 vectors, found only 3"), e.getMessage)
+    }
+    // iters = 0 stays legal: the model is the k smallest-id vectors
+    val init = Ivf.train(emb, "vec_id", "embedding", k = 2, iters = 0)
+    val want = emb.orderBy("vec_id").limit(2)
+      .select(col("embedding").cast("array<double>")).collect().map(_.getSeq[Double](0))
+    assert(init.centroids.map(_.toSeq).toSeq == want.toSeq)
+  }
+
   test("approx_count_distinct sketch stays within rsd bounds of exact") {
     val events = Tables(spark, sf).events
     // td07 now carries its own bound: (event_type, n, exact_users,

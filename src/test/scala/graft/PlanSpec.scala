@@ -689,4 +689,20 @@ class PlanSpec extends SparkSpec {
     assert(exchanges.forall(e => !(e.contains("table_id#") && e.contains(" v#"))),
       s"bucket exchanges must not carry the vectors:\n$p")
   }
+
+  test("a repeated pass over the search_mix queries compiles no generated class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      Sessions.CodegenCacheEntries.toString)
+    // the compile counter is JVM-wide: nothing else may be running
+    assert(spark.streams.active.isEmpty, "a streaming query would compile concurrently")
+    val rows = Seq("ss03_ivf_ann", "ss07_ivf_pq", "ss20_capped_recall", "ss27_binary_quant",
+      "dd22_gated_jaccard", "dd23_gated_containment")
+    def pass(): Unit = rows.foreach(name => SparkEntry.queries(name)(spark, sf).collect())
+    pass()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    pass()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"the second pass compiled $compiled generated classes")
+  }
 }
