@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorKernels
+
 /** IVF (inverted-file) approximate nearest neighbor: a k-means coarse
   * quantizer assigns every vector to its nearest centroid; search
   * probes only the `nprobe` closest clusters and rescores exactly
@@ -38,8 +40,24 @@ object Ivf {
     * empty frame instead of an answer.
     */
   private[operators] def requireProbe(k: Int, nprobe: Int): Unit = {
-    require(k >= 1, s"k must be at least 1, got $k")
-    require(nprobe >= 1, s"nprobe must be at least 1, got $nprobe")
+    Similarity.requireAtLeast1("k", k)
+    Similarity.requireAtLeast1("nprobe", nprobe)
+  }
+
+  /** (query_id, cluster_id, qv): every query replicated to its
+    * `nprobe` nearest clusters — the candidate generator of every IVF
+    * route (here and [[IvfPq]]). Queries are the small side by
+    * contract; only the k×d centroid model is broadcast.
+    */
+  private[operators] def probes(
+      queries: DataFrame, idCol: String, vecCol: String, model: Model, nprobe: Int
+  ): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val bcModel = spark.sparkContext.broadcast(model)
+    toVec(queries, idCol, vecCol)
+      .flatMap { case (qid, qv) => bcModel.value.nearest(qv, nprobe).map(c => (qid, c, qv)) }
+      .toDF("query_id", "cluster_id", "qv")
   }
 
   private def toVec(df: DataFrame, idCol: String, vecCol: String) = {
@@ -246,33 +264,18 @@ object Ivf {
       nprobe: Int,
       roundTo: Int = 4
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.VectorKernels
     requireProbe(k, nprobe)
-    val spark = indexed.sparkSession
-    import spark.implicits._
-    val bcModel = spark.sparkContext.broadcast(model)
-    val probes = toVec(queries, idCol, vecCol)
-      .flatMap { case (qid, qv) =>
-        bcModel.value.nearest(qv, nprobe).map(c => (qid, c, qv))
-      }
-      .toDF("query_id", "cluster_id", "qv")
-      .withColumn("qn", sqrt(VectorKernels.vecDot(col("qv"), col("qv"))))
     val members = indexed.select(
       col(idCol).cast("long").as("corpus_id"),
       col(vecCol).cast("array<double>").as("cv"),
       col("cluster_id"))
       .withColumn("cn", sqrt(VectorKernels.vecDot(col("cv"), col("cv"))))
-    val pairs = probes
+    val pairs = probes(queries, idCol, vecCol, model, nprobe)
+      .withColumn("qn", sqrt(VectorKernels.vecDot(col("qv"), col("qv"))))
       .join(members, "cluster_id")
       .filter(col("corpus_id") =!= col("query_id"))
-      .select(col("query_id"), col("corpus_id"),
-        round(VectorKernels.vecDot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo)
-          .as("sim"))
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), asc("corpus_id"))
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .select(col("query_id"), col("corpus_id"), Similarity.roundedCosine(roundTo).as("sim"))
+    Similarity.firstK(pairs, Seq("query_id"), k, "rank", desc("sim"), asc("corpus_id"))
       .select("query_id", "corpus_id", "sim", "rank")
   }
 
@@ -301,20 +304,8 @@ object Ivf {
       nprobe: Int,
       roundTo: Int = 4
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.VectorKernels
     requireProbe(k, nprobe)
-    require(shortlist >= 1, s"shortlist must be at least 1, got $shortlist")
-    val spark = indexed.sparkSession
-    import spark.implicits._
-    val bcModel = spark.sparkContext.broadcast(model)
-    val probes = toVec(queries, idCol, vecCol)
-      .flatMap { case (qid, qv) =>
-        bcModel.value.nearest(qv, nprobe).map(c => (qid, c))
-      }
-      .toDF("query_id", "cluster_id")
-      .join(Similarity.sq8Queries(queries, idCol, vecCol, mn, step)
-        .drop("qv"), "query_id")
+    val q = Similarity.sq8Queries(queries, idCol, vecCol, mn, step)
     val mnL = lit(mn)
     val stepL = lit(step)
     val codes =
@@ -323,35 +314,15 @@ object Ivf {
     val members = indexed
       .select(col(idCol).cast("long").as("corpus_id"), col("cluster_id"), codes.as("codes"))
       .withColumn("dqn", sqrt(VectorKernels.vecDot(dq, dq)))
-    // Shortlist window shuffles ONLY (query_id, corpus_id, adc); qv/qn
-    // re-join from the (small, per-query) probe frame after the filter.
-    val pairs = probes
+    val pairs = probes(queries, idCol, vecCol, model, nprobe)
+      .drop("qv")
+      .join(q.drop("qv"), "query_id")
       .join(members, "cluster_id")
       .filter(col("corpus_id") =!= col("query_id"))
       .select(col("query_id"), col("corpus_id"),
         round((col("qmin") + VectorKernels.sq8Adc(col("qw"), col("codes"))) /
           (col("qn") * col("dqn")), roundTo).as("adc"))
-    val wAdc = Window.partitionBy("query_id").orderBy(desc("adc"), asc("corpus_id"))
-    val cand = pairs
-      .withColumn("rn", row_number().over(wAdc))
-      .filter(col("rn") <= shortlist)
-      .drop("rn")
-    val exact = corpus.select(
-      col(idCol).cast("long").as("corpus_id"),
-      transform(col(vecCol), _.cast("double")).as("cv"))
-      .withColumn("cn", sqrt(VectorKernels.vecDot(col("cv"), col("cv"))))
-    val qSlim = Similarity.sq8Queries(queries, idCol, vecCol, mn, step)
-      .select(col("query_id"), col("qv"), col("qn"))
-    val resc = broadcast(cand)
-      .join(exact, "corpus_id")
-      .join(broadcast(qSlim), "query_id")
-      .select(col("query_id"), col("corpus_id"), col("adc"),
-        round(VectorKernels.vecDot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo)
-          .as("sim"))
-    val wSim = Window.partitionBy("query_id").orderBy(desc("sim"), asc("corpus_id"))
-    resc
-      .withColumn("rank", row_number().over(wSim))
-      .filter(col("rank") <= k)
-      .select("query_id", "corpus_id", "adc", "sim", "rank")
+    Similarity.shortlistRerank(pairs, "adc", desc("adc"), shortlist, corpus, q,
+      idCol, vecCol, k, roundTo)
   }
 }

@@ -1,11 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** IVF-PQ composed search — the FAISS `IndexIVFPQ` shape
-  * (by_residual=false variant): the IVF coarse quantizer restricts
+/** IVF-PQ composed search — the FAISS `IndexIVFPQ` shape, both its
+  * by_residual variants: the IVF coarse quantizer restricts
   * candidates to each query's `nprobe` probe clusters (≈ nprobe/k of
   * the corpus), and ranking inside those clusters runs in the
   * COMPRESSED domain via PQ asymmetric distance — the corpus
@@ -23,11 +22,23 @@ import org.apache.spark.sql.functions._
   * Determinism: coarse probes replay [[Ivf.train]]'s decimal-exact
   * Lloyd; ADC distances replay [[Pq]]'s subspace-ordered sums with
   * HALF_UP rounding — the whole pipeline is bit-reproducible and
-  * oracle-replayable (the ss07 DuckDB query).
+  * oracle-replayable (the ss07 and ss08 DuckDB queries).
   */
 object IvfPq {
 
-  /** @param indexed corpus with `cluster_id` ([[Ivf.index]] output)
+  /** IVF-PQ search. Probes are chosen on RAW query-to-centroid
+    * distance; the two values of `byResidual` are the two FAISS
+    * encodings:
+    *
+    *  - false (ss07): `pq`/`encoded` quantize the raw vectors, and
+    *    each query ranks against the codes with one ADC table per query;
+    *  - true (ss08, FAISS `by_residual=true`): `pq`/`encoded` must come
+    *    from [[residuals]] of the same `indexed`/`coarse`. Inside a
+    *    probed cluster the query is re-expressed as its residual
+    *    against THAT cluster's centroid and ranked against the corpus
+    *    residual codes — one ADC table per (query, probe cluster).
+    *
+    * @param indexed corpus with `cluster_id` ([[Ivf.index]] output)
     * @param encoded corpus PQ codes ([[Pq.encode]] output)
     * @param queries small query side (replicated nprobe ways)
     */
@@ -41,50 +52,55 @@ object IvfPq {
       pq: Pq.Model,
       k: Int,
       nprobe: Int,
+      byResidual: Boolean = false,
       roundTo: Int = 4
   ): DataFrame = {
     Ivf.requireProbe(k, nprobe)
     val spark = indexed.sparkSession
     import spark.implicits._
-    val bcCoarse = spark.sparkContext.broadcast(coarse)
     val bcPq = spark.sparkContext.broadcast(pq)
-    val probes = queries
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .flatMap { case (qid, qv) =>
-        bcCoarse.value.nearest(qv, nprobe).map(c => (qid, c, qv))
-      }
-      .toDF("query_id", "cluster_id", "qv")
-    val cand = probes
+    val cand = Ivf.probes(queries, idCol, vecCol, coarse, nprobe)
       .join(indexed.select(col(idCol).cast("long").as("corpus_id"), col("cluster_id")),
         "cluster_id")
       .filter(col("corpus_id") =!= col("query_id"))
       .join(encoded.select(col(idCol).cast("long").as("corpus_id"), col("codes")), "corpus_id")
-    val scale = roundTo
-    val scored = cand
-      .select(col("query_id"), col("qv"), col("corpus_id"), col("codes"))
-      .as[(Long, Array[Double], Long, Array[Int])]
-      .mapPartitions { rows =>
-        val mod = bcPq.value
-        val d = mod.subDim
-        // ADC tables built once per (task, query) — queries are few
-        val tables = scala.collection.mutable.HashMap.empty[Long, Array[Array[Double]]]
-        rows.map { case (qid, qv, cid, code) =>
-          val t = tables.getOrElseUpdate(qid,
-            Array.tabulate(mod.m, mod.codebooks(0).length)((s, c) =>
-              Pq.dist2(qv, mod.codebooks(s)(c), s * d)))
-          var dist = 0.0; var s = 0
-          while (s < mod.m) { dist += t(s)(code(s)); s += 1 }
-          (qid, cid,
-            BigDecimal(dist).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    // ADC tables built once per (task, query) — queries are few
+    val scored =
+      if (!byResidual) cand
+        .select(col("query_id"), col("qv"), col("corpus_id"), col("codes"))
+        .as[(Long, Array[Double], Long, Array[Int])]
+        .mapPartitions { rows =>
+          val mod = bcPq.value
+          val tables = scala.collection.mutable.HashMap.empty[Long, Array[Array[Double]]]
+          rows.map { case (qid, qv, cid, code) =>
+            (qid, cid, Pq.adcDist(tables.getOrElseUpdate(qid, Pq.adcTable(mod, qv)), code, roundTo))
+          }
         }
+      else {
+        val bcCentroids = spark.sparkContext.broadcast(coarse.centroids)
+        cand
+          .select(col("query_id"), col("cluster_id"), col("qv"), col("corpus_id"), col("codes"))
+          .as[(Long, Int, Array[Double], Long, Array[Int])]
+          .mapPartitions { rows =>
+            val cs = bcCentroids.value
+            val mod = bcPq.value
+            val tables = scala.collection.mutable.HashMap.empty[(Long, Int), Array[Array[Double]]]
+            rows.map { case (qid, c, qv, cid, code) =>
+              val t = tables.getOrElseUpdate((qid, c), Pq.adcTable(mod, minus(qv, cs(c))))
+              (qid, cid, Pq.adcDist(t, code, roundTo))
+            }
+          }
       }
-      .toDF("query_id", "corpus_id", "adc_dist")
-    val w = Window.partitionBy("query_id").orderBy(asc("adc_dist"), asc("corpus_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Similarity.firstK(scored.toDF("query_id", "corpus_id", "adc_dist"), Seq("query_id"), k,
+      "rank", asc("adc_dist"), asc("corpus_id"))
       .select("query_id", "corpus_id", "adc_dist", "rank")
+  }
+
+  private def minus(v: Array[Double], c: Array[Double]): Array[Double] = {
+    val r = new Array[Double](v.length)
+    var i = 0
+    while (i < v.length) { r(i) = v(i) - c(i); i += 1 }
+    r
   }
 
   /** Residual frame for `by_residual=true`: each indexed vector minus
@@ -105,85 +121,8 @@ object IvfPq {
       .as[(Long, Array[Double], Int)]
       .mapPartitions { rows =>
         val cs = bc.value
-        rows.map { case (id, v, c) =>
-          val cv = cs(c)
-          val r = new Array[Double](v.length)
-          var i = 0
-          while (i < v.length) { r(i) = v(i) - cv(i); i += 1 }
-          (id, r, c)
-        }
+        rows.map { case (id, v, c) => (id, minus(v, cs(c)), c) }
       }
       .toDF(idCol, vecCol, "cluster_id")
-  }
-
-  /** Residual IVF-PQ search (`by_residual=true`): probes are chosen on
-    * RAW query-to-centroid distance, but inside a probed cluster the
-    * query is re-expressed as its residual against THAT cluster's
-    * centroid and ranked against the corpus residual codes — one ADC
-    * table per (query, probe cluster). Same distributed shape as
-    * [[search]]; `pq`/`encoded` must come from [[residuals]] of the
-    * same `indexed`/`coarse`.
-    */
-  def residualSearch(
-      indexed: DataFrame,
-      encoded: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      coarse: Ivf.Model,
-      pq: Pq.Model,
-      k: Int,
-      nprobe: Int,
-      roundTo: Int = 4
-  ): DataFrame = {
-    Ivf.requireProbe(k, nprobe)
-    val spark = indexed.sparkSession
-    import spark.implicits._
-    val bcCoarse = spark.sparkContext.broadcast(coarse)
-    val bcPq = spark.sparkContext.broadcast(pq)
-    val probes = queries
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .flatMap { case (qid, qv) =>
-        bcCoarse.value.nearest(qv, nprobe).map(c => (qid, c, qv))
-      }
-      .toDF("query_id", "cluster_id", "qv")
-    val cand = probes
-      .join(indexed.select(col(idCol).cast("long").as("corpus_id"), col("cluster_id")),
-        "cluster_id")
-      .filter(col("corpus_id") =!= col("query_id"))
-      .join(encoded.select(col(idCol).cast("long").as("corpus_id"), col("codes")), "corpus_id")
-    val scale = roundTo
-    val scored = cand
-      .select(col("query_id"), col("cluster_id"), col("qv"), col("corpus_id"), col("codes"))
-      .as[(Long, Int, Array[Double], Long, Array[Int])]
-      .mapPartitions { rows =>
-        val cs = bcCoarse.value.centroids
-        val mod = bcPq.value
-        val d = mod.subDim
-        // one table per (query, probe cluster): ADC against the
-        // query's residual w.r.t. that cluster's centroid
-        val tables = scala.collection.mutable.HashMap.empty[(Long, Int), Array[Array[Double]]]
-        rows.map { case (qid, c, qv, cid, code) =>
-          val t = tables.getOrElseUpdate((qid, c), {
-            val cv = cs(c)
-            val qr = new Array[Double](qv.length)
-            var i = 0
-            while (i < qv.length) { qr(i) = qv(i) - cv(i); i += 1 }
-            Array.tabulate(mod.m, mod.codebooks(0).length)((s, cc) =>
-              Pq.dist2(qr, mod.codebooks(s)(cc), s * d))
-          })
-          var dist = 0.0; var s = 0
-          while (s < mod.m) { dist += t(s)(code(s)); s += 1 }
-          (qid, cid,
-            BigDecimal(dist).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble)
-        }
-      }
-      .toDF("query_id", "corpus_id", "adc_dist")
-    val w = Window.partitionBy("query_id").orderBy(asc("adc_dist"), asc("corpus_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "corpus_id", "adc_dist", "rank")
   }
 }

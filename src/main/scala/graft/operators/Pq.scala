@@ -31,6 +31,22 @@ object Pq {
     s
   }
 
+  /** Per-query ADC table: (subspace, centroid) → squared distance from
+    * the query's subvector to that codebook entry.
+    */
+  private[operators] def adcTable(mod: Model, q: Array[Double]): Array[Array[Double]] =
+    Array.tabulate(mod.m, mod.codebooks(0).length)((s, c) =>
+      dist2(q, mod.codebooks(s)(c), s * mod.subDim))
+
+  /** ADC distance of one code: table terms summed in subspace order,
+    * rounded HALF_UP to `roundTo` — the order the oracle replays.
+    */
+  private[operators] def adcDist(t: Array[Array[Double]], code: Array[Int], roundTo: Int): Double = {
+    var dist = 0.0; var s = 0
+    while (s < t.length) { dist += t(s)(code(s)); s += 1 }
+    BigDecimal(dist).setScale(roundTo, BigDecimal.RoundingMode.HALF_UP).toDouble
+  }
+
   /** Deterministic Lloyd for ALL subspaces jointly — mathematically
     * the per-subspace training run side by side (subspaces never
     * interact), but each iteration is ONE assign/aggregate job over
@@ -141,7 +157,7 @@ object Pq {
   def adcSearch(
       encoded: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       model: Model, k: Int, roundTo: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    Similarity.requireAtLeast1("k", k)
     val spark = encoded.sparkSession
     import spark.implicits._
     // queries are the small side by contract (same as bruteForceKnn)
@@ -154,12 +170,8 @@ object Pq {
       .mapPartitions { rows =>
         val mod = bcModel.value
         val qs = bcQ.value
-        val d = mod.subDim
-        val nCentroids = mod.codebooks(0).length
         // ADC tables: per (query, subspace, centroid), built once per task
-        val tables = qs.map { case (_, qv) =>
-          Array.tabulate(mod.m, nCentroids)((s, c) => dist2(qv, mod.codebooks(s)(c), s * d))
-        }
+        val tables = qs.map { case (_, qv) => adcTable(mod, qv) }
         val ord = Ordering.Tuple2[Double, Long]
         // max-heap on (dist, cid): head is the current worst keeper
         val heaps = Array.fill(qs.length)(
@@ -168,11 +180,7 @@ object Pq {
           var qi = 0
           while (qi < qs.length) {
             if (qs(qi)._1 != cid) {
-              val t = tables(qi)
-              var dist = 0.0; var s = 0
-              while (s < mod.m) { dist += t(s)(code(s)); s += 1 }
-              val r = BigDecimal(dist)
-                .setScale(roundTo, BigDecimal.RoundingMode.HALF_UP).toDouble
+              val r = adcDist(tables(qi), code, roundTo)
               val h = heaps(qi)
               if (h.size < k) h.enqueue((r, cid))
               else if (ord.lt((r, cid), h.head)) { h.dequeue(); h.enqueue((r, cid)) }
@@ -186,10 +194,7 @@ object Pq {
         }
       }
       .toDF("query_id", "corpus_id", "adc_dist")
-    val w = Window.partitionBy("query_id").orderBy(asc("adc_dist"), asc("corpus_id"))
-    partial
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Similarity.firstK(partial, Seq("query_id"), k, "rank", asc("adc_dist"), asc("corpus_id"))
       .select("query_id", "corpus_id", "adc_dist", "rank")
   }
 
@@ -203,21 +208,20 @@ object Pq {
       encoded: DataFrame, corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, model: Model,
       shortlist: Int, k: Int, roundTo: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    Similarity.requireAtLeast1("shortlist", shortlist)
+    Similarity.requireAtLeast1("k", k)
     val short = adcSearch(encoded, queries, idCol, vecCol, model, shortlist, roundTo)
       .select("query_id", "corpus_id")
     val qv = queries.select(col(idCol).as("query_id"),
       transform(col(vecCol), _.cast("double")).as("qv"))
     val cv = corpus.select(col(idCol).as("corpus_id"),
       transform(col(vecCol), _.cast("double")).as("cv"))
-    val w = Window.partitionBy("query_id").orderBy(asc("exact_d"), asc("corpus_id"))
-    short
+    val exact = short
       .join(qv, "query_id")
       .join(cv, "corpus_id")
       .withColumn("exact_d",
         round(graft.functions.VectorKernels.vecDist2(col("qv"), col("cv")), roundTo))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Similarity.firstK(exact, Seq("query_id"), k, "rank", asc("exact_d"), asc("corpus_id"))
       .select("query_id", "corpus_id", "exact_d", "rank")
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.{MixedHash64, VectorKernels}
+
 /** Approximate-nearest-neighbor operators over an embedding column
   * (`array<float>`).
   *
@@ -17,6 +19,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale path: random-hyperplane LSH bucketing — per-row signature,
   * one shuffle on the bucket key, exact rescoring only within buckets.
+  *
+  * Every ANN search here and in [[Ivf]], [[IvfPq]] and [[Pq]] has one
+  * shape — vectors → candidates → exact rescore → per-query top-k —
+  * and is built from the shared `private[operators]` helpers below
+  * ([[firstK]], [[vectors]], [[lshBuckets]], [[capBuckets]],
+  * [[rescore]], [[shortlistRerank]], [[Ivf.probes]]).
   */
 object Similarity {
 
@@ -283,10 +291,7 @@ object Similarity {
         }
       }
       .toDF("query_id", "corpus_id", "sim")
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), asc("corpus_id"))
-    candidates
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    firstK(candidates, Seq("query_id"), k, "rank", desc("sim"), asc("corpus_id"))
       .select("query_id", "corpus_id", "sim", "rank")
   }
 
@@ -331,9 +336,124 @@ object Similarity {
     bitCols.reduce((a, b) => a.bitwiseOR(b))
   }
 
-  /** LSH-bucketed ANN: group vectors by signature bucket, rescore
-    * exactly within buckets. One shuffle on the 8-byte bucket key.
-    * Multi-probe via `tables` independent signatures.
+  // ── the shared ANN skeleton ──
+  // Every search is vectors → candidates → exact rescore → per-query
+  // top-k (the local-prune-then-global-top-k shape of REPOSE, ICDE
+  // 2021); these helpers are its steps.
+
+  private[operators] def requireAtLeast1(name: String, value: Int): Unit =
+    require(value >= 1, s"$name must be at least 1, got $value")
+
+  /** The one `row_number` window behind every per-query top-k, bucket
+    * cap and shortlist: rows ranked `order` within `partitionCols`,
+    * the first `k` kept, the rank left in `rankCol`.
+    */
+  private[operators] def firstK(
+      df: DataFrame, partitionCols: Seq[String], k: Int, rankCol: String, order: Column*
+  ): DataFrame =
+    df.withColumn(rankCol,
+        row_number().over(Window.partitionBy(partitionCols.map(col): _*).orderBy(order: _*)))
+      .filter(col(rankCol) <= k)
+
+  /** Rounded cosine of two vector columns with precomputed norms: the
+    * exact rescore every ANN search ranks by.
+    */
+  private[operators] def roundedCosine(
+      roundTo: Int, a: String = "qv", b: String = "cv", na: String = "qn", nb: String = "cn"
+  ): Column =
+    round(VectorKernels.vecDot(col(a), col(b)) / (col(na) * col(nb)), roundTo)
+
+  /** (id, v, v_norm): double vectors and norms, materialized once so
+    * candidate discovery joins NARROW (id, table_id, bucket) rows — the
+    * d-dim vectors do not travel through the candidate shuffle, they
+    * are re-fetched only for the (much smaller) candidate set. Norm,
+    * signature and rescoring dot all run through the native
+    * VectorKernels loops (bit-identical to the HOF/unrolled forms they
+    * replaced — the ss02 oracle still replays them exactly).
+    */
+  private[operators] def vectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
+      .withColumn("v_norm", sqrt(VectorKernels.vecDot(col("v"), col("v"))))
+      .localCheckpoint()
+
+  private def querySide(base: DataFrame): DataFrame =
+    base.select(col("id").as("query_id"), col("v").as("qv"), col("v_norm").as("qn"))
+
+  private def corpusSide(base: DataFrame): DataFrame =
+    base.select(col("id").as("corpus_id"), col("v").as("cv"), col("v_norm").as("cn"))
+
+  /** Exact rescore of (query_id, corpus_id, keep…) candidates against
+    * [[vectors]]: query side joined first, then the corpus side.
+    */
+  private[operators] def rescore(
+      cand: DataFrame, base: DataFrame, roundTo: Int, keep: Column*
+  ): DataFrame =
+    cand.join(querySide(base), "query_id").join(corpusSide(base), "corpus_id")
+      .select(Seq(col("query_id"), col("corpus_id")) ++ keep :+
+        roundedCosine(roundTo).as("sim"): _*)
+
+  /** (id, table_id, bucket): one row per vector per table. Per-table
+    * hyperplane seeds decorrelate the tables.
+    */
+  private[operators] def lshBuckets(base: DataFrame, bits: Int, tables: Int): DataFrame =
+    (0 until tables).map { t =>
+      base.select(col("id"), lit(t).as("table_id"),
+        VectorKernels.hyperplaneSig(col("v"), bits, seed = t).as("bucket"))
+    }.reduce(_ union _)
+
+  /** Deterministic bucket truncation: each (table, bucket) keeps the
+    * `cap` members with the smallest mixed-hash of id (an unbiased,
+    * replayable sample of the bucket; ties by id), with their position
+    * in `rn`. The shuffle carries (id, table_id, bucket, hid) — 32
+    * bytes — and one window pass truncates; vectors never enter the cap.
+    */
+  private[operators] def capBuckets(buckets: DataFrame, cap: Int): DataFrame = {
+    MixedHash64.register(buckets.sparkSession)
+    firstK(buckets.withColumn("hid", MixedHash64(col("id").cast("string"))),
+      Seq("table_id", "bucket"), cap, "rn", col("hid").asc, col("id").asc)
+  }
+
+  /** Query-side bucket rows `a` joined to corpus-side bucket rows `b`
+    * on (table, bucket), self-pairs dropped.
+    */
+  private def bucketJoin(queries: DataFrame, corpus: DataFrame): DataFrame =
+    queries.alias("a")
+      .join(corpus.alias("b"),
+        col("a.table_id") === col("b.table_id") &&
+          col("a.bucket") === col("b.bucket") &&
+          col("a.id") =!= col("b.id"))
+
+  private def requireLsh(k: Int, bits: Int, tables: Int): Unit = {
+    requireAtLeast1("k", k)
+    require(bits >= 1 && bits <= 64, s"bits must be between 1 and 64, got $bits")
+    requireAtLeast1("tables", tables)
+  }
+
+  /** LSH-bucketed ANN: random-hyperplane buckets, exact rescoring of
+    * the pairs that share a bucket in some table, top-`k` per query.
+    * One shuffle on the 8-byte bucket key. Four routes, each with a
+    * catalog row:
+    *
+    *  - plain (ss02): `tables` independent signatures; a query's
+    *    candidates are every member of its buckets.
+    *  - capped, `bucketCap` < Int.MaxValue (ss18; ss21–ss24 through
+    *    `TrainingData.CappedGraph*`): the CORPUS side of each (table,
+    *    bucket) keeps only the `bucketCap` members of [[capBuckets]],
+    *    so per-query candidates are ≤ tables × bucketCap and candidate
+    *    volume stays LINEAR in corpus size however deep the buckets get.
+    *    Queries still probe with their own (uncapped) signatures, so
+    *    every row gets an answer; recall inside a mega-bucket degrades
+    *    toward a uniform sample of it — the bounded-bucket-scan trade
+    *    against plain LSH going quadratic when one bucket holds the
+    *    corpus. Int.MaxValue (the default) skips the truncation window.
+    *  - multi-probe, `multiProbe` = true (ss16; Lv et al., VLDB 2007):
+    *    each query ALSO probes the buckets reached by flipping each
+    *    single signature bit — one table + (bits+1) probes buys the
+    *    recall plain LSH needs several whole index copies for. Only the
+    *    query side fans out, and what fans out is the NARROW (id,
+    *    table, bucket) row, never vectors.
+    *  - capped multi-probe (ss19): both, ≤ (bits+1) × tables ×
+    *    bucketCap candidates per query.
     */
   def lshKnn(
       corpus: DataFrame,
@@ -342,115 +462,32 @@ object Similarity {
       k: Int,
       bits: Int = 12,
       tables: Int = 4,
-      roundTo: Int = 4,
-      dim: Int = -1
-  ): DataFrame = {
-    // vectors + norms materialized once; candidate discovery joins
-    // NARROW (id, table_id, bucket) rows — the d-dim vectors do not
-    // travel through the self-join shuffle, they are re-fetched only
-    // for the (much smaller) candidate set when rescoring.
-    // norm + signature + rescoring dot all run through the native
-    // VectorKernels loops (bit-identical to the HOF/unrolled forms
-    // they replaced — the ss02 oracle still replays them exactly);
-    // the HOF signature fold alone was ~60% of this operator's time.
-    import graft.functions.VectorKernels
-    val base = corpus
-      .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("v_norm", sqrt(VectorKernels.vecDot(col("v"), col("v"))))
-      .localCheckpoint()
-    // per-table hyperplane seeds decorrelate the tables; a vector
-    // lands in one bucket per table
-    val buckets = (0 until tables).map { t =>
-      base.select(col("id"), lit(t).as("table_id"),
-        VectorKernels.hyperplaneSig(col("v"), bits, seed = t).as("bucket"))
-    }.reduce(_ union _)
-    val cand = buckets.alias("a")
-      .join(buckets.alias("b"),
-        col("a.table_id") === col("b.table_id") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.id") =!= col("b.id"))
-      .select(col("a.id").as("query_id"), col("b.id").as("corpus_id"))
-      .distinct()
-    val pairs = cand
-      .join(base.select(col("id").as("query_id"), col("v").as("qv"), col("v_norm").as("qn")), "query_id")
-      .join(base.select(col("id").as("corpus_id"), col("v").as("cv"), col("v_norm").as("cn")), "corpus_id")
-      .select(
-        col("query_id"), col("corpus_id"),
-        round(graft.functions.VectorKernels.vecDot(col("qv"), col("cv")) /
-          (col("qn") * col("cn")), roundTo).as("sim"))
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), asc("corpus_id"))
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "corpus_id", "sim", "rank")
-  }
-
-  /** [[lshKnn]] with deterministic bucket truncation — the bounded-
-    * candidate form that survives duplicate-heavy corpora. Each
-    * (table, bucket)'s CORPUS side keeps only the `bucketCap` members
-    * with the smallest mixed-hash of id (an unbiased, replayable
-    * sample of the bucket; ties by id), so per-query candidates are
-    * ≤ tables × bucketCap and total candidate volume is LINEAR in
-    * corpus size no matter how deep the buckets get. Queries still
-    * probe with their own (uncapped) signatures, so every row gets an
-    * answer; recall inside a mega-bucket degrades gracefully toward a
-    * uniform sample of it — the standard production tradeoff
-    * (bounded bucket scan) versus [[lshKnn]]'s exact-within-bucket
-    * rescoring that goes quadratic when one bucket holds the corpus.
-    */
-  def lshKnnCapped(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      bits: Int = 12,
-      tables: Int = 4,
-      bucketCap: Int = 64,
+      bucketCap: Int = Int.MaxValue,
+      multiProbe: Boolean = false,
       roundTo: Int = 4
   ): DataFrame = {
-    import graft.functions.VectorKernels
-    graft.functions.MixedHash64.register(corpus.sparkSession)
-    val base = corpus
-      .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("v_norm", sqrt(VectorKernels.vecDot(col("v"), col("v"))))
-      .localCheckpoint()
-    val buckets = (0 until tables).map { t =>
-      base.select(col("id"), lit(t).as("table_id"),
-        VectorKernels.hyperplaneSig(col("v"), bits, seed = t).as("bucket"))
-    }.reduce(_ union _)
-    // the shuffle carries (id, table_id, bucket, hid) — 32 bytes —
-    // and one window pass truncates; vectors never enter the cap
-    val wB = Window.partitionBy("table_id", "bucket")
-      .orderBy(col("hid").asc, col("id").asc)
-    val capped = buckets
-      .withColumn("hid", graft.functions.MixedHash64(col("id").cast("string")))
-      .withColumn("rn", row_number().over(wB))
-      .filter(col("rn") <= bucketCap)
-      .select("id", "table_id", "bucket")
-    val cand = buckets.alias("a")
-      .join(capped.alias("b"),
-        col("a.table_id") === col("b.table_id") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.id") =!= col("b.id"))
+    requireLsh(k, bits, tables)
+    requireAtLeast1("bucketCap", bucketCap)
+    val base = vectors(corpus, idCol, vecCol)
+    val buckets = lshBuckets(base, bits, tables)
+    val corpusBuckets =
+      if (bucketCap == Int.MaxValue) buckets
+      else capBuckets(buckets, bucketCap).select("id", "table_id", "bucket")
+    // identity probe + one per flipped bit
+    val queryBuckets =
+      if (!multiProbe) buckets
+      else buckets.select(col("id"), col("table_id"), explode(array(col("bucket") +:
+        (0 until bits).map(j => col("bucket").bitwiseXOR(lit(1L << j))): _*)).as("bucket"))
+    val cand = bucketJoin(queryBuckets, corpusBuckets)
       .select(col("a.id").as("query_id"), col("b.id").as("corpus_id"))
       .distinct()
-    val pairs = cand
-      .join(base.select(col("id").as("query_id"), col("v").as("qv"), col("v_norm").as("qn")), "query_id")
-      .join(base.select(col("id").as("corpus_id"), col("v").as("cv"), col("v_norm").as("cn")), "corpus_id")
-      .select(
-        col("query_id"), col("corpus_id"),
-        round(VectorKernels.vecDot(col("qv"), col("cv")) /
-          (col("qn") * col("cn")), roundTo).as("sim"))
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), asc("corpus_id"))
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    firstK(rescore(cand, base, roundTo), Seq("query_id"), k, "rank", desc("sim"), asc("corpus_id"))
       .select("query_id", "corpus_id", "sim", "rank")
   }
 
-  /** One-pass bucket-cap SWEEP of [[lshKnnCapped]]: per cap `c`, the
-    * returned frame is row-identical to
-    * `lshKnnCapped(corpus, …, bucketCap = c).filter(queryPred on query)`
+  /** One-pass bucket-cap SWEEP of the capped [[lshKnn]]: per cap `c`,
+    * the returned frame is row-identical to
+    * `lshKnn(corpus, …, bucketCap = c).filter(queryPred on query)`
     * — but the corpus is sketched, bucketed, truncated, joined and
     * rescored ONCE at `caps.max` instead of once per cap.
     *
@@ -478,53 +515,26 @@ object Similarity {
       queryPred: Column,
       roundTo: Int = 4
   ): Map[Int, DataFrame] = {
-    import graft.functions.VectorKernels
-    graft.functions.MixedHash64.register(corpus.sparkSession)
-    val maxCap = caps.max
-    val base = corpus
-      .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("v_norm", sqrt(VectorKernels.vecDot(col("v"), col("v"))))
-      .localCheckpoint()
-    val buckets = (0 until tables).map { t =>
-      base.select(col("id"), lit(t).as("table_id"),
-        VectorKernels.hyperplaneSig(col("v"), bits, seed = t).as("bucket"))
-    }.reduce(_ union _)
-    val wB = Window.partitionBy("table_id", "bucket")
-      .orderBy(col("hid").asc, col("id").asc)
-    val capped = buckets
-      .withColumn("hid", graft.functions.MixedHash64(col("id").cast("string")))
-      .withColumn("rn", row_number().over(wB))
-      .filter(col("rn") <= maxCap)
-      .select("id", "table_id", "bucket", "rn")
-    val cand = buckets.filter(queryPred).alias("a")
-      .join(capped.alias("b"),
-        col("a.table_id") === col("b.table_id") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.id") =!= col("b.id"))
+    requireLsh(k, bits, tables)
+    require(caps.nonEmpty, "caps must name at least one bucket cap")
+    caps.foreach(requireAtLeast1("every cap", _))
+    val base = vectors(corpus, idCol, vecCol)
+    val buckets = lshBuckets(base, bits, tables)
+    val capped = capBuckets(buckets, caps.max).select("id", "table_id", "bucket", "rn")
+    val cand = bucketJoin(buckets.filter(queryPred), capped)
       .groupBy(col("a.id").as("query_id"), col("b.id").as("corpus_id"))
       .agg(min(col("b.rn")).as("min_rn"))
     // rescored once; every cap's top-k reads these materialized rows
-    val pairs = cand
-      .join(base.select(col("id").as("query_id"), col("v").as("qv"), col("v_norm").as("qn")), "query_id")
-      .join(base.select(col("id").as("corpus_id"), col("v").as("cv"), col("v_norm").as("cn")), "corpus_id")
-      .select(
-        col("query_id"), col("corpus_id"), col("min_rn"),
-        round(VectorKernels.vecDot(col("qv"), col("cv")) /
-          (col("qn") * col("cn")), roundTo).as("sim"))
-      .localCheckpoint()
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), asc("corpus_id"))
+    val pairs = rescore(cand, base, roundTo, col("min_rn")).localCheckpoint()
     caps.map { c =>
-      c -> pairs.filter(col("min_rn") <= c)
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("query_id", "corpus_id", "sim", "rank")
+      c -> firstK(pairs.filter(col("min_rn") <= c), Seq("query_id"), k, "rank",
+        desc("sim"), asc("corpus_id")).select("query_id", "corpus_id", "sim", "rank")
     }.toMap
   }
-
   /** NN-Descent kNN-graph refinement (Dong et al., WWW 2011,
     * "Efficient k-nearest neighbor graph construction for generic
     * similarity measures"): start from ANY approximate kNN edge set
-    * (here typically [[lshKnnCapped]]) and repeat "a neighbor of my
+    * (here typically the capped [[lshKnn]]) and repeat "a neighbor of my
     * neighbor is probably my neighbor" — each round rescores every
     * node against its 2-hop neighborhood and keeps the top-`k`.
     * This is the standard production kNN-graph constructor precisely
@@ -543,7 +553,7 @@ object Similarity {
     * as every ANN kernel here, and ties break (sim DESC, id ASC).
     * Scale shape per round: two narrow self-joins on 16-byte edge
     * keys, one rescore join against the vector table by id, one
-    * per-query top-k window — nothing quadratic, vectors never ride
+    * per-query top-k aggregate — nothing quadratic, vectors never ride
     * the shuffle wider than the rescore join needs.
     *
     * @param init approximate kNN edges, columns (query_id, corpus_id)
@@ -559,11 +569,9 @@ object Similarity {
       rounds: Int = 2,
       roundTo: Int = 4
   ): DataFrame = {
-    import graft.functions.VectorKernels
-    val base = corpus
-      .select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("v_norm", sqrt(VectorKernels.vecDot(col("v"), col("v"))))
-      .localCheckpoint()
+    requireAtLeast1("k", k)
+    require(rounds >= 0, s"rounds must be at least 0, got $rounds")
+    val base = vectors(corpus.select(col(idCol).cast("long").as(idCol), col(vecCol)), idCol, vecCol)
     var knn = init
       .select(col("query_id").cast("long"), col("corpus_id").cast("long"))
       .localCheckpoint()
@@ -611,13 +619,9 @@ object Similarity {
       // frame hash-partitioned by query_id, which the top-k aggregate
       // below reuses (no extra exchange)
       val pairs = cand
-        .join(base.select(col("id").as("corpus_id"), col("v").as("cv"), col("v_norm").as("cn")),
-          "corpus_id")
-        .join(base.select(col("id").as("query_id"), col("v").as("qv"), col("v_norm").as("qn")),
-          "query_id")
-        .select(col("query_id"), col("corpus_id"),
-          round(VectorKernels.vecDot(col("qv"), col("cv")) /
-            (col("qn") * col("cn")), roundTo).as("sim"))
+        .join(corpusSide(base), "corpus_id")
+        .join(querySide(base), "query_id")
+        .select(col("query_id"), col("corpus_id"), roundedCosine(roundTo).as("sim"))
       // per-query top-k via the same bounded-heap aggregate ((sim
       // DESC, corpus_id ASC) — TopK's documented order, equal to the
       // r13 row_number window; TopKSpec/x19 pin the equivalence)
@@ -637,77 +641,6 @@ object Similarity {
     out.select("query_id", "corpus_id", "sim", "rank")
   }
 
-  /** Multi-probe LSH ANN (Lv et al., VLDB 2007): instead of paying for
-    * more hash tables, each query ALSO probes the buckets reached by
-    * flipping each single signature bit — one table + (bits+1) probes
-    * buys the recall that plain LSH needs several whole index copies
-    * for, at 1/tables the index memory. The corpus is bucketed ONCE;
-    * only the query side fans out, and what fans out is the NARROW
-    * (id, table, bucket) row — ×(bits+1) on 24-byte keys, never on
-    * vectors. Candidates then rescore exactly like [[lshKnn]].
-    */
-  def lshKnnMultiProbe(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      bits: Int = 12,
-      tables: Int = 1,
-      roundTo: Int = 4,
-      bucketCap: Int = Int.MaxValue
-  ): DataFrame = {
-    import graft.functions.VectorKernels
-    val base = corpus
-      .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("v_norm", sqrt(VectorKernels.vecDot(col("v"), col("v"))))
-      .localCheckpoint()
-    val buckets = (0 until tables).map { t =>
-      base.select(col("id"), lit(t).as("table_id"),
-        VectorKernels.hyperplaneSig(col("v"), bits, seed = t).as("bucket"))
-    }.reduce(_ union _)
-    // bounded-bucket variant (same contract as [[lshKnnCapped]]): the
-    // CORPUS side of each (table, bucket) keeps only the bucketCap
-    // members with the smallest mixed-hash of id, so the probe join is
-    // ≤ (bits+1) × tables × cap candidates per query — linear however
-    // deep the buckets get. Int.MaxValue (the default) bypasses the
-    // truncation window entirely: ss16's uncapped plan is unchanged.
-    val corpusSide =
-      if (bucketCap == Int.MaxValue) buckets
-      else {
-        graft.functions.MixedHash64.register(corpus.sparkSession)
-        val wB = Window.partitionBy("table_id", "bucket")
-          .orderBy(col("hid").asc, col("id").asc)
-        buckets
-          .withColumn("hid", graft.functions.MixedHash64(col("id").cast("string")))
-          .withColumn("rn", row_number().over(wB))
-          .filter(col("rn") <= bucketCap)
-          .select("id", "table_id", "bucket")
-      }
-    // identity probe + one per flipped bit
-    val probeSet = array(
-      col("bucket") +: (0 until bits).map(j => col("bucket").bitwiseXOR(lit(1L << j))): _*)
-    val probes = buckets.select(col("id"), col("table_id"),
-      explode(probeSet).as("bucket"))
-    val cand = probes.alias("a")
-      .join(corpusSide.alias("b"),
-        col("a.table_id") === col("b.table_id") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.id") =!= col("b.id"))
-      .select(col("a.id").as("query_id"), col("b.id").as("corpus_id"))
-      .distinct()
-    val pairs = cand
-      .join(base.select(col("id").as("query_id"), col("v").as("qv"), col("v_norm").as("qn")), "query_id")
-      .join(base.select(col("id").as("corpus_id"), col("v").as("cv"), col("v_norm").as("cn")), "corpus_id")
-      .select(
-        col("query_id"), col("corpus_id"),
-        round(VectorKernels.vecDot(col("qv"), col("cv")) /
-          (col("qn") * col("cn")), roundTo).as("sim"))
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), asc("corpus_id"))
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "corpus_id", "sim", "rank")
-  }
 
   /** Scalar int8 quantization of an embedding (4×–8× storage cut for
     * ANN corpora — the standard compression lever before PQ):
@@ -760,7 +693,6 @@ object Similarity {
     */
   def sq8Index(corpus: DataFrame, idCol: String, vecCol: String,
       mn: Array[Double], step: Array[Double]): DataFrame = {
-    import graft.functions.VectorKernels
     val mnL = lit(mn)
     val stepL = lit(step)
     val codes = VectorKernels.sq8Pack(transform(col(vecCol), _.cast("double")), mnL, stepL)
@@ -776,7 +708,6 @@ object Similarity {
     */
   private[operators] def sq8Queries(queries: DataFrame, idCol: String, vecCol: String,
       mn: Array[Double], step: Array[Double]): DataFrame = {
-    import graft.functions.VectorKernels
     val qv = transform(col(vecCol), _.cast("double"))
     queries.select(
       col(idCol).cast("long").as("query_id"),
@@ -784,6 +715,36 @@ object Similarity {
       zip_with(qv, lit(step), (x, s) => x * s).as("qw"),
       VectorKernels.vecDot(qv, lit(mn)).as("qmin"),
       sqrt(VectorKernels.vecDot(qv, qv)).as("qn"))
+  }
+
+  /** The shortlist → exact-rerank tail of the compressed-domain
+    * searches ([[sq8Knn]], [[bqKnn]], [[Ivf.searchSq8]]). `pairs`
+    * (query_id, corpus_id, `score`) keep their top `shortlist` per
+    * query by (`scoreOrder`, corpus_id asc): that window shuffles ONLY
+    * those three narrow columns. Then ONE id equi-join refetches exact
+    * vectors for the survivors, the query's (qv, qn) re-join from the
+    * broadcast `queries` frame, and the top `k` by exact rounded cosine
+    * come back as (query_id, corpus_id, score, sim, rank). Rejects a
+    * `k` or `shortlist` below 1 while every frame is still lazy.
+    */
+  private[operators] def shortlistRerank(
+      pairs: DataFrame, score: String, scoreOrder: Column, shortlist: Int,
+      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+      k: Int, roundTo: Int
+  ): DataFrame = {
+    requireAtLeast1("k", k)
+    requireAtLeast1("shortlist", shortlist)
+    val cand = firstK(pairs, Seq("query_id"), shortlist, "rn", scoreOrder, asc("corpus_id"))
+      .drop("rn")
+    val exact = corpus
+      .select(col(idCol).cast("long").as("corpus_id"), asDouble(col(vecCol)).as("cv"))
+      .withColumn("cn", sqrt(VectorKernels.vecDot(col("cv"), col("cv"))))
+    val resc = broadcast(cand)
+      .join(exact, "corpus_id")
+      .join(broadcast(queries.select(col("query_id"), col("qv"), col("qn"))), "query_id")
+      .select(col("query_id"), col("corpus_id"), col(score), roundedCosine(roundTo).as("sim"))
+    firstK(resc, Seq("query_id"), k, "rank", desc("sim"), asc("corpus_id"))
+      .select("query_id", "corpus_id", score, "sim", "rank")
   }
 
   /** SQ8 flat search + exact rerank (FAISS `IndexScalarQuantizer` with
@@ -807,39 +768,14 @@ object Similarity {
       k: Int,
       roundTo: Int = 4
   ): DataFrame = {
-    import graft.functions.VectorKernels
-    val indexed = sq8Index(corpus, idCol, vecCol, mn, step)
     val q = sq8Queries(queries, idCol, vecCol, mn, step)
-    // The shortlist window shuffles ONLY (query_id, corpus_id, adc) — the
-    // 64-double qv/qn are re-joined from the broadcast query frame after
-    // the top-`shortlist` filter, so the ranking shuffle stays narrower
-    // than the byte-code column the scan was compressed to read.
-    val pairs = indexed
+    val pairs = sq8Index(corpus, idCol, vecCol, mn, step)
       .crossJoin(broadcast(q))
       .filter(col("corpus_id") =!= col("query_id"))
       .select(col("query_id"), col("corpus_id"),
         round((col("qmin") + VectorKernels.sq8Adc(col("qw"), col("codes"))) /
           (col("qn") * col("dqn")), roundTo).as("adc"))
-    val wAdc = Window.partitionBy("query_id").orderBy(desc("adc"), asc("corpus_id"))
-    val cand = pairs
-      .withColumn("rn", row_number().over(wAdc))
-      .filter(col("rn") <= shortlist)
-      .drop("rn")
-    val exact = corpus.select(
-      col(idCol).cast("long").as("corpus_id"),
-      transform(col(vecCol), _.cast("double")).as("cv"))
-      .withColumn("cn", sqrt(VectorKernels.vecDot(col("cv"), col("cv"))))
-    val resc = broadcast(cand)
-      .join(exact, "corpus_id")
-      .join(broadcast(q.select(col("query_id"), col("qv"), col("qn"))), "query_id")
-      .select(col("query_id"), col("corpus_id"), col("adc"),
-        round(VectorKernels.vecDot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo)
-          .as("sim"))
-    val wSim = Window.partitionBy("query_id").orderBy(desc("sim"), asc("corpus_id"))
-    resc
-      .withColumn("rank", row_number().over(wSim))
-      .filter(col("rank") <= k)
-      .select("query_id", "corpus_id", "adc", "sim", "rank")
+    shortlistRerank(pairs, "adc", desc("adc"), shortlist, corpus, q, idCol, vecCol, k, roundTo)
   }
 
   /** Binary-quantization training: per-dimension thresholds = the
@@ -875,7 +811,6 @@ object Similarity {
       k: Int,
       roundTo: Int = 4
   ): DataFrame = {
-    import graft.functions.VectorKernels
     val thrL = lit(thresholds)
     val codes = corpus.select(
       col(idCol).cast("long").as("corpus_id"),
@@ -886,33 +821,12 @@ object Similarity {
       qv.as("qv"),
       VectorKernels.signBits64(qv, thrL).as("qcode"),
       sqrt(VectorKernels.vecDot(qv, qv)).as("qn"))
-    // Shortlist window shuffles ONLY (query_id, corpus_id, ham); qv/qn
-    // re-join from the broadcast query frame after the filter.
     val pairs = codes
       .crossJoin(broadcast(q))
       .filter(col("corpus_id") =!= col("query_id"))
       .select(col("query_id"), col("corpus_id"),
         bit_count(col("code").bitwiseXOR(col("qcode"))).as("ham"))
-    val wHam = Window.partitionBy("query_id").orderBy(asc("ham"), asc("corpus_id"))
-    val cand = pairs
-      .withColumn("rn", row_number().over(wHam))
-      .filter(col("rn") <= shortlist)
-      .drop("rn")
-    val exact = corpus.select(
-      col(idCol).cast("long").as("corpus_id"),
-      transform(col(vecCol), _.cast("double")).as("cv"))
-      .withColumn("cn", sqrt(VectorKernels.vecDot(col("cv"), col("cv"))))
-    val resc = broadcast(cand)
-      .join(exact, "corpus_id")
-      .join(broadcast(q.select(col("query_id"), col("qv"), col("qn"))), "query_id")
-      .select(col("query_id"), col("corpus_id"), col("ham"),
-        round(VectorKernels.vecDot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo)
-          .as("sim"))
-    val wSim = Window.partitionBy("query_id").orderBy(desc("sim"), asc("corpus_id"))
-    resc
-      .withColumn("rank", row_number().over(wSim))
-      .filter(col("rank") <= k)
-      .select("query_id", "corpus_id", "ham", "sim", "rank")
+    shortlistRerank(pairs, "ham", asc("ham"), shortlist, corpus, q, idCol, vecCol, k, roundTo)
   }
 
   /** Semantic deduplication (the SemDeDup shape, Abbas et al. 2023):
@@ -936,16 +850,13 @@ object Similarity {
     val model = Ivf.train(corpus, idCol, vecCol, k, iters)
     val indexed = Ivf.index(corpus, idCol, vecCol, model)
       .select(col("cluster_id"), col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .withColumn("nrm",
-        sqrt(graft.functions.VectorKernels.vecDot(col("v"), col("v"))))
+      .withColumn("nrm", sqrt(VectorKernels.vecDot(col("v"), col("v"))))
       .localCheckpoint() // Lloyd already ran; feed both join sides from the materialized index
     val a = indexed.select(col("cluster_id"), col("id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
     val b = indexed.select(col("cluster_id"), col("id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
     a.join(b, Seq("cluster_id"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("sim",
-        round(graft.functions.VectorKernels.vecDot(col("va"), col("vb")) /
-          (col("na") * col("nb")), roundTo))
+      .withColumn("sim", roundedCosine(roundTo, "va", "vb", "na", "nb"))
       .filter(col("sim") >= threshold)
       .groupBy(col("id_b").as("removed_id"))
       .agg(min("id_a").as("kept_id"), max("sim").as("max_sim"), count(lit(1)).as("n_dups"))

@@ -585,8 +585,8 @@ object TrainingData {
     (spark, dir) => {
       val t = Tables(spark, dir)
       Query.checkpointSort(
-        Similarity.lshKnnMultiProbe(t.embeddings, "vec_id", "embedding",
-          k = 3, bits = 8, tables = 1),
+        Similarity.lshKnn(t.embeddings, "vec_id", "embedding",
+          k = 3, bits = 8, tables = 1, multiProbe = true),
         "query_id", "rank")
     }
   )
@@ -661,7 +661,7 @@ object TrainingData {
     (spark, dir) => {
       val t = Tables(spark, dir)
       Query.checkpointSort(
-        Similarity.lshKnnCapped(t.embeddings, "vec_id", "embedding",
+        Similarity.lshKnn(t.embeddings, "vec_id", "embedding",
           k = 3, bits = 8, tables = 2, bucketCap = 8),
         "query_id", "rank")
     }
@@ -1004,7 +1004,7 @@ object TrainingData {
   private[graft] val CappedGraphCap = 8
 
   private def cappedKnnGraph(t: Tables): DataFrame =
-    undFromKnn(Similarity.lshKnnCapped(t.embeddings, "vec_id", "embedding",
+    undFromKnn(Similarity.lshKnn(t.embeddings, "vec_id", "embedding",
       k = 5, bits = CappedGraphBits, tables = CappedGraphTables,
       bucketCap = CappedGraphCap))
 
@@ -1092,7 +1092,7 @@ object TrainingData {
     (spark, dir) => {
       val t = Tables(spark, dir)
       Similarity.nnDescentKnn(t.embeddings, "vec_id", "embedding", k = 5,
-        init = Similarity.lshKnnCapped(t.embeddings, "vec_id", "embedding",
+        init = Similarity.lshKnn(t.embeddings, "vec_id", "embedding",
           k = 5, bits = CappedGraphBits, tables = CappedGraphTables,
           bucketCap = CappedGraphCap).select("query_id", "corpus_id"),
         rounds = 2)
@@ -1326,8 +1326,8 @@ object TrainingData {
     (spark, dir) => {
       val t = Tables(spark, dir)
       Query.checkpointSort(
-        Similarity.lshKnnMultiProbe(t.embeddings, "vec_id", "embedding",
-          k = 3, bits = 8, tables = 1, bucketCap = 8),
+        Similarity.lshKnn(t.embeddings, "vec_id", "embedding",
+          k = 3, bits = 8, tables = 1, bucketCap = 8, multiProbe = true),
         "query_id", "rank")
     }
   )
@@ -1704,8 +1704,8 @@ object TrainingData {
       val pq = graft.operators.Pq.train(res, "vec_id", "embedding", m = 4, k = 16, iters = 1, dim = 64)
       val encoded = graft.operators.Pq.encode(res, "vec_id", "embedding", pq)
       graft.operators.IvfPq
-        .residualSearch(indexed, encoded, t.embeddings.filter(col("vec_id") < 30),
-          "vec_id", "embedding", coarse, pq, k = 3, nprobe = 2)
+        .search(indexed, encoded, t.embeddings.filter(col("vec_id") < 30),
+          "vec_id", "embedding", coarse, pq, k = 3, nprobe = 2, byResidual = true)
         .orderBy("query_id", "rank")
     }
   )

@@ -38,7 +38,7 @@ object GraphDelta {
       Similarity.cosineKnnKernel(vecs, vecs, "vec_id", "embedding", k = 5))
       .localCheckpoint()
     val cappedUnd = TrainingData.undFromKnn(
-      Similarity.lshKnnCapped(vecs, "vec_id", "embedding",
+      Similarity.lshKnn(vecs, "vec_id", "embedding",
         k = 5, bits = bits, tables = tables, bucketCap = cap))
       .localCheckpoint()
 

@@ -87,7 +87,7 @@ object GraphSweep {
       for ((bits, tables, cap) <- configs) {
         val t0 = System.nanoTime()
         val und = TrainingData.undFromKnn(
-          Similarity.lshKnnCapped(corpus, "vec_id", "embedding",
+          Similarity.lshKnn(corpus, "vec_id", "embedding",
             k = 5, bits = bits, tables = tables, bucketCap = cap))
         report(f"bits=$bits tables=$tables cap=$cap", und, (System.nanoTime() - t0) / 1e9)
       }
@@ -99,7 +99,7 @@ object GraphSweep {
         val t0 = System.nanoTime()
         val und = TrainingData.undFromKnn(
           Similarity.nnDescentKnn(corpus, "vec_id", "embedding", k = 5,
-            init = Similarity.lshKnnCapped(corpus, "vec_id", "embedding",
+            init = Similarity.lshKnn(corpus, "vec_id", "embedding",
               k = 5, bits = 8, tables = 2, bucketCap = 8)
               .select("query_id", "corpus_id"),
             rounds = r))

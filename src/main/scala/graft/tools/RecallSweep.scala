@@ -63,7 +63,7 @@ object RecallSweep {
         .select("query_id", "corpus_id").localCheckpoint()
       val nq = exact.select("query_id").distinct().count()
       Seq(2, 4, 8, 32, 128).foreach { cap =>
-        val ann = Similarity.lshKnnCapped(corpus, "vec_id", "embedding",
+        val ann = Similarity.lshKnn(corpus, "vec_id", "embedding",
           k, bits, tables, bucketCap = cap)
           .filter(col("query_id").isin(qIds: _*))
           .select("query_id", "corpus_id")

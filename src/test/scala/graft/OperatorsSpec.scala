@@ -209,7 +209,7 @@ class OperatorsSpec extends SparkSpec {
       .select("query_id", "corpus_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // weak init: 2 bits, 1 table, cap 4 — co-buckets mostly wrong pairs
-    val init = Similarity.lshKnnCapped(df, "vec_id", "embedding",
+    val init = Similarity.lshKnn(df, "vec_id", "embedding",
       k = 4, bits = 2, tables = 1, bucketCap = 4)
       .select("query_id", "corpus_id")
     def recall(knn: org.apache.spark.sql.DataFrame): Double = {
@@ -236,12 +236,12 @@ class OperatorsSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     val full = rows(Similarity.lshKnn(emb, "vec_id", "embedding", k = 3, bits = 3, tables = 2))
-    val hugeCap = rows(Similarity.lshKnnCapped(
+    val hugeCap = rows(Similarity.lshKnn(
       emb, "vec_id", "embedding", k = 3, bits = 3, tables = 2, bucketCap = 1000000))
     assert(hugeCap == full, "a cap larger than every bucket must reproduce lshKnn exactly")
     // bits=1: two buckets of ~25 vectors — the synthetic-mega-bucket
     // shape. cap=5 ⇒ candidates per query ≤ tables × 5
-    val capped = Similarity.lshKnnCapped(
+    val capped = Similarity.lshKnn(
       emb, "vec_id", "embedding", k = 50, bits = 1, tables = 1, bucketCap = 5)
     val perQuery = capped.groupBy("query_id").count().collect()
     assert(perQuery.nonEmpty && perQuery.forall(_.getLong(1) <= 5),
@@ -252,13 +252,14 @@ class OperatorsSpec extends SparkSpec {
     assert(answered >= 45, s"queries answered: $answered")
     // the same bound on the multi-probe family: huge cap = byte-equal
     // to the uncapped plan, small cap stays bounded per query
-    val mpFull = rows(Similarity.lshKnnMultiProbe(
-      emb, "vec_id", "embedding", k = 3, bits = 4, tables = 1))
-    val mpHuge = rows(Similarity.lshKnnMultiProbe(
-      emb, "vec_id", "embedding", k = 3, bits = 4, tables = 1, bucketCap = 1000000))
+    val mpFull = rows(Similarity.lshKnn(
+      emb, "vec_id", "embedding", k = 3, bits = 4, tables = 1, multiProbe = true))
+    val mpHuge = rows(Similarity.lshKnn(
+      emb, "vec_id", "embedding", k = 3, bits = 4, tables = 1, bucketCap = 1000000,
+      multiProbe = true))
     assert(mpHuge == mpFull, "Int.MaxValue-adjacent cap must reproduce multi-probe exactly")
-    val mpCapped = Similarity.lshKnnMultiProbe(
-      emb, "vec_id", "embedding", k = 50, bits = 1, tables = 1, bucketCap = 5)
+    val mpCapped = Similarity.lshKnn(
+      emb, "vec_id", "embedding", k = 50, bits = 1, tables = 1, bucketCap = 5, multiProbe = true)
     val mpPer = mpCapped.groupBy("query_id").count().collect()
     // bits=1 ⇒ identity + 1 flip probe reach BOTH buckets: ≤ 2 × cap
     assert(mpPer.nonEmpty && mpPer.forall(_.getLong(1) <= 10),
@@ -267,7 +268,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("capped LSH sweep: per-cap frames equal independent lshKnnCapped runs exactly") {
     // the r13 one-pass sweep (min_rn at the largest cap + per-cap
-    // filter) must be row-identical to running lshKnnCapped per cap
+    // filter) must be row-identical to running the capped lshKnn per cap
     // and post-filtering the query slice — the ss20 rewrite's contract
     import org.apache.spark.sql.functions.col
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -276,7 +277,7 @@ class OperatorsSpec extends SparkSpec {
     val sweep = Similarity.lshKnnCappedSweep(emb, "vec_id", "embedding",
       k = 3, bits = 3, tables = 2, caps = caps, queryPred = col("id") < 30)
     caps.foreach { c =>
-      val independent = Similarity.lshKnnCapped(
+      val independent = Similarity.lshKnn(
         emb, "vec_id", "embedding", k = 3, bits = 3, tables = 2, bucketCap = c)
         .filter(col("query_id") < 30)
       assert(rows(sweep(c)) == rows(independent),
@@ -297,7 +298,8 @@ class OperatorsSpec extends SparkSpec {
     val plain = recallOf(
       Similarity.lshKnn(emb, "vec_id", "embedding", k = 3, bits = 4, tables = 1))
     val multi = recallOf(
-      Similarity.lshKnnMultiProbe(emb, "vec_id", "embedding", k = 3, bits = 4, tables = 1))
+      Similarity.lshKnn(emb, "vec_id", "embedding", k = 3, bits = 4, tables = 1,
+        multiProbe = true))
     // the probe set strictly contains the identity probe, so the
     // candidate set (and hence recall) can only grow
     assert(multi >= plain, s"multi-probe $multi < plain $plain")
@@ -436,6 +438,7 @@ class OperatorsSpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 5)
     val mn = Array.fill(dim)(0.0)
     val step = Array.fill(dim)(1.0)
+    val edges = emb.select(col("vec_id").as("query_id"), col("vec_id").as("corpus_id"))
     val cases: Seq[(String, String, () => Any)] = Seq(
       ("Ivf.train k=0", "k must be at least 1",
         () => Ivf.train(emb, "vec_id", "embedding", k = 0, iters = 1)),
@@ -466,18 +469,61 @@ class OperatorsSpec extends SparkSpec {
       ("IvfPq.search nprobe=0", "nprobe must be at least 1",
         () => IvfPq.search(indexed, encoded, queries, "vec_id", "embedding", coarse, pq,
           k = 3, nprobe = 0)),
-      ("IvfPq.residualSearch k=0", "k must be at least 1",
-        () => IvfPq.residualSearch(indexed, encoded, queries, "vec_id", "embedding", coarse, pq,
-          k = 0, nprobe = 1)),
-      ("IvfPq.residualSearch nprobe=0", "nprobe must be at least 1",
-        () => IvfPq.residualSearch(indexed, encoded, queries, "vec_id", "embedding", coarse, pq,
-          k = 3, nprobe = 0)),
+      ("IvfPq.search byResidual k=0", "k must be at least 1",
+        () => IvfPq.search(indexed, encoded, queries, "vec_id", "embedding", coarse, pq,
+          k = 0, nprobe = 1, byResidual = true)),
+      ("IvfPq.search byResidual nprobe=0", "nprobe must be at least 1",
+        () => IvfPq.search(indexed, encoded, queries, "vec_id", "embedding", coarse, pq,
+          k = 3, nprobe = 0, byResidual = true)),
       ("Pq.train m=0", "m must be at least 1",
         () => Pq.train(emb, "vec_id", "embedding", m = 0, k = 16, iters = 1, dim = dim)),
       ("Pq.train k=0", "k must be at least 1",
         () => Pq.train(emb, "vec_id", "embedding", m = 4, k = 0, iters = 1, dim = dim)),
       ("Pq.train iters=-1", "iters must be at least 0",
-        () => Pq.train(emb, "vec_id", "embedding", m = 4, k = 16, iters = -1, dim = dim)))
+        () => Pq.train(emb, "vec_id", "embedding", m = 4, k = 16, iters = -1, dim = dim)),
+      ("Pq.adcSearch k=0", "k must be at least 1",
+        () => Pq.adcSearch(encoded, queries, "vec_id", "embedding", pq, k = 0)),
+      ("Pq.adcRerank shortlist=0", "shortlist must be at least 1",
+        () => Pq.adcRerank(encoded, emb, queries, "vec_id", "embedding", pq,
+          shortlist = 0, k = 3)),
+      ("Pq.adcRerank k=0", "k must be at least 1",
+        () => Pq.adcRerank(encoded, emb, queries, "vec_id", "embedding", pq,
+          shortlist = 10, k = 0)),
+      ("lshKnn k=0", "k must be at least 1",
+        () => Similarity.lshKnn(emb, "vec_id", "embedding", k = 0, bits = 8, tables = 2)),
+      ("lshKnn tables=0", "tables must be at least 1",
+        () => Similarity.lshKnn(emb, "vec_id", "embedding", k = 3, bits = 8, tables = 0)),
+      ("lshKnn bits=0", "bits must be between 1 and 64",
+        () => Similarity.lshKnn(emb, "vec_id", "embedding", k = 3, bits = 0, tables = 2)),
+      ("lshKnn bits=65", "bits must be between 1 and 64",
+        () => Similarity.lshKnn(emb, "vec_id", "embedding", k = 3, bits = 65, tables = 2,
+          multiProbe = true)),
+      ("lshKnn bucketCap=0", "bucketCap must be at least 1",
+        () => Similarity.lshKnn(emb, "vec_id", "embedding", k = 3, bits = 8, tables = 2,
+          bucketCap = 0)),
+      ("lshKnnCappedSweep caps empty", "caps must name at least one bucket cap",
+        () => Similarity.lshKnnCappedSweep(emb, "vec_id", "embedding", k = 3, bits = 8,
+          tables = 2, caps = Seq(), queryPred = col("id") < 5)),
+      ("lshKnnCappedSweep cap=0", "every cap must be at least 1",
+        () => Similarity.lshKnnCappedSweep(emb, "vec_id", "embedding", k = 3, bits = 8,
+          tables = 2, caps = Seq(8, 0), queryPred = col("id") < 5)),
+      ("sq8Knn k=0", "k must be at least 1",
+        () => Similarity.sq8Knn(emb, queries, "vec_id", "embedding", mn, step,
+          shortlist = 10, k = 0)),
+      ("sq8Knn shortlist=0", "shortlist must be at least 1",
+        () => Similarity.sq8Knn(emb, queries, "vec_id", "embedding", mn, step,
+          shortlist = 0, k = 3)),
+      ("bqKnn k=0", "k must be at least 1",
+        () => Similarity.bqKnn(emb, queries, "vec_id", "embedding", mn,
+          shortlist = 10, k = 0)),
+      ("bqKnn shortlist=0", "shortlist must be at least 1",
+        () => Similarity.bqKnn(emb, queries, "vec_id", "embedding", mn,
+          shortlist = 0, k = 3)),
+      ("nnDescentKnn k=0", "k must be at least 1",
+        () => Similarity.nnDescentKnn(emb, "vec_id", "embedding", k = 0, init = edges)),
+      ("nnDescentKnn rounds=-1", "rounds must be at least 0",
+        () => Similarity.nnDescentKnn(emb, "vec_id", "embedding", k = 3, init = edges,
+          rounds = -1)))
     for ((name, msg, call) <- cases) {
       val (e, jobs) = jobsIn(intercept[IllegalArgumentException](call()))
       assert(e.getMessage.contains(msg), s"$name: ${e.getMessage}")

@@ -675,7 +675,7 @@ class PlanSpec extends SparkSpec {
 
   test("capped LSH: bucket truncation is a partitioned window; vectors never enter the cap or candidate shuffles") {
     val t = Tables(spark, sf)
-    val df = graft.operators.Similarity.lshKnnCapped(
+    val df = graft.operators.Similarity.lshKnn(
       t.embeddings, "vec_id", "embedding", k = 3, bits = 8, tables = 2, bucketCap = 8)
     df.collect() // finalize AQE
     val p = plan(df)
@@ -704,5 +704,38 @@ class PlanSpec extends SparkSpec {
     pass()
     val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
     assert(compiled == 0, s"the second pass compiled $compiled generated classes")
+  }
+
+  test("every catalog row on the shared ANN skeleton stays within its job budget") {
+    // every row that calls an ANN search or its shared helpers; the
+    // budget is the row's warm job count at sf0.001 when it was set. A
+    // change that cuts a row's jobs lowers its budget here
+    val budgets = Seq(
+      "ss01_cosine_knn" -> 6, "ss02_lsh_ann" -> 7, "ss03_ivf_ann" -> 12,
+      "ss04_pq_adc" -> 8, "ss05_pq_rerank" -> 11, "ss06_semantic_dedup" -> 9,
+      "ss07_ivf_pq" -> 12, "ss08_ivfpq_residual" -> 12, "ss09_truncated_recall" -> 11,
+      "ss11_rrf_fusion" -> 20, "ss12_mutual_knn" -> 17, "ss13_knn_triangles" -> 20,
+      "ss14_link_prediction" -> 15, "ss15_label_prop" -> 15, "ss16_multiprobe_lsh" -> 7,
+      "ss17_filtered_ann" -> 12, "ss18_capped_lsh_ann" -> 8, "ss19_capped_multiprobe" -> 8,
+      "ss20_capped_recall" -> 32, "ss21_capped_triangles" -> 23,
+      "ss22_capped_linkpred" -> 17, "ss23_capped_labelprop" -> 18, "ss24_nn_descent" -> 31,
+      "ss25_sq8_rerank" -> 12, "ss26_ivf_sq8" -> 20, "ss27_binary_quant" -> 12,
+      "dd16_semantic_decontam" -> 5)
+    val sc = spark.sparkContext
+    // budgets count rows over the uncached tables: a frame another
+    // suite cached (OperatorsSpec caches sf0.001 embeddings) would
+    // replace their scans and change the AQE stages (ss15: 19 jobs)
+    spark.catalog.clearCache()
+    val over = budgets.flatMap { case (name, budget) =>
+      val pinned = sc.getPersistentRDDs.keySet
+      // the first run of a row in a JVM may pay one-off table-listing
+      // jobs; the budget counts a warm run
+      SparkEntry.queries(name)(spark, sf).collect()
+      val (_, jobs) = jobsIn(SparkEntry.queries(name)(spark, sf).collect())
+      sc.getPersistentRDDs.filter { case (id, _) => !pinned(id) }
+        .values.foreach(_.unpersist(blocking = true))
+      if (jobs > budget) Some(s"$name ran $jobs jobs, budget $budget") else None
+    }
+    assert(over.isEmpty, over.mkString("\n"))
   }
 }
