@@ -11,9 +11,9 @@ import graft.functions.VectorKernels
   * inside them. The standard beyond-LSH scale path (FAISS-style IVF
   * flat, re-expressed on Spark):
   *
-  *  - training: Lloyd's iterations as distributed assign (broadcast
-  *    centroids, mapPartitions kernel) + per-cluster mean (posexplode
-  *    → groupBy (cluster, dim) average — one shuffle of k×d cells);
+  *  - training: [[Lloyd]] with one subspace — each iteration is one
+  *    `treeAggregate` job of exact per-(cluster, dim) sums, with the
+  *    centroids broadcast;
   *  - index: one `cluster_id` column on the corpus — at scale the
   *    corpus is then REPARTITIONED/persisted by cluster_id, so a probe
   *    reads only its clusters' partitions;
@@ -25,14 +25,8 @@ object Ivf {
   final case class Model(centroids: Array[Array[Double]]) {
     def nearest(v: Array[Double], n: Int): Seq[Int] =
       centroids.indices
-        .map(i => (dist2(centroids(i), v), i))
+        .map(i => (Lloyd.dist2(v, 0, centroids(i)), i))
         .sorted.take(n).map(_._2)
-  }
-
-  private def dist2(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-    s
   }
 
   /** The search-side parameter checks shared by every IVF route
@@ -60,29 +54,23 @@ object Ivf {
       .toDF("query_id", "cluster_id", "qv")
   }
 
-  private def toVec(df: DataFrame, idCol: String, vecCol: String) = {
+  /** (id, vector) as (Long, Array[Double]): the decode that the Lloyd
+    * trainer and every nearest-centroid kernel reads.
+    */
+  private[operators] def toVec(df: DataFrame, idCol: String, vecCol: String) = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
       .as[(Long, Array[Double])]
   }
 
-  /** Lloyd's k-means. Init = the k vectors with smallest ids
-    * (deterministic); each iteration is one broadcast-assign pass and
-    * one (cluster, dim)-cell aggregation. With the decimal-exact mean
-    * reduction below, the trained centroids are bit-identical across
-    * runs and partitionings — reproducible index builds.
-    *
-    * Driver-memory bound (100 TB note): the init `orderBy(id).take(k)`
-    * plans as a distributed TakeOrdered (per-partition top-k, merge of
-    * k rows — NOT a global sort), and every iteration collects only the
-    * k×d `(cluster, dim, mean)` cells — both are sized by the MODEL
-    * (k×d doubles, e.g. 65536×768 ≈ 400 MB at the extreme end), never
-    * by the corpus. Corpus rows are touched only inside executors. A
-    * sampled init (k-means‖) would cut nothing here: the bound is the
-    * model transfer, which any init shape pays; the id-ordered form
-    * buys bit-reproducibility, which the ss03/ss06/ss07/ss08 oracles
-    * replay.
+  /** Lloyd's k-means: [[Lloyd.train]] with one subspace. Init = the
+    * k smallest-id vectors and the means are decimal-exact, so the
+    * centroids are bit-identical across runs and partitionings —
+    * reproducible index builds, which the ss03/ss06/ss07/ss08 oracles
+    * replay. The driver holds only the k×d model (e.g. 65536×768 at
+    * the extreme end), never corpus rows; a sampled init (k-means‖)
+    * would cut nothing, since any init shape pays the model transfer.
     */
   def train(
       df: DataFrame,
@@ -90,52 +78,7 @@ object Ivf {
       vecCol: String,
       k: Int,
       iters: Int = 5
-  ): Model = {
-    require(k >= 1, s"k must be at least 1, got $k")
-    require(iters >= 0, s"iters must be at least 0, got $iters")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val data = toVec(df, idCol, vecCol)
-    var centroids = data.orderBy(col(idCol)).take(k).map(_._2)
-    require(centroids.length == k,
-      s"IVF training needs at least k=$k vectors, found only ${centroids.length}")
-    for (_ <- 0 until iters) {
-      val bc = spark.sparkContext.broadcast(centroids)
-      val assigned = data.mapPartitions { rows =>
-        val cs = bc.value
-        rows.map { case (_, v) =>
-          var best = 0; var bestD = Double.MaxValue; var i = 0
-          while (i < cs.length) {
-            val d = dist2(cs(i), v); if (d < bestD) { bestD = d; best = i }; i += 1
-          }
-          (best, v)
-        }
-      }
-      // per-cluster mean via (cluster, dim) cells — k×d aggregation.
-      // The sum goes through per-value DECIMAL(28,14) casts: each cast
-      // rounds deterministically, decimal addition is exact, so the
-      // centroid bits are independent of partitioning/reduction order
-      // — training is REPRODUCIBLE (a plain double avg() varies with
-      // partial-aggregation order).
-      val means = assigned
-        .flatMap { case (c, v) => v.indices.map(i => (c, i, v(i))) }
-        .toDF("c", "i", "x")
-        .groupBy("c", "i")
-        .agg((sum(col("x").cast("decimal(28,14)")).cast("double") / count(lit(1))).as("m"))
-        .collect()
-      val byCluster = means.groupBy(_.getInt(0))
-      centroids = centroids.indices.map { c =>
-        byCluster.get(c) match {
-          case Some(cells) =>
-            val arr = new Array[Double](centroids(c).length)
-            cells.foreach(r => arr(r.getInt(1)) = r.getDouble(2))
-            arr
-          case None => centroids(c) // empty cluster keeps its centroid
-        }
-      }.toArray
-    }
-    Model(centroids)
-  }
+  ): Model = Model(Lloyd.train("IVF", df, idCol, vecCol, 1, k, iters).head)
 
   /** Stamp each corpus row with its cluster. At scale, follow with
     * `.repartition(col("cluster_id"))` + persist so probes are
@@ -147,13 +90,7 @@ object Ivf {
     val bc = spark.sparkContext.broadcast(model.centroids)
     toVec(df, idCol, vecCol).mapPartitions { rows =>
       val cs = bc.value
-      rows.map { case (id, v) =>
-        var best = 0; var bestD = Double.MaxValue; var i = 0
-        while (i < cs.length) {
-          val d = dist2(cs(i), v); if (d < bestD) { bestD = d; best = i }; i += 1
-        }
-        (id, v, best)
-      }
+      rows.map { case (id, v) => (id, v, Lloyd.nearest(cs, v, 0)) }
     }.toDF(idCol, vecCol, "cluster_id")
   }
 

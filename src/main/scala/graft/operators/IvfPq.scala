@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   * ADC evaluation is a map pass with only the k×d centroids and m×256
   * codebooks broadcast. No corpus-sized collect or broadcast anywhere.
   *
-  * Determinism: coarse probes replay [[Ivf.train]]'s decimal-exact
-  * Lloyd; ADC distances replay [[Pq]]'s subspace-ordered sums with
+  * Determinism: coarse probes replay [[Lloyd]]'s decimal-exact
+  * training; ADC distances replay [[Pq]]'s subspace-ordered sums with
   * HALF_UP rounding — the whole pipeline is bit-reproducible and
   * oracle-replayable (the ss07 and ss08 DuckDB queries).
   */

@@ -12,11 +12,12 @@ import org.apache.spark.sql.functions._
   * subspace distances, then a corpus vector's distance is m table
   * lookups, no float vectors touched.
   *
-  * Spark shape: training reuses [[Ivf.train]]'s deterministic Lloyd
-  * (decimal-exact means, smallest-id init) per subspace slice, so the
-  * WHOLE pipeline — codebooks, codes, ADC ranking — replays bit-exact
-  * in the DuckDB oracle. Encoding and search are map-only passes with
-  * the codebooks broadcast (a few KB).
+  * Spark shape: training is the deterministic [[Lloyd]] trainer that
+  * [[Ivf.train]] runs with one subspace (decimal-exact means,
+  * smallest-id init), here over `m` subspace slices, so the WHOLE
+  * pipeline — codebooks, codes, ADC ranking — replays bit-exact in the
+  * DuckDB oracle. Encoding and search are map-only passes with the
+  * codebooks broadcast (a few KB).
   */
 object Pq {
 
@@ -25,18 +26,12 @@ object Pq {
     def subDim: Int = codebooks(0)(0).length
   }
 
-  private[operators] def dist2(a: Array[Double], b: Array[Double], aOff: Int): Double = {
-    var s = 0.0; var i = 0
-    while (i < b.length) { val d = a(aOff + i) - b(i); s += d * d; i += 1 }
-    s
-  }
-
   /** Per-query ADC table: (subspace, centroid) → squared distance from
     * the query's subvector to that codebook entry.
     */
   private[operators] def adcTable(mod: Model, q: Array[Double]): Array[Array[Double]] =
     Array.tabulate(mod.m, mod.codebooks(0).length)((s, c) =>
-      dist2(q, mod.codebooks(s)(c), s * mod.subDim))
+      Lloyd.dist2(q, s * mod.subDim, mod.codebooks(s)(c)))
 
   /** ADC distance of one code: table terms summed in subspace order,
     * rounded HALF_UP to `roundTo` — the order the oracle replays.
@@ -49,60 +44,13 @@ object Pq {
 
   /** Deterministic Lloyd for ALL subspaces jointly — mathematically
     * the per-subspace training run side by side (subspaces never
-    * interact), but each iteration is ONE assign/aggregate job over
-    * (subspace, cluster, dim) cells instead of m separate jobs.
-    * Same decimal-exact means and smallest-id init as [[Ivf.train]],
-    * so the DuckDB oracle still replays each subspace chain
-    * independently.
+    * interact), but each iteration is ONE [[Lloyd.train]] job over
+    * (subspace, cluster, dim) cells instead of m separate jobs. The
+    * subspace width is the vectors' length / `m`; the DuckDB oracle
+    * replays each subspace chain independently.
     */
-  def train(
-      df: DataFrame, idCol: String, vecCol: String,
-      m: Int, k: Int, iters: Int, dim: Int): Model = {
-    require(m >= 1, s"m must be at least 1, got $m")
-    require(k >= 1, s"k must be at least 1, got $k")
-    require(iters >= 0, s"iters must be at least 0, got $iters")
-    require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
-    val d = dim / m
-    val spark = df.sparkSession
-    import spark.implicits._
-    val data = df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-    val init = data.orderBy(col(idCol)).take(k).map(_._2)
-    require(init.length == k,
-      s"PQ training needs at least k=$k vectors, found only ${init.length}")
-    require(init.forall(_.length >= dim),
-      s"every training vector must have at least dim=$dim components")
-    var books: Array[Array[Array[Double]]] =
-      Array.tabulate(m, k)((s, c) => init(c).slice(s * d, s * d + d))
-    for (_ <- 0 until iters) {
-      val bc = spark.sparkContext.broadcast(books)
-      val cells = data.flatMap { case (_, v) =>
-        val bks = bc.value
-        (0 until bks.length).iterator.flatMap { s =>
-          val cb = bks(s)
-          var best = 0; var bestD = Double.MaxValue; var c = 0
-          while (c < cb.length) {
-            val dd = dist2(v, cb(c), s * d); if (dd < bestD) { bestD = dd; best = c }; c += 1
-          }
-          (0 until d).map(i => (s, best, i, v(s * d + i)))
-        }
-      }.toDF("s", "c", "i", "x")
-      val means = cells
-        .groupBy("s", "c", "i")
-        .agg((sum(col("x").cast("decimal(28,14)")).cast("double") / count(lit(1))).as("mu"))
-        .collect()
-      val next = books.map(_.map(_.clone()))
-      means
-        .groupBy(r => (r.getInt(0), r.getInt(1)))
-        .foreach { case ((s, c), rows) =>
-          val arr = new Array[Double](d)
-          rows.foreach(r => arr(r.getInt(2)) = r.getDouble(3))
-          next(s)(c) = arr // clusters with no members keep prior centroid
-        }
-      books = next
-    }
-    Model(books)
-  }
+  def train(df: DataFrame, idCol: String, vecCol: String, m: Int, k: Int, iters: Int): Model =
+    Model(Lloyd.train("PQ", df, idCol, vecCol, m, k, iters))
 
   /** (id, codes array<int>) — one nearest-centroid index per
     * subspace; map-only with the model broadcast.
@@ -111,26 +59,11 @@ object Pq {
     val spark = df.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(model)
-    df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
+    Ivf.toVec(df, idCol, vecCol)
       .mapPartitions { rows =>
         val mod = bc.value
-        val d = mod.subDim
         rows.map { case (id, v) =>
-          val codes = new Array[Int](mod.m)
-          var s = 0
-          while (s < mod.m) {
-            val cb = mod.codebooks(s)
-            var best = 0; var bestD = Double.MaxValue; var c = 0
-            while (c < cb.length) {
-              val dd = dist2(v, cb(c), s * d)
-              if (dd < bestD) { bestD = dd; best = c }
-              c += 1
-            }
-            codes(s) = best
-            s += 1
-          }
-          (id, codes)
+          (id, Array.tabulate(mod.m)(s => Lloyd.nearest(mod.codebooks(s), v, s * mod.subDim)))
         }
       }
       .toDF(idCol, "codes")
@@ -161,8 +94,7 @@ object Pq {
     val spark = encoded.sparkSession
     import spark.implicits._
     // queries are the small side by contract (same as bruteForceKnn)
-    val qArr = queries.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
+    val qArr = Ivf.toVec(queries, idCol, vecCol).collect().sortBy(_._1)
     val bcModel = spark.sparkContext.broadcast(model)
     val bcQ = spark.sparkContext.broadcast(qArr)
     val partial = encoded.select(col(idCol).cast("long"), col("codes"))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Learned quality classifier — the CCNet/GPT-3-style curation scorer:
   * a linear model trained on cheap lexical features against weak
@@ -43,7 +42,7 @@ object QualityModel {
     * association order is part of the replay contract (double
     * addition does not associate).
     */
-  private def affine(w: IndexedSeq[Double], xCols: Seq[String]): Column =
+  private[graft] def affine(w: IndexedSeq[Double], xCols: Seq[String]): Column =
     xCols.zipWithIndex.foldLeft(lit(w(0)): Column) {
       case (acc, (c, i)) => acc + lit(w(i + 1)) * col(c)
     }
@@ -110,73 +109,28 @@ object QualityModel {
       val wb = w.clone()
       val sums = data
         .mapPartitions { it =>
-          // Long partial + overflow spill into BigInt: exact at any n
-          val accL = new Array[Long](d + 1)
-          val accB = Array.fill(d + 1)(BigInt(0))
-          def add(j: Int, g: Long): Unit = {
-            val s = accL(j) + g
-            if (((accL(j) ^ s) & (g ^ s)) < 0) { // overflowed
-              accB(j) += accL(j)
-              accL(j) = g
-            } else accL(j) = s
-          }
+          val acc = new ExactSums(d + 1)
           it.foreach { a =>
             var z = wb(0)
             var j = 0
             while (j < d) { z += wb(j + 1) * a(j + 1); j += 1 }
             val r = 0.5 + z / (2.0 * (1.0 + math.abs(z))) - a(0)
             val g0 = r * 1e9
-            if (java.lang.Double.isFinite(g0)) add(0, grainHalfUp(g0))
+            if (java.lang.Double.isFinite(g0)) acc.add(0, grainHalfUp(g0))
             j = 0
             while (j < d) {
               val gj = (r * a(j + 1)) * 1e9
-              if (java.lang.Double.isFinite(gj)) add(j + 1, grainHalfUp(gj))
+              if (java.lang.Double.isFinite(gj)) acc.add(j + 1, grainHalfUp(gj))
               j += 1
             }
           }
-          Iterator.single(Array.tabulate(d + 1)(j => accB(j) + accL(j)))
+          Iterator.single(acc)
         }
-        .reduce { (x, y) => Array.tabulate(d + 1)(j => x(j) + y(j)) }
+        .reduce(_ merge _)
       for (j <- w.indices) {
         // BigInt→double rounds to nearest, exactly like
         // Decimal(38,0).doubleValue on the same integer
         val g = sums(j).doubleValue / 1e9 / n
-        w(j) = w(j) - lr * g
-      }
-    }
-    Trained(w.toSeq, f.withColumn("score", link(affine(w.toIndexedSeq, xCols))))
-  }
-
-  /** The r13 DataFrame-aggregate training loop, kept as the reference
-    * for the bit-identical-weights equivalence spec (and for reading
-    * the replay contract in SQL terms). Not on any query path.
-    */
-  private[graft] def trainScoreAggReference(
-      features: DataFrame,
-      xCols: Seq[String],
-      yCol: String,
-      iters: Int = 8,
-      lr: Double = 4.0
-  ): Trained = {
-    require(iters > 0, s"quality classifier: iters must be positive, got $iters")
-    val f = features.localCheckpoint()
-    val grain = lit(1e9)
-    val w = Array.fill(xCols.size + 1)(0.0)
-    var n = -1.0
-    for (_ <- 1 to iters) {
-      val r = link(affine(w.toIndexedSeq, xCols)) - col(yCol)
-      val grains =
-        (sum(round(r * grain).cast(DecimalType(38, 0))).as("g0") +:
-          xCols.zipWithIndex.map { case (c, i) =>
-            sum(round((r * col(c)) * grain).cast(DecimalType(38, 0))).as(s"g${i + 1}")
-          }) :+ count(org.apache.spark.sql.functions.lit(1)).as("n")
-      val sums = f.agg(grains.head, grains.tail: _*).head()
-      if (n < 0) {
-        n = sums.getLong(xCols.size + 1).toDouble
-        require(n > 0, "quality classifier: empty feature frame")
-      }
-      for (j <- w.indices) {
-        val g = sums.getDecimal(j).doubleValue() / 1e9 / n
         w(j) = w(j) - lr * g
       }
     }

@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
 
 import graft.functions.{MixedHash64, VectorKernels}
 
@@ -779,18 +783,12 @@ object Similarity {
   }
 
   /** Binary-quantization training: per-dimension thresholds = the
-    * corpus means, summed through per-value DECIMAL(28,14) casts so
-    * the 64 doubles are bit-identical under any partitioning (the
-    * Lloyd-mean contract from [[Ivf.train]]).
+    * corpus means — the one-cluster, one-pass [[Lloyd.train]], whose
+    * decimal-exact mean makes the thresholds bit-identical under any
+    * partitioning. Every vector must have the smallest id's length.
     */
-  def bqTrain(corpus: DataFrame, vecCol: String): Array[Double] =
-    corpus
-      .select(posexplode(transform(col(vecCol), _.cast("double"))).as(Seq("i", "x")))
-      .groupBy("i")
-      .agg((sum(col("x").cast("decimal(28,14)")).cast("double") / count(lit(1))).as("t"))
-      .orderBy("i")
-      .collect()
-      .map(_.getDouble(1))
+  def bqTrain(corpus: DataFrame, idCol: String, vecCol: String): Array[Double] =
+    Lloyd.train("BQ", corpus, idCol, vecCol, 1, 1, 1).head.head
 
   /** Binary-quantization search + exact rerank (the 1-bit ANN family —
     * sign codes around the per-dimension mean): a 64-dim embedding
@@ -866,17 +864,17 @@ object Similarity {
     * their own label's centroid — the standard screen for mislabeled
     * or corrupt embeddings before they reach training.
     *
-    * Determinism: centroids use the DECIMAL(28,14) per-cell mean (the
-    * Ivf pattern — exact decimal addition, so centroid bits are
-    * independent of partitioning); distances fold dimensions in a
-    * FIXED left-associative order and round to `roundTo`, the ss01
-    * policy the oracle mirrors with the same fold.
+    * Determinism: centroids use [[Lloyd]]'s decimal-exact per-cell
+    * mean (exact integer sums of DECIMAL(28,14) values, so centroid
+    * bits are independent of partitioning); distances fold dimensions
+    * in a FIXED left-associative order and round to `roundTo`, the
+    * ss01 policy the oracle mirrors with the same fold. Within a label
+    * every vector must have the same length.
     *
-    * Shape: centroid table is |labels|×d cells (an aggregation, never
-    * collected to the driver beyond the broadcast join Spark itself
-    * plans for a labels-sized dim table); distance is one map-side
-    * pass over the corpus; top-k via TakeOrdered. No corpus-sized
-    * state anywhere.
+    * Shape: the centroid table is |labels|×d cells, summed in one
+    * `treeAggregate` job and broadcast back as a labels-sized dim
+    * table; distance is one map-side pass over the corpus; top-k via
+    * TakeOrdered. No corpus-sized state anywhere.
     */
   def centroidOutliers(
       emb: DataFrame,
@@ -886,14 +884,34 @@ object Similarity {
       k: Int,
       roundTo: Int = 4
   ): DataFrame = {
-    val cells = emb
-      .select(col(labelCol).as("lbl"), posexplode(col(vecCol).cast("array<double>")))
-      .groupBy("lbl", "pos")
-      .agg((sum(col("col").cast("decimal(28,14)")).cast("double") / count(lit(1))).as("m"))
-    val centroids = cells
-      .groupBy("lbl")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        s => s.getField("m")).as("c"))
+    val who = "centroid outliers"
+    // per label: the d cell sums, then the count
+    val sums = emb.select(col(labelCol), col(idCol), col(vecCol).cast("array<double>")).rdd
+      .treeAggregate(mutable.HashMap.empty[Any, ExactSums])(
+        (acc, r) => {
+          if (!r.isNullAt(2)) {
+            val v = r.getSeq[Double](2).toArray
+            val s = acc.getOrElseUpdate(r.get(0), new ExactSums(v.length + 1))
+            Lloyd.requireLength(who, r.get(1), v, s.n - 1)
+            Lloyd.addCast(who, r.get(1), s, 0, v, 0, v.length)
+            s.add(v.length, 1L)
+          }
+          acc
+        },
+        (a, b) => {
+          b.foreach { case (l, s) =>
+            a.get(l).fold(a(l) = s) { t =>
+              require(t.n == s.n, s"$who: label $l has vectors of ${t.n - 1} and ${s.n - 1} components")
+              t.merge(s)
+            }
+          }
+          a
+        })
+    val centroids = emb.sparkSession.createDataFrame(
+      sums.toSeq.map { case (l, s) =>
+        Row(l, Seq.tabulate(s.n - 1)(i => Lloyd.mean(s(i), s(s.n - 1).toLong)))
+      }.asJava,
+      StructType(Seq(emb.schema(labelCol).copy(name = "lbl"), StructField("c", ArrayType(DoubleType)))))
     emb
       .select(col(idCol), col(labelCol).as("lbl"), col(vecCol).cast("array<double>").as("v"))
       .join(broadcast(centroids), Seq("lbl"))

@@ -1269,7 +1269,7 @@ object TrainingData {
     },
     (spark, dir) => {
       val t = Tables(spark, dir)
-      val thr = Similarity.bqTrain(t.embeddings, "embedding")
+      val thr = Similarity.bqTrain(t.embeddings, "vec_id", "embedding")
       Similarity
         .bqKnn(t.embeddings, t.embeddings.filter(col("vec_id") < 50),
           "vec_id", "embedding", thr, shortlist = 10, k = 3)
@@ -1342,10 +1342,12 @@ object TrainingData {
     */
   /** DuckDB fragments shared by the IVF-family oracles: an exact
     * replay of [[graft.operators.Ivf.train]]'s deterministic Lloyd
-    * (init = k smallest ids, decimal-exact means, empty clusters keep
-    * their centroid) ending in `idx(id, v, c)` — every vector with its
-    * final cluster — plus the fold-based dist/dot/norm helpers. ss03
-    * appends a probe search; ss06 appends a within-cluster pair scan.
+    * (init = k smallest ids; each cell mean is the DECIMAL(28,14) sum
+    * the engine adds up as exact integers, over the count; empty
+    * clusters keep their centroid) ending in `idx(id, v, c)` — every
+    * vector with its final cluster — plus the fold-based dist/dot/norm
+    * helpers. ss03 appends a probe search; ss06 appends a
+    * within-cluster pair scan.
     */
   private def ivfFoldSql(dim: Int)(term: String) =
     s"""list_reduce(list_prepend(0.0, list_transform(range(1, ${dim + 1}),
@@ -1551,7 +1553,7 @@ object TrainingData {
     (spark, dir) => {
       val t = Tables(spark, dir)
       val model = graft.operators.Pq.train(
-        t.embeddings, "vec_id", "embedding", m = 4, k = 16, iters = 1, dim = 64)
+        t.embeddings, "vec_id", "embedding", m = 4, k = 16, iters = 1)
       val encoded = graft.operators.Pq.encode(t.embeddings, "vec_id", "embedding", model)
       graft.operators.Pq
         .adcSearch(encoded, t.embeddings.filter(col("vec_id") < 5), "vec_id", "embedding",
@@ -1591,7 +1593,7 @@ object TrainingData {
     (spark, dir) => {
       val t = Tables(spark, dir)
       val model = graft.operators.Pq.train(
-        t.embeddings, "vec_id", "embedding", m = 4, k = 16, iters = 1, dim = 64)
+        t.embeddings, "vec_id", "embedding", m = 4, k = 16, iters = 1)
       val encoded = graft.operators.Pq.encode(t.embeddings, "vec_id", "embedding", model)
       graft.operators.Pq
         .adcRerank(encoded, t.embeddings, t.embeddings.filter(col("vec_id") < 5),
@@ -1641,7 +1643,7 @@ object TrainingData {
       val coarse = graft.operators.Ivf.train(t.embeddings, "vec_id", "embedding", k = 8, iters = 1)
       val indexed = graft.operators.Ivf.index(t.embeddings, "vec_id", "embedding", coarse)
       val pq = graft.operators.Pq.train(
-        t.embeddings, "vec_id", "embedding", m = 4, k = 16, iters = 1, dim = 64)
+        t.embeddings, "vec_id", "embedding", m = 4, k = 16, iters = 1)
       val encoded = graft.operators.Pq.encode(t.embeddings, "vec_id", "embedding", pq)
       graft.operators.IvfPq
         .search(indexed, encoded, t.embeddings.filter(col("vec_id") < 30),
@@ -1701,7 +1703,7 @@ object TrainingData {
       val coarse = graft.operators.Ivf.train(t.embeddings, "vec_id", "embedding", k = 8, iters = 1)
       val indexed = graft.operators.Ivf.index(t.embeddings, "vec_id", "embedding", coarse)
       val res = graft.operators.IvfPq.residuals(indexed, "vec_id", "embedding", coarse)
-      val pq = graft.operators.Pq.train(res, "vec_id", "embedding", m = 4, k = 16, iters = 1, dim = 64)
+      val pq = graft.operators.Pq.train(res, "vec_id", "embedding", m = 4, k = 16, iters = 1)
       val encoded = graft.operators.Pq.encode(res, "vec_id", "embedding", pq)
       graft.operators.IvfPq
         .search(indexed, encoded, t.embeddings.filter(col("vec_id") < 30),

@@ -15,8 +15,10 @@ class OperatorsSpec extends SparkSpec {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
-  private lazy val docs = Tables(spark, sf).documents.cache()
-  private lazy val emb = Tables(spark, sf).embeddings.cache()
+  // plain scans, never cached: a cached frame would outlive the suite
+  // and change the plans and job counts of every later suite's rows
+  private lazy val docs = Tables(spark, sf).documents
+  private lazy val emb = Tables(spark, sf).embeddings
 
   // ── dedup ─────────────────────────────────────────────────────────
   test("exactDedup keeps min-id row per duplicate group") {
@@ -476,11 +478,11 @@ class OperatorsSpec extends SparkSpec {
         () => IvfPq.search(indexed, encoded, queries, "vec_id", "embedding", coarse, pq,
           k = 3, nprobe = 0, byResidual = true)),
       ("Pq.train m=0", "m must be at least 1",
-        () => Pq.train(emb, "vec_id", "embedding", m = 0, k = 16, iters = 1, dim = dim)),
+        () => Pq.train(emb, "vec_id", "embedding", m = 0, k = 16, iters = 1)),
       ("Pq.train k=0", "k must be at least 1",
-        () => Pq.train(emb, "vec_id", "embedding", m = 4, k = 0, iters = 1, dim = dim)),
+        () => Pq.train(emb, "vec_id", "embedding", m = 4, k = 0, iters = 1)),
       ("Pq.train iters=-1", "iters must be at least 0",
-        () => Pq.train(emb, "vec_id", "embedding", m = 4, k = 16, iters = -1, dim = dim)),
+        () => Pq.train(emb, "vec_id", "embedding", m = 4, k = 16, iters = -1)),
       ("Pq.adcSearch k=0", "k must be at least 1",
         () => Pq.adcSearch(encoded, queries, "vec_id", "embedding", pq, k = 0)),
       ("Pq.adcRerank shortlist=0", "shortlist must be at least 1",
@@ -534,7 +536,7 @@ class OperatorsSpec extends SparkSpec {
     val three = emb.orderBy("vec_id").limit(3)
     for (train <- Seq[() => Any](
         () => Ivf.train(three, "vec_id", "embedding", k = 8, iters = 1),
-        () => Pq.train(three, "vec_id", "embedding", m = 4, k = 8, iters = 1, dim = dim))) {
+        () => Pq.train(three, "vec_id", "embedding", m = 4, k = 8, iters = 1))) {
       val e = intercept[IllegalArgumentException](train())
       assert(e.getMessage.contains("needs at least k=8 vectors, found only 3"), e.getMessage)
     }
@@ -543,6 +545,109 @@ class OperatorsSpec extends SparkSpec {
     val want = emb.orderBy("vec_id").limit(2)
       .select(col("embedding").cast("array<double>")).collect().map(_.getSeq[Double](0))
     assert(init.centroids.map(_.toSeq).toSeq == want.toSeq)
+
+    // data cases: the error names the trainer, the vector id and the
+    // length or value. A vector that is not among the k init vectors
+    // is caught inside the Lloyd pass, so it reaches the caller
+    // wrapped in Spark's job failure: look along the cause chain
+    def vecs(rows: (Long, Seq[Double])*) = rows.toDF("vec_id", "embedding")
+    val ok = (1L to 4L).map(i => i -> Seq(i.toDouble, 0.5, -i.toDouble, 1.0))
+    def trainers(df: org.apache.spark.sql.DataFrame): Seq[(String, () => Any)] = Seq(
+      "IVF" -> (() => Ivf.train(df, "vec_id", "embedding", k = 2, iters = 1)),
+      "PQ" -> (() => Pq.train(df, "vec_id", "embedding", m = 2, k = 2, iters = 1)),
+      "BQ" -> (() => Similarity.bqTrain(df, "vec_id", "embedding")))
+    def failsWith(what: String, call: () => Any, msg: String): Unit = {
+      val e = intercept[Exception](call())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(c => String.valueOf(c.getMessage)).toList
+      assert(chain.exists(_.contains(msg)), s"$what: no '$msg' in the cause chain:\n$chain")
+    }
+    for ((len, name) <- Seq(5 -> "longer", 3 -> "shorter");
+         (trainer, call) <- trainers(vecs(ok :+ (9L -> Seq.fill(len)(0.25)): _*)))
+      failsWith(s"$trainer $name vector", call,
+        s"$trainer training: vector 9 has $len components, expected 4")
+    // a ragged init vector is caught on the driver, before any pass
+    for ((trainer, call) <- trainers(vecs((0L -> Seq(1.0, 2.0)) +: ok: _*)).take(2))
+      failsWith(s"$trainer ragged init", call,
+        s"$trainer training: vector 1 has 4 components, expected 2")
+    failsWith("BQ empty", trainers(vecs(ok: _*).filter(col("vec_id") < 0))(2)._2,
+      "BQ training needs at least k=1 vectors, found only 0")
+    // NaN and ±Inf become NULL under the SQL cast, which SUM skipped
+    // while COUNT(*) still counted the row — a silently wrong mean;
+    // |x| >= 1e14 already failed there (NUMERIC_VALUE_OUT_OF_RANGE).
+    // All four now fail, and no cell is dropped from any sum
+    for (x <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 1e14, -2e15);
+         (trainer, call) <- trainers(vecs(ok :+ (9L -> Seq(0.0, x, 0.0, 0.0)): _*)))
+      failsWith(s"$trainer component $x", call,
+        s"$trainer training: vector 9 component 1 = $x cannot be represented as Decimal(28, 14)")
+  }
+
+  test("Lloyd trainer: IVF, PQ, IVF-PQ residual and BQ models equal the SQL-aggregate reference bit for bit") {
+    import graft.operators.{Ivf, IvfPq, Pq}
+    def bits(books: Array[Array[Array[Double]]]) =
+      books.map(_.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq).toSeq).toSeq
+    def same(what: String, got: Array[Array[Array[Double]]], want: Array[Array[Array[Double]]]) =
+      assert(bits(got) == bits(want), s"$what drifted from the SQL reference")
+    def check(df: org.apache.spark.sql.DataFrame, k: Int, iters: Int, m: Int): Unit = {
+      same(s"IVF k=$k iters=$iters", Array(Ivf.train(df, "vec_id", "embedding", k, iters).centroids),
+        TrainerReference.lloyd(df, "vec_id", "embedding", 1, k, iters))
+      same(s"PQ m=$m k=$k iters=$iters", Pq.train(df, "vec_id", "embedding", m, k, iters).codebooks,
+        TrainerReference.lloyd(df, "vec_id", "embedding", m, k, iters))
+      same("BQ", Array(Array(Similarity.bqTrain(df, "vec_id", "embedding"))),
+        Array(Array(TrainerReference.bq(df, "embedding"))))
+    }
+    // the catalog's shapes at sf0.001: IVF k=16 iters=3, PQ m=4 k=16
+    // iters=2, and PQ over the IVF residuals (ss08)
+    same("IVF k=16 iters=3", Array(Ivf.train(emb, "vec_id", "embedding", 16, 3).centroids),
+      TrainerReference.lloyd(emb, "vec_id", "embedding", 1, 16, 3))
+    same("PQ m=4 k=16 iters=2", Pq.train(emb, "vec_id", "embedding", 4, 16, 2).codebooks,
+      TrainerReference.lloyd(emb, "vec_id", "embedding", 4, 16, 2))
+    val coarse = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 1)
+    val res = IvfPq.residuals(Ivf.index(emb, "vec_id", "embedding", coarse),
+      "vec_id", "embedding", coarse)
+    same("IVF-PQ residuals", Pq.train(res, "vec_id", "embedding", 4, 16, 1).codebooks,
+      TrainerReference.lloyd(res, "vec_id", "embedding", 4, 16, 1))
+    assert(Similarity.bqTrain(emb, "vec_id", "embedding").map(java.lang.Double.doubleToRawLongBits)
+      .toSeq == TrainerReference.bq(emb, "embedding").map(java.lang.Double.doubleToRawLongBits).toSeq)
+    // planted vectors: ids 1 and 2 are the same point, so init cluster
+    // 1 ties cluster 0 everywhere and the lowest index wins — it stays
+    // empty and keeps its centroid; id 4 is equidistant from centroids
+    // 0 and 2; ids 5–8 sit on HALF_UP boundaries at the 14th decimal,
+    // positive and negative; ids 8–10 carry unscaled values beyond a
+    // Long or whose sum overflows one; the rest are full 17-digit
+    // doubles, whose plain double mean differs from the decimal one
+    val rnd = new scala.util.Random(7)
+    val planted = Seq(
+      1L -> Seq(0.0, 0.0, 0.0, 0.0),
+      2L -> Seq(0.0, 0.0, 0.0, 0.0),
+      3L -> Seq(2.0, 2.0, 2.0, 2.0),
+      4L -> Seq(1.0, 1.0, 1.0, 1.0),
+      5L -> Seq(0.100000000000005, -0.100000000000005, 2.5e-14, -2.5e-14),
+      6L -> Seq(1.000000000000015, -1.000000000000015, 5e-15, -5e-15),
+      7L -> Seq(2.000000000000005, 1.999999999999995, -0.000000000000015, 0.3),
+      8L -> Seq(-99999.999999999995, 99999.999999999995, 0.1, 0.2),
+      9L -> Seq(90000.0, -90000.0, 90000.00000000001, 0.5),
+      10L -> Seq(90000.0, -90000.0, 90000.0, 0.5)) ++
+      (11L to 60L).map(i => i -> Seq.fill(4)(rnd.nextGaussian() * math.pow(10, rnd.nextInt(9) - 4)))
+    val plantedDf = planted.toDF("vec_id", "embedding")
+    check(plantedDf, k = 3, iters = 3, m = 2)
+    check(plantedDf.repartition(5), k = 3, iters = 3, m = 2)
+    // the empty cluster really occurs: after one pass cluster 1 is
+    // still the init point
+    assert(Ivf.train(plantedDf, "vec_id", "embedding", 3, 1).centroids(1).toSeq ==
+      Seq(0.0, 0.0, 0.0, 0.0))
+  }
+
+  test("Lloyd trainer: one init job, then exactly one Spark job per iteration") {
+    import graft.operators.{Ivf, Pq}
+    for (iters <- 0 to 3) {
+      val (_, ivf) = jobsIn(Ivf.train(emb, "vec_id", "embedding", k = 8, iters = iters))
+      assert(ivf == 1 + iters, s"IVF iters=$iters ran $ivf jobs")
+      val (_, pq) = jobsIn(Pq.train(emb, "vec_id", "embedding", m = 4, k = 16, iters = iters))
+      assert(pq == 1 + iters, s"PQ iters=$iters ran $pq jobs")
+    }
+    val (_, bq) = jobsIn(Similarity.bqTrain(emb, "vec_id", "embedding"))
+    assert(bq == 2, s"BQ training ran $bq jobs")
   }
 
   test("approx_count_distinct sketch stays within rsd bounds of exact") {
@@ -773,11 +878,11 @@ class OperatorsSpec extends SparkSpec {
 
   test("PQ/ADC: deterministic codes, useful euclidean recall, 16x compression shape") {
     import graft.operators.Pq
-    val model = Pq.train(emb, "vec_id", "embedding", m = 4, k = 16, iters = 1, dim = 64)
+    val model = Pq.train(emb, "vec_id", "embedding", m = 4, k = 16, iters = 1)
     assert(model.m == 4 && model.subDim == 16)
     val enc = Pq.encode(emb, "vec_id", "embedding", model)
     val enc2 = Pq.encode(emb, "vec_id", "embedding",
-      Pq.train(emb, "vec_id", "embedding", m = 4, k = 16, iters = 1, dim = 64))
+      Pq.train(emb, "vec_id", "embedding", m = 4, k = 16, iters = 1))
     assert(enc.except(enc2).isEmpty, "training + encoding must be reproducible")
     // ADC top-3 vs exact euclidean top-3
     val queries = emb.filter(col("vec_id") < 30)
@@ -1958,6 +2063,14 @@ class OperatorsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
     assert(got.toSeq == Seq(
       (3L, 1, 2.0), (1L, 1, 1.0), (2L, 1, 1.0), (4L, 2, 0.0), (5L, 2, 0.0)))
+    // the vectors of one label share one length; the error names the
+    // vector (it is raised inside the centroid job: search the causes)
+    val ragged = df.union(Seq((6L, Seq(1f), 1)).toDF("vec_id", "embedding", "label")).coalesce(1)
+    val e = intercept[Exception](
+      Similarity.centroidOutliers(ragged, "vec_id", "embedding", "label", k = 5))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage)
+        .contains("centroid outliers: vector 6 has 1 components, expected 2")), e)
   }
 
   test("bpeMerges learns the classic es/est/lo/low sequence with lexicographic ties") {
@@ -2211,7 +2324,7 @@ class OperatorsSpec extends SparkSpec {
     // r14: the RDD training loop must learn BIT-identical weights to
     // the r13 DataFrame-aggregate form (round/decimal-sum replay) —
     // on the synthetic fixture AND on the real td55 feature frame
-    val ref = graft.operators.QualityModel.trainScoreAggReference(feats, xs, "y")
+    val ref = TrainerReference.qualityScore(feats, xs, "y")
     assert(a.weights == ref.weights,
       s"RDD loop drifted from the aggregate form:\n${a.weights}\nvs\n${ref.weights}")
   }
@@ -2220,8 +2333,7 @@ class OperatorsSpec extends SparkSpec {
     val feats = graft.queries.TrainingData.qcFeaturesForSpec(Tables(spark, sf).documents)
     val xs = Seq("x1", "x2", "x3", "x4")
     val a = graft.operators.QualityModel.trainScore(feats, xs, "y", iters = 16, lr = 16.0)
-    val ref = graft.operators.QualityModel
-      .trainScoreAggReference(feats, xs, "y", iters = 16, lr = 16.0)
+    val ref = TrainerReference.qualityScore(feats, xs, "y", iters = 16, lr = 16.0)
     assert(a.weights == ref.weights,
       s"RDD loop drifted from the aggregate form on real features:\n" +
         s"${a.weights}\nvs\n${ref.weights}")
@@ -2316,10 +2428,10 @@ class OperatorsSpec extends SparkSpec {
 
   test("binary quantization: codes are partition-invariant; full shortlist equals brute force") {
     import graft.functions.VectorKernels
-    val thr = Similarity.bqTrain(emb, "embedding")
+    val thr = Similarity.bqTrain(emb, "vec_id", "embedding")
     assert(thr.length == 64)
     // thresholds from a different partitioning are bit-identical
-    assert(Similarity.bqTrain(emb.repartition(7), "embedding").toSeq == thr.toSeq)
+    assert(Similarity.bqTrain(emb.repartition(7), "vec_id", "embedding").toSeq == thr.toSeq)
     // codes: bit d set iff v(d) > thr(d) — cross-check one row in Scala
     val row = emb
       .select(transform(col("embedding"), _.cast("double")).as("v"),

@@ -232,7 +232,7 @@ class PlanSpec extends SparkSpec {
   test("PQ ADC search keeps corpus codes distributed (no plan-side broadcast or collect shape)") {
     import graft.operators.Pq
     val emb = Tables(spark, sf).embeddings
-    val model = Pq.train(emb, "vec_id", "embedding", m = 4, k = 16, iters = 1, dim = 64)
+    val model = Pq.train(emb, "vec_id", "embedding", m = 4, k = 16, iters = 1)
     val enc = Pq.encode(emb, "vec_id", "embedding", model)
     val queries = emb.filter(col("vec_id") < 10)
     val search = Pq.adcSearch(enc, queries, "vec_id", "embedding", model, k = 3)
@@ -711,20 +711,20 @@ class PlanSpec extends SparkSpec {
     // budget is the row's warm job count at sf0.001 when it was set. A
     // change that cuts a row's jobs lowers its budget here
     val budgets = Seq(
-      "ss01_cosine_knn" -> 6, "ss02_lsh_ann" -> 7, "ss03_ivf_ann" -> 12,
-      "ss04_pq_adc" -> 8, "ss05_pq_rerank" -> 11, "ss06_semantic_dedup" -> 9,
-      "ss07_ivf_pq" -> 12, "ss08_ivfpq_residual" -> 12, "ss09_truncated_recall" -> 11,
+      "ss01_cosine_knn" -> 6, "ss02_lsh_ann" -> 7, "ss03_ivf_ann" -> 9,
+      "ss04_pq_adc" -> 7, "ss05_pq_rerank" -> 10, "ss06_semantic_dedup" -> 8,
+      "ss07_ivf_pq" -> 10, "ss08_ivfpq_residual" -> 10, "ss09_truncated_recall" -> 11,
       "ss11_rrf_fusion" -> 20, "ss12_mutual_knn" -> 17, "ss13_knn_triangles" -> 20,
       "ss14_link_prediction" -> 15, "ss15_label_prop" -> 15, "ss16_multiprobe_lsh" -> 7,
-      "ss17_filtered_ann" -> 12, "ss18_capped_lsh_ann" -> 8, "ss19_capped_multiprobe" -> 8,
+      "ss17_filtered_ann" -> 9, "ss18_capped_lsh_ann" -> 8, "ss19_capped_multiprobe" -> 8,
       "ss20_capped_recall" -> 32, "ss21_capped_triangles" -> 23,
       "ss22_capped_linkpred" -> 17, "ss23_capped_labelprop" -> 18, "ss24_nn_descent" -> 31,
-      "ss25_sq8_rerank" -> 12, "ss26_ivf_sq8" -> 20, "ss27_binary_quant" -> 12,
+      "ss25_sq8_rerank" -> 12, "ss26_ivf_sq8" -> 17, "ss27_binary_quant" -> 10,
       "dd16_semantic_decontam" -> 5)
     val sc = spark.sparkContext
     // budgets count rows over the uncached tables: a frame another
-    // suite cached (OperatorsSpec caches sf0.001 embeddings) would
-    // replace their scans and change the AQE stages (ss15: 19 jobs)
+    // suite left cached would replace their scans and change the AQE
+    // stages (ss15: 19 jobs over a cached embeddings frame)
     spark.catalog.clearCache()
     val over = budgets.flatMap { case (name, budget) =>
       val pinned = sc.getPersistentRDDs.keySet

@@ -269,7 +269,7 @@ class StreamingSpec extends SparkSpec {
     val batch = Tables(spark, "/root/testdata/sf0.001").embeddings
     batch.write.parquet(s"$dir/in")
     val schema = spark.read.parquet(s"$dir/in").schema
-    val model = Pq.train(batch, "vec_id", "embedding", m = 4, k = 16, iters = 1, dim = 64)
+    val model = Pq.train(batch, "vec_id", "embedding", m = 4, k = 16, iters = 1)
     val stream = spark.readStream.schema(schema).parquet(s"$dir/in")
     val q = StreamingIngest.pqEncodeStream(stream, "vec_id", "embedding", model)
       .writeStream.outputMode("append").format("memory").queryName("pq_stream").start()
