@@ -28,6 +28,17 @@ object Sessions {
     * `search_mix`, +88 MB after a whole-catalog pass. A static SQL
     * conf, so it is fixed when the session is built and stays out of
     * [[clusterConfigs]], which are applied to a live session.
+    *
+    * The cache is keyed on the source text, so both builders also set
+    * `spark.sql.codegen.useIdInClassName` to false: the class is then
+    * `GeneratedIterator`, not `GeneratedIteratorForCodegenStage<id>`.
+    * AQE numbers codegen stages in the order it creates query stages,
+    * and in a plan with independent branches that order follows which
+    * branch finishes first, so a repeated query can number the same
+    * stage differently and miss the cache. ss20 (one plan over a
+    * cogroup branch and a bucket-join branch) recompiled 4 classes on
+    * a repeated pass in 2 of 3 runs of PlanSpec's codegen test, each a
+    * stage whose id had swapped with another's.
     */
   val CodegenCacheEntries: Int = 4096
 
@@ -62,6 +73,7 @@ object Sessions {
       .foldLeft(SparkSession.builder().appName(app)) { case (b, (k, v)) => b.config(k, v) }
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** Shuffle width for local surfaces: the core count (right for the
     * sf0.1 harness) unless SPARK_GRAFT_SHUFFLE_PARTITIONS overrides
@@ -83,6 +95,7 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -23,10 +23,15 @@ import graft.functions.VectorKernels
 object Ivf {
 
   final case class Model(centroids: Array[Array[Double]]) {
-    def nearest(v: Array[Double], n: Int): Seq[Int] =
+    /** The `n` centroids nearest to vector `id`; `who` names the
+      * operator in the error a vector of the wrong length raises.
+      */
+    def nearest(who: String, id: Long, v: Array[Double], n: Int): Seq[Int] = {
+      Lloyd.requireLength(who, id, v, centroids(0).length)
       centroids.indices
         .map(i => (Lloyd.dist2(v, 0, centroids(i)), i))
         .sorted.take(n).map(_._2)
+    }
   }
 
   /** The search-side parameter checks shared by every IVF route
@@ -50,7 +55,9 @@ object Ivf {
     import spark.implicits._
     val bcModel = spark.sparkContext.broadcast(model)
     toVec(queries, idCol, vecCol)
-      .flatMap { case (qid, qv) => bcModel.value.nearest(qv, nprobe).map(c => (qid, c, qv)) }
+      .flatMap { case (qid, qv) =>
+        bcModel.value.nearest("IVF probe", qid, qv, nprobe).map(c => (qid, c, qv))
+      }
       .toDF("query_id", "cluster_id", "qv")
   }
 
@@ -90,7 +97,10 @@ object Ivf {
     val bc = spark.sparkContext.broadcast(model.centroids)
     toVec(df, idCol, vecCol).mapPartitions { rows =>
       val cs = bc.value
-      rows.map { case (id, v) => (id, v, Lloyd.nearest(cs, v, 0)) }
+      rows.map { case (id, v) =>
+        Lloyd.requireLength("IVF index", id, v, cs(0).length)
+        (id, v, Lloyd.nearest(cs, v, 0))
+      }
     }.toDF(idCol, vecCol, "cluster_id")
   }
 
@@ -169,7 +179,7 @@ object Ivf {
   ): DataFrame = {
     requireProbe(k, nprobe)
     val probed = toVec(queries, idCol, vecCol).collect()
-      .flatMap { case (_, qv) => model.nearest(qv, nprobe) }
+      .flatMap { case (qid, qv) => model.nearest("IVF probe", qid, qv, nprobe) }
       .distinct.sorted
     val stored = spark.read.parquet(path)
       .filter(col("cluster_id").isin(probed.map(Int.box): _*))

@@ -73,7 +73,8 @@ object IvfPq {
           val mod = bcPq.value
           val tables = scala.collection.mutable.HashMap.empty[Long, Array[Array[Double]]]
           rows.map { case (qid, qv, cid, code) =>
-            (qid, cid, Pq.adcDist(tables.getOrElseUpdate(qid, Pq.adcTable(mod, qv)), code, roundTo))
+            val t = tables.getOrElseUpdate(qid, Pq.adcTable("IVF-PQ ADC", mod, qid, qv))
+            (qid, cid, Pq.adcDist(t, code, roundTo))
           }
         }
       else {
@@ -86,7 +87,8 @@ object IvfPq {
             val mod = bcPq.value
             val tables = scala.collection.mutable.HashMap.empty[(Long, Int), Array[Array[Double]]]
             rows.map { case (qid, c, qv, cid, code) =>
-              val t = tables.getOrElseUpdate((qid, c), Pq.adcTable(mod, minus(qv, cs(c))))
+              val t = tables.getOrElseUpdate((qid, c),
+                Pq.adcTable("IVF-PQ ADC", mod, qid, minus(qv, cs(c))))
               (qid, cid, Pq.adcDist(t, code, roundTo))
             }
           }

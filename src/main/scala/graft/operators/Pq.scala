@@ -27,11 +27,15 @@ object Pq {
   }
 
   /** Per-query ADC table: (subspace, centroid) → squared distance from
-    * the query's subvector to that codebook entry.
+    * query `id`'s subvector to that codebook entry. `who` names the
+    * operator in the error a query of the wrong length raises.
     */
-  private[operators] def adcTable(mod: Model, q: Array[Double]): Array[Array[Double]] =
+  private[operators] def adcTable(
+      who: String, mod: Model, id: Long, q: Array[Double]): Array[Array[Double]] = {
+    Lloyd.requireLength(who, id, q, mod.m * mod.subDim)
     Array.tabulate(mod.m, mod.codebooks(0).length)((s, c) =>
       Lloyd.dist2(q, s * mod.subDim, mod.codebooks(s)(c)))
+  }
 
   /** ADC distance of one code: table terms summed in subspace order,
     * rounded HALF_UP to `roundTo` — the order the oracle replays.
@@ -63,6 +67,7 @@ object Pq {
       .mapPartitions { rows =>
         val mod = bc.value
         rows.map { case (id, v) =>
+          Lloyd.requireLength("PQ encode", id, v, mod.m * mod.subDim)
           (id, Array.tabulate(mod.m)(s => Lloyd.nearest(mod.codebooks(s), v, s * mod.subDim)))
         }
       }
@@ -103,7 +108,7 @@ object Pq {
         val mod = bcModel.value
         val qs = bcQ.value
         // ADC tables: per (query, subspace, centroid), built once per task
-        val tables = qs.map { case (_, qv) => adcTable(mod, qv) }
+        val tables = qs.map { case (qid, qv) => adcTable("PQ ADC", mod, qid, qv) }
         val ord = Ordering.Tuple2[Double, Long]
         // max-heap on (dist, cid): head is the current worst keeper
         val heaps = Array.fill(qs.length)(

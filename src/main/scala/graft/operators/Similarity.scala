@@ -489,8 +489,9 @@ object Similarity {
       .select("query_id", "corpus_id", "sim", "rank")
   }
 
-  /** One-pass bucket-cap SWEEP of the capped [[lshKnn]]: per cap `c`,
-    * the returned frame is row-identical to
+  /** One-plan bucket-cap SWEEP of the capped [[lshKnn]]: one frame
+    * `(bucket_cap, query_id, corpus_id, sim, rank)` whose rows with
+    * `bucket_cap = c` are row-identical to
     * `lshKnn(corpus, …, bucketCap = c).filter(queryPred on query)`
     * — but the corpus is sketched, bucketed, truncated, joined and
     * rescored ONCE at `caps.max` instead of once per cap.
@@ -499,14 +500,17 @@ object Similarity {
     * shared (table, bucket) holds c' inside c's truncation window,
     * i.e. MIN over shared buckets of rn ≤ c — so one join at the
     * largest cap carrying `min_rn` reconstructs every smaller cap's
-    * candidate set by a filter, and the per-query top-k window over
-    * that filtered set sees exactly the per-cap run's input. (The
-    * DuckDB oracle for ss20 has used this same single-join shape since
-    * round 8; this moves the engine to it too — guide §1.2: don't
-    * recompute what a previous pass already knows.) `queryPred` is a
-    * predicate over the bucket frame's `id` column, applied to the
-    * QUERY side before the join: top-k is per-query independent, so
-    * pre-filtering queries equals post-filtering results.
+    * candidate set. Each rescored pair is exploded to the caps ≥ its
+    * `min_rn`, and one top-k window partitioned by (bucket_cap,
+    * query_id) sees, per cap, exactly the per-cap run's input — the
+    * result at the largest parameter reused for every smaller one
+    * (*Incremental … Top-K Similarity Search*, EDBT 2020). The DuckDB
+    * oracle for ss20 has the same single-join shape. Nothing but the
+    * [[vectors]] table is materialized: the frame is one lazy plan.
+    * `queryPred` is a predicate over the bucket frame's `id` column,
+    * applied to the QUERY side before the join: top-k is per-query
+    * independent, so pre-filtering queries equals post-filtering
+    * results.
     */
   def lshKnnCappedSweep(
       corpus: DataFrame,
@@ -518,7 +522,7 @@ object Similarity {
       caps: Seq[Int],
       queryPred: Column,
       roundTo: Int = 4
-  ): Map[Int, DataFrame] = {
+  ): DataFrame = {
     requireLsh(k, bits, tables)
     require(caps.nonEmpty, "caps must name at least one bucket cap")
     caps.foreach(requireAtLeast1("every cap", _))
@@ -528,13 +532,13 @@ object Similarity {
     val cand = bucketJoin(buckets.filter(queryPred), capped)
       .groupBy(col("a.id").as("query_id"), col("b.id").as("corpus_id"))
       .agg(min(col("b.rn")).as("min_rn"))
-    // rescored once; every cap's top-k reads these materialized rows
-    val pairs = rescore(cand, base, roundTo, col("min_rn")).localCheckpoint()
-    caps.map { c =>
-      c -> firstK(pairs.filter(col("min_rn") <= c), Seq("query_id"), k, "rank",
-        desc("sim"), asc("corpus_id")).select("query_id", "corpus_id", "sim", "rank")
-    }.toMap
+    val perCap = rescore(cand, base, roundTo, col("min_rn"))
+      .withColumn("bucket_cap", explode(typedLit(caps.distinct)))
+      .filter(col("min_rn") <= col("bucket_cap"))
+    firstK(perCap, Seq("bucket_cap", "query_id"), k, "rank", desc("sim"), asc("corpus_id"))
+      .select("bucket_cap", "query_id", "corpus_id", "sim", "rank")
   }
+
   /** NN-Descent kNN-graph refinement (Dong et al., WWW 2011,
     * "Efficient k-nearest neighbor graph construction for generic
     * similarity measures"): start from ANY approximate kNN edge set

@@ -490,10 +490,11 @@ object TrainingData {
             |  FROM p) WHERE r <= 3 ORDER BY query_id, rank""".stripMargin),
     (spark, dir) => {
       val t = Tables(spark, dir)
-      Similarity
-        .cosineKnnKernel(t.embeddings, t.embeddings.filter(col("vec_id") < 50),
-          "vec_id", "embedding", k = 3)
-        .orderBy("query_id", "rank")
+      Query.checkpointSort(
+        Similarity
+          .cosineKnnKernel(t.embeddings, t.embeddings.filter(col("vec_id") < 50),
+            "vec_id", "embedding", k = 3),
+        "query_id", "rank")
     }
   )
 
@@ -679,6 +680,11 @@ object TrainingData {
     * tiebreak, so top-k membership is deterministic in both engines;
     * recall is exact integer 1e-4 units (no double division). The
     * exact side is O(|slice|·N) — bounded by the fixed slice.
+    *
+    * The engine builds the whole sweep as one lazy plan — the exact
+    * top-3 exploded over the caps, left-joined to the one-frame
+    * [[Similarity.lshKnnCappedSweep]], one `groupBy(bucket_cap)` —
+    * so the only materialization is the sweep's vector table.
     */
   val ss20CappedRecall = Query(
     "ss20_capped_recall", {
@@ -733,31 +739,27 @@ object TrainingData {
            |ORDER BY bucket_cap""".stripMargin)
     },
     (spark, dir) => {
-      import spark.implicits._
       val t = Tables(spark, dir)
+      val caps = Seq(8, 32, 128)
       val exact = Similarity.cosineKnnKernel(
         t.embeddings, t.embeddings.filter(col("vec_id") < 50),
         "vec_id", "embedding", k = 3)
-        .select("query_id", "corpus_id")
-        .localCheckpoint() // feeds every cap's hit join + the query count
-      val nq = exact.select("query_id").distinct().count()
-      // ONE capped run at the largest cap carrying min_rn reconstructs
-      // every smaller cap's result by a filter (lshKnnCappedSweep —
-      // the engine-side twin of this oracle's round-8 single-join
-      // rewrite): 3 corpus sketch/bucket/join/rescore passes → 1, and
-      // the query side is pre-filtered to the 50-query slice before
-      // the candidate join instead of after the top-k.
-      val sweep = Similarity.lshKnnCappedSweep(t.embeddings, "vec_id", "embedding",
-        k = 3, bits = 8, tables = 2, caps = Seq(8, 32, 128),
-        queryPred = col("id") < 50)
-      val rows = Seq(8, 32, 128).map { cap =>
-        val ann = sweep(cap).select("query_id", "corpus_id")
-        val hits = exact.join(ann, Seq("query_id", "corpus_id"), "left_semi").count()
-        // 3-element control-plane: the sweep table itself is the result
-        (cap.toLong, nq, hits, hits * 10000L / (3L * nq))
-      }
-      rows.toDF("bucket_cap", "n_queries", "sum_hits", "recall_e4")
-        .orderBy("bucket_cap")
+        .select(explode(typedLit(caps)).as("bucket_cap"), col("query_id"), col("corpus_id"),
+          col("rank"))
+      val ann = Similarity.lshKnnCappedSweep(t.embeddings, "vec_id", "embedding",
+        k = 3, bits = 8, tables = 2, caps = caps, queryPred = col("id") < 50)
+        .select(col("bucket_cap"), col("query_id"), col("corpus_id"), lit(1).as("hit"))
+      // the sweep's answers are ≤ |slice| × |caps| × k rows: broadcast
+      // them, so the exact side joins where it stands
+      val recall = exact.join(broadcast(ann), Seq("bucket_cap", "query_id", "corpus_id"), "left")
+        .groupBy("bucket_cap")
+        // every query with an answer has exactly one rank-1 row, so
+        // counting those counts the distinct queries without a distinct
+        // aggregate (and its second exchange)
+        .agg(count(when(col("rank") === 1, 1)).as("n_queries"), count("hit").as("sum_hits"))
+        .select(col("bucket_cap").cast("long").as("bucket_cap"), col("n_queries"),
+          col("sum_hits"), expr("sum_hits * 10000 div (3 * n_queries)").as("recall_e4"))
+      Query.checkpointSort(recall, "bucket_cap")
     }
   )
 
@@ -1091,12 +1093,13 @@ object TrainingData {
             |FROM knn2 ORDER BY query_id, rank""".stripMargin),
     (spark, dir) => {
       val t = Tables(spark, dir)
-      Similarity.nnDescentKnn(t.embeddings, "vec_id", "embedding", k = 5,
-        init = Similarity.lshKnn(t.embeddings, "vec_id", "embedding",
-          k = 5, bits = CappedGraphBits, tables = CappedGraphTables,
-          bucketCap = CappedGraphCap).select("query_id", "corpus_id"),
-        rounds = 2)
-        .orderBy("query_id", "rank")
+      Query.checkpointSort(
+        Similarity.nnDescentKnn(t.embeddings, "vec_id", "embedding", k = 5,
+          init = Similarity.lshKnn(t.embeddings, "vec_id", "embedding",
+            k = 5, bits = CappedGraphBits, tables = CappedGraphTables,
+            bucketCap = CappedGraphCap).select("query_id", "corpus_id"),
+          rounds = 2),
+        "query_id", "rank")
     }
   )
 
@@ -1181,10 +1184,11 @@ object TrainingData {
     (spark, dir) => {
       val t = Tables(spark, dir)
       val (mn, step) = Similarity.sq8Train(t.embeddings, "embedding")
-      Similarity
-        .sq8Knn(t.embeddings, t.embeddings.filter(col("vec_id") < 50),
-          "vec_id", "embedding", mn, step, shortlist = 10, k = 3)
-        .orderBy("query_id", "rank")
+      Query.checkpointSort(
+        Similarity
+          .sq8Knn(t.embeddings, t.embeddings.filter(col("vec_id") < 50),
+            "vec_id", "embedding", mn, step, shortlist = 10, k = 3),
+        "query_id", "rank")
     }
   )
 
@@ -1225,10 +1229,11 @@ object TrainingData {
       val model = graft.operators.Ivf.train(t.embeddings, "vec_id", "embedding", k = 16, iters = 3)
       val indexed = graft.operators.Ivf.index(t.embeddings, "vec_id", "embedding", model)
       val (mn, step) = Similarity.sq8Train(t.embeddings, "embedding")
-      graft.operators.Ivf
-        .searchSq8(indexed, t.embeddings, t.embeddings.filter(col("vec_id") < 50),
-          "vec_id", "embedding", model, mn, step, shortlist = 10, k = 3, nprobe = 4)
-        .orderBy("query_id", "rank")
+      Query.checkpointSort(
+        graft.operators.Ivf
+          .searchSq8(indexed, t.embeddings, t.embeddings.filter(col("vec_id") < 50),
+            "vec_id", "embedding", model, mn, step, shortlist = 10, k = 3, nprobe = 4),
+        "query_id", "rank")
     }
   )
 
@@ -1270,10 +1275,11 @@ object TrainingData {
     (spark, dir) => {
       val t = Tables(spark, dir)
       val thr = Similarity.bqTrain(t.embeddings, "vec_id", "embedding")
-      Similarity
-        .bqKnn(t.embeddings, t.embeddings.filter(col("vec_id") < 50),
-          "vec_id", "embedding", thr, shortlist = 10, k = 3)
-        .orderBy("query_id", "rank")
+      Query.checkpointSort(
+        Similarity
+          .bqKnn(t.embeddings, t.embeddings.filter(col("vec_id") < 50),
+            "vec_id", "embedding", thr, shortlist = 10, k = 3),
+        "query_id", "rank")
     }
   )
 
@@ -1428,10 +1434,11 @@ object TrainingData {
       val model = graft.operators.Ivf.train(t.embeddings, "vec_id", "embedding", k = 16, iters = 3)
       val indexed = graft.operators.Ivf.index(
         t.embeddings.filter(col("label") === 3), "vec_id", "embedding", model)
-      graft.operators.Ivf
-        .search(indexed, t.embeddings.filter(col("vec_id") < 50), "vec_id", "embedding",
-          model, k = 3, nprobe = 4)
-        .orderBy("query_id", "rank")
+      Query.checkpointSort(
+        graft.operators.Ivf
+          .search(indexed, t.embeddings.filter(col("vec_id") < 50), "vec_id", "embedding",
+            model, k = 3, nprobe = 4),
+        "query_id", "rank")
     }
   )
 
@@ -1463,10 +1470,11 @@ object TrainingData {
       val t = Tables(spark, dir)
       val model = graft.operators.Ivf.train(t.embeddings, "vec_id", "embedding", k = 16, iters = 3)
       val indexed = graft.operators.Ivf.index(t.embeddings, "vec_id", "embedding", model)
-      graft.operators.Ivf
-        .search(indexed, t.embeddings.filter(col("vec_id") < 50), "vec_id", "embedding",
-          model, k = 3, nprobe = 4)
-        .orderBy("query_id", "rank")
+      Query.checkpointSort(
+        graft.operators.Ivf
+          .search(indexed, t.embeddings.filter(col("vec_id") < 50), "vec_id", "embedding",
+            model, k = 3, nprobe = 4),
+        "query_id", "rank")
     }
   )
 
@@ -1555,10 +1563,11 @@ object TrainingData {
       val model = graft.operators.Pq.train(
         t.embeddings, "vec_id", "embedding", m = 4, k = 16, iters = 1)
       val encoded = graft.operators.Pq.encode(t.embeddings, "vec_id", "embedding", model)
-      graft.operators.Pq
-        .adcSearch(encoded, t.embeddings.filter(col("vec_id") < 5), "vec_id", "embedding",
-          model, k = 3)
-        .orderBy("query_id", "rank")
+      Query.checkpointSort(
+        graft.operators.Pq
+          .adcSearch(encoded, t.embeddings.filter(col("vec_id") < 5), "vec_id", "embedding",
+            model, k = 3),
+        "query_id", "rank")
     }
   )
 
@@ -1595,10 +1604,11 @@ object TrainingData {
       val model = graft.operators.Pq.train(
         t.embeddings, "vec_id", "embedding", m = 4, k = 16, iters = 1)
       val encoded = graft.operators.Pq.encode(t.embeddings, "vec_id", "embedding", model)
-      graft.operators.Pq
-        .adcRerank(encoded, t.embeddings, t.embeddings.filter(col("vec_id") < 5),
-          "vec_id", "embedding", model, shortlist = 10, k = 3)
-        .orderBy("query_id", "rank")
+      Query.checkpointSort(
+        graft.operators.Pq
+          .adcRerank(encoded, t.embeddings, t.embeddings.filter(col("vec_id") < 5),
+            "vec_id", "embedding", model, shortlist = 10, k = 3),
+        "query_id", "rank")
     }
   )
 
@@ -1645,10 +1655,11 @@ object TrainingData {
       val pq = graft.operators.Pq.train(
         t.embeddings, "vec_id", "embedding", m = 4, k = 16, iters = 1)
       val encoded = graft.operators.Pq.encode(t.embeddings, "vec_id", "embedding", pq)
-      graft.operators.IvfPq
-        .search(indexed, encoded, t.embeddings.filter(col("vec_id") < 30),
-          "vec_id", "embedding", coarse, pq, k = 3, nprobe = 2)
-        .orderBy("query_id", "rank")
+      Query.checkpointSort(
+        graft.operators.IvfPq
+          .search(indexed, encoded, t.embeddings.filter(col("vec_id") < 30),
+            "vec_id", "embedding", coarse, pq, k = 3, nprobe = 2),
+        "query_id", "rank")
     }
   )
 
@@ -1705,10 +1716,11 @@ object TrainingData {
       val res = graft.operators.IvfPq.residuals(indexed, "vec_id", "embedding", coarse)
       val pq = graft.operators.Pq.train(res, "vec_id", "embedding", m = 4, k = 16, iters = 1)
       val encoded = graft.operators.Pq.encode(res, "vec_id", "embedding", pq)
-      graft.operators.IvfPq
-        .search(indexed, encoded, t.embeddings.filter(col("vec_id") < 30),
-          "vec_id", "embedding", coarse, pq, k = 3, nprobe = 2, byResidual = true)
-        .orderBy("query_id", "rank")
+      Query.checkpointSort(
+        graft.operators.IvfPq
+          .search(indexed, encoded, t.embeddings.filter(col("vec_id") < 30),
+            "vec_id", "embedding", coarse, pq, k = 3, nprobe = 2, byResidual = true),
+        "query_id", "rank")
     }
   )
 

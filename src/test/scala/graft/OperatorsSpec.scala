@@ -269,20 +269,26 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("capped LSH sweep: per-cap frames equal independent lshKnnCapped runs exactly") {
-    // the r13 one-pass sweep (min_rn at the largest cap + per-cap
-    // filter) must be row-identical to running the capped lshKnn per cap
+    // the one-plan sweep (min_rn at the largest cap, each pair exploded
+    // to the caps that admit it, one top-k per (cap, query)) must be
+    // row-identical, cap by cap, to running the capped lshKnn per cap
     // and post-filtering the query slice — the ss20 rewrite's contract
     import org.apache.spark.sql.functions.col
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+      df.select("query_id", "corpus_id", "sim", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     val caps = Seq(2, 5, 1000000)
     val sweep = Similarity.lshKnnCappedSweep(emb, "vec_id", "embedding",
       k = 3, bits = 3, tables = 2, caps = caps, queryPred = col("id") < 30)
+    assert(sweep.columns.toSeq == Seq("bucket_cap", "query_id", "corpus_id", "sim", "rank"))
+    assert(sweep.select("bucket_cap").distinct().collect().map(_.getInt(0)).toSet == caps.toSet)
     caps.foreach { c =>
       val independent = Similarity.lshKnn(
         emb, "vec_id", "embedding", k = 3, bits = 3, tables = 2, bucketCap = c)
         .filter(col("query_id") < 30)
-      assert(rows(sweep(c)) == rows(independent),
+      val want = rows(independent)
+      assert(want.nonEmpty, s"cap=$c: the per-cap run found no neighbors")
+      assert(rows(sweep.filter(col("bucket_cap") === c)) == want,
         s"sweep at cap=$c must equal the per-cap run")
     }
   }
@@ -566,6 +572,47 @@ class OperatorsSpec extends SparkSpec {
          (trainer, call) <- trainers(vecs(ok :+ (9L -> Seq.fill(len)(0.25)): _*)))
       failsWith(s"$trainer $name vector", call,
         s"$trainer training: vector 9 has $len components, expected 4")
+    // a trained model checks every vector it indexes, encodes or
+    // probes with, inside the map pass that reads it: a shorter one
+    // used to fail in a task with ArrayIndexOutOfBoundsException, a
+    // longer one was silently assigned on its first components
+    val okDf = vecs(ok: _*)
+    val ivf4 = Ivf.train(okDf, "vec_id", "embedding", k = 2, iters = 1)
+    val pq4 = Pq.train(okDf, "vec_id", "embedding", m = 2, k = 2, iters = 1)
+    val idx4 = Ivf.index(okDf, "vec_id", "embedding", ivf4)
+    val enc4 = Pq.encode(okDf, "vec_id", "embedding", pq4)
+    val res4 = IvfPq.residuals(idx4, "vec_id", "embedding", ivf4)
+    val resEnc4 = Pq.encode(res4, "vec_id", "embedding",
+      Pq.train(res4, "vec_id", "embedding", m = 2, k = 2, iters = 1))
+    val stored = java.nio.file.Files.createTempDirectory("ivf-len").resolve("idx").toString
+    Ivf.writeIndex(okDf, "vec_id", "embedding", ivf4, stored)
+    for ((len, name) <- Seq(5 -> "longer", 3 -> "shorter")) {
+      val bad = vecs(ok :+ (9L -> Seq.fill(len)(0.25)): _*)
+      val badQ = bad.filter(col("vec_id") === 9L)
+      val calls: Seq[(String, () => Any)] = Seq(
+        "IVF index" -> (() => Ivf.index(bad, "vec_id", "embedding", ivf4).collect()),
+        "PQ encode" -> (() => Pq.encode(bad, "vec_id", "embedding", pq4).collect()),
+        "IVF probe" -> (() => Ivf.search(idx4, badQ, "vec_id", "embedding", ivf4,
+          k = 2, nprobe = 1).collect()),
+        "IVF probe" -> (() => Ivf.searchStored(spark, stored, badQ, "vec_id", "embedding",
+          ivf4, k = 2, nprobe = 1).collect()),
+        "PQ ADC" -> (() => Pq.adcSearch(enc4, badQ, "vec_id", "embedding", pq4,
+          k = 2).collect()),
+        "IVF probe" -> (() => IvfPq.search(idx4, enc4, badQ, "vec_id", "embedding", ivf4, pq4,
+          k = 2, nprobe = 1).collect()),
+        "IVF probe" -> (() => IvfPq.search(idx4, resEnc4, badQ, "vec_id", "embedding", ivf4,
+          pq4, k = 2, nprobe = 1, byResidual = true).collect()))
+      for ((who, call) <- calls)
+        failsWith(s"$who $name vector", call, s"$who: vector 9 has $len components, expected 4")
+    }
+    // the ADC table checks against its own model: IVF-PQ with
+    // codebooks narrower than the coarse model reaches it (nprobe = 2
+    // probes every cluster, so the query has candidates to rank)
+    val pq2 = Pq.Model(Array.fill(2)(Array.fill(2)(Array(0.0))))
+    failsWith("IVF-PQ ADC wider query", () => IvfPq.search(idx4, enc4,
+      okDf.filter(col("vec_id") === 1L), "vec_id", "embedding", ivf4, pq2,
+      k = 2, nprobe = 2).collect(),
+      "IVF-PQ ADC: vector 1 has 4 components, expected 2")
     // a ragged init vector is caught on the driver, before any pass
     for ((trainer, call) <- trainers(vecs((0L -> Seq(1.0, 2.0)) +: ok: _*)).take(2))
       failsWith(s"$trainer ragged init", call,

@@ -694,6 +694,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.metrics.source.CodegenMetrics
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
       Sessions.CodegenCacheEntries.toString)
+    assert(spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
     // the compile counter is JVM-wide: nothing else may be running
     assert(spark.streams.active.isEmpty, "a streaming query would compile concurrently")
     val rows = Seq("ss03_ivf_ann", "ss07_ivf_pq", "ss20_capped_recall", "ss27_binary_quant",
@@ -711,15 +712,15 @@ class PlanSpec extends SparkSpec {
     // budget is the row's warm job count at sf0.001 when it was set. A
     // change that cuts a row's jobs lowers its budget here
     val budgets = Seq(
-      "ss01_cosine_knn" -> 6, "ss02_lsh_ann" -> 7, "ss03_ivf_ann" -> 9,
-      "ss04_pq_adc" -> 7, "ss05_pq_rerank" -> 10, "ss06_semantic_dedup" -> 8,
-      "ss07_ivf_pq" -> 10, "ss08_ivfpq_residual" -> 10, "ss09_truncated_recall" -> 11,
+      "ss01_cosine_knn" -> 5, "ss02_lsh_ann" -> 7, "ss03_ivf_ann" -> 8,
+      "ss04_pq_adc" -> 6, "ss05_pq_rerank" -> 9, "ss06_semantic_dedup" -> 8,
+      "ss07_ivf_pq" -> 9, "ss08_ivfpq_residual" -> 9, "ss09_truncated_recall" -> 11,
       "ss11_rrf_fusion" -> 20, "ss12_mutual_knn" -> 17, "ss13_knn_triangles" -> 20,
       "ss14_link_prediction" -> 15, "ss15_label_prop" -> 15, "ss16_multiprobe_lsh" -> 7,
-      "ss17_filtered_ann" -> 9, "ss18_capped_lsh_ann" -> 8, "ss19_capped_multiprobe" -> 8,
-      "ss20_capped_recall" -> 32, "ss21_capped_triangles" -> 23,
-      "ss22_capped_linkpred" -> 17, "ss23_capped_labelprop" -> 18, "ss24_nn_descent" -> 31,
-      "ss25_sq8_rerank" -> 12, "ss26_ivf_sq8" -> 17, "ss27_binary_quant" -> 10,
+      "ss17_filtered_ann" -> 8, "ss18_capped_lsh_ann" -> 8, "ss19_capped_multiprobe" -> 8,
+      "ss20_capped_recall" -> 14, "ss21_capped_triangles" -> 23,
+      "ss22_capped_linkpred" -> 17, "ss23_capped_labelprop" -> 18, "ss24_nn_descent" -> 30,
+      "ss25_sq8_rerank" -> 11, "ss26_ivf_sq8" -> 16, "ss27_binary_quant" -> 9,
       "dd16_semantic_decontam" -> 5)
     val sc = spark.sparkContext
     // budgets count rows over the uncached tables: a frame another
