@@ -147,11 +147,9 @@ object CurationPipeline {
           .localCheckpoint()
         enrichedBlocks = Some(enriched)
         sigCol = Some("__sig")
-        val trainSigs = enriched
-          .select(col("doc_id"), col("__sig").as("sig"))
-          .where(size(col("__sig")) > 0)
         val flaggedIds = Dedup
-          .lshDecontamFromSigs(trainSigs, idx, threshold = cfg.decontamThreshold)
+          .lshDecontamFromSigs(Dedup.sketch(enriched, col("doc_id"), col("__sig")), idx,
+            threshold = cfg.decontamThreshold)
           .select("doc_id")
           .collect()
           .map(_.get(0))

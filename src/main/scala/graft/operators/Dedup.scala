@@ -161,9 +161,113 @@ object Dedup {
       b => struct(b.as("band_idx"), slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)).as("band_key"))
     )
 
+  // ── the banded-LSH skeleton ───────────────────────────────────────
+  // Every MinHash and SimHash near-dup operator runs one algorithm:
+  // sketch each document, cut the sketch into bands, equi-join on
+  // (band_idx, band_key), then score the surviving pairs on their
+  // sketches and filter. The helpers below are its one copy.
+
+  /** The one check of every banded-LSH parameter, run before any Spark
+    * job; an argument a caller does not take keeps its legal default.
+    * Each bound stops a silent failure: bands = 0 divides by zero,
+    * numHashes = 0 leaves every signature empty (so every document is
+    * dropped), a threshold outside [0, 1] or NaN empties or saturates
+    * the result, window = 0 pairs each row with itself, and a Hamming
+    * bound outside [0, 64] is no bound on a 64-bit sketch.
+    */
+  private[graft] def requireLsh(k: Int = 1, numHashes: Int = 1, bands: Int = 1,
+      threshold: Double = 0.0, window: Int = 1, keyLen: Int = 1, maxHamming: Int = 0): Unit = {
+    require(k >= 1, s"shingle width k must be >= 1, got $k")
+    require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
+    require(bands >= 1, s"bands must be >= 1, got $bands")
+    require(numHashes % bands == 0, s"numHashes=$numHashes must divide into bands=$bands")
+    requireThreshold(threshold)
+    require(window >= 1, s"window must be >= 1, got $window")
+    require(keyLen >= 1, s"keyLen must be >= 1, got $keyLen")
+    require(maxHamming >= 0 && maxHamming <= 64, s"maxHamming must be in [0, 64], got $maxHamming")
+  }
+
+  /** (id, sig, extra…) for the documents whose signature `sig` is not
+    * empty: a document with no k-gram has no band to match on.
+    */
+  private[graft] def sketch(df: DataFrame, id: Column, sig: Column, extra: Column*): DataFrame =
+    df.select(id.as("id") +: sig.as("sig") +: extra: _*).where(size(col("sig")) > 0)
+
+  /** The MinHash sketch (id, sig) of one banded-LSH run, materialized:
+    * every consumer reads it twice (its band rows, then the candidates'
+    * signature re-fetch). It checks all of the run's parameters first,
+    * so a degenerate one fails before the sketch job.
+    */
+  private[graft] def minHashSketch(df: DataFrame, idCol: String, textCol: String,
+      k: Int, numHashes: Int, bands: Int, threshold: Double = 0.0): DataFrame = {
+    requireLsh(k, numHashes, bands, threshold)
+    // the frame may analyze in another session than the active one (a
+    // foreachBatch micro-batch analyzes in a clone)
+    graft.functions.Sketches.register(df.sparkSession)
+    sketch(df, col(idCol), minHashSignature(col(textCol), k, numHashes)).localCheckpoint()
+  }
+
+  /** (id, band_idx, band_key): one row per band of each sketch, where
+    * `bands` maps the `sig` column to its array of band structs
+    * ([[lshBands]] for MinHash, [[simHashBands]] for SimHash). With
+    * `carry` every sketch column rides along, so [[bandJoin]] needs no
+    * re-fetch.
+    */
+  private[graft] def bandRows(
+      sketches: DataFrame, bands: Column, carry: Boolean = false): DataFrame = {
+    val kept = if (carry) sketches.columns.toSeq.map(col) else Seq(col("id"))
+    sketches.select(kept :+ explode(bands).as("band"): _*)
+      .select(kept ++ Seq(col("band.band_idx"), col("band.band_key")): _*)
+  }
+
+  /** MinHash Jaccard estimate: the share of the `numHashes` signature
+    * positions on which `a` and `b` agree — a native, integer-exact
+    * count instead of an interpreted aggregate(zip_with) fold.
+    */
+  private[graft] def estimate(a: Column, b: Column, numHashes: Int): Column =
+    graft.functions.VectorKernels.longEqCount(a, b).cast("double") / numHashes
+
+  /** The candidate join of every banded-LSH operator. Band rows `bandsA`
+    * and `bandsB` equi-join on (band_idx, band_key), and each id pair,
+    * named `ids`, that passes `pair` is kept once. Every other column
+    * comes out suffixed `_a`/`_b`: the sketch columns the band rows
+    * carry, or, given `sketches`, the columns of the two sketch frames,
+    * re-fetched for the candidates only. MinHash re-fetches: its
+    * signatures are `numHashes` longs, and at corpus scale the
+    * candidates are orders of magnitude fewer than the band rows.
+    * SimHash carries its one-long sketch, so `keep` runs inside the
+    * band join. Returns (ids, `score`, the other sketch columns) for
+    * the rows that pass `keep`. With `broadcastB` the b side is the
+    * build side of every join, so the a side never shuffles for them.
+    */
+  private[graft] def bandJoin(bandsA: DataFrame, bandsB: DataFrame, ids: (String, String),
+      pair: Column, score: Column, keep: Column,
+      sketches: Option[(DataFrame, DataFrame)] = None, broadcastB: Boolean = false): DataFrame = {
+    val (a, b) = ids
+    def build(d: DataFrame) = if (broadcastB) broadcast(d) else d
+    def side(d: DataFrame, s: String, id: String) = d.select(d.columns.toSeq.map {
+      case "id" => col("id").as(id)
+      case c if c.startsWith("band_") => col(c)
+      case c => col(c).as(s"${c}_$s")
+    }: _*)
+    val cand = side(bandsA, "a", a)
+      .join(build(side(bandsB, "b", b)), Seq("band_idx", "band_key"))
+      .where(pair)
+      .drop("band_idx", "band_key")
+      .distinct()
+    val fetched = sketches.fold(cand) { case (sa, sb) =>
+      cand.join(side(sa, "a", a), a).join(build(side(sb, "b", b)), b)
+    }
+    val extra = sketches.fold(bandsA)(_._1).columns.toSeq
+      .filterNot(Set("id", "sig", "band_idx", "band_key"))
+      .flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b")))
+    fetched.select((Seq(col(a), col(b), score) ++ extra): _*).where(keep)
+  }
+
   /** Candidate near-duplicate pairs via MinHash LSH, with the MinHash
-    * Jaccard estimate. `threshold` filters on the estimate;
-    * verification against exact Jaccard is [[verifyCandidates]]' job.
+    * Jaccard estimate: (id_a, id_b, est_jaccard) with id_a < id_b.
+    * `threshold` filters on the estimate; verification against exact
+    * Jaccard is [[verifyCandidates]]' job.
     */
   def minHashCandidates(
       df: DataFrame,
@@ -174,40 +278,11 @@ object Dedup {
       bands: Int = 16,
       threshold: Double = 0.5
   ): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    // signatures computed ONCE and materialized: three consumers (the
-    // banding explode and both estimate-side lookups)
-    val sigs = df
-      .select(col(idCol).as("id"), minHashSignature(col(textCol), k, numHashes).as("sig"))
-      .where(size(col("sig")) > 0)
-      .localCheckpoint()
-    // candidate discovery joins NARROW rows (id, band_idx, r band
-    // values) — the 64-long signatures do NOT travel through the
-    // self-join shuffle. At corpus scale the candidate set is orders
-    // of magnitude smaller than the banded set, so signatures are
-    // re-fetched afterwards only for survivors.
-    val banded = sigs
-      .select(col("id"), explode(lshBands(col("sig"), bands, r)).as("band"))
-      .select(col("id"), col("band.band_idx"), col("band.band_key"))
-    val cand = banded.alias("a")
-      .join(banded.alias("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_key") === col("b.band_key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    cand
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
-      .select(
-        col("id_a"), col("id_b"),
-        // native position-agreement count — integer-exact, replaces an
-        // interpreted aggregate(zip_with) fold per candidate pair
-        (graft.functions.VectorKernels.longEqCount(col("sig_a"), col("sig_b"))
-          .cast("double") / numHashes).as("est_jaccard")
-      )
-      .filter(col("est_jaccard") >= threshold)
+    val sigs = minHashSketch(df, idCol, textCol, k, numHashes, bands, threshold)
+    val banded = bandRows(sigs, lshBands(col("sig"), bands, numHashes / bands))
+    bandJoin(banded, banded, ("id_a", "id_b"), col("id_a") < col("id_b"),
+      estimate(col("sig_a"), col("sig_b"), numHashes).as("est_jaccard"),
+      col("est_jaccard") >= threshold, Some((sigs, sigs)))
   }
 
   /** Persist the MinHash LSH index — band postings (partitioned by
@@ -226,21 +301,16 @@ object Dedup {
       numHashes: Int = 64,
       bands: Int = 16,
       mode: String = "overwrite"
-  ): Unit = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    writeLshIndexSigs(
-      df.select(col(idCol).as("id"), minHashSignature(col(textCol), k, numHashes).as("sig"))
-        .where(size(col("sig")) > 0)
-        .localCheckpoint(),
-      path, bands, numHashes / bands, mode)
-  }
+  ): Unit =
+    writeLshIndexSigs(minHashSketch(df, idCol, textCol, k, numHashes, bands),
+      path, numHashes, bands, mode)
 
-  /** Index write from PRE-COMPUTED signatures (id, sig) — the shared
-    * tail of [[writeLshIndex]], exposed so [[ingestBatch]] can sketch
-    * each batch once and feed both the index probe and the append.
+  /** The one body of [[writeLshIndex]], over (id, sig) sketches, so
+    * [[ingestBatch]] can sketch each batch once and feed both the index
+    * probe and the append.
     */
   private def writeLshIndexSigs(
-      sigs: DataFrame, path: String, bands: Int, rowsPerBand: Int, mode: String): Unit = {
+      sigs: DataFrame, path: String, numHashes: Int, bands: Int, mode: String): Unit = {
     // The two index parts are independent (different dirs, both read
     // from the materialized `sigs` blocks) and BOTH complete before
     // this returns, so the ingest's crash-ordering contract — sink ≺
@@ -255,9 +325,7 @@ object Dedup {
     import scala.concurrent.ExecutionContext.Implicits.global
     val sc = sigs.sparkSession.sparkContext
     val bandsF = graft.ops.Jobs.inCallerJobGroup(sc) {
-      sigs
-        .select(col("id"), explode(lshBands(col("sig"), bands, rowsPerBand)).as("band"))
-        .select(col("id"), col("band.band_idx"), col("band.band_key"))
+      bandRows(sigs, lshBands(col("sig"), bands, numHashes / bands))
         .repartition(col("band_idx"))
         .write.mode(mode).partitionBy("band_idx").parquet(s"$path/bands")
     }
@@ -399,8 +467,8 @@ object Dedup {
       freshSink: (DataFrame, Long) => Unit = (_, _) => (),
       sigCol: Option[String] = None
   ): BatchIngest = {
+    requireLsh(k, numHashes, bands, threshold)
     val spark = batch.sparkSession
-    require(numHashes % bands == 0, "numHashes must divide into bands")
     val bootstrap = !new java.io.File(fingerprintPath).exists()
     val deduped = exactDedup(batch, idCol, Seq(textCol))
     // the batch is sketched ONCE; the same materialized signatures feed
@@ -413,16 +481,9 @@ object Dedup {
     // no per-delivery re-sketch, no separate signature checkpoint, no
     // id semi-join (r14; the r13 shape paid a second checkpoint + a
     // semi-join per delivery to reuse the probe's signatures).
-    def sigsOf(df: DataFrame) = sigCol match {
-      case Some(c) =>
-        // projection over df's already-materialized checkpoint blocks
-        df.select(col(idCol).as("id"), col(c).as("sig"))
-          .where(size(col("sig")) > 0)
-      case None => df
-        .select(col(idCol).as("id"), minHashSignature(col(textCol), k, numHashes).as("sig"))
-        .where(size(col("sig")) > 0)
-        .localCheckpoint()
-    }
+    // (`Some`: a projection over df's already-materialized blocks)
+    def sigsOf(df: DataFrame) = sigCol.fold(
+      minHashSketch(df, idCol, textCol, k, numHashes, bands))(c => sketch(df, col(idCol), col(c)))
     // the returned frame never exposes the caller's signature column
     def publicFresh(df: DataFrame) = sigCol.fold(df)(df.drop(_))
     def emptyCands = spark.emptyDataFrame
@@ -432,7 +493,7 @@ object Dedup {
       val fresh = deduped.localCheckpoint()
       val nFresh = fresh.count() // over the checkpoint blocks
       freshSink(publicFresh(fresh), nFresh)
-      writeLshIndexSigs(sigsOf(fresh), lshPath, bands, numHashes / bands, mode = "overwrite")
+      writeLshIndexSigs(sigsOf(fresh), lshPath, numHashes, bands, mode = "overwrite")
       writeFingerprintIndex(fresh, Seq(textCol), fingerprintPath)
       BatchIngest(publicFresh(fresh), emptyCands, compacted = false, nFresh)
     } else {
@@ -463,7 +524,7 @@ object Dedup {
         }
         freshSink(publicFresh(fresh), nFresh)
         val cands = graft.ops.Jobs.awaitAll(Seq(candsF)).head
-        writeLshIndexSigs(sigs, lshPath, bands, numHashes / bands, mode = "append")
+        writeLshIndexSigs(sigs, lshPath, numHashes, bands, mode = "append")
         writeFingerprintIndex(fresh, Seq(textCol), fingerprintPath, mode = "append")
         val compacted = maybeCompactIndexes(
           spark, Some(lshPath), Some(fingerprintPath), maxFiles)
@@ -491,17 +552,12 @@ object Dedup {
       numHashes: Int = 64,
       bands: Int = 16,
       threshold: Double = 0.5
-  ): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val newSigs = newDf
-      .select(col(idCol).as("id"), minHashSignature(col(textCol), k, numHashes).as("sig"))
-      .where(size(col("sig")) > 0)
-      .localCheckpoint()
-    dedupAgainstIndexSigs(newSigs, path, numHashes, bands, threshold)
-  }
+  ): DataFrame =
+    dedupAgainstIndexSigs(minHashSketch(newDf, idCol, textCol, k, numHashes, bands, threshold),
+      path, numHashes, bands, threshold)
 
-  /** Index probe from PRE-COMPUTED batch signatures — the shared tail
-    * of [[dedupAgainstIndex]] (see [[writeLshIndexSigs]]).
+  /** The one body of [[dedupAgainstIndex]], over (id, sig) sketches of
+    * the batch (see [[writeLshIndexSigs]]).
     */
   private def dedupAgainstIndexSigs(
       newSigs: DataFrame,
@@ -510,28 +566,11 @@ object Dedup {
       bands: Int,
       threshold: Double
   ): DataFrame = {
-    val r = numHashes / bands
     val spark = newSigs.sparkSession
-    val newBanded = newSigs
-      .select(col("id"), explode(lshBands(col("sig"), bands, r)).as("band"))
-      .select(col("id").as("id_new"), col("band.band_idx"), col("band.band_key"))
-    val stored = spark.read.parquet(s"$path/bands")
-      .select(col("id").as("id_old"), col("band_idx"), col("band_key"))
-    val cand = newBanded
-      .join(stored, Seq("band_idx", "band_key"))
-      .filter(col("id_new") =!= col("id_old"))
-      .select("id_new", "id_old")
-      .distinct()
-    val storedSigs = spark.read.parquet(s"$path/sigs")
-      .select(col("id").as("id_old"), col("sig").as("sig_old"))
-    cand
-      .join(newSigs.select(col("id").as("id_new"), col("sig").as("sig_new")), "id_new")
-      .join(storedSigs, "id_old")
-      .select(
-        col("id_new"), col("id_old"),
-        (graft.functions.VectorKernels.longEqCount(col("sig_new"), col("sig_old"))
-          .cast("double") / numHashes).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+    bandJoin(bandRows(newSigs, lshBands(col("sig"), bands, numHashes / bands)),
+      spark.read.parquet(s"$path/bands"), ("id_new", "id_old"), col("id_new") =!= col("id_old"),
+      estimate(col("sig_a"), col("sig_b"), numHashes).as("est_jaccard"),
+      col("est_jaccard") >= threshold, Some((newSigs, spark.read.parquet(s"$path/sigs"))))
       // a crashed-and-retried append can leave a stored id's identical
       // (id, sig) row twice until compaction; collapsing the resulting
       // identical output rows here costs one exchange over the already
@@ -884,18 +923,18 @@ object Dedup {
       bands: Int = 16,
       threshold: Double = 0.35
   ): DataFrame =
-    lshDecontamPrepared(train,
-      prepareEvalIndex(eval, idCol, textCol, k, numHashes, bands),
-      idCol, textCol, threshold)
+    lshDecontamFromSigs(minHashSketch(train, idCol, textCol, k, numHashes, bands, threshold),
+      prepareEvalIndex(eval, idCol, textCol, k, numHashes, bands), threshold)
 
-  /** Materialized eval-side decontamination index: MinHash signatures
-    * of the eval suite, computed ONCE and reused across every probe
-    * (VERDICT r12 item 4 — re-shingling a static eval corpus per
+  /** Materialized eval-side decontamination index: MinHash sketches
+    * (id, sig) of the eval suite, computed ONCE and reused across every
+    * probe (VERDICT r12 item 4 — re-shingling a static eval corpus per
     * delivery was the measured ≈ +12 s/4-delivery stage cost in the
     * DecontamAb isolation). The sigs frame is `localCheckpoint`ed, so
     * each delivery's broadcast build reads tiny materialized blocks
-    * instead of re-running the shingle→minhash kernels; call
-    * [[EvalIndex.release]] when the pipeline instance retires.
+    * instead of re-running the shingle→minhash kernels; probe it with
+    * [[lshDecontamFromSigs]], and call [[EvalIndex.release]] when the
+    * pipeline instance retires.
     */
   final case class EvalIndex(sigs: DataFrame, k: Int, numHashes: Int, bands: Int) {
     def release(): Unit = Checkpoints.dropBlocks(sigs)
@@ -913,74 +952,30 @@ object Dedup {
       k: Int = 3,
       numHashes: Int = 64,
       bands: Int = 16
-  ): EvalIndex = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    graft.functions.Sketches.register(eval.sparkSession)
-    graft.functions.VectorKernels.register(eval.sparkSession)
-    val sigs = eval
-      .select(col(idCol).as("eval_id"), minHashSignature(col(textCol), k, numHashes).as("sig"))
-      .where(size(col("sig")) > 0)
-      .localCheckpoint()
-    EvalIndex(sigs, k, numHashes, bands)
-  }
+  ): EvalIndex =
+    EvalIndex(minHashSketch(eval, idCol, textCol, k, numHashes, bands), k, numHashes, bands)
 
-  /** Probe a prepared [[EvalIndex]] with a train batch — the
-    * per-delivery half of [[lshDecontam]]. The train side may live in
-    * a DIFFERENT session (a foreachBatch micro-batch analyzes in a
-    * cloned session while the index came from the main one): the
-    * index's checkpointed sigs are session-portable (LogicalRDD over
-    * shared-context blocks), and the kernels are registered on the
-    * train session here. `onTrainSigs` hands the caller the train-side
-    * checkpoint so it can release those blocks once the (small) result
-    * has been materialized.
-    */
-  def lshDecontamPrepared(
-      train: DataFrame,
-      idx: EvalIndex,
-      idCol: String,
-      textCol: String,
-      threshold: Double = 0.35,
-      onTrainSigs: DataFrame => Unit = _ => ()
-  ): DataFrame = {
-    graft.functions.Sketches.register(train.sparkSession)
-    val trainSigs = train
-      .select(col(idCol).as("doc_id"),
-        minHashSignature(col(textCol), idx.k, idx.numHashes).as("sig"))
-      .where(size(col("sig")) > 0)
-      .localCheckpoint()
-    onTrainSigs(trainSigs)
-    lshDecontamFromSigs(trainSigs, idx, threshold)
-  }
-
-  /** Probe a prepared [[EvalIndex]] from PRE-COMPUTED train signatures
-    * (columns `doc_id`, `sig` — same (k, numHashes) as the index) —
-    * the shared tail of [[lshDecontamPrepared]]. `trainSigs` is read
-    * twice (band side + estimate side), so callers pass a materialized
-    * frame (a checkpoint, or a projection of one).
+  /** Probe a prepared [[EvalIndex]] with train sketches (id, sig),
+    * computed with the index's (k, numHashes) — the one body of
+    * [[lshDecontam]]. `trainSigs` is read twice (band side + estimate
+    * side), so callers pass a materialized frame (a checkpoint, or a
+    * projection of one). It may live in a DIFFERENT session than the
+    * index (a foreachBatch micro-batch analyzes in a cloned session):
+    * the index's checkpointed sigs are session-portable (LogicalRDD
+    * over shared-context blocks), and the estimate kernel is
+    * registered on the train session here.
     */
   def lshDecontamFromSigs(
       trainSigs: DataFrame,
       idx: EvalIndex,
       threshold: Double
   ): DataFrame = {
-    val r = idx.numHashes / idx.bands
-    graft.functions.Sketches.register(trainSigs.sparkSession)
+    requireLsh(idx.k, idx.numHashes, idx.bands, threshold)
     graft.functions.VectorKernels.register(trainSigs.sparkSession)
-    def bandsOf(sigs: DataFrame, idName: String) = sigs
-      .select(col(idName), explode(lshBands(col("sig"), idx.bands, r)).as("band"))
-      .select(col(idName), col("band.band_idx"), col("band.band_key"))
-    val evalSigs = idx.sigs
-    val cand = bandsOf(trainSigs, "doc_id")
-      .join(broadcast(bandsOf(evalSigs, "eval_id")), Seq("band_idx", "band_key"))
-      .select("doc_id", "eval_id")
-      .distinct()
-    cand
-      .join(trainSigs.select(col("doc_id"), col("sig").as("sig_a")), "doc_id")
-      .join(broadcast(evalSigs.select(col("eval_id"), col("sig").as("sig_b"))), "eval_id")
-      .select(col("doc_id"), col("eval_id"),
-        (graft.functions.VectorKernels.longEqCount(col("sig_a"), col("sig_b"))
-          .cast("double") / idx.numHashes).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+    val bands = lshBands(col("sig"), idx.bands, idx.numHashes / idx.bands)
+    bandJoin(bandRows(trainSigs, bands), bandRows(idx.sigs, bands), ("doc_id", "eval_id"),
+      lit(true), estimate(col("sig_a"), col("sig_b"), idx.numHashes).as("est_jaccard"),
+      col("est_jaccard") >= threshold, Some((trainSigs, idx.sigs)), broadcastB = true)
       .groupBy("doc_id")
       .agg(countDistinct(col("eval_id")).as("n_eval_docs"),
         max(col("est_jaccard")).as("max_est"))
@@ -1013,14 +1008,11 @@ object Dedup {
       keyLen: Int = 24,
       threshold: Double = 0.35
   ): DataFrame = {
+    requireLsh(k, numHashes, threshold = threshold, window = window, keyLen = keyLen)
     val spark = df.sparkSession
     import spark.implicits._
-    val keyed = df
-      .select(col(idCol).cast("long").as("id"),
-        substring(graft.operators.TextAnalysis.normalizeForDedup(col(textCol)), 1, keyLen)
-          .as("key"),
-        minHashSignature(col(textCol), k, numHashes).as("sig"))
-      .where(size(col("sig")) > 0)
+    val keyed = sketch(df, col(idCol).cast("long"), minHashSignature(col(textCol), k, numHashes),
+      substring(graft.operators.TextAnalysis.normalizeForDedup(col(textCol)), 1, keyLen).as("key"))
     val parts = math.max(spark.sparkContext.defaultParallelism, 1)
     // frozen once: both passes must observe the same partitioning
     val sorted = keyed
@@ -1038,7 +1030,7 @@ object Dedup {
     val ranked = sorted.rdd
       .mapPartitionsWithIndex { (pid, it) =>
         var r = bcOff.value(pid)
-        it.map { row => r += 1; (r, row.getLong(0), row.getSeq[Long](2)) }
+        it.map { row => r += 1; (r, row.getLong(0), row.getSeq[Long](1)) }
       }
       .toDF("rank", "id", "sig")
     val probes = ranked.select(
@@ -1048,8 +1040,7 @@ object Dedup {
       .join(ranked.select(col("rank").as("rank_b"), col("id").as("id_b"),
         col("sig").as("sig_b")), "rank_b")
       .select(col("id_a"), col("id_b"),
-        (graft.functions.VectorKernels.longEqCount(col("sig_a"), col("sig_b"))
-          .cast("double") / numHashes).as("est_jaccard"))
+        estimate(col("sig_a"), col("sig_b"), numHashes).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
   }
 
@@ -1093,6 +1084,7 @@ object Dedup {
       candidateThreshold: Double = 0.35,
       jaccardThreshold: Double = 0.5
   ): DataFrame = {
+    requireThreshold(jaccardThreshold) // before the candidates' sketch job
     val cand = minHashCandidates(df, idCol, textCol, k, numHashes, bands, candidateThreshold)
       .select("id_a", "id_b")
     val edges = verifyCandidates(df, idCol, textCol, cand, k, jaccardThreshold)
@@ -1130,18 +1122,6 @@ object Dedup {
   def simHash64(text: Column): Column =
     graft.functions.Sketches.simHash64Col(text)
 
-  /** SimHash near-duplicate pairs via banded blocking (Manku,
-    * Jain & Das Sarma, "Detecting Near-Duplicates for Web Crawling",
-    * WWW 2007): split the 64-bit sketch into 4 16-bit bands —
-    * any pair within Hamming distance ≤ 3 must agree on at least one
-    * band (pigeonhole), so candidate discovery is a plain EQUI-join on
-    * (band_idx, band_key), then the cheap exact popcount verifies
-    * `maxHamming`. Same shuffle shape as MinHash LSH but the "sketch"
-    * is ONE long per document — the lightest near-dup join there is.
-    * The guarantee is exhaustive only for maxHamming ≤ 3 with 4
-    * bands; larger thresholds keep high recall but are not exhaustive
-    * (standard tradeoff).
-    */
   /** Duplicate-SPAN detection — the "exact substring dedup" shape of
     * Lee et al., *Deduplicating Training Data Makes Language Models
     * Better* (2021), at word-window granularity: any `w`-word window
@@ -1268,39 +1248,45 @@ object Dedup {
         array_join(col("kept"), " ").as("cleaned_text"))
   }
 
+  /** SimHash near-duplicate pairs via banded blocking (Manku,
+    * Jain & Das Sarma, "Detecting Near-Duplicates for Web Crawling",
+    * WWW 2007): split the 64-bit sketch into 4 16-bit bands —
+    * any pair within Hamming distance ≤ 3 must agree on at least one
+    * band (pigeonhole), so candidate discovery is a plain EQUI-join on
+    * (band_idx, band_key), and the cheap exact popcount verifies
+    * `maxHamming` inside it. Same shuffle shape as MinHash LSH but the
+    * "sketch" is ONE long per document, so the band rows carry it and
+    * no signature is re-fetched — the lightest near-dup join there is.
+    * The guarantee is exhaustive only for maxHamming ≤ 3 with 4
+    * bands; larger thresholds keep high recall but are not exhaustive
+    * (standard tradeoff).
+    */
   def simHashPairs(
       df: DataFrame,
       idCol: String,
       textCol: String,
       maxHamming: Int = 3
   ): DataFrame = {
+    requireLsh(maxHamming = maxHamming)
     val sk = df
-      .select(col(idCol).as("id"), simHash64(col(textCol)).as("s"))
-      .localCheckpoint() // consumed by the band explode AND both verify lookups
-    val banded = sk.select(
-      col("id"),
-      explode(array((0 until 4).map { b =>
-        struct(lit(b).as("band_idx"),
-          (shiftright(col("s"), 16 * b).bitwiseAND(lit(0xffffL))).as("band_key"))
-      }: _*)).as("band"))
-      .select(col("id"), col("band.band_idx"), col("band.band_key"))
-    val cand = banded.alias("a")
-      .join(banded.alias("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_key") === col("b.band_key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    cand
-      .join(sk.select(col("id").as("id_a"), col("s").as("s_a")), "id_a")
-      .join(sk.select(col("id").as("id_b"), col("s").as("s_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("s_a").bitwiseXOR(col("s_b"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+      .select(col(idCol).as("id"), simHash64(col(textCol)).as("sig"))
+      .localCheckpoint() // the band rows carry it into both sides of the band join
+    val banded = bandRows(sk, simHashBands, carry = true)
+    bandJoin(banded, banded, ("id_a", "id_b"), col("id_a") < col("id_b"),
+      hamming, col("hamming") <= maxHamming)
   }
 
+  /** Manku's bands: the 64-bit sketch `sig` as 4 16-bit band structs. */
+  private def simHashBands: Column =
+    array((0 until 4).map { b =>
+      struct(lit(b).as("band_idx"),
+        shiftright(col("sig"), 16 * b).bitwiseAND(lit(0xffffL)).as("band_key"))
+    }: _*)
+
+  private def hamming: Column = bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming")
+
   /** Two-level SimHash near-dup: collapse identical sketches into
-    * CLASSES first (`group by s` → representative = min id, size m),
+    * CLASSES first (`group by sig` → representative = min id, size m),
     * then run the Manku banded join over the DISTINCT sketches only.
     * Emits one row per near-dup class pair — a self row (rep, rep,
     * hamming 0, m·(m−1)/2 implied doc pairs) for every class of ≥2,
@@ -1324,37 +1310,33 @@ object Dedup {
       textCol: String,
       maxHamming: Int = 3
   ): DataFrame = {
+    requireLsh(maxHamming = maxHamming)
     val cls = df
-      .select(col(idCol).as("id"), simHash64(col(textCol)).as("s"))
-      .groupBy("s")
-      .agg(min("id").as("rep"), count(lit(1)).as("m"))
-      .localCheckpoint() // consumed by the band explode, both verify lookups, and self rows
-    val banded = cls.select(
-      col("s"), col("rep"), col("m"),
-      explode(array((0 until 4).map { b =>
-        struct(lit(b).as("band_idx"),
-          (shiftright(col("s"), 16 * b).bitwiseAND(lit(0xffffL))).as("band_key"))
-      }: _*)).as("band"))
-      .select(col("s"), col("rep"), col("m"), col("band.band_idx"), col("band.band_key"))
-    val cross = banded.alias("a")
-      .join(banded.alias("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_key") === col("b.band_key") &&
-          col("a.rep") < col("b.rep"))
-      .select(col("a.rep").as("rep_a"), col("b.rep").as("rep_b"),
-        col("a.s").as("s_a"), col("b.s").as("s_b"),
-        col("a.m").as("size_a"), col("b.m").as("size_b"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("s_a").bitwiseXOR(col("s_b"))))
-      .filter(col("hamming") <= maxHamming)
+      .select(col(idCol).as("id"), simHash64(col(textCol)).as("sig"))
+      .groupBy("sig")
+      .agg(min("id").as("id"), count(lit(1)).as("m"))
+      .localCheckpoint() // consumed by both sides of the band join and the self rows
+    val banded = bandRows(cls, simHashBands, carry = true)
+    val cross = bandJoin(banded, banded, ("rep_a", "rep_b"), col("rep_a") < col("rep_b"),
+      hamming, col("hamming") <= maxHamming)
       .select(col("rep_a"), col("rep_b"), col("hamming"),
-        col("size_a"), col("size_b"),
-        (col("size_a") * col("size_b")).as("implied_pairs"))
+        col("m_a").as("size_a"), col("m_b").as("size_b"),
+        (col("m_a") * col("m_b")).as("implied_pairs"))
     val self = cls.filter(col("m") >= 2)
-      .select(col("rep").as("rep_a"), col("rep").as("rep_b"),
+      .select(col("id").as("rep_a"), col("id").as("rep_b"),
         lit(0).as("hamming"), col("m").as("size_a"), col("m").as("size_b"),
         expr("CAST(m * (m - 1) DIV 2 AS BIGINT)").as("implied_pairs"))
     cross.unionByName(self)
+  }
+
+  /** The exact-dup cluster key shared by [[canonicalByQuality]] and
+    * [[sourceDupProfile]]: md5 over the first `prefixWords`
+    * normalized words. One definition so the dd14/dd15 cross-query
+    * equivalence is structural, not coincidental.
+    */
+  private def prefixFingerprint(textCol: String, prefixWords: Int): Column = {
+    val norm = TextAnalysis.normalizeForDedup(col(textCol))
+    md5(array_join(slice(split(norm, " "), 1, prefixWords), " "))
   }
 
   /** Quality-aware canonical selection: cluster documents by the md5
@@ -1370,16 +1352,6 @@ object Dedup {
     * (a single exchange). Quality is an integer token count: the
     * argmax is exactly reproducible with no FP concerns.
     */
-  /** The exact-dup cluster key shared by [[canonicalByQuality]] and
-    * [[sourceDupProfile]]: md5 over the first `prefixWords`
-    * normalized words. One definition so the dd14/dd15 cross-query
-    * equivalence is structural, not coincidental.
-    */
-  private def prefixFingerprint(textCol: String, prefixWords: Int): Column = {
-    val norm = TextAnalysis.normalizeForDedup(col(textCol))
-    md5(array_join(slice(split(norm, " "), 1, prefixWords), " "))
-  }
-
   def canonicalByQuality(
       docs: DataFrame,
       idCol: String,

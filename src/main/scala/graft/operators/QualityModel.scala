@@ -64,6 +64,14 @@ object QualityModel {
   private def grainHalfUp(x: Double): Long =
     graft.functions.ExactRound.halfUpLong(x)
 
+  // a NaN or ±Inf label, feature or grain fails its task: skipped from
+  // the grain sums while `n` still counted its row, it would silently
+  // shrink the mean gradient
+  private def finite(what: => String, x: Double): Double = {
+    require(java.lang.Double.isFinite(x), s"quality classifier: $what = $x is not finite")
+    x
+  }
+
   def trainScore(
       features: DataFrame,
       xCols: Seq[String],
@@ -90,15 +98,16 @@ object QualityModel {
     // gj = halfUp((r·x_j)·1e9) — and grain sums are exact BigInt
     // (the decimal(38,0) sums were exact integers too), so the learned
     // weights are bit-identical (spec-pinned vs the aggregate form;
-    // oracle-replayed by td55/td56). Non-finite grains are skipped,
-    // mirroring round()'s null on NaN/Inf.
+    // oracle-replayed by td55/td56). A non-finite label, feature or
+    // grain fails the pass that meets it, naming its column.
+    val cols = (yCol +: xCols).toArray
     val data = f
-      .select((yCol +: xCols).map(col): _*)
+      .select(cols.toSeq.map(col): _*)
       .rdd
       .map { r =>
         val a = new Array[Double](d + 1)
         var i = 0
-        while (i < a.length) { a(i) = r.getDouble(i); i += 1 }
+        while (i < a.length) { a(i) = finite(cols(i), r.getDouble(i)); i += 1 }
         a
       }
       .localCheckpoint()
@@ -115,12 +124,10 @@ object QualityModel {
             var j = 0
             while (j < d) { z += wb(j + 1) * a(j + 1); j += 1 }
             val r = 0.5 + z / (2.0 * (1.0 + math.abs(z))) - a(0)
-            val g0 = r * 1e9
-            if (java.lang.Double.isFinite(g0)) acc.add(0, grainHalfUp(g0))
+            acc.add(0, grainHalfUp(finite("bias grain", r * 1e9)))
             j = 0
             while (j < d) {
-              val gj = (r * a(j + 1)) * 1e9
-              if (java.lang.Double.isFinite(gj)) acc.add(j + 1, grainHalfUp(gj))
+              acc.add(j + 1, grainHalfUp(finite(s"${cols(j + 1)} grain", (r * a(j + 1)) * 1e9)))
               j += 1
             }
           }

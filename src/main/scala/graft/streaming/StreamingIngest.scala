@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -99,25 +99,20 @@ object StreamingIngest {
       bands: Int = 16,
       threshold: Double = 0.35
   ): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    val evalIdx = evalDocs
-      .select(graft.operators.Dedup.minHashSignature(col(textCol), k, numHashes).as("__sig_b"))
-      .where(size(col("__sig_b")) > 0)
-      .select(col("__sig_b"),
-        graft.operators.Dedup.lshBands(col("__sig_b"), bands, r).as("__bands_b"))
-    val enriched = docs
-      .withColumn("__sig",
-        graft.operators.Dedup.minHashSignature(col(textCol), k, numHashes))
+    import graft.operators.Dedup
+    Dedup.requireLsh(k, numHashes, bands, threshold)
+    def bandsOf(sig: Column) = Dedup.lshBands(sig, bands, numHashes / bands)
+    val evalIdx = Dedup
+      .sketch(evalDocs, col(idCol), Dedup.minHashSignature(col(textCol), k, numHashes))
+      .select(col("sig").as("__sig_b"), bandsOf(col("sig")).as("__bands_b"))
+    docs
+      .withColumn("__sig", Dedup.minHashSignature(col(textCol), k, numHashes))
       // an empty signature (short doc) yields empty band_key slices,
       // which can never equal an eval band's r values — no guard needed
-      .withColumn("__bands",
-        graft.operators.Dedup.lshBands(col("__sig"), bands, r))
-    enriched
+      .withColumn("__bands", bandsOf(col("__sig")))
       .join(broadcast(evalIdx),
         arrays_overlap(col("__bands"), col("__bands_b")) &&
-          (graft.functions.VectorKernels.longEqCount(col("__sig"), col("__sig_b"))
-            .cast("double") / numHashes) >= threshold,
+          Dedup.estimate(col("__sig"), col("__sig_b"), numHashes) >= threshold,
         "left_anti")
       .drop("__sig", "__bands")
   }

@@ -88,6 +88,77 @@ class OperatorsSpec extends SparkSpec {
     assert(joined < 0.2, s"max |est - exact| = $joined")
   }
 
+  test("banded-LSH operators reject degenerate parameters before any Spark job runs") {
+    // lazy frames and a hand-built index: setting up runs no job
+    val d = docs
+    val dir = java.nio.file.Files.createTempDirectory("graft-lsh-params").toString
+    def idx(k: Int, n: Int, b: Int) = Dedup.EvalIndex(
+      d.select(col("doc_id").as("id"), Dedup.minHashSignature(col("text")).as("sig")), k, n, b)
+    // every MinHash entry point, and whether it takes a threshold
+    val minHash: Seq[(String, Boolean, (Int, Int, Int, Double) => Any)] = Seq(
+      ("minHashCandidates", true,
+        (k, n, b, t) => Dedup.minHashCandidates(d, "doc_id", "text", k, n, b, t)),
+      ("writeLshIndex", false,
+        (k, n, b, _) => Dedup.writeLshIndex(d, "doc_id", "text", s"$dir/idx", k, n, b)),
+      ("dedupAgainstIndex", true,
+        (k, n, b, t) => Dedup.dedupAgainstIndex(d, "doc_id", "text", s"$dir/idx", k, n, b, t)),
+      ("ingestBatch", true,
+        (k, n, b, t) => Dedup.ingestBatch(d, "doc_id", "text", s"$dir/lsh", s"$dir/fp", t,
+          k = k, numHashes = n, bands = b)),
+      ("dedupPipeline", true,
+        (k, n, b, t) => Dedup.dedupPipeline(d, "doc_id", "text", k, n, b, candidateThreshold = t)),
+      ("prepareEvalIndex", false,
+        (k, n, b, _) => Dedup.prepareEvalIndex(d, "doc_id", "text", k, n, b)),
+      ("lshDecontam", true,
+        (k, n, b, t) => Dedup.lshDecontam(d, d, "doc_id", "text", k, n, b, t)),
+      ("lshDecontamFromSigs", true,
+        (k, n, b, t) => Dedup.lshDecontamFromSigs(idx(3, 64, 16).sigs, idx(k, n, b), t)),
+      ("decontamStream", true,
+        (k, n, b, t) => graft.streaming.StreamingIngest.decontamStream(d, d, "doc_id", "text",
+          k, n, b, t)))
+    val params = Seq(
+      ("k=0", (0, 64, 16, 0.5), "shingle width k must be >= 1, got 0"),
+      ("numHashes=0", (3, 0, 16, 0.5), "numHashes must be >= 1, got 0"),
+      ("bands=0", (3, 64, 0, 0.5), "bands must be >= 1, got 0"),
+      ("bands=5", (3, 64, 5, 0.5), "numHashes=64 must divide into bands=5"),
+      ("threshold=NaN", (3, 64, 16, Double.NaN), "threshold must be in [0, 1], got NaN"),
+      ("threshold=1.5", (3, 64, 16, 1.5), "threshold must be in [0, 1], got 1.5"),
+      ("threshold=-0.1", (3, 64, 16, -0.1), "threshold must be in [0, 1], got -0.1"))
+    val minHashCases = for {
+      (op, takesThreshold, call) <- minHash
+      (p, (k, n, b, t), msg) <- params if takesThreshold || !p.startsWith("threshold")
+    } yield (s"$op $p", msg, () => call(k, n, b, t))
+    def sn(window: Int = 3, k: Int = 3, numHashes: Int = 64, keyLen: Int = 24,
+        threshold: Double = 0.35) = () =>
+      Dedup.sortedNeighborhood(d, "doc_id", "text", window, k, numHashes, keyLen, threshold)
+    val cases: Seq[(String, String, () => Any)] = minHashCases ++ Seq(
+      ("dedupPipeline jaccardThreshold=1.5", "threshold must be in [0, 1], got 1.5",
+        () => Dedup.dedupPipeline(d, "doc_id", "text", jaccardThreshold = 1.5)),
+      ("sortedNeighborhood window=0", "window must be >= 1, got 0", sn(window = 0)),
+      ("sortedNeighborhood keyLen=0", "keyLen must be >= 1, got 0", sn(keyLen = 0)),
+      ("sortedNeighborhood k=0", "shingle width k must be >= 1, got 0", sn(k = 0)),
+      ("sortedNeighborhood numHashes=0", "numHashes must be >= 1, got 0", sn(numHashes = 0)),
+      ("sortedNeighborhood threshold=NaN", "threshold must be in [0, 1], got NaN",
+        sn(threshold = Double.NaN)),
+      ("simHashPairs maxHamming=-1", "maxHamming must be in [0, 64], got -1",
+        () => Dedup.simHashPairs(d, "doc_id", "text", maxHamming = -1)),
+      ("simHashPairs maxHamming=65", "maxHamming must be in [0, 64], got 65",
+        () => Dedup.simHashPairs(d, "doc_id", "text", maxHamming = 65)),
+      ("simHashClassPairs maxHamming=-1", "maxHamming must be in [0, 64], got -1",
+        () => Dedup.simHashClassPairs(d, "doc_id", "text", maxHamming = -1)),
+      ("simHashClassPairs maxHamming=65", "maxHamming must be in [0, 64], got 65",
+        () => Dedup.simHashClassPairs(d, "doc_id", "text", maxHamming = 65)))
+    for ((name, msg, call) <- cases) {
+      val (e, jobs) = jobsIn(intercept[IllegalArgumentException](call()))
+      assert(e.getMessage.contains(msg), s"$name: ${e.getMessage}")
+      assert(jobs == 0, s"$name ran $jobs Spark jobs before rejecting")
+    }
+    // the bounds themselves stay legal
+    Dedup.requireLsh(k = 1, numHashes = 1, bands = 1, threshold = 1.0, window = 1, keyLen = 1,
+      maxHamming = 64)
+    Dedup.requireLsh(threshold = 0.0, maxHamming = 0)
+  }
+
   test("simhash: near-identical texts land within small hamming distance, unrelated far") {
     val df = Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
@@ -2374,6 +2445,23 @@ class OperatorsSpec extends SparkSpec {
     val ref = TrainerReference.qualityScore(feats, xs, "y")
     assert(a.weights == ref.weights,
       s"RDD loop drifted from the aggregate form:\n${a.weights}\nvs\n${ref.weights}")
+
+    // a NaN or ±Inf label or feature, and a grain that overflows, fail
+    // with the column and the value: skipped from the grain sums while
+    // n counts the row, they would shrink the mean gradient
+    def failsWith(df: org.apache.spark.sql.DataFrame, msg: String): Unit = {
+      val e = intercept[Exception](graft.operators.QualityModel.trainScore(df, xs, "y"))
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(c => String.valueOf(c.getMessage)).toList
+      assert(chain.exists(_.contains(msg)), s"no '$msg' in the cause chain:\n$chain")
+    }
+    def planted(c: String, v: Double) =
+      feats.withColumn(c, when(col("x1") > 0.75, lit(v)).otherwise(col(c)))
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity);
+         c <- Seq("y", "x2"))
+      failsWith(planted(c, bad), s"quality classifier: $c = $bad is not finite")
+    // 1e300 is finite, but (r·x)·1e9 is not
+    failsWith(planted("x3", 1e300), "quality classifier: x3 grain = ")
   }
 
   test("QualityModel: RDD loop equals the aggregate form on the real td55 features") {

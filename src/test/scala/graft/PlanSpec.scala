@@ -722,6 +722,20 @@ class PlanSpec extends SparkSpec {
       "ss22_capped_linkpred" -> 17, "ss23_capped_labelprop" -> 18, "ss24_nn_descent" -> 30,
       "ss25_sq8_rerank" -> 11, "ss26_ivf_sq8" -> 16, "ss27_binary_quant" -> 9,
       "dd16_semantic_decontam" -> 5)
+    assertWithinBudgets(budgets)
+  }
+
+  test("every catalog row on the shared banded-LSH skeleton stays within its job budget") {
+    // every row that calls a MinHash or SimHash near-dup operator, the
+    // same budget rule as the ANN rows above
+    assertWithinBudgets(Seq(
+      "dd01_minhash_lsh" -> 6, "dd07_dedup_pipeline" -> 22, "dd08_simhash_pairs" -> 5,
+      "dd11_incremental_dedup" -> 13, "dd19_simhash_classes" -> 6, "dd20_lsh_decontam" -> 9,
+      "dd21_sorted_neighborhood" -> 9, "td49_curation_pipeline" -> 13,
+      "in09_curation_e2e" -> 118))
+  }
+
+  private def assertWithinBudgets(budgets: Seq[(String, Int)]): Unit = {
     val sc = spark.sparkContext
     // budgets count rows over the uncached tables: a frame another
     // suite left cached would replace their scans and change the AQE
