@@ -86,6 +86,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         es => graft.functions.LangIdKernel.LangIdExpr(es(0))),
       ("long_eq_count", "_FUNC_(a, b) - positions where two array<bigint> agree.", (2, 2),
         es => graft.functions.VectorKernels.LongEqCountExpr(es(0), es(1))),
+      ("sorted_intersect_count",
+        "_FUNC_(a, b) - common elements of two strictly ascending array<bigint>.", (2, 2),
+        es => graft.functions.VectorKernels.SortedIntersectCountExpr(es(0), es(1))),
       ("vec_dist2", "_FUNC_(a, b) - squared euclidean distance of two array<double>.", (2, 2),
         es => graft.functions.VectorKernels.VecDist2Expr(es(0), es(1))),
       ("phash63", "_FUNC_(payload) - 63-bit average-hash of sampled payload bytes.", (1, 1),

@@ -32,6 +32,14 @@ object VectorKernels {
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
         s"$who needs array<double> arguments, got ${e.dataType}")
 
+  private def requireLongArray(e: Expression, who: String) = e.dataType match {
+    case ArrayType(LongType, _) =>
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    case other =>
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"$who needs array<bigint> arguments, got $other")
+  }
+
   /** Inner product, left-associated without seed (matches the
     * unrolled expression chain bit for bit).
     */
@@ -126,15 +134,9 @@ object VectorKernels {
   case class LongEqCountExpr(left: Expression, right: Expression)
       extends BinaryExpression with CodegenFallback {
     override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-    private def requireLongArray(e: Expression) =
-      if (e.dataType == ArrayType(LongType, true) || e.dataType == ArrayType(LongType, false))
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"long_eq_count needs array<bigint> arguments, got ${e.dataType}")
     override def checkInputDataTypes() = {
-      val l = requireLongArray(left)
-      if (l.isFailure) l else requireLongArray(right)
+      val l = requireLongArray(left, "long_eq_count")
+      if (l.isFailure) l else requireLongArray(right, "long_eq_count")
     }
     override def nullSafeEval(a: Any, b: Any): Any = {
       val x = a.asInstanceOf[ArrayData].toLongArray()
@@ -143,6 +145,60 @@ object VectorKernels {
       var c = 0
       var i = 0
       while (i < n) { if (x(i) == y(i)) c += 1; i += 1 }
+      c
+    }
+    override protected def withNewChildrenInternal(l: Expression, r: Expression) =
+      copy(left = l, right = r)
+  }
+
+  /** |A ∩ B| of two STRICTLY ASCENDING array<bigint> values by one
+    * merge — the exact-verify count of the set-similarity join, taken
+    * over per-document sorted gram-hash arrays
+    * ([[graft.operators.Dedup.setSimPairs]]). Every adjacent pair of
+    * both inputs is checked as the merge passes it (tails included): an
+    * unsorted input, a duplicate or a null element FAILS loudly, since
+    * the merge would silently undercount it. A null array gives null.
+    */
+  case class SortedIntersectCountExpr(left: Expression, right: Expression)
+      extends BinaryExpression with CodegenFallback {
+    override def prettyName: String = "sorted_intersect_count"
+    override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+    override def checkInputDataTypes() = {
+      val l = requireLongArray(left, prettyName)
+      if (l.isFailure) l else requireLongArray(right, prettyName)
+    }
+    private def values(a: Any, side: String): Array[Long] = {
+      val arr = a.asInstanceOf[ArrayData]
+      var i = 0
+      while (i < arr.numElements()) {
+        if (arr.isNullAt(i))
+          throw new IllegalArgumentException(
+            s"sorted_intersect_count: $side input has a null element at position $i")
+        i += 1
+      }
+      arr.toLongArray()
+    }
+    // the index after i, once x(i) < x(i + 1) is checked
+    private def step(x: Array[Long], i: Int, side: String): Int = {
+      if (i + 1 < x.length && x(i + 1) <= x(i))
+        throw new IllegalArgumentException(
+          s"sorted_intersect_count: $side input is not strictly ascending at position " +
+            s"${i + 1} (${x(i)} then ${x(i + 1)})")
+      i + 1
+    }
+    override def nullSafeEval(a: Any, b: Any): Any = {
+      val x = values(a, "left")
+      val y = values(b, "right")
+      var i = 0
+      var j = 0
+      var c = 0
+      while (i < x.length && j < y.length) {
+        if (x(i) < y(j)) i = step(x, i, "left")
+        else if (x(i) > y(j)) j = step(y, j, "right")
+        else { c += 1; i = step(x, i, "left"); j = step(y, j, "right") }
+      }
+      while (i < x.length) i = step(x, i, "left")
+      while (j < y.length) j = step(y, j, "right")
       c
     }
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
@@ -378,6 +434,7 @@ object VectorKernels {
       es => HyperplaneSigExpr(es(0), intArg(es(1), "bits"), intArg(es(2), "seed"),
         if (es.length > 3) intArg(es(3), "dim") else 64))
     reg("long_eq_count", es => LongEqCountExpr(es(0), es(1)))
+    reg("sorted_intersect_count", es => SortedIntersectCountExpr(es(0), es(1)))
     reg("vec_dist2", es => VecDist2Expr(es(0), es(1)))
     reg("ordered_pair_sum", es => OrderedPairSumExpr(es(0)))
     reg("sq8_pack", es => Sq8PackExpr(es(0), es(1), es(2)))
@@ -395,6 +452,10 @@ object VectorKernels {
   def longEqCount(a: Column, b: Column): Column = {
     register(active)
     call_function("long_eq_count", a, b)
+  }
+  def sortedIntersectCount(a: Column, b: Column): Column = {
+    register(active)
+    call_function("sorted_intersect_count", a, b)
   }
   def vecDist2(a: Column, b: Column): Column = {
     register(active)

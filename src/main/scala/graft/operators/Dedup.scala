@@ -615,50 +615,73 @@ object Dedup {
   // for intersection COUNTING at these cardinalities. k = 0 would emit
   // only the empty gram: every document the same one-element set,
   // every pair a silent jaccard 1.0.
-  private def gramHashes(textCol: String, k: Int): Column = {
+  private def gramArray(textCol: String, k: Int): Column = {
     require(k >= 1, s"shingle width k must be >= 1, got $k")
-    explode(graft.functions.Sketches.gramXxHashesCol(col(textCol), k)).as("h")
+    graft.functions.Sketches.gramXxHashesCol(col(textCol), k)
   }
+
+  private def gramHashes(textCol: String, k: Int): Column =
+    explode(gramArray(textCol, k)).as("h")
 
   /** (id, h): one row per distinct gram hash of each document. */
   private def postings(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
     df.select(col(idCol).as("id"), gramHashes(textCol, k))
 
+  /** (id, hs): each document's distinct gram hashes as one ascending
+    * array (map-only: `gram_xxhashes` already dedupes).
+    */
+  private def gramSets(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
+    df.select(col(idCol).as("id"), array_sort(gramArray(textCol, k)).as("hs"))
+
   private def sizesOf(sh: DataFrame): DataFrame =
     sh.groupBy("id").agg(count(lit(1)).as("n")) // postings are distinct already
 
-  /** The scoring core of every exact pair join: self-join the postings
-    * grouped on the gram hash, count per pair, keep only `cand` pairs
-    * when given, join both sides' sizes, score and filter by `measure`.
-    * `sizes` is (id, n, extra…); each extra column comes out per side
-    * after the scores (m → m_a, m_b).
+  /** (id_a, id_b, n_common, n_a, n_b, extra…) → (id_a, id_b, n_common,
+    * <measure scores>, extra…) for the pairs reaching `threshold`.
+    */
+  private def thresholded(pairs: DataFrame, measure: SetSimMeasure, threshold: Double,
+      extra: Seq[String] = Nil): DataFrame =
+    measure.scores.foldLeft(pairs) { case (d, (name, c)) => d.withColumn(name, c) }
+      .filter(measure.scores.map { case (name, _) => col(name) >= threshold }.reduce(_ || _))
+      .select((Seq("id_a", "id_b", "n_common") ++ measure.scores.map(_._1) ++ extra).map(col): _*)
+
+  /** The all-pairs scoring core: self-join the postings grouped on the
+    * gram hash, count per pair, join both sides' sizes, score and
+    * filter by `measure`. `sizes` is (id, n, extra…); each extra column
+    * comes out per side after the scores (m → m_a, m_b).
     */
   private def scored(sh: DataFrame, sizes: DataFrame, measure: SetSimMeasure,
-      threshold: Double, cand: Option[DataFrame] = None): DataFrame = {
+      threshold: Double): DataFrame = {
     val counts = sh.alias("x")
       .join(sh.alias("y"), col("x.h") === col("y.h") && col("x.id") < col("y.id"))
       .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .agg(count(lit(1)).as("n_common"))
     def side(s: String) = sizes.select(sizes.columns.toSeq.map(c => col(c).as(s"${c}_$s")): _*)
-    val joined = cand.fold(counts)(counts.join(_, Seq("id_a", "id_b"), "left_semi"))
-      .join(side("a"), "id_a")
-      .join(side("b"), "id_b")
     val extra = sizes.columns.drop(2).flatMap(c => Seq(s"${c}_a", s"${c}_b"))
-    measure.scores.foldLeft(joined) { case (d, (name, c)) => d.withColumn(name, c) }
-      .filter(measure.scores.map { case (name, _) => col(name) >= threshold }.reduce(_ || _))
-      .select((Seq("id_a", "id_b", "n_common") ++ measure.scores.map(_._1) ++ extra).map(col): _*)
+    thresholded(counts.join(side("a"), "id_a").join(side("b"), "id_b"), measure, threshold, extra)
   }
 
-  /** Exact verification confined to the candidate neighborhood: the
-    * postings are semi-joined down to documents in some `cand` pair
-    * before the pair-counting join, so the quadratic step only ever
-    * touches the candidates, never the corpus.
+  /** Exact verification of candidate pairs (id_a < id_b, each once)
+    * against the [[gramSets]] arrays: n_a/n_b are the array sizes,
+    * n_common ONE merge of the two arrays (`sorted_intersect_count`).
+    * No posting self-join, pair aggregation or checkpoint. Pairs sharing
+    * no gram are dropped, as the all-pairs posting join never forms them.
     */
   private def verified(
-      sh: DataFrame, cand: DataFrame, measure: SetSimMeasure, threshold: Double): DataFrame = {
-    val ids = cand.select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-    val shC = sh.join(ids, Seq("id"), "left_semi").localCheckpoint()
-    scored(shC, sizesOf(shC), measure, threshold, Some(cand))
+      sets: DataFrame, cand: DataFrame, measure: SetSimMeasure, threshold: Double): DataFrame = {
+    def side(s: String) = sets.select(col("id").as(s"id_$s"), col("hs").as(s"hs_$s"))
+    // n_common is a generator output, so no filter on it is pushed
+    // below the generator into the join condition: there the optimizer
+    // would substitute the kernel into every predicate and run it up to
+    // four times per pair (PlanSpec pins one)
+    val merged = explode(array(graft.functions.VectorKernels
+      .sortedIntersectCount(col("hs_a"), col("hs_b")).cast("long")))
+    val pairs = cand.join(side("a"), "id_a").join(side("b"), "id_b")
+      .select(col("id_a"), col("id_b"),
+        size(col("hs_a")).cast("long").as("n_a"), size(col("hs_b")).cast("long").as("n_b"),
+        merged.as("n_common"))
+      .filter(col("n_common") > 0)
+    thresholded(pairs, measure, threshold)
   }
 
   /** Exact fan-out of the all-pairs self-join [[setSimPairs]] would
@@ -739,7 +762,10 @@ object Dedup {
     * smaller side: prefix ⋈ full postings, where frequent grams still
     * join, but only through the few docs rare-poor enough to carry them
     * in a prefix — the posting-squared term collapses to Σ_h pfx_h·n_h.
-    * The candidates are then exact-verified.
+    * The route materializes one frame, the per-document sorted
+    * gram-hash arrays (id, hs); its postings are a lazy `explode(hs)`
+    * of it. Each candidate pair is then exact-verified by [[verified]]:
+    * one merge of the two docs' arrays, never a second posting join.
     */
   def setSimPairs(
       df: DataFrame,
@@ -766,13 +792,17 @@ object Dedup {
       s"exact-pair fan-out $fan exceeds maxFanout=$maxFanout and threshold=0 " +
         "admits no prefix bound: restrict candidates first (minHashCandidates " +
         "→ exact verify) or raise the threshold")
-    // localCheckpoint: the postings feed the sizes, both self-join sides
-    // and (prefix route) the prefix and the verify semi-join;
-    // materializing once replaces repeated evaluations of the
-    // regex-split/shingle/hash pipeline with one
-    val sh = postings(df, idCol, textCol, k).localCheckpoint()
-    if (fan <= maxFanout) scored(sh, sizesOf(sh), measure, threshold)
-    else {
+    if (fan <= maxFanout) {
+      // localCheckpoint: the postings feed the sizes and both self-join
+      // sides; materializing once replaces repeated evaluations of the
+      // regex-split/shingle/hash pipeline with one
+      val sh = postings(df, idCol, textCol, k).localCheckpoint()
+      scored(sh, sizesOf(sh), measure, threshold)
+    } else {
+      // the route's one checkpoint: the df count, the prefix window,
+      // containment's full side and both verify joins read it
+      val sets = gramSets(df, idCol, textCol, k).localCheckpoint()
+      val sh = sets.select(col("id"), explode(col("hs")).as("h"))
       val prefix = prefixPostings(sh, threshold)
       // prefix ⋈ prefix is symmetric: a.id < b.id names each pair once,
       // and grouping on (a.id, b.id) keeps the join's partitioning on
@@ -782,15 +812,11 @@ object Dedup {
         if (measure.probesFull)
           (sh, least(col("a.id"), col("b.id")), greatest(col("a.id"), col("b.id")))
         else (prefix, col("a.id"), col("b.id"))
-      // checkpointed (r14): `cand` feeds BOTH the id semi-join and the
-      // final pair filter — unmaterialized, the prefix windows and the
-      // candidate join executed twice per run
       val cand = prefix.alias("a")
         .join(probed.alias("b"), col("a.h") === col("b.h") && lo < hi)
         .select(lo.as("id_a"), hi.as("id_b"))
         .distinct()
-        .localCheckpoint()
-      verified(sh, cand, measure, threshold)
+      verified(sets, cand, measure, threshold)
     }
   }
 
@@ -1046,7 +1072,11 @@ object Dedup {
 
   /** Exact-Jaccard verification RESTRICTED to a candidate pair set —
     * the post-LSH step of the dedup pipeline: (id_a, id_b, jaccard) for
-    * the `candidates` pairs (id_a, id_b) reaching `threshold`.
+    * the `candidates` pairs (id_a, id_b) reaching `threshold`. Each
+    * pair is normalized to (least, greatest) first, so a reversed pair
+    * is verified, not dropped; self-pairs go and duplicates collapse to
+    * one row. The survivors are merged against the documents' sorted
+    * gram-hash arrays ([[verified]]), with no posting join.
     */
   def verifyCandidates(
       df: DataFrame,
@@ -1057,7 +1087,10 @@ object Dedup {
       threshold: Double = 0.5
   ): DataFrame = {
     requireThreshold(threshold)
-    verified(postings(df, idCol, textCol, k), candidates, Jaccard, threshold)
+    val lo = least(col("id_a"), col("id_b"))
+    val hi = greatest(col("id_a"), col("id_b"))
+    val pairs = candidates.filter(lo < hi).select(lo.as("id_a"), hi.as("id_b")).distinct()
+    verified(gramSets(df, idCol, textCol, k), pairs, Jaccard, threshold)
       .select("id_a", "id_b", "jaccard")
   }
 

@@ -235,6 +235,9 @@ object TrainingData {
     }
   )
 
+  // dd11's index dir per testdata dir (see the build below)
+  private val dd11IndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
   /** dd11: the INCREMENTAL near-dup path as an oracle-checked query.
     * The corpus (doc_id % 5 <> 0) is indexed once with
     * [[Dedup.writeLshIndex]]; the batch (doc_id % 5 = 0) is deduped
@@ -257,6 +260,12 @@ object TrainingData {
     (spark, dir) => {
       val t = Tables(spark, dir)
       val idx = java.nio.file.Files.createTempDirectory("graft-dd11-idx").toString
+      // one index dir per testdata dir: a rebuild deletes the previous
+      // build's (the result reads it lazily, so it lives until then)
+      Option(dd11IndexDirs.put(dir, idx)).foreach { prev =>
+        val p = new org.apache.hadoop.fs.Path(prev)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      }
       Dedup.writeLshIndex(
         t.documents.filter(col("doc_id") % 5 =!= 0), "doc_id", "text", idx)
       Query.checkpointSort(

@@ -462,6 +462,8 @@ class OperatorsSpec extends SparkSpec {
       assert(ext.sql("SELECT phash63('some payload bytes here') AS p").head().getLong(0)
         == graft.functions.Sketches.pHash63("some payload bytes here".getBytes))
       assert(ext.sql("SELECT interleave_bits(3, 1) AS z").head().getLong(0) == 7L)
+      assert(ext.sql("SELECT sorted_intersect_count(array(1L, 2L, 3L), array(2L, 3L, 4L)) AS c")
+        .head().getInt(0) == 2)
     } finally {
       S.setActiveSession(prior); S.setDefaultSession(prior)
     }
@@ -925,6 +927,53 @@ class OperatorsSpec extends SparkSpec {
     assert(longDiff.isEmpty, "tail beyond dim must not change the signature")
   }
 
+  test("sorted_intersect_count merges ascending arrays and fails loudly on unsorted input") {
+    import graft.functions.VectorKernels
+    def merged(a: Seq[Long], b: Seq[Long]): Int =
+      Seq((a, b)).toDF("a", "b")
+        .select(VectorKernels.sortedIntersectCount(col("a"), col("b"))).head().getInt(0)
+    val cases = Seq(
+      "empty" -> (Seq.empty[Long], Seq.empty[Long], 0),
+      "one side empty" -> (Seq.empty[Long], Seq(1L, 2L), 0),
+      "disjoint" -> (Seq(1L, 3L, 5L), Seq(2L, 4L, 6L), 0),
+      "identical" -> (Seq(1L, 2L, 3L), Seq(1L, 2L, 3L), 3),
+      "unequal lengths" -> (Seq(1L, 5L, 9L), (0L to 10L), 3),
+      "negative longs" -> (Seq(Long.MinValue, -5L, -1L, 0L, 7L), Seq(-5L, 0L, Long.MaxValue), 2),
+      "match at the first element" -> (Seq(1L, 4L, 6L), Seq(1L, 2L, 3L), 1),
+      "match at the last element" -> (Seq(2L, 9L), Seq(5L, 7L, 9L), 1))
+    cases.foreach { case (name, (a, b, want)) =>
+      assert(merged(a, b) == want, name)
+      assert(merged(b, a) == want, s"$name, sides swapped")
+    }
+    def failure(body: => Any): String = {
+      val e = intercept[Exception](body)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    }
+    // unsorted at the head, and in a tail the merge passes after the
+    // other side is exhausted; a duplicate breaks strict ascent too
+    Seq((Seq(3L, 1L, 2L), Seq(1L, 2L, 3L)), (Seq(1L), Seq(2L, 5L, 3L)),
+      (Seq(1L, 2L, 2L, 3L), Seq(2L, 3L))).foreach { case (a, b) =>
+      val m = failure(merged(a, b))
+      assert(m.contains("sorted_intersect_count") && m.contains("not strictly ascending"), m)
+    }
+    val nullElem = failure(Seq((Seq(Option(1L), None), Seq(Option(1L)))).toDF("a", "b")
+      .select(VectorKernels.sortedIntersectCount(col("a"), col("b"))).head())
+    assert(nullElem.contains("null element"), nullElem)
+    val nulls = Seq((Option.empty[Seq[Long]], Option(Seq(1L)))).toDF("a", "b")
+      .select(VectorKernels.sortedIntersectCount(col("a"), col("b")))
+    assert(nulls.head().isNullAt(0), "a null array gives null")
+    // on real documents the merge equals Spark's array_intersect size
+    // for every pair
+    val sets = docs.select(col("doc_id").as("id"),
+      array_sort(graft.functions.Sketches.gramXxHashesCol(col("text"), 3)).as("hs"))
+    val diff = sets.alias("x").crossJoin(sets.alias("y"))
+      .select(VectorKernels.sortedIntersectCount(col("x.hs"), col("y.hs")).as("got"),
+        size(array_intersect(col("x.hs"), col("y.hs"))).as("want"))
+      .agg(count(lit(1)).as("pairs"), sum(when(col("got") =!= col("want"), 1).otherwise(0)).as("bad"))
+      .head()
+    assert(diff.getLong(0) > 1000L && diff.getLong(1) == 0L, diff.toString)
+  }
+
   test("exact-moment stats agree with Spark's corr/stddev_samp builtins") {
     val got = graft.queries.Extras.x17StatsMoments
       .build(spark, sf).collect()
@@ -1248,6 +1297,24 @@ class OperatorsSpec extends SparkSpec {
     }
     assert(Dedup.setSimPairs(docs, "doc_id", "text", Dedup.Jaccard, threshold = 1.0, k = 3,
       maxFanout = 0L).collect().forall(_.getDouble(3) == 1.0))
+  }
+
+  test("verifyCandidates normalizes reversed pairs, collapses duplicates and drops self-pairs") {
+    val corpus = Seq(
+      (3L, "the quick brown fox jumps over the lazy dog again"),
+      (5L, "the quick brown fox jumps over the lazy dog today"),
+      (8L, "entirely disjoint vocabulary about streams windows and state stores")
+    ).toDF("doc_id", "text")
+    def verify(pairs: (Long, Long)*) =
+      Dedup.verifyCandidates(corpus, "doc_id", "text", pairs.toDF("id_a", "id_b"),
+        k = 3, threshold = 0.5)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val ordered = verify((3L, 5L))
+    assert(ordered.map(p => (p._1, p._2)) == Seq((3L, 5L)), s"fixture pair must verify: $ordered")
+    assert(verify((5L, 3L)) == ordered, "a reversed pair is verified as (least, greatest)")
+    assert(verify((3L, 5L), (3L, 5L), (5L, 3L)) == ordered, "duplicates collapse to one row")
+    assert(verify((5L, 5L), (8L, 8L)).isEmpty, "self-pairs are dropped")
+    assert(verify((3L, 8L)).isEmpty, "a pair sharing no gram never qualifies")
   }
 
   test("shingle width below 1 is rejected by every posting consumer") {
@@ -1791,6 +1858,19 @@ class OperatorsSpec extends SparkSpec {
     assert(full.nonEmpty, "the split must cut through duplicate clusters")
     assert(inc == full,
       "incremental candidates must be bit-identical to the full run's cross pairs")
+  }
+
+  test("dd11 reuses one index dir per testdata dir across rebuilds") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def idxDirs() = Option(tmp.listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("graft-dd11-idx")).map(_.getName).toSet
+    val before = idxDirs()
+    val first = graft.queries.TrainingData.dd11IncrementalDedup.build(spark, sf).collect()
+    val second = graft.queries.TrainingData.dd11IncrementalDedup.build(spark, sf).collect()
+    assert(second.toSeq == first.toSeq)
+    val added = idxDirs() -- before
+    assert(added.size == 1, s"two builds must leave one new index dir, got $added")
+    assert(idxDirs().size <= before.size + 1, "a rebuild deletes the previous build's dir")
   }
 
   test("index compaction: K appended batches → fewer files, candidates bit-equal") {

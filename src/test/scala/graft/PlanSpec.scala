@@ -222,6 +222,25 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("set-similarity verify evaluates the intersection kernel once per pair") {
+    import graft.operators.Dedup
+    import graft.functions.VectorKernels.SortedIntersectCountExpr
+    // a CodegenFallback kernel substituted into a pushed-down join
+    // condition would run once per score there and again in the output
+    def kernels(df: DataFrame) = df.queryExecution.optimizedPlan.collect { case node =>
+      node.expressions.map(_.collect { case k: SortedIntersectCountExpr => k }.size).sum
+    }.sum
+    val docs = Tables(spark, sf).documents
+    Seq(Dedup.Jaccard, Dedup.Containment).foreach { m =>
+      val df = Dedup.setSimPairs(docs, "doc_id", "text", m, threshold = 0.5, k = 3,
+        maxFanout = 0L)
+      assert(kernels(df) == 1, s"$m:\n${df.queryExecution.optimizedPlan}")
+    }
+    val cand = Seq((1L, 2L)).toDF("id_a", "id_b")
+    val v = Dedup.verifyCandidates(docs, "doc_id", "text", cand, k = 3, threshold = 0.5)
+    assert(kernels(v) == 1, v.queryExecution.optimizedPlan.toString)
+  }
+
   test("conversion-window probe joins on user with the time range as a residual") {
     val p = plan(graft.queries.Extras.x28ConversionWindow.build(spark, sf))
     // equi on user_id; the 1-hour window must not force a nested loop
@@ -729,10 +748,20 @@ class PlanSpec extends SparkSpec {
     // every row that calls a MinHash or SimHash near-dup operator, the
     // same budget rule as the ANN rows above
     assertWithinBudgets(Seq(
-      "dd01_minhash_lsh" -> 6, "dd07_dedup_pipeline" -> 22, "dd08_simhash_pairs" -> 5,
+      "dd01_minhash_lsh" -> 6, "dd07_dedup_pipeline" -> 13, "dd08_simhash_pairs" -> 5,
       "dd11_incremental_dedup" -> 13, "dd19_simhash_classes" -> 6, "dd20_lsh_decontam" -> 9,
       "dd21_sorted_neighborhood" -> 9, "td49_curation_pipeline" -> 13,
       "in09_curation_e2e" -> 118))
+  }
+
+  test("every set-similarity catalog row stays within its job budget") {
+    // the all-pairs (td06, dd09), prefix (dd10, dd22, dd23) and class
+    // (dd05, td53) routes of the exact set-similarity join, the same
+    // budget rule as the ANN rows above
+    assertWithinBudgets(Seq(
+      "dd10_prefix_jaccard" -> 8, "dd22_gated_jaccard" -> 8, "dd23_gated_containment" -> 8,
+      "td06_jaccard_pairs" -> 7, "dd09_containment_pairs" -> 7, "dd05_dedup_groups" -> 19,
+      "td53_threshold_sweep" -> 23))
   }
 
   private def assertWithinBudgets(budgets: Seq[(String, Int)]): Unit = {
