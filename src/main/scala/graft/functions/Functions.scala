@@ -172,16 +172,4 @@ object Functions {
       else df.select(matched.map { case (s, t) => col(s"`$s`").as(t) }: _*)
     (projected, unmatchedSrc, unmatchedTgt)
   }
-
-  // ── T9: invalid-content detection ─────────────────────────────────
-  /** True when any value of the first column contains the marker,
-    * case-insensitively (reference: generic_import.py:353-377 flags
-    * files whose first column contains 'Invalid Event ID'). Uses a
-    * LIMIT-1 existence scan, not a count.
-    */
-  def containsMarker(df: DataFrame, marker: String): Boolean =
-    df.columns.headOption.exists { first =>
-      !df.filter(upper(col(s"`$first`").cast("string")).contains(marker.toUpperCase))
-        .isEmpty
-    }
 }

@@ -10,15 +10,20 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 import scala.util.matching.Regex
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVExprUtils, CSVOptions}
+import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.Functions
 import graft.model._
+import graft.ops.FileStats
 import graft.registry.DatasetRegistry
 
 /** S3: directory scan with regex file-pattern match — the reference's
@@ -67,10 +72,11 @@ final case class ImportResult(files: Seq[FileResult]) {
   *     register a dataset version (Q22/Q29) — displacing prior actives
   *     (the single-active invariant, Q23/Q27) — in a registry commit
   *     that runs no Spark job;
-  *  3. take the header from the file's first non-blank line, on the
-  *     driver; no such line (T12) → mark the dataset Empty and archive;
-  *     an XLS/XLSX file carrying the invalid marker (T9) → Empty too
-  *     (one probe job, spreadsheets only);
+  *  3. on the driver, take the header from the file's first non-blank
+  *     line and name its columns with Spark's own CSV tokenizer; no such
+  *     line (T12) → mark the dataset Empty and archive; an XLS/XLSX file
+  *     whose first column carries the invalid marker (T9) → Empty too,
+  *     found by streaming the converted CSV through the same tokenizer;
   *  4. otherwise: read CSV all-string under that header (S1,
   *     schema-on-write parity), normalize headers (T1), stamp
   *     `datasetid` (T3), reconcile against the target columns per the
@@ -78,7 +84,7 @@ final case class ImportResult(files: Seq[FileResult]) {
   *     target and re-read with mergeSchema only when another writer
   *     changed the target — optionally enforce VARCHAR-length
   *     truncation (T6), and append to the target (K1): the file's one
-  *     Spark job;
+  *     SQL execution and one Spark job;
   *  5. count the appended rows from the new partition's parquet
   *     footers, on the driver: 0 rows (T12) → Empty, else Active; archive
   *     the file (K5).
@@ -168,9 +174,8 @@ final class GenericImporter(
       case _                     => return finish(DatasetStatus.Empty)
     }
 
-    // T9 invalid-content branch → Empty (the XLS/XLSX-only second job)
-    if ((config.fileType == "XLS" || config.fileType == "XLSX") &&
-        Functions.containsMarker(df, InvalidMarker))
+    // T9 invalid-content branch → Empty (XLS/XLSX only; no Spark job)
+    if ((config.fileType == "XLS" || config.fileType == "XLSX") && containsMarker(readable))
       return finish(DatasetStatus.Empty)
 
     val normalized = Functions.normalizeColumns(df)
@@ -222,29 +227,73 @@ final class GenericImporter(
     fsOf(p).exists(p)
   }
 
-  private def csvReader = spark.read.option("header", "true").option("inferSchema", "false")
+  private val csvReadOptions = Map("header" -> "true", "inferSchema" -> "false")
 
-  /** The file's column names as Spark's own CSV header inference names
-    * them (quoting, dedup suffixes, `_c<i>` for empty cells), without a
-    * Spark job: the header is the first non-blank line, read on the
-    * driver the way Spark's line reader sees it (codec by extension,
-    * leading UTF-8 BOM dropped, malformed bytes replaced), and parsed
-    * from a one-line local Dataset. None = no header line at all.
+  private def csvReader = spark.read.options(csvReadOptions)
+
+  /** The options Spark builds for [[csvReader]]'s reads; the driver-side
+    * header and marker steps tokenize with these.
     */
-  private def headerSchema(file: Path): Option[StructType] = {
+  private def csvOptions: CSVOptions = {
+    val conf = spark.sessionState.conf
+    new CSVOptions(csvReadOptions, conf.csvColumnPruning, conf.sessionLocalTimeZone)
+  }
+
+  private lazy val codecs = new CompressionCodecFactory(spark.sparkContext.hadoopConfiguration)
+
+  /** `f` over the file's lines as Spark's line reader sees them: codec by
+    * extension, leading UTF-8 BOM dropped, malformed bytes replaced,
+    * lines split at LF, CR and CRLF.
+    */
+  private def withLines[A](file: Path)(f: Iterator[String] => A): A = {
     val p = new HPath(file.toUri)
-    val header = Using.Manager { use =>
+    Using.Manager { use =>
       val raw = use(fsOf(p).open(p))
-      val in = Option(new CompressionCodecFactory(spark.sparkContext.hadoopConfiguration).getCodec(p))
-        .fold[InputStream](raw)(codec => use(codec.createInputStream(raw)))
+      val in = Option(codecs.getCodec(p)).fold[InputStream](raw)(codec => use(codec.createInputStream(raw)))
       // a Charset-built reader replaces malformed bytes, as Spark does
       // (Files.newBufferedReader would throw instead)
       val reader = use(new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8)))
-      Iterator.continually(reader.readLine()).takeWhile(_ != null).zipWithIndex
-        .map { case (l, i) => if (i == 0) l.stripPrefix("\uFEFF") else l }
-        .find(_.trim.nonEmpty)
+      val first = Option(reader.readLine()).map(_.stripPrefix("\uFEFF"))
+      f(first.iterator ++ Iterator.continually(reader.readLine()).takeWhile(_ != null))
     }.get
-    header.map(line => csvReader.csv(spark.createDataset(Seq(line))(Encoders.STRING)).schema)
+  }
+
+  /** The file's column names as Spark's own CSV header inference names
+    * them (quoting, dedup suffixes, `_c<i>` for empty cells), without a
+    * Spark query: the header is the first non-blank line, tokenized and
+    * named by the steps `csv(Dataset[String])` runs on it, every field a
+    * string. None = no header line at all.
+    */
+  private def headerSchema(file: Path): Option[StructType] = {
+    val opts = csvOptions
+    withLines(file)(CSVExprUtils.extractHeader(_, opts)).map { line =>
+      val tokens = new CsvParser(opts.asParserSettings).parseLine(line)
+      if (tokens == null) new StructType()
+      else StructType(CSVUtils.makeSafeHeader(tokens, spark.sessionState.conf.caseSensitiveAnalysis, opts)
+        .map(StructField(_, StringType)))
+    }
+  }
+
+  /** T9 on the driver (reference: generic_import.py:353-377 flags files
+    * whose first column contains 'Invalid Event ID'): true when the
+    * first field of any record contains the marker, both case-folded as
+    * Spark's `upper` folds them. Records are the lines [[readAllString]]
+    * parses: the header and blank lines are skipped, and each line is
+    * tokenized on its own. Stops at the first hit.
+    */
+  private def containsMarker(file: Path): Boolean = {
+    val opts = csvOptions
+    val useIcu = spark.sessionState.conf.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+    def upper(s: String) =
+      CollationSupport.Upper.exec(UTF8String.fromString(s), CollationFactory.UTF8_BINARY_COLLATION_ID, useIcu)
+    val marker = upper(InvalidMarker)
+    val tokenizer = new CsvParser(opts.asParserSettings)
+    withLines(file) { lines =>
+      CSVExprUtils.extractHeader(lines, opts)
+      CSVExprUtils.filterCommentAndEmpty(lines, opts).exists { line =>
+        Option(tokenizer.parseLine(line)).flatMap(_.headOption).exists(t => t != null && upper(t).contains(marker))
+      }
+    }
   }
 
   /** S1 parity: header row is the schema, every payload column lands as
@@ -306,9 +355,7 @@ final class GenericImporter(
     if (!fs.exists(p)) 0L
     else fs.listStatus(p).iterator
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
-      .map { st =>
-        Using.resource(ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf)))(_.getRecordCount)
-      }
+      .map(st => Using.resource(FileStats.footerReader(st, fs.getConf))(_.getRecordCount))
       .sum
   }
 

@@ -2,7 +2,9 @@ package graft.ops
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -30,6 +32,13 @@ object FileStats {
       max_value: String
   )
 
+  /** A parquet footer reader with read options taken from `conf`.
+    * `ParquetFileReader.open(InputFile)` alone builds a fresh Hadoop
+    * `Configuration` per file, parsing `core-default.xml` again each time.
+    */
+  def footerReader(file: FileStatus, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf), HadoopReadOptions.builder(conf).build())
+
   /** Footer stats for every parquet part-file under `path`.
     * Driver-side footer reads only (no data pages touched) — the same
     * cost profile Spark's own scan planning pays.
@@ -39,11 +48,9 @@ object FileStats {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
-    val files = fs.listStatus(p).toSeq
-      .filter(f => f.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath)
+    val files = fs.listStatus(p).toSeq.filter(f => f.getPath.getName.endsWith(".parquet"))
     val rows = files.flatMap { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val reader = footerReader(f, conf)
       try {
         reader.getFooter.getBlocks.asScala.zipWithIndex.flatMap { case (block, gi) =>
           block.getColumns.asScala.map { c =>
@@ -55,7 +62,7 @@ object FileStats {
                 Option(st.maxAsString).getOrElse(""),
                 st.getNumNulls)
             ColumnStats(
-              f.getName, gi, c.getPath.toDotString, block.getRowCount, nulls, mn, mx)
+              f.getPath.getName, gi, c.getPath.toDotString, block.getRowCount, nulls, mn, mx)
           }
         }.toSeq
       } finally reader.close()

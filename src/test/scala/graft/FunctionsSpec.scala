@@ -133,14 +133,6 @@ class FunctionsSpec extends SparkSpec {
     assert(unmatchedTgt == Seq("missing"))
   }
 
-  // T9 invalid-content detection (generic_import.py:353-377)
-  test("containsMarker detects the invalid marker case-insensitively in the first column") {
-    val bad = Seq("invalid event id found", "ok").toDF("c1")
-    val good = Seq("all fine").toDF("c1")
-    assert(Functions.containsMarker(bad, "Invalid Event ID"))
-    assert(!Functions.containsMarker(good, "Invalid Event ID"))
-  }
-
   test("char_diversity kernel matches a naive reference; empty and surrogate-pair inputs") {
     import graft.functions.CharDiversity
     CharDiversity.register(spark)

@@ -75,30 +75,35 @@ class ImporterSpec extends SparkSpec {
     assert(grown < 100, s"2000 scans left $grown more open fds")
   }
 
-  test("job budget: one Spark job per CSV import, two per spreadsheet, none per registry commit") {
+  test("import budget: one SQL execution and one Spark job per non-empty import, none per invalid spreadsheet or registry commit") {
     val (imp, reg, src, arch, _) = env()
     val cfg = urlCheckConfig(src, arch)
     // first import creates the target; the second appends to it
     for (name <- Seq("20250401T120000_MeetMaxURLCheck.csv", "20250402T120000_MeetMaxURLCheck.csv")) {
-      val (r, jobs) = jobsIn(imp.importFile(cfg, write(src, name, f1Csv), 2, 1))
+      val (r, n) = sqlExecutionsIn(imp.importFile(cfg, write(src, name, f1Csv), 2, 1))
       assert(r.status == DatasetStatus.Active && r.rowsLoaded == 4)
-      assert(jobs == 1, s"$name: a non-empty CSV import ran $jobs Spark jobs")
+      assert(n == SparkSpec.Started(sqlExecutions = 1, jobs = 1), s"$name: a non-empty CSV import started $n")
     }
-    val (h, hJobs) = jobsIn(imp.importFile(cfg,
+    val (h, hN) = sqlExecutionsIn(imp.importFile(cfg,
       write(src, "20250403T120000_MeetMaxURLCheck.csv", "EventID,Title\n"), 2, 1))
     assert(h.status == DatasetStatus.Empty)
-    assert(hJobs <= 1, s"a header-only CSV import ran $hJobs Spark jobs")
+    assert(hN.sqlExecutions <= 1 && hN.jobs <= 1, s"a header-only CSV import started $hN")
     val xlsxCfg = cfg.copy(filePattern = """\d{8}T\d{6}_MeetMax_\d+\.xlsx""", fileType = "XLSX",
       labelSource = MetaSource.Filename, labelLocation = Some("2"), targetTable = "public.tmeetmaxevent")
     val xlsx = Files.write(src.resolve("20250401T120000_MeetMax_5.xlsx"),
       xlsxBytes(f2SheetXml, Seq("EventID", "Company Name", "Flag")))
-    val (x, xJobs) = jobsIn(imp.importFile(xlsxCfg, xlsx, 3, 1))
+    val (x, xN) = sqlExecutionsIn(imp.importFile(xlsxCfg, xlsx, 3, 1))
     assert(x.status == DatasetStatus.Active && x.rowsLoaded == 2)
-    assert(xJobs <= 2, s"an XLSX import ran $xJobs Spark jobs")
-    val (id, insertJobs) = jobsIn(reg.insert(java.sql.Date.valueOf("2025-05-01"), "X", 9, 1))
-    val (_, statusJobs) = jobsIn(reg.setStatus(id, DatasetStatus.Empty))
-    assert(insertJobs == 0 && statusJobs == 0,
-      s"registry commits ran Spark jobs: insert $insertJobs, setStatus $statusJobs")
+    assert(xN == SparkSpec.Started(sqlExecutions = 1, jobs = 1), s"an XLSX import started $xN")
+    val invalid = Files.write(src.resolve("20250402T120000_MeetMax_5.xlsx"),
+      xlsxBytes(invalidSheetXml, Seq("Company Name")))
+    val (i, iN) = sqlExecutionsIn(imp.importFile(xlsxCfg, invalid, 3, 1))
+    assert(i.status == DatasetStatus.Empty)
+    assert(iN == SparkSpec.Started(sqlExecutions = 0, jobs = 0), s"an invalid-marker XLSX import started $iN")
+    val (id, insertN) = sqlExecutionsIn(reg.insert(java.sql.Date.valueOf("2025-05-01"), "X", 9, 1))
+    val (_, statusN) = sqlExecutionsIn(reg.setStatus(id, DatasetStatus.Empty))
+    assert(insertN == SparkSpec.Started(0, 0) && statusN == SparkSpec.Started(0, 0),
+      s"registry commits started Spark work: insert $insertN, setStatus $statusN")
   }
 
   test("header and row count match Spark's CSV reader on tricky files") {
@@ -113,7 +118,11 @@ class ImporterSpec extends SparkSpec {
       "invalid UTF-8 byte" -> (utf8("a") ++ Array(0xFF.toByte) ++ utf8("z,b\n1,2\n")),
       "whitespace-only data line" -> utf8("a,b\n1,2\n   \n3,4\n"),
       "header-only file" -> utf8("a,b\n"),
-      "zero-byte file" -> Array.emptyByteArray)
+      "zero-byte file" -> Array.emptyByteArray,
+      "escaped quote in a header cell" -> utf8("a,\"q\"\"z\"\n1,2\n"),
+      "all-empty header" -> utf8(",,,\n1,2,3,4\n"),
+      "whitespace-padded names" -> utf8("  a , b  ,c\n1,2,3\n"),
+      "duplicates, empties and a quoted comma together" -> utf8("a,a,A,,b,\"x,y\"\n1,2,3,4,5,6\n"))
     for ((name, bytes) <- cases) {
       val (imp, _, src, arch, root) = env()
       val ref = Files.write(Files.createDirectories(root.resolve("ref")).resolve("ref.csv"), bytes)
@@ -325,6 +334,62 @@ class ImporterSpec extends SparkSpec {
       |<row r="2"><c r="A2"><v>119179</v></c><c r="B2" t="inlineStr"><is><r><t>Acme</t></r><r><t> Corp</t></r></is></c><c r="C2" t="b"><v>1</v></c></row>
       |<row r="3"><c r="A3"><v>119180</v></c><c r="C3" t="b"><v>0</v></c></row>
       |</sheetData></worksheet>""".stripMargin
+
+  private val invalidSheetXml =
+    """<?xml version="1.0"?><worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>
+      |<row r="1"><c r="A1" t="s"><v>0</v></c></row>
+      |<row r="2"><c r="A2" t="inlineStr"><is><t>Invalid Event ID</t></is></c></row>
+      |</sheetData></worksheet>""".stripMargin
+
+  /** Imports a CSV-shaped payload under an XLS config (the converter
+    * passes it through) and reports whether the T9 probe flagged it:
+    * every payload here has data rows, so a file without the marker
+    * lands Active.
+    */
+  private def importerFlags(bytes: Array[Byte]): Boolean = {
+    val (imp, _, src, arch, _) = env()
+    val xlsCfg = urlCheckConfig(src, arch).copy(fileType = "XLS", targetTable = "public.tmeetmaxevent")
+    val r = imp.importFile(xlsCfg, Files.write(src.resolve("20250401T120000_MeetMax_7.xls"), bytes), 3, 1)
+    assert(r.status == DatasetStatus.Empty || r.status == DatasetStatus.Active, s"status ${r.status}")
+    r.status == DatasetStatus.Empty
+  }
+
+  // T9 invalid-content detection (generic_import.py:353-377)
+  test("the invalid-marker probe detects the marker case-insensitively in the first column") {
+    assert(importerFlags("c1\ninvalid event id found\nok\n".getBytes("UTF-8")))
+    assert(!importerFlags("c1\nall fine\n".getBytes("UTF-8")))
+  }
+
+  test("the driver-side invalid-marker probe matches the Spark probe it replaced") {
+    // the probe as a Spark query over the importer's all-string read
+    def sparkFlags(f: Path): Boolean = {
+      val s = spark.read.option("header", "true").csv(f.toString).schema
+      val df = spark.read.option("header", "true").schema(s).csv(f.toString)
+      assert(df.count() > 0, "every case needs data rows")
+      !df.filter(upper(col(s"`${s.head.name}`")).contains("Invalid Event ID".toUpperCase)).isEmpty
+    }
+    val utf8 = (s: String) => s.getBytes("UTF-8")
+    val cases: Seq[(String, Array[Byte], Boolean)] = Seq(
+      ("quoted in the first field", utf8("Company,Id\n\"Invalid Event ID\",1\n"), true),
+      ("quoted first field with a comma before it", utf8("Company,Id\n\"Acme, Invalid Event ID\",1\n"), true),
+      ("lower case", utf8("Company,Id\nAcme,1\ninvalid event id 7,2\n"), true),
+      ("mixed case inside a longer value", utf8("Company,Id\nsee: InVaLiD eVeNt Id!,1\n"), true),
+      ("second column only", utf8("Company,Note\nAcme,Invalid Event ID\n"), false),
+      ("header only", utf8("Invalid Event ID,Id\nAcme,1\n"), false),
+      ("leading blank and whitespace-only lines",
+        utf8("\n  \n\nCompany,Id\n \t \nAcme,1\n\nInvalid Event ID,2\n"), true),
+      ("CRLF line endings and a UTF-8 BOM",
+        Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++ utf8("Company,Id\r\nAcme,1\r\nInvalid Event ID,2\r\n"), true),
+      ("embedded newline whose continuation starts with the marker",
+        utf8("Company,Note\nAcme,\"first line\nInvalid Event ID continues\"\n"), true),
+      ("dotless i folds to I", utf8("Company,Id\n\u0131nvalid event \u0131d,1\n"), true),
+      ("dotted capital I does not fold to I", utf8("Company,Id\n\u0130nvalid Event \u0130D,1\n"), false))
+    for ((name, bytes, want) <- cases) {
+      val ref = Files.write(Files.createTempDirectory("graft-marker").resolve("ref.csv"), bytes)
+      assert(sparkFlags(ref) == want, s"$name: Spark probe")
+      assert(importerFlags(bytes) == want, s"$name: driver probe")
+    }
+  }
 
   test("XlsxConverter decodes a real xlsx: first sheet by rel id, shared/inline/bool cells, gaps, quoting") {
     val dir = Files.createTempDirectory("graft-xlsx")
