@@ -42,6 +42,29 @@ object Sessions {
     */
   val CodegenCacheEntries: Int = 4096
 
+  /** The `file:` FileSystem both builders register (and GenData's own
+    * builder): [[graft.ops.NioLocalFileSystem]], which sets local file
+    * and directory permissions through java.nio with the same bits and
+    * keeps the rename rule of the class it replaces.
+    * Without `libhadoop` the stock `RawLocalFileSystem` forks a `chmod`
+    * process, about 5.5 ms, for every file it creates, every `.crc`
+    * sidecar and every directory `mkdirs` makes: 3 or 4 per registry
+    * snapshot commit and about 8 per partitioned Spark write. One
+    * perfbench `nightly_import` run (seed 1, 15 seasons, 4 vCPU)
+    * forked 2,115 of them, 141 per season; with this setting it forks
+    * none (`plans/r22/nightly_forks_{before,after}.txt`). A fixed
+    * engine setting like the codegen pair, not an option.
+    *
+    * Hadoop caches FileSystem instances per scheme and user, not per
+    * configuration: a `file:` FileSystem created in the JVM before the
+    * session's SparkContext keeps the stock class for the rest of the
+    * JVM. Structured Streaming checkpoints go through `FileContext`,
+    * whose `RawLocalFs` builds its own `RawLocalFileSystem`, so this
+    * setting does not reach them.
+    */
+  val LocalFsImpl: (String, String) =
+    "spark.hadoop.fs.file.impl" -> classOf[graft.ops.NioLocalFileSystem].getName
+
   /** Builder pre-configured for a real cluster run against ~100 TB.
     * No `master` — spark-submit supplies it. Differences from the
     * local harness are the knobs that only matter at scale:
@@ -74,6 +97,7 @@ object Sessions {
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config("spark.sql.codegen.useIdInClassName", "false")
+      .config(LocalFsImpl._1, LocalFsImpl._2)
 
   /** Shuffle width for local surfaces: the core count (right for the
     * sf0.1 harness) unless SPARK_GRAFT_SHUFFLE_PARTITIONS overrides
@@ -96,6 +120,7 @@ object Sessions {
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config("spark.sql.codegen.useIdInClassName", "false")
+      .config(LocalFsImpl._1, LocalFsImpl._2)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

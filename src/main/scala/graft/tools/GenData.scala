@@ -70,6 +70,7 @@ object GenData {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.Sessions.LocalFsImpl._1, graft.Sessions.LocalFsImpl._2)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, base, out, replicas)

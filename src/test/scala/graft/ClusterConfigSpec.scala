@@ -91,12 +91,16 @@ class ClusterConfigSpec extends SparkSpec {
     // ACTIVE session with the builder's SQL confs applied onto it —
     // snapshot and restore them, or the suite session inherits
     // shuffle.partitions=2000 and later stream tests blow past
-    // spark.driver.maxResultSize
-    val prior = Sessions.clusterConfigs.keys
+    // spark.driver.maxResultSize. The suite session already carries the
+    // `file:` setting from Sessions.local; it is unset first, so only
+    // the builder can put it back
+    val knobs = Sessions.clusterConfigs + Sessions.LocalFsImpl
+    val prior = knobs.keys
       .map(k => k -> scala.util.Try(spark.conf.get(k)).toOption).toMap
+    spark.conf.unset(Sessions.LocalFsImpl._1)
     val s = Sessions.clusterBuilder("graft-test").master("local[2]").getOrCreate()
     try {
-      Sessions.clusterConfigs.foreach { case (k, v) =>
+      knobs.foreach { case (k, v) =>
         assert(s.conf.get(k) == v, s"knob $k must survive into the session")
       }
     } finally {

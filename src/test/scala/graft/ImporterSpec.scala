@@ -106,6 +106,18 @@ class ImporterSpec extends SparkSpec {
       s"registry commits started Spark work: insert $insertN, setStatus $statusN")
   }
 
+  test("process budget: an import with its registry commits starts no OS process") {
+    val (imp, _, src, arch, _) = env()
+    val cfg = urlCheckConfig(src, arch)
+    // the first import creates the target; the second appends to it
+    for (name <- Seq("20250401T120000_MeetMaxURLCheck.csv", "20250402T120000_MeetMaxURLCheck.csv")) {
+      val (r, started) = processesIn(imp.importFile(cfg, write(src, name, f1Csv), 2, 1))
+      assert(r.status == DatasetStatus.Active && r.rowsLoaded == 4)
+      assert(started.isEmpty, s"$name: the import started ${started.size} processes: " +
+        started.groupBy(identity).map { case (c, n) => s"${n.size} x $c" }.mkString("; "))
+    }
+  }
+
   test("header and row count match Spark's CSV reader on tricky files") {
     val utf8 = (s: String) => s.getBytes("UTF-8")
     val cases: Seq[(String, Array[Byte])] = Seq(

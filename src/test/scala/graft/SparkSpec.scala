@@ -56,11 +56,36 @@ trait SparkSpec extends AnyFunSuite {
       (out, SparkSpec.Started(executions.get, jobs.get))
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Commands of the OS processes the JVM starts while `body` runs, from
+    * a JFR stream of `jdk.ProcessStart`. The stream delivers events at
+    * its periodic flushes, ordered by time, so a marker event committed
+    * after `body` arrives after every process `body` started.
+    */
+  protected def processesIn[A](body: => A): (A, Seq[String]) = {
+    val commands = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val ended = new CountDownLatch(1)
+    val stream = new jdk.jfr.consumer.RecordingStream()
+    try {
+      stream.enable("jdk.ProcessStart")
+      stream.enable(classOf[SparkSpec.CensusEnd])
+      stream.onEvent("jdk.ProcessStart", e => commands.add(e.getString("command")))
+      stream.onEvent(classOf[SparkSpec.CensusEnd].getName, _ => ended.countDown())
+      stream.startAsync()
+      val out = body
+      new SparkSpec.CensusEnd().commit()
+      assert(ended.await(60, TimeUnit.SECONDS), "the JFR stream did not deliver its end marker")
+      (out, commands.toArray(Array.empty[String]).toSeq)
+    } finally stream.close()
+  }
 }
 
 object SparkSpec {
   /** What a body started: SQL executions and Spark jobs. */
   final case class Started(sqlExecutions: Int, jobs: Int)
+
+  /** Marks the end of a [[SparkSpec.processesIn]] census. */
+  final class CensusEnd extends jdk.jfr.Event
 
   lazy val session: SparkSession = Sessions.local(cores = 4, app = "graft-test")
 }
