@@ -12,8 +12,10 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * sign + exponent + the top m mantissa bits — a RANGE-FREE histogram
   * key whose distinct values are DISJOINT value intervals of
   * ~2^−m relative width (the binning needs no prior min/max pass,
-  * which is what lets [[graft.operators.Quantiles.madByGroup]] fuse
-  * its stats and histogram scans into one). Codegen'd so the keyed
+  * which is what lets [[graft.operators.Quantiles]]' cell selection
+  * fuse its stats and histogram scans into one). `doubleToLongBits`
+  * folds every NaN to one bit pattern, so NaN gets a cell of its own,
+  * apart from +∞. Codegen'd so the keyed
   * aggregation stays inside whole-stage codegen; one intrinsic call
   * plus a shift per row.
   */

@@ -72,8 +72,9 @@ object CurationPipeline {
     /** Eval-side decontam index, built lazily ONCE per pipeline
       * instance and shared by every delivery (VERDICT r12 item 4): the
       * eval suite is static for the life of a pipeline, so
-      * re-shingling it per delivery was pure repeated work — the
-      * DecontamAb A/B isolated it at ≈ +12 s per 4 deliveries, most of
+      * re-shingling it per delivery was pure repeated work — an
+      * interleaved in09 A/B at sf1 (decontam on vs off, NOTES
+      * "DecontamAb") isolated it at ≈ +12 s per 4 deliveries, most of
       * it eval-signature rebuild. Each delivery now broadcasts the
       * tiny materialized signatures instead. Blocks live for the
       * Config's lifetime; a long-lived service would call

@@ -955,8 +955,8 @@ object Dedup {
   /** Materialized eval-side decontamination index: MinHash sketches
     * (id, sig) of the eval suite, computed ONCE and reused across every
     * probe (VERDICT r12 item 4 — re-shingling a static eval corpus per
-    * delivery was the measured ≈ +12 s/4-delivery stage cost in the
-    * DecontamAb isolation). The sigs frame is `localCheckpoint`ed, so
+    * delivery was the measured ≈ +12 s/4-delivery stage cost of an
+    * interleaved in09 decontam on/off A/B at sf1). The sigs frame is `localCheckpoint`ed, so
     * each delivery's broadcast build reads tiny materialized blocks
     * instead of re-running the shingle→minhash kernels; probe it with
     * [[lshDecontamFromSigs]], and call [[EvalIndex.release]] when the

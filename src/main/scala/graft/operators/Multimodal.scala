@@ -358,9 +358,10 @@ object Multimodal {
 
   /** Header-only WAV parse (VERDICT r12 item 6): a direct RIFF chunk
     * walk over the fmt/data headers — no PCM pass, no allocation, and
-    * crucially no `javax.sound` SERVICE DISPATCH: `tools.AudioBudget`
-    * measured `AudioSystem`'s provider lookup at ~48 μs/row on these
-    * clips, i.e. ~90% of the FULL decoder's cost for short audio, so a
+    * crucially no `javax.sound` SERVICE DISPATCH: a single-thread loop
+    * over 20k fixture clips measured a javax header read at 48 μs/row,
+    * no cheaper than the FULL decoder's 37 μs/row (NOTES, VERDICT 6):
+    * the provider lookup is the cost for short audio, so a
     * header path built on `getAudioFileFormat` saves almost nothing.
     * This parse reads the same fields the javax reader exposes
     * (PCM format tag, channels, rate, bits, data length) and the

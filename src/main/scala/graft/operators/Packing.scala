@@ -55,8 +55,9 @@ object Packing {
     * The naive form is `SUM(cost) OVER (ORDER BY score DESC, id)` —
     * an UN-PARTITIONED window, which Spark executes as a single task
     * holding the whole corpus's running sum: the classic global-window
-    * scale trap. This implementation uses the same two-pass rank
-    * arithmetic as [[Quantiles.rankedPercentiles]]: one range-
+    * scale trap. This implementation uses two-pass rank arithmetic
+    * (the shape of the exact-percentile sort-rank fallback in
+    * [[Quantiles]]): one range-
     * partitioned sort by (score desc, id), per-partition cost totals
     * (ONE row per partition) prefix-summed on the driver, then a
     * partition-local running sum seeded with the partition's offset.

@@ -1,428 +1,147 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
-/** Exact interpolated percentiles per group via distributed RANK
-  * arithmetic — the 100 TB answer to `percentile()`'s aggregation
-  * buffer, which holds EVERY value of a group on one task (x24's
-  * documented bound; with 3 groups that is 3 busy tasks no matter how
-  * many cores exist).
+import org.apache.spark.SparkException
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+
+/** Exact interpolated percentiles, medians and MADs per group,
+  * bit-identical to `expr("percentile(v, p)")` and to DuckDB's
+  * PERCENTILE_CONT — without `percentile()`'s aggregation buffer, which
+  * holds EVERY value of a group on one task.
   *
-  * Shape: one range-partitioned sort of (group, value) — Spark's sort
-  * machinery spreads it over ALL partitions, spilling as needed — then
-  * global ranks from a two-pass offset computation (per-partition
-  * group counts → driver prefix sums → broadcast back; the collected
-  * counts are ≤ partitions × groups rows, control-plane sized). The
-  * interpolated percentile needs only the two order statistics
-  * adjacent to each target position, so after ranking, a
-  * filter-to-tiny picks ≤ 2 rows per (group, percentile).
+  * Every entry point runs one selection core, two data scans in the
+  * typical case:
+  *   - scan 1: one map-side-combined aggregation of (group, cell) into
+  *     count, exact min and exact max. A cell is the top `MantissaBits`
+  *     bits of the value's IEEE-754 mantissa with its sign and exponent
+  *     ([[graft.functions.DoubleBitsShift]]): cells are DISJOINT value
+  *     intervals of ~2^−MantissaBits relative width, so binning needs no
+  *     prior min/max pass and the group counts fall out of the same
+  *     aggregation; nothing corpus-sized moves;
+  *   - driver: prefix sums locate the cell of each target rank. A rank
+  *     on a single-value cell, or on a cell's exact min or max, resolves
+  *     with no further scan;
+  *   - scan 2: the exact (value, count) rows of the remaining ambiguous
+  *     cells only, walked to the target ranks.
+  * The interpolation replays `Percentile`'s arithmetic term for term,
+  * its no-interpolation case for equal values included.
   *
-  * Interpolation replays `Percentile`'s exact arithmetic —
-  * `(hi − pos)·v_lo + (pos − lo)·v_hi` at `pos = (n−1)·p` — so the
-  * result is bit-identical to `expr("percentile(v, p)")` and to the
-  * DuckDB PERCENTILE_CONT oracle (the same parity x02/x24 proved).
+  * When a budget trips — group count, cell count (or the driver's
+  * maxResultSize abort), collect rows — every entry point falls back to
+  * ONE exact path, [[sortRankPercentiles]], which keeps nothing
+  * group-sized on the driver. Correctness never depends on a budget.
+  *
+  * Null values are skipped, a null group is a group of its own and a
+  * group whose values are all null is dropped. Values compare in Spark's
+  * order — NaN above +∞, −0.0 equal to 0.0 — so NaN and ±∞ give
+  * `percentile()`'s answers on every path.
   */
 object Quantiles {
 
-  /** @return (groupCol, p, value), one row per group × percentile.
-    *
-    * Null semantics match the drop-in `expr("percentile(v, p)")`: null
-    * VALUES are ignored (the aggregate skips them; without the filter
-    * here the typed decode would throw instead), and a group whose
-    * values are all null disappears from the output the same way a
-    * null-only group yields a null percentile. Null GROUP KEYS are
-    * kept as their own group, like `groupBy` does.
-    *
-    * Two physical paths, picked by MEASURED cardinality (a cheap count
-    * of the per-(partition, group) pairs — range partitioning on
-    * (g, v) keeps that ≈ groups + partitions, since each group spans
-    * contiguous partitions):
-    *   - at or below `maxBroadcastEntries`, offsets ride to the driver
-    *     and back as two broadcast maps (the x24/x32/x33 shape — a few
-    *     groups, no join overhead);
-    *   - above it, nothing group-cardinality-sized ever lands on the
-    *     driver: counts stay a DataFrame, offsets come from a window
-    *     over (g ORDER BY pid), and global ranks are joined, not
-    *     broadcast from a Scala map. Per-source percentiles over
-    *     millions of sources take this path automatically.
-    * Both paths share the sort and the `Percentile` interpolation
-    * arithmetic, so results are bit-identical to each other and to
-    * `expr("percentile(v, p)")`.
-    */
-  def rankedPercentiles(
-      df: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      ps: Seq[Double],
-      maxBroadcastEntries: Long = 10000L
-  ): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val parts = math.max(spark.sparkContext.defaultParallelism, 1)
-    // frozen once: the two rank passes must observe the SAME
-    // partitioning (range bounds vary per run; ranks do not)
-    val sorted = df
-      .select(col(groupCol).cast("string").as("g"), col(valueCol).cast("double").as("v"))
-      .filter(col("v").isNotNull) // percentile() skips null values
-      .repartitionByRange(parts, col("g"), col("v"))
-      .sortWithinPartitions("g", "v")
-      .as[(String, Double)]
-      .localCheckpoint()
-    // pass 1: per-(partition, group) counts — kept DISTRIBUTED until the
-    // cardinality probe proves they are control-plane sized
-    val countsRdd = sorted.rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-        it.foreach { case (g, _) => m.update(g, m.getOrElse(g, 0L) + 1) }
-        m.iterator.map { case (g, c) => (pid, g, c) }
-      }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nEntries = countsRdd.count()
-    val out =
-      if (nEntries > maxBroadcastEntries)
-        distributedPercentiles(sorted.toDF("g", "v"), countsRdd, ps, groupCol)
-      else broadcastPercentiles(sorted, countsRdd.collect(), ps, groupCol)
-    countsRdd.unpersist(blocking = false)
-    out
-  }
+  /** Mantissa bits kept in a cell key. */
+  private[graft] val MantissaBits = 12
+  /** Budgets on driver state; past any of them the sort-rank path runs. */
+  private val MaxGroups = 4096
+  private val MaxCells = 4000000L
+  private[graft] val CollectBudget = 131072L
 
-  /** Low-cardinality path: offsets via driver prefix sums + broadcast
-    * maps (≤ `maxBroadcastEntries` (pid, group) pairs by construction).
+  /** @return (groupCol, p, value), one row per group and percentile,
+    * ordered by group (null first) and then p.
     */
-  private def broadcastPercentiles(
-      sorted: org.apache.spark.sql.Dataset[(String, Double)],
-      counts: Array[(Int, String, Long)],
-      ps: Seq[Double],
-      groupCol: String
-  ): DataFrame = {
-    val spark = sorted.sparkSession
-    import spark.implicits._
-    val totals: Map[String, Long] =
-      counts.groupBy(_._2).map { case (g, cs) => g -> cs.map(_._3).sum }
-    val offsets: Map[(Int, String), Long] =
-      counts.groupBy(_._2).flatMap { case (g, cs) =>
-        var acc = 0L
-        cs.sortBy(_._1).map { case (pid, _, c) =>
-          val o = ((pid, g), acc); acc += c; o
-        }
-      }
-    // target 0-based positions per group: pos = (n-1)·p needs the
-    // order statistics at ranks floor(pos) and ceil(pos)
-    val wanted: Map[String, Set[Long]] = totals.map { case (g, n) =>
-      g -> ps.flatMap { p =>
-        val pos = (n - 1) * p
-        Seq(math.floor(pos).toLong, math.ceil(pos).toLong)
-      }.toSet
-    }
-    val bcOff = spark.sparkContext.broadcast(offsets)
-    val bcWanted = spark.sparkContext.broadcast(wanted)
-    // pass 2: assign global ranks, keep only the wanted rows (tiny)
-    val picked = sorted.rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        val off = bcOff.value
-        val want = bcWanted.value
-        val seen = scala.collection.mutable.HashMap.empty[String, Long]
-        it.flatMap { case (g, v) =>
-          val local = seen.getOrElse(g, 0L)
-          seen.update(g, local + 1)
-          val rank = off.getOrElse((pid, g), 0L) + local // 0-based
-          if (want.getOrElse(g, Set.empty).contains(rank)) Some((g, rank, v)) else None
-        }
-      }
-      .collect() // ≤ 2 × groups × percentiles rows
-      .groupBy(_._1)
-      .map { case (g, rows) => g -> rows.map(r => r._2 -> r._3).toMap }
-    // null-safe key order (null group sorts first, like ORDER BY g)
-    val out = totals.toSeq.sortBy { case (g, _) => Option(g) }.flatMap { case (g, n) =>
-      val byRank = picked.getOrElse(g, Map.empty)
-      ps.map { p =>
-        val pos = (n - 1) * p
-        val lo = math.floor(pos).toLong
-        val hi = math.ceil(pos).toLong
-        val value =
-          if (hi == lo) byRank(lo)
-          else (hi - pos) * byRank(lo) + (pos - lo) * byRank(hi) // Percentile's form
-        (g, p, value)
-      }
-    }
-    spark.createDataset(out).toDF(groupCol, "p", "value")
-  }
+  def percentiles(df: DataFrame, groupCol: String, valueCol: String, ps: Seq[Double]): DataFrame =
+    percentilesCore(df, groupCol, valueCol, ps, MantissaBits, CollectBudget)
 
-  /** Exact interpolated percentiles per group via ITERATIVE HISTOGRAM
-    * REFINEMENT — the selection-not-sort alternative to
-    * [[rankedPercentiles]] for LOW group cardinality (x24/x32/x33's
-    * shape: a handful of groups over a corpus-sized value column).
+  /** Per-group median and MAD (the median of |x − med|) in the same two
+    * scans as one percentile: count(|x − med| ≤ t) = count(x ∈ [med−t,
+    * med+t]), so the scan-1 cells of x bracket BOTH order statistics.
+    * With the median known only as an interval before scan 2, interval
+    * arithmetic over the cells brackets the MAD rank conservatively, and
+    * the cells that could straddle it join scan 2's collect.
     *
-    * Each order statistic is found by bisection over the value space:
-    * a pass bins the candidate interval's values into `bins` buckets
-    * and counts per bucket WITH exact per-bucket min/max (integer
-    * counts + exact min/max — commutative, associative, so every pass
-    * is one map-side-combining reduceByKey over ≤ intervals × bins
-    * cells; nothing corpus-sized shuffles, sorts, or checkpoints).
-    * Candidate intervals are deduplicated per group, so the first pass
-    * bins each row ONCE however many percentiles were requested;
-    * the driver walks the prefix sums, descends into the bucket
-    * holding the target rank, and tightens the interval to that
-    * bucket's OBSERVED min/max. Once a target's candidate count fits
-    * the collect budget the exact value comes from a distinct-value
-    * count walk. Convergence: every pass either resolves a target
-    * (single distinct value, or rank 0 / count−1 hitting the exact
-    * observed bounds) or strictly shrinks its candidate set — real
-    * data resolves in 2–3 passes.
-    *
-    * vs [[rankedPercentiles]]: that form pays one range-partitioned
-    * SORT of the full data plus a corpus-sized localCheckpoint so two
-    * rank passes see frozen partitions; this form pays ~3 cheap scans
-    * (stats, histogram, terminal) that re-read the (columnar, pruned)
-    * source — at sf10 that turned x24 from 42.5 s into 22.1 s and
-    * x33 from 14.9 s into 4.6 s. On a 1000-executor cluster the same
-    * argument holds harder: no global sort barrier, no block-manager
-    * corpus write, shuffle volume O(bins), and scans parallelize
-    * embarrassingly.
-    *
-    * Values are bit-identical to `percentile()` / PERCENTILE_CONT:
-    * selection by comparison returns EXACT order statistics whatever
-    * the search strategy, and the interpolation replays `Percentile`'s
-    * arithmetic term-for-term. Null semantics match [[rankedPercentiles]]
-    * (null values skipped, null group kept, all-null group dropped).
-    * NaN values are not supported (selection compares with <=).
-    *
-    * @param maxGroups hard cap on group cardinality — the driver holds
-    *   O(groups × percentiles) selection states; beyond this use
-    *   [[rankedPercentiles]]'s distributed path
-    * @param collectBudget max candidate rows resolved by the terminal
-    *   distinct-value walk (split across concurrently active targets)
+    * @return (groupCol, med, mad), one row per group, ordered by group
     */
-  def refinedPercentiles(
-      df: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      ps: Seq[Double],
-      bins: Int = 4096,
-      maxGroups: Int = 4096,
-      collectBudget: Int = 65536,
-      maxPasses: Int = 64
-  ): DataFrame = {
-    require(bins >= 2, s"refinedPercentiles: bins must be >= 2, got $bins")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val base = df
-      .select(col(groupCol).cast("string").as("g"), col(valueCol).cast("double").as("v"))
-      .filter(col("v").isNotNull) // percentile() skips null values
-    // pass 0: per-group n / min / max (map-side combining aggregate)
-    val stats = base.groupBy("g")
-      .agg(count(lit(1)).as("n"), min("v").as("mn"), max("v").as("mx"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
-    require(stats.length <= maxGroups,
-      s"refinedPercentiles: ${stats.length} groups exceed maxGroups=$maxGroups — " +
-        "use rankedPercentiles (its distributed path keeps group state off the driver)")
-    // one selection state per (group, distinct target rank)
-    final class Sel(val g: String, val rank: Long, var lo: Double, var hi: Double,
-                    var k: Long, var cnt: Long, var done: Boolean, var value: Double)
-    val sels = scala.collection.mutable.ArrayBuffer.empty[Sel]
-    for ((g, n, mn, mx) <- stats) {
-      val ranks = ps.flatMap { p =>
-        val pos = (n - 1) * p
-        Seq(math.floor(pos).toLong, math.ceil(pos).toLong)
-      }.distinct
-      for (r <- ranks) {
-        val s = new Sel(g, r, mn, mx, r, n, false, 0.0)
-        if (mn == mx) { s.done = true; s.value = mn } // one distinct value
-        else if (r == 0L) { s.done = true; s.value = mn } // exact observed bound
-        else if (r == n - 1L) { s.done = true; s.value = mx }
-        sels += s
-      }
-    }
-    val byId = sels.toArray
-    var pass = 0
-    while (byId.exists(!_.done) && pass < maxPasses) {
-      pass += 1
-      val active = byId.zipWithIndex.filter { case (s, _) => !s.done }
-      val perBudget = math.max(1L, collectBudget.toLong / active.length)
-      // candidate intervals DEDUPED per group: pass 1 always has ONE
-      // interval per group (every target starts at [mn, mx]), so each
-      // row is binned once no matter how many percentiles were asked
-      // for; later passes diverge per target but act on tiny counts.
-      // Terminal intervals key cells by exact value, histogram
-      // intervals by bucket index.
-      val byInterval: Map[(String, Double, Double, Boolean), Array[Int]] = active
-        .groupBy { case (s, _) => (s.g, s.lo, s.hi, s.cnt <= perBudget) }
-        .map { case (iv, xs) => iv -> xs.map(_._2) }
-      val ivs = byInterval.keys.toArray.zipWithIndex
-      val plan: Map[String, Array[(Int, Double, Double, Boolean)]] = ivs
-        .map { case ((g, lo, hi, term), ivid) => (g, (ivid, lo, hi, term)) }
-        .groupBy(_._1).map { case (g, xs) => g -> xs.map(_._2) }
-      val bc = spark.sparkContext.broadcast(plan)
-      val nBins = bins
-      val cells = base.as[(String, Double)].rdd
-        .mapPartitions { it =>
-          val pl = bc.value
-          val acc = scala.collection.mutable.HashMap.empty[(Int, Long), (Long, Double, Double)]
-          it.foreach { case (g, v) =>
-            pl.get(g) match {
-              case Some(intervals) =>
-                var i = 0
-                while (i < intervals.length) {
-                  val (ivid, lo, hi, term) = intervals(i)
-                  if (v >= lo && v <= hi) {
-                    val key =
-                      if (term) (ivid, java.lang.Double.doubleToLongBits(v))
-                      else {
-                        val w = hi - lo
-                        val b =
-                          if (w.isInfinity) { // ±huge bounds: midpoint split
-                            if (v < lo / 2 + hi / 2) 0L else (nBins - 1).toLong
-                          } else {
-                            val raw = ((v - lo) / w * nBins).toLong
-                            math.min(math.max(raw, 0L), (nBins - 1).toLong)
-                          }
-                        (ivid, b)
-                      }
-                    acc.get(key) match {
-                      case Some((c, a, bnd)) =>
-                        acc.update(key, (c + 1, math.min(a, v), math.max(bnd, v)))
-                      case None => acc.update(key, (1L, v, v))
-                    }
-                  }
-                  i += 1
-                }
-              case None =>
-            }
-          }
-          acc.iterator
-        }
-        .reduceByKey((x, y) => (x._1 + y._1, math.min(x._2, y._2), math.max(x._3, y._3)))
-        .collect()
-      bc.destroy()
-      val cellsByIv = cells.groupBy(_._1._1)
-      for ((iv, ivid) <- ivs; sid <- byInterval(iv)) {
-        val (_, _, _, terminal) = iv
-        val s = byId(sid)
-        val rows = cellsByIv.getOrElse(ivid, Array.empty)
-        // ascending cell order: bucket index, or decoded value
-        val walk =
-          if (terminal)
-            rows.map { case ((_, bits), (c, _, _)) =>
-              val v = java.lang.Double.longBitsToDouble(bits); (v, c, v, v)
-            }.sortBy(_._1)
-          else rows.sortBy(_._1._2)
-            .map { case ((_, b), (c, mn, mx)) => (b.toDouble, c, mn, mx) }
-        var prefix = 0L
-        var found = false
-        for ((_, c, mn, mx) <- walk if !found) {
-          if (s.k < prefix + c) {
-            found = true
-            if (terminal || mn == mx) { s.done = true; s.value = mn }
-            else {
-              s.k -= prefix; s.cnt = c; s.lo = mn; s.hi = mx
-              if (s.k == 0L) { s.done = true; s.value = mn } // min of cell is exact
-              else if (s.k == c - 1L) { s.done = true; s.value = mx }
-            }
-          } else prefix += c
-        }
-        assert(found, s"refinedPercentiles: rank ${s.k} not found in ${s.cnt} candidates")
-      }
-    }
-    require(byId.forall(_.done),
-      s"refinedPercentiles: unresolved targets after $maxPasses passes — " +
-        "pathological value distribution; use rankedPercentiles")
-    val byGroupRank: Map[(String, Long), Double] =
-      byId.map(s => ((s.g, s.rank), s.value)).toMap
-    // identical interpolation + output order to broadcastPercentiles
-    val out = stats.toSeq.sortBy { case (g, _, _, _) => Option(g) }.flatMap {
-      case (g, n, _, _) =>
-        ps.map { p =>
-          val pos = (n - 1) * p
-          val lo = math.floor(pos).toLong
-          val hi = math.ceil(pos).toLong
-          val value =
-            if (hi == lo) byGroupRank((g, lo))
-            else (hi - pos) * byGroupRank((g, lo)) + (pos - lo) * byGroupRank((g, hi))
-          (g, p, value)
-        }
-    }
-    spark.createDataset(out).toDF(groupCol, "p", "value")
-  }
+  def madByGroup(df: DataFrame, groupCol: String, valueCol: String): DataFrame =
+    madCore(df, groupCol, valueCol, None, MantissaBits, CollectBudget)
 
-  /** Exact per-group (median, MAD) in TWO data scans, typical case —
-    * the fused form of x24's two [[refinedPercentiles]] calls (which
-    * pay ~6 scans: stats + 2–3 histogram passes, twice).
-    *
-    * Both selections interrogate the SAME column: MAD = the median of
-    * |x − med|, and count(|x − med| ≤ t) = count(x ∈ [med−t, med+t]),
-    * so one sufficiently fine histogram of x brackets BOTH order
-    * statistics. The histogram needs no prior min/max pass because
-    * cells are keyed by the top `mantissaBits` bits of the IEEE-754
-    * representation (sign + exponent + mantissa prefix): distinct
-    * prefixes are DISJOINT value intervals ~2^−mantissaBits relative
-    * width, so binning is range-free and the stats (n per group) fall
-    * out of the same aggregation.
-    *
-    * Scan 1: cells (count, exact min, exact max) per (group, bit
-    * prefix) — integer counts + min/max, commutative/associative, one
-    * map-side-combining reduceByKey; ≤ groups × binades × 2^mantissaBits
-    * cells, nothing corpus-sized moves. Driver: locate the median's
-    * bracketing cell(s); with the median known only as an interval,
-    * INTERVAL ARITHMETIC over the retained cells brackets the MAD rank
-    * conservatively (each cell's |x − med| range widens by the median
-    * cell's width), selecting the few ambiguous cells on either side
-    * of x ≈ med ± MAD.
-    *
-    * Scan 2: collect exact (value, count) for rows in the ambiguous
-    * cells only (distinct-value aggregation, ≤ `collectBudget` rows by
-    * the pre-checked cell counts). Driver: resolve the median exactly,
-    * recompute each uncollected cell's |x − med| interval with the now
-    * EXACT median (a subset of the conservative interval, so every
-    * cell that could straddle the MAD rank was collected), walk
-    * offset + sorted exact distances to the MAD order statistics.
-    *
-    * Values are bit-identical to the two-refinedPercentiles form (both
-    * return exact order statistics; interpolation replays
-    * `Percentile`'s arithmetic term-for-term). Falls back to that form
-    * when any budget trips (group cardinality, cell count, collect
-    * rows) — correctness is never budget-dependent. Null/NaN semantics
-    * match [[refinedPercentiles]] (null values skipped, null group
-    * kept, all-null group dropped; NaN unsupported).
-    *
-    * @return (groupCol, med, mad), one row per group
+  /** [[madByGroup]] with the robust-outlier summary the MAD exists for:
+    * per group (med, mad, n, n_outliers), where an outlier is a row with
+    * |x − med| > k·MAD, in the SAME two scans. The threshold is one more
+    * selection boundary over the same cells: the cells that could
+    * straddle x = med ± k·MAD join scan 2's collect, and the rest
+    * classify whole by their exact min/max. `n` counts non-null values
+    * (the rows a percentile sees).
     */
-  def madByGroup(
-      df: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      mantissaBits: Int = 12,
-      maxGroups: Int = 256,
-      maxCells: Long = 4000000L,
-      collectBudget: Long = 131072L
-  ): DataFrame =
-    madCore(df, groupCol, valueCol, None, mantissaBits, maxGroups, maxCells, collectBudget)
-
-  /** [[madByGroup]] extended with the robust-outlier summary the MAD
-    * exists for: per group (med, mad, n, n_outliers) where an outlier
-    * is a row with |x − med| > k·MAD — in the SAME two scans. The
-    * outlier threshold is one more selection boundary over the same
-    * retained histogram: with MAD bracketed as an interval before the
-    * terminal scan, the cells possibly straddling x = med ± k·MAD join
-    * the terminal collect, and the exact count resolves on the driver
-    * (cells entirely inside/outside the threshold band classify by
-    * their exact min/max; collected rows compare exactly). The
-    * separate corpus-sized COUNT-aggregate scan the naive plan pays
-    * disappears. `n` counts non-null values (the rows a percentile
-    * sees).
-    */
-  def madOutliers(
-      df: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      k: Double = 1.5,
-      mantissaBits: Int = 12,
-      maxGroups: Int = 256,
-      maxCells: Long = 4000000L,
-      collectBudget: Long = 131072L
-  ): DataFrame = {
+  def madOutliers(df: DataFrame, groupCol: String, valueCol: String, k: Double = 1.5): DataFrame = {
     require(k >= 0, s"madOutliers: k must be non-negative, got $k")
-    madCore(df, groupCol, valueCol, Some(k), mantissaBits, maxGroups, maxCells, collectBudget)
+    madCore(df, groupCol, valueCol, Some(k), MantissaBits, CollectBudget)
+  }
+
+  /** Spark's order on doubles: NaN above +∞, −0.0 equal to 0.0. */
+  private def cmp(a: Double, b: Double): Int = if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** `Percentile`'s value at pos = (n − 1)·p from the values at ranks
+    * ⌊pos⌋ and ⌈pos⌉: no interpolation when they are one rank or equal.
+    */
+  private def interpolate(pos: Double, vLo: Double, vHi: Double): Double = {
+    val lo = math.floor(pos)
+    val hi = math.ceil(pos)
+    if (lo == hi || cmp(vLo, vHi) == 0) vLo else (hi - pos) * vLo + (pos - lo) * vHi
+  }
+
+  // group keys ride through groupBy and equi-joins, which merge or drop
+  // nulls: encode into a never-null key with a collision-free sentinel
+  // prefix (the null group sorts first), decode on output
+  private def encoded(df: DataFrame, groupCol: String, valueCol: String): DataFrame =
+    df.select(
+        when(col(groupCol).isNull, lit("\u0000"))
+          .otherwise(concat(lit("\u0001"), col(groupCol).cast("string"))).as("g"),
+        col(valueCol).cast("double").as("v"))
+      .filter(col("v").isNotNull) // percentile() skips null values
+  private def decode(g: String): String = if (g == "\u0000") null else g.substring(1)
+  private def decoded(groupCol: String): Column =
+    when(col("g") === lit("\u0000"), lit(null).cast("string"))
+      .otherwise(expr("substring(g, 2)")).as(groupCol)
+
+  private final case class Cell(key: Long, c: Long, mn: Double, mx: Double) {
+    def single: Boolean = cmp(mn, mx) == 0
+  }
+
+  /** One group's scan-1 cells, ascending and disjoint, with prefix sums. */
+  private final class Group(val g: String, val cells: Array[Cell]) {
+    private val prefix = cells.scanLeft(0L)(_ + _.c)
+    val n: Long = prefix.last
+
+    def cellOf(r: Long): Cell = cells(indexOf(r))
+    private def indexOf(r: Long): Int = {
+      val i = java.util.Arrays.binarySearch(prefix, r) // counts > 0: strictly ascending
+      if (i >= 0) i else -i - 2
+    }
+
+    /** The value at rank r if scan 1 pins it: a single-value cell, or r
+      * on a cell's exact min or max.
+      */
+    def pinned(r: Long): Option[Double] = {
+      val i = indexOf(r)
+      val c = cells(i)
+      if (c.single || r == prefix(i)) Some(c.mn)
+      else if (r == prefix(i + 1) - 1) Some(c.mx)
+      else None
+    }
+
+    /** The value at rank r: pinned, or walked in its cell's collected values. */
+    def valueAtRank(r: Long, exact: Map[(String, Long), Array[(Double, Long)]]): Double =
+      pinned(r).getOrElse {
+        val i = indexOf(r)
+        val vals = exact.getOrElse((g, cells(i).key), Array.empty[(Double, Long)])
+        var local = r - prefix(i)
+        var j = 0
+        while (j < vals.length && local >= vals(j)._2) { local -= vals(j)._2; j += 1 }
+        assert(j < vals.length, s"Quantiles: rank $r unresolved in cell ${cells(i).key} of group $g")
+        vals(j)._1
+      }
   }
 
   /** True iff `t` (or any cause in its chain) is the driver
@@ -444,323 +163,276 @@ object Quantiles {
         cond.contains("RESULT_SIZE")
     }
 
-  private def madCore(
+  /** (g, v) with each row's cell key `k`. The key kernel registers on
+    * THIS frame's session: inside foreachBatch the micro-batch analyzes
+    * in a cloned session where a SparkSession.active registration would
+    * be invisible.
+    */
+  private def keyed(base: DataFrame, mantissaBits: Int): DataFrame =
+    base.withColumn("k", graft.functions.DoubleBitsShift(base.sparkSession, col("v"), 52 - mantissaBits))
+
+  /** Scan 1: every group's cells, ordered by group; None when a budget
+    * trips. A plain collect, NOT limit(MaxCells): CollectLimitExec
+    * executes partitions in scale-up rounds, re-running the aggregation
+    * several times; a cell blow-up (wild exponent spread) is instead
+    * caught by driver.maxResultSize and the MaxCells post-check.
+    */
+  private def scanCells(keyed: DataFrame): Option[Array[Group]] = {
+    val rows =
+      try keyed.groupBy("g", "k")
+        .agg(count(lit(1)).as("c"), min("v").as("mn"), max("v").as("mx"))
+        .collect()
+      catch { case e: SparkException if isResultSizeBlowUp(e) => return None }
+    val byGroup = rows.groupBy(_.getString(0))
+    if (rows.length > MaxCells || byGroup.size > MaxGroups) None
+    else Some(byGroup.map { case (g, rs) =>
+      // total order on min: the −0.0 cell sorts before the +0.0 cell
+      new Group(g, rs.map(r => Cell(r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
+        .sortBy(_.mn)(Ordering.Double.TotalOrdering))
+    }.toArray.sortBy(gs => UTF8String.fromString(gs.g))) // Spark's string order
+  }
+
+  /** Scan 2: exact distinct (value, count) per marked (group, cell key),
+    * ascending — a broadcast semi-join on (g, k) keeps the probe inside
+    * whole-stage codegen. −0.0/0.0 merge in the grouping key, which is
+    * numerically transparent to every consumer.
+    */
+  private def collectCells(
+      keyed: DataFrame,
+      marks: collection.Set[(String, Long)]
+  ): Map[(String, Long), Array[(Double, Long)]] =
+    if (marks.isEmpty) Map.empty
+    else {
+      val spark = keyed.sparkSession
+      import spark.implicits._
+      keyed.join(broadcast(marks.toSeq.toDF("g", "k")), Seq("g", "k"))
+        .groupBy("g", "k", "v").agg(count(lit(1)).as("c"))
+        .collect()
+        .groupBy(r => (r.getString(0), r.getLong(1)))
+        .map { case (gk, rs) =>
+          gk -> rs.map(r => (r.getDouble(2), r.getLong(3))).sortBy(_._1)(Ordering.Double.TotalOrdering)
+        }
+    }
+
+  private[graft] def percentilesCore(
+      df: DataFrame,
+      groupCol: String,
+      valueCol: String,
+      ps: Seq[Double],
+      mantissaBits: Int,
+      collectBudget: Long
+  ): DataFrame = {
+    require(ps.forall(p => p >= 0 && p <= 1), s"percentiles: every p must be in [0, 1], got $ps")
+    val spark = df.sparkSession
+    import spark.implicits._
+    val base = encoded(df, groupCol, valueCol)
+    def fallback(): DataFrame = sortRankPercentiles(base, ps)
+      .select(decoded(groupCol), col("p"), col("value"))
+      .orderBy(asc_nulls_first(groupCol), col("p"))
+    val k = keyed(base, mantissaBits)
+    val groups = scanCells(k) match {
+      case Some(gs) => gs
+      case None => return fallback()
+    }
+    val sortedPs = ps.sorted
+    def ranks(gs: Group, p: Double): (Double, Long, Long) = {
+      val pos = (gs.n - 1) * p
+      (pos, math.floor(pos).toLong, math.ceil(pos).toLong)
+    }
+    val marks = (for {
+      gs <- groups.iterator
+      p <- sortedPs
+      (_, lo, hi) = ranks(gs, p)
+      r <- Iterator(lo, hi) if gs.pinned(r).isEmpty
+      c = gs.cellOf(r)
+    } yield (gs.g, c.key) -> c.c).toMap
+    if (marks.values.sum > collectBudget) return fallback()
+    val exact = collectCells(k, marks.keySet)
+    val rows = for (gs <- groups.toSeq; p <- sortedPs) yield {
+      val (pos, lo, hi) = ranks(gs, p)
+      (decode(gs.g), p, interpolate(pos, gs.valueAtRank(lo, exact), gs.valueAtRank(hi, exact)))
+    }
+    spark.createDataset(rows).toDF(groupCol, "p", "value")
+  }
+
+  /** Range of the computed |x − m| over x in `c` and m in [lo, hi]: IEEE
+    * rounding is monotone, so the extreme points bound every computed
+    * distance. A non-finite cell holds one value, and a non-finite median
+    * is exact (lo == hi, see madCore); either way every x in the cell is
+    * the same distance from m.
+    */
+  private def distRange(c: Cell, lo: Double, hi: Double): (Double, Double) =
+    if (!java.lang.Double.isFinite(c.mn) || !java.lang.Double.isFinite(lo)) {
+      val d = math.abs(c.mn - lo)
+      (d, d)
+    } else (
+      if (c.mx < lo) lo - c.mx else if (c.mn > hi) c.mn - hi else 0.0,
+      math.max(hi - c.mn, c.mx - lo))
+
+  private[graft] def madCore(
       df: DataFrame,
       groupCol: String,
       valueCol: String,
       outlierK: Option[Double],
       mantissaBits: Int,
-      maxGroups: Int,
-      maxCells: Long,
       collectBudget: Long
   ): DataFrame = {
-    require(mantissaBits >= 1 && mantissaBits <= 32,
-      s"madByGroup: mantissaBits must be in [1, 32], got $mantissaBits")
     val spark = df.sparkSession
     import spark.implicits._
-    // group keys ride through groupBy and an equi-join, which merge or
-    // drop nulls — encode into a never-null key with a collision-free
-    // sentinel prefix (the distributedPercentiles pattern); the output
-    // rows are built on the driver, which decodes
-    val base = df
-      .select(
-        when(col(groupCol).isNull, lit("\u0000"))
-          .otherwise(concat(lit("\u0001"), col(groupCol).cast("string"))).as("g"),
-        col(valueCol).cast("double").as("v"))
-      .filter(col("v").isNotNull)
-    def dec(g: String): String = if (g == "\u0000") null else g.substring(1)
-    val decodeCol = when(col("g") === lit("\u0000"), lit(null).cast("string"))
-      .otherwise(expr("substring(g, 2)")).as(groupCol)
-    // budget fallback: the two-refinedPercentiles form (exact, slower);
-    // same sentinel encoding so null groups survive its equi-joins
+    val base = encoded(df, groupCol, valueCol)
+    // budget fallback: the sort-rank path for the median, then again over |x − med|
     def fallback(): DataFrame = {
-      val med = refinedPercentiles(base, "g", "v", Seq(0.5))
-        .select(col("g"), col("value").as("med"))
-      val dev = base.join(broadcast(med), "g")
+      val med = sortRankPercentiles(base, Seq(0.5)).select(col("g"), col("value").as("med"))
+      val dev = base.join(med, "g")
         .select(col("g"), col("med"), abs(col("v") - col("med")).as("adev"))
-      val mad = refinedPercentiles(dev.select("g", "adev"), "g", "adev", Seq(0.5))
+      val mad = sortRankPercentiles(dev.select(col("g"), col("adev").as("v")), Seq(0.5))
         .select(col("g"), col("value").as("mad"))
-      outlierK match {
-        case None =>
-          med.join(mad, "g").select(decodeCol, col("med"), col("mad"))
-            .orderBy(asc_nulls_first(groupCol))
+      val out = outlierK match {
+        case None => med.join(mad, "g").select(decoded(groupCol), col("med"), col("mad"))
         case Some(k) =>
-          dev.join(broadcast(mad), "g")
+          dev.join(mad, "g")
             .groupBy("g", "med", "mad")
             .agg(count(lit(1)).as("n"),
               count(when(col("adev") > lit(k) * col("mad"), 1)).as("n_outliers"))
-            .select(decodeCol, col("med"), col("mad"), col("n"), col("n_outliers"))
-            .orderBy(asc_nulls_first(groupCol))
+            .select(decoded(groupCol), col("med"), col("mad"), col("n"), col("n_outliers"))
       }
+      out.orderBy(asc_nulls_first(groupCol))
     }
-    val shift = 52 - mantissaBits
-    // register the histogram-key kernel on THIS frame's session: inside
-    // foreachBatch the micro-batch analyzes in a cloned session where a
-    // SparkSession.active registration would be invisible
-    val keyed = base.withColumn("k", graft.functions.DoubleBitsShift(spark, col("v"), shift))
-    // scan 1: ONE map-side-combining hash aggregation inside
-    // whole-stage codegen — the stats and the histogram in the same
-    // pass. A plain collect, NOT limit(maxCells): CollectLimitExec
-    // executes partitions in scale-up rounds, re-running the
-    // aggregation several times; a cell blow-up (wild exponent spread)
-    // is instead caught by driver.maxResultSize and the maxCells
-    // post-check, both routing to the refinement fallback.
-    val cells0 =
-      try
-        keyed.groupBy("g", "k")
-          .agg(count(lit(1)).as("c"), min("v").as("mn"), max("v").as("mx"))
-          .collect()
-      catch {
-        case e: org.apache.spark.SparkException if isResultSizeBlowUp(e) =>
-          return fallback()
-      }
-    if (cells0.length > maxCells) return fallback()
-    val cells = cells0.map(r =>
-      ((r.getString(0), r.getLong(1)), (r.getLong(2), r.getDouble(3), r.getDouble(4))))
-    val byGroup = cells.groupBy(_._1._1)
-    if (byGroup.size > maxGroups) return fallback()
+    val k = keyed(base, mantissaBits)
+    val groups = scanCells(k) match {
+      case Some(gs) => gs
+      case None => return fallback()
+    }
 
-    // per-group driver state: sorted disjoint cells + prefix sums
-    final case class Cell(mn: Double, mx: Double, c: Long, key: Long)
-    final case class G(
-        g: String, n: Long, cells: Array[Cell], prefix: Array[Long],
-        // median ranks and their resolution
-        rl: Long, rh: Long, pos: Double,
-        var medLo: Double, var medHi: Double,
-        var madLoB: Double, var madHiB: Double, // conservative MAD bracket
-        collectKeys: scala.collection.mutable.HashSet[Long])
-    val groups = byGroup.map { case (g, rows) =>
-      val cs = rows.map { case ((_, k), (c, mn, mx)) => Cell(mn, mx, c, k) }
-        .sortBy(c => (c.mn, c.key))
-      val prefix = new Array[Long](cs.length)
-      var acc = 0L
-      var i = 0
-      while (i < cs.length) { prefix(i) = acc; acc += cs(i).c; i += 1 }
-      val n = acc
-      val pos = (n - 1) * 0.5
-      G(g, n, cs, prefix, math.floor(pos).toLong, math.ceil(pos).toLong, pos,
-        0.0, 0.0, 0.0, 0.0, scala.collection.mutable.HashSet.empty[Long])
-    }.toArray
+    // bracket the median, then the MAD ranks and the outlier threshold;
+    // mark every cell that could straddle one of them for scan 2
+    val marks = mutable.Map.empty[(String, Long), Long] // (g, cell key) -> rows
+    val medRanks = groups.map { gs =>
+      val pos = (gs.n - 1) * 0.5
+      val (rl, rh) = (math.floor(pos).toLong, math.ceil(pos).toLong)
+      def bound(r: Long): (Double, Double) = gs.pinned(r) match {
+        case Some(v) => (v, v)
+        case None =>
+          val c = gs.cellOf(r)
+          marks((gs.g, c.key)) = c.c
+          (c.mn, c.mx)
+      }
+      val (l1, _) = bound(rl)
+      val (l2, h2) = bound(rh)
+      // a rank on a non-finite value (a single-value cell) makes the
+      // interpolated median non-finite whatever the other rank's finite
+      // value is, so the median is then exact before scan 2
+      val (medLo, medHi) =
+        if (java.lang.Double.isFinite(l1) && java.lang.Double.isFinite(l2)) (l1, h2)
+        else { val m = interpolate(pos, l1, l2); (m, m) }
+      val ds = gs.cells.map(distRange(_, medLo, medHi))
+      // the distance at rank r is at least the (r+1)-th smallest lower
+      // bound and at most the (r+1)-th smallest upper bound
+      def nth(bound: Array[Double], r: Long): Double = {
+        val order = bound.indices.sortBy(bound(_))(Ordering.Double.TotalOrdering)
+        var cum = 0L
+        order.find { i => cum += gs.cells(i).c; cum > r }.map(bound).get
+      }
+      val madLo = nth(ds.map(_._1), rl)
+      val madHi = nth(ds.map(_._2), rh)
+      // the interpolated MAD lies between its two rank values, so the
+      // threshold k·MAD lies in [k·madLo, k·madHi] (k ≥ 0 is monotone)
+      val bands = (madLo, madHi) +: outlierK.toSeq.map(k => (k * madLo, k * madHi))
+      for ((c, (dlo, dhi)) <- gs.cells.zip(ds)
+           if !c.single && cmp(dlo, dhi) != 0 &&
+             bands.exists { case (lo, hi) => cmp(dlo, hi) <= 0 && cmp(dhi, lo) >= 0 })
+        marks((gs.g, c.key)) = c.c
+      (pos, rl, rh)
+    }
+    if (marks.values.sum > collectBudget) return fallback()
+    val exact = collectCells(k, marks.keySet)
 
-    // bracket the median; mark unresolved median cells for collection
-    // (cells with one distinct value, or rank hitting a cell's exact
-    // observed bound, resolve without collection)
-    def cellOfRank(gs: G, r: Long): Int = {
-      var i = java.util.Arrays.binarySearch(gs.prefix, r)
-      if (i < 0) i = -i - 2
-      while (i + 1 < gs.prefix.length && gs.prefix(i + 1) <= r) i += 1
-      i
-    }
-    def rankBound(gs: G, r: Long): (Double, Double) = { // (lo, hi); lo==hi when exact
-      val i = cellOfRank(gs, r)
-      val cell = gs.cells(i)
-      if (cell.mn == cell.mx) (cell.mn, cell.mn)
-      else if (r == gs.prefix(i)) (cell.mn, cell.mn)
-      else if (r == gs.prefix(i) + cell.c - 1) (cell.mx, cell.mx)
-      else { gs.collectKeys += cell.key; (cell.mn, cell.mx) }
-    }
-    for (gs <- groups) {
-      val (l1, h1) = rankBound(gs, gs.rl)
-      val (l2, h2) = rankBound(gs, gs.rh)
-      gs.medLo = math.min(l1, l2); gs.medHi = math.max(h1, h2)
-    }
-    // conservative MAD bracket via interval arithmetic with med ∈ [medLo, medHi]
-    for (gs <- groups) {
-      val dLo = gs.cells.map { c =>
-        if (c.mx < gs.medLo) gs.medLo - c.mx
-        else if (c.mn > gs.medHi) c.mn - gs.medHi
-        else 0.0
+    val resolved = groups.zip(medRanks).map { case (gs, (pos, rl, rh)) =>
+      val med = interpolate(pos, gs.valueAtRank(rl, exact), gs.valueAtRank(rh, exact))
+      // exact |x − med| points: the collected values and every uncollected
+      // cell whose distances are one value; the other uncollected cells as
+      // distance intervals, none of which straddles a MAD rank value or
+      // the outlier threshold (a subset of its conservative bracket)
+      val pts = mutable.ArrayBuffer.empty[(Double, Long)]
+      val ivs = mutable.ArrayBuffer.empty[(Double, Double, Long)]
+      for (c <- gs.cells) exact.get((gs.g, c.key)) match {
+        case Some(vals) => for ((v, n) <- vals) pts += ((math.abs(v - med), n))
+        case None =>
+          val (dlo, dhi) = distRange(c, med, med)
+          if (cmp(dlo, dhi) == 0) pts += ((dlo, c.c)) else ivs += ((dlo, dhi, c.c))
       }
-      val dHi = gs.cells.map(c => math.max(gs.medHi - c.mn, c.mx - gs.medLo))
-      def inf(order: Array[Int], bound: Array[Double], target: Long): Double = {
-        var cum = 0L; var i = 0
-        while (i < order.length) {
-          cum += gs.cells(order(i)).c
-          if (cum >= target) return bound(order(i))
-          i += 1
-        }
-        bound(order.last)
-      }
-      val byLo = Array.range(0, gs.cells.length).sortBy(dLo)
-      val byHi = Array.range(0, gs.cells.length).sortBy(dHi)
-      gs.madLoB = Double.MaxValue; gs.madHiB = 0.0
-      for (r <- Set(gs.rl, gs.rh)) {
-        val tLower = inf(byLo, dLo, r + 1) // possible-below reaches r+1
-        val tUpper = inf(byHi, dHi, r + 1) // definite-below reaches r+1
-        gs.madLoB = math.min(gs.madLoB, tLower); gs.madHiB = math.max(gs.madHiB, tUpper)
-        var i = 0
-        while (i < gs.cells.length) {
-          // cells that could straddle the rank value; single-value cells
-          // resolve exactly once med is known, no collection needed
-          if (dLo(i) <= tUpper && dHi(i) >= tLower && gs.cells(i).mn != gs.cells(i).mx)
-            gs.collectKeys += gs.cells(i).key
-          i += 1
-        }
-      }
-      // outlier threshold = one more selection boundary: mark the cells
-      // that could straddle |x − med| = k·MAD under the conservative
-      // med and MAD intervals (the interpolated MAD is a convex
-      // combination of its two rank values, so it stays in the bracket)
-      for (k <- outlierK) {
-        val tLo = k * gs.madLoB
-        val tHi = k * gs.madHiB
-        var i = 0
-        while (i < gs.cells.length) {
-          if (dLo(i) <= tHi && dHi(i) >= tLo && gs.cells(i).mn != gs.cells(i).mx)
-            gs.collectKeys += gs.cells(i).key
-          i += 1
-        }
-      }
-    }
-    val collectRows = groups.map(gs =>
-      gs.cells.iterator.filter(c => gs.collectKeys(c.key)).map(_.c).sum).sum
-    if (collectRows > collectBudget) return fallback()
-
-    // scan 2: exact distinct (value, count) for the marked cells only —
-    // a broadcast semi-join on (g, cell key) keeps the probe inside
-    // whole-stage codegen; −0.0/0.0 merge in the grouping key, which is
-    // numerically transparent to every consumer (|x−med| agrees)
-    val keyRows: Seq[(String, Long)] =
-      groups.iterator.flatMap(gs => gs.collectKeys.iterator.map(k => (gs.g, k))).toSeq
-    val exactRows: Array[(String, Double, Long)] =
-      if (keyRows.isEmpty) Array.empty
-      else keyed.join(broadcast(keyRows.toDF("g", "k")), Seq("g", "k"))
-        .groupBy("g", "v").agg(count(lit(1)).as("c"))
-        .collect()
-        .map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
-    val exactByGroup: Map[String, Array[(Double, Long)]] = exactRows
-      .groupBy(_._1)
-      .map { case (g, rows) => g -> rows.map(t => (t._2, t._3)).sortBy(_._1) }
-
-    // driver resolution: exact median, then exact MAD order statistics
-    // (encoded keys sort with the null sentinel first, matching
-    // asc_nulls_first on the decoded column)
-    val resolved = groups.sortBy(_.g).map { gs =>
-      val vals = exactByGroup.getOrElse(gs.g, Array.empty)
-      def valueAtRank(r: Long): Double = { // rank in x-space
-        val i = cellOfRank(gs, r)
-        val cell = gs.cells(i)
-        if (cell.mn == cell.mx) cell.mn
-        else if (r == gs.prefix(i)) cell.mn
-        else if (r == gs.prefix(i) + cell.c - 1) cell.mx
-        else {
-          // walk the collected distinct values of this cell
-          var local = r - gs.prefix(i)
-          var j = 0
-          var res = Double.NaN
-          while (j < vals.length && res.isNaN) {
-            val (v, c) = vals(j)
-            if (v >= cell.mn && v <= cell.mx) {
-              if (local < c) res = v else local -= c
-            }
-            j += 1
-          }
-          assert(!res.isNaN, s"madByGroup: median rank $r unresolved in cell ${cell.key}")
-          res
-        }
-      }
-      val vMedLo = valueAtRank(gs.rl)
-      val vMedHi = valueAtRank(gs.rh)
-      val med =
-        if (gs.rl == gs.rh) vMedLo
-        else (gs.rh - gs.pos) * vMedLo + (gs.pos - gs.rl) * vMedHi // Percentile's form
-      // exact |x − med| points: collected rows plus single-value
-      // uncollected cells (their distance is a point once med is known)
-      val pts = {
-        val b = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
-        for ((v, c) <- vals) b += ((math.abs(v - med), c))
-        for (cell <- gs.cells if !gs.collectKeys(cell.key) && cell.mn == cell.mx)
-          b += ((math.abs(cell.mn - med), cell.c))
-        b.sortBy(_._1).toArray
-      }
-      // uncollected multi-value cells as exact distance intervals; by
-      // the conservative-bracket construction none straddles a target
-      // rank value, so count(dist ≤ v_r) = points ≤ v_r + intervals
-      // with dhi ≤ v_r — a merged two-pointer walk finds v_r as the
-      // first point where that lower-bound count reaches r+1 (for any
-      // point below v_r the same expression undercounts the true
-      // cumulative, which is itself ≤ r there, so it cannot fire early)
-      val ivs = gs.cells.iterator
-        .filter(c => !gs.collectKeys(c.key) && c.mn != c.mx)
-        .map { c =>
-          val dhi = math.max(med - c.mn, c.mx - med)
-          val dlo =
-            if (c.mx < med) med - c.mx
-            else if (c.mn > med) c.mn - med
-            else 0.0
-          (dlo, dhi, c.c)
-        }
-        .toArray
-        .sortBy(_._2) // by dhi, for the below-count sweep
+      val sortedPts = pts.sortBy(_._1)(Ordering.Double.TotalOrdering)
+      val sortedIvs = ivs.sortBy(_._2)(Ordering.Double.TotalOrdering)
+      // count(dist ≤ d) ≥ points ≤ d + intervals with dhi ≤ d: the first
+      // point where that count reaches r+1 is the rank value (below it
+      // the true cumulative is itself ≤ r, so the walk cannot fire early)
       def distAtRank(r: Long): Double = {
         var cum = 0L
         var iIv = 0
         var i = 0
-        while (i < pts.length) {
-          val d = pts(i)._1
-          while (iIv < ivs.length && ivs(iIv)._2 <= d) { cum += ivs(iIv)._3; iIv += 1 }
-          cum += pts(i)._2
-          if (cum >= r + 1) return d
+        while (i < sortedPts.length) {
+          val (d, n) = sortedPts(i)
+          while (iIv < sortedIvs.length && cmp(sortedIvs(iIv)._2, d) <= 0) {
+            cum += sortedIvs(iIv)._3; iIv += 1
+          }
+          cum += n
+          if (cum > r) return d
           i += 1
         }
         throw new AssertionError(
-          s"madByGroup: MAD rank $r unresolved for group ${gs.g} — bracket invariant broken")
+          s"madByGroup: MAD rank $r unresolved for group ${gs.g}: bracket invariant broken")
       }
-      val dLoV = distAtRank(gs.rl)
-      val dHiV = if (gs.rh == gs.rl) dLoV else distAtRank(gs.rh)
-      val mad =
-        if (gs.rl == gs.rh) dLoV
-        else (gs.rh - gs.pos) * dLoV + (gs.pos - gs.rl) * dHiV
-      // exact outlier count from the same structures: every cell that
-      // could straddle the threshold was collected, so the uncollected
-      // intervals classify whole (strict >, matching `adev > k·mad`)
-      val nOut = outlierK.map { k =>
+      val mad = interpolate(pos, distAtRank(rl), distAtRank(rh))
+      // the uncollected intervals classify whole (strict >, as `adev > k·mad`)
+      val nOut = outlierK.fold(0L) { k =>
         val t = k * mad
-        var out = 0L
-        for ((d, c) <- pts) if (d > t) out += c
-        for ((dlo, dhi, c) <- ivs) {
-          if (dlo > t) out += c
-          else if (dhi > t)
-            throw new AssertionError(
-              s"madOutliers: threshold straddle for group ${gs.g} — bracket invariant broken")
-        }
-        out
+        sortedPts.iterator.filter(p => cmp(p._1, t) > 0).map(_._2).sum +
+          sortedIvs.iterator.map { case (dlo, dhi, n) =>
+            assert(cmp(dlo, t) > 0 || cmp(dhi, t) <= 0,
+              s"madOutliers: threshold straddle for group ${gs.g}: bracket invariant broken")
+            if (cmp(dlo, t) > 0) n else 0L
+          }.sum
       }
-      (dec(gs.g), med, mad, gs.n, nOut.getOrElse(0L))
+      (decode(gs.g), med, mad, gs.n, nOut)
     }
     outlierK match {
-      case Some(_) =>
-        spark.createDataset(resolved.toSeq)
-          .toDF(groupCol, "med", "mad", "n", "n_outliers")
+      case Some(_) => spark.createDataset(resolved.toSeq).toDF(groupCol, "med", "mad", "n", "n_outliers")
       case None =>
-        spark.createDataset(resolved.toSeq.map(t => (t._1, t._2, t._3)))
-          .toDF(groupCol, "med", "mad")
+        spark.createDataset(resolved.toSeq.map(t => (t._1, t._2, t._3))).toDF(groupCol, "med", "mad")
     }
   }
 
-  /** High-cardinality path: nothing proportional to the number of
-    * groups touches the driver. Offsets = a running sum over the tiny
-    * counts frame, window-partitioned BY GROUP (each window holds only
-    * that group's ≤ partitions rows — no global single-task window);
-    * global ranks reach the data by equi-join on (pid, g) (AQE
-    * broadcasts the counts side while it is small, shuffles when it is
-    * not); the ≤ 2 order statistics per (group, percentile) are kept by
-    * an equi-join on (g, rank) against the wanted-positions frame.
+  /** The budget fallback: exact percentiles from one range-partitioned
+    * sort of (g, v) — Spark's sort machinery spreads it over ALL
+    * partitions, spilling as needed — and global ranks, with nothing
+    * proportional to the number of groups on the driver. Offsets are a
+    * running sum over the per-(partition, group) counts, windowed BY
+    * GROUP (each window holds only that group's ≤ partitions rows);
+    * global ranks reach the data by equi-join on (pid, g), and the ≤ 2
+    * order statistics per (group, percentile) by an equi-join on
+    * (g, rank) against the wanted positions.
+    *
+    * @param base encoded (g, v) rows, v non-null
+    * @return encoded (g, p, value), unordered
     */
-  private def distributedPercentiles(
-      sorted: DataFrame,
-      countsRdd: org.apache.spark.rdd.RDD[(Int, String, Long)],
-      ps: Seq[Double],
-      groupCol: String
-  ): DataFrame = {
-    val spark = sorted.sparkSession
+  private def sortRankPercentiles(base: DataFrame, ps: Seq[Double]): DataFrame = {
+    val spark = base.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    // equi-joins drop null keys, but a null GROUP is a real group (the
-    // broadcast path keeps it) — encode into a never-null key with a
-    // collision-free sentinel prefix, decode on output
-    def enc(g: String): String = if (g == null) "\u0000" else "\u0001" + g
-    val counts = countsRdd.map { case (pid, g, c) => (pid, enc(g), c) }
+    val parts = math.max(spark.sparkContext.defaultParallelism, 1)
+    // frozen once: the count pass and the rank pass must observe the SAME
+    // partitioning (range bounds vary per run; ranks do not)
+    val sorted = base
+      .repartitionByRange(parts, col("g"), col("v"))
+      .sortWithinPartitions("g", "v")
+      .as[(String, Double)]
+      .localCheckpoint()
+    val counts = sorted.rdd
+      .mapPartitionsWithIndex { (pid, it) =>
+        val m = mutable.LinkedHashMap.empty[String, Long]
+        it.foreach { case (g, _) => m.update(g, m.getOrElse(g, 0L) + 1) }
+        m.iterator.map { case (g, c) => (pid, g, c) }
+      }
       .toDF("pid", "g", "cnt")
     val offsets = counts.withColumn(
       "off",
@@ -780,13 +452,13 @@ object Quantiles {
       .distinct()
     // local ranks are free (rows arrive grouped + sorted per task);
     // globalize by joining the per-(pid, g) offset
-    val local = sorted.as[(String, Double)].rdd
+    val local = sorted.rdd
       .mapPartitionsWithIndex { (pid, it) =>
-        val seen = scala.collection.mutable.HashMap.empty[String, Long]
+        val seen = mutable.HashMap.empty[String, Long]
         it.map { case (g, v) =>
           val r = seen.getOrElse(g, 0L)
           seen.update(g, r + 1)
-          (pid, enc(g), r, v)
+          (pid, g, r, v)
         }
       }
       .toDF("pid", "g", "lrank", "v")
@@ -795,8 +467,9 @@ object Quantiles {
       .withColumn("rank", col("off") + col("lrank"))
       .join(wanted, Seq("g", "rank")) // ≤ 2 × groups × percentiles rows survive
       .select("g", "rank", "v")
-    // Percentile's interpolation, as Spark double expressions — the
-    // same IEEE ops, in the same order, as the broadcast path's Scala
+    // Percentile's interpolation as Spark double expressions: the same
+    // IEEE ops in the same order as `interpolate` (SQL = on doubles is
+    // Spark's order, NaN = NaN included)
     val vLo = picked.select(col("g"), col("rank").as("lo"), col("v").as("v_lo"))
     val vHi = picked.select(col("g"), col("rank").as("hi"), col("v").as("v_hi"))
     positions
@@ -804,14 +477,10 @@ object Quantiles {
       .join(vHi, Seq("g", "hi"))
       .withColumn(
         "value",
-        when(col("hi") === col("lo"), col("v_lo"))
+        when(col("hi") === col("lo") || col("v_lo") === col("v_hi"), col("v_lo"))
           .otherwise(
             (col("hi").cast("double") - col("pos")) * col("v_lo") +
               (col("pos") - col("lo").cast("double")) * col("v_hi")))
-      .select(
-        when(col("g") === lit("\u0000"), lit(null).cast("string"))
-          .otherwise(expr("substring(g, 2)")).as(groupCol),
-        col("p"), col("value"))
-      .orderBy(asc_nulls_first(groupCol), col("p"))
+      .select("g", "p", "value")
   }
 }

@@ -755,8 +755,7 @@ object Extras {
     * with |x − med| > 1.5·MAD. Exact interpolated percentiles in both
     * engines (x02 proved parity), and every derived value is a single
     * IEEE op on identical inputs — so the comparison is bit-exact, no
-    * tolerance. The deviation frame feeds two consumers (the MAD
-    * rank pass and the outlier count), so it is materialized once.
+    * tolerance.
     *
     * Memory shape: the whole answer comes from ONE call to
     * [[graft.operators.Quantiles.madOutliers]] — the fused selection
@@ -766,9 +765,9 @@ object Extras {
     * plus one terminal collect of the ambiguous cells, NO per-group
     * value buffer, NO global sort, no corpus-sized materialization —
     * bit-identical to `percentile()` (OperatorsSpec parity) and hence
-    * to this PERCENTILE_CONT oracle. History: the range-sort form read
-    * 42.5 s at sf10, two separate refinedPercentiles selections 22.1 s
-    * (~6 scans), the fused form pays 2 scans total (cells + terminal).
+    * to this PERCENTILE_CONT oracle. At sf10 a range-sort form read
+    * 42.5 s and two separate bisection selections 22.1 s (~6 scans);
+    * this form pays 2 scans total (cells + terminal).
     * [[x32MadSampled]] remains the sampled-threshold variant.
     */
   val x24MadOutliers = Query(
@@ -1105,18 +1104,16 @@ object Extras {
   )
 
   /** Exact per-group percentiles WITHOUT a per-group buffer
-    * ([[graft.operators.Quantiles.refinedPercentiles]]): selection by
-    * iterative histogram refinement — integer bucket counts with
-    * map-side combine, the driver bisecting each target rank into its
-    * bucket, a terminal distinct-value walk — instead of any global
-    * sort. Same values as `percentile()` bit-for-bit (selection
-    * returns exact order statistics; the interpolation replays its
-    * exact arithmetic) — this is the form that survives a group too
-    * large for one task's memory, where x02/x24's aggregate cannot,
-    * and it beats the range-sort form
-    * ([[graft.operators.Quantiles.rankedPercentiles]], kept as the
-    * high-group-cardinality path) ~2.5× at sf10 because nothing
-    * corpus-sized is ever sorted, shuffled, or checkpointed.
+    * ([[graft.operators.Quantiles.percentiles]]): selection, not sort —
+    * one map-side-combined bits-histogram scan of (group, cell) counts
+    * with exact cell min/max, the driver locating each target rank's
+    * cell, and one collect of the ambiguous cells' exact values. Same
+    * values as `percentile()` bit-for-bit (selection returns exact
+    * order statistics; the interpolation replays its exact
+    * arithmetic) — this is the form that survives a group too large
+    * for one task's memory, where x02's aggregate cannot; nothing
+    * corpus-sized is sorted, shuffled, or checkpointed. The output
+    * arrives ordered by (l_returnflag, p).
     */
   val x33RankedQuantiles = Query(
     "x33_ranked_quantiles",
@@ -1133,8 +1130,7 @@ object Extras {
     (spark, dir) => {
       val t = Tables(spark, dir)
       graft.operators.Quantiles
-        .refinedPercentiles(t.lineitem, "l_returnflag", "l_extendedprice", Seq(0.5, 0.9))
-        .orderBy("l_returnflag", "p")
+        .percentiles(t.lineitem, "l_returnflag", "l_extendedprice", Seq(0.5, 0.9))
     }
   )
 

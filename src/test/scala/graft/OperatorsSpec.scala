@@ -1546,34 +1546,61 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  // order-sensitive, bit-exact rows: NaN equals NaN, -0.0 differs from 0.0
+  private def bitRows(rows: Seq[org.apache.spark.sql.Row]): Seq[Seq[Any]] =
+    rows.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case x => x
+    })
+  private def sortedBitRows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    bitRows(df.collect().toSeq).sortBy(_.map(String.valueOf).mkString("\u0001"))
+
+  /** percentile() per (group, p), all-null groups dropped, in the
+    * percentiles output order (group nulls first, then p).
+    */
+  private def percentileRows(df: org.apache.spark.sql.DataFrame, g: String, v: String,
+      ps: Seq[Double]): Seq[org.apache.spark.sql.Row] =
+    df.groupBy(g).agg(array(ps.map(p => expr(s"percentile($v, $p)")): _*).as("vals"))
+      .collect().toSeq
+      .flatMap(r => ps.zip(r.getSeq[Any](1)).collect {
+        case (p, x: Double) => org.apache.spark.sql.Row(r.get(0), p, x)
+      })
+      .sortBy(r => (Option(r.getString(0)), r.getDouble(1)))
+
   test("ranked percentiles are bit-identical to the percentile aggregate, partition-invariant") {
     import graft.operators.Quantiles
     val li = Tables(spark, sf).lineitem
     val ps = Seq(0.25, 0.5, 0.9)
-    def viaAgg = li.groupBy("l_returnflag")
-      .agg(expr("percentile(l_extendedprice, 0.25)").as("p25"),
-        expr("percentile(l_extendedprice, 0.5)").as("p50"),
-        expr("percentile(l_extendedprice, 0.9)").as("p90"))
-      .collect()
-      .flatMap(r => Seq((r.getString(0), 0.25, r.getDouble(1)),
-        (r.getString(0), 0.5, r.getDouble(2)), (r.getString(0), 0.9, r.getDouble(3))))
-      .sorted.toSeq
-    def viaRank(df: org.apache.spark.sql.DataFrame) =
-      Quantiles.rankedPercentiles(df, "l_returnflag", "l_extendedprice", ps)
-        .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).sorted.toSeq
-    val agg = viaAgg
-    assert(viaRank(li) == agg, "rank arithmetic must replay percentile() bit-exactly")
-    assert(viaRank(li.repartition(7)) == agg, "ranks are global — partitioning must not matter")
+    val agg = bitRows(percentileRows(li, "l_returnflag", "l_extendedprice", ps))
+    def run(df: org.apache.spark.sql.DataFrame) =
+      bitRows(Quantiles.percentiles(df, "l_returnflag", "l_extendedprice", ps).collect().toSeq)
+    assert(run(li) == agg, "the cell selection must replay percentile() bit-exactly, in order")
+    assert(run(li.repartition(7)) == agg, "cell counts are global: partitioning must not matter")
+    // coarse cells (2 mantissa bits) leave most ranks inside multi-value
+    // cells, so scan 2 resolves them; a budget below zero forces the
+    // sort-rank fallback
+    for ((bits, budget) <- Seq((2, Quantiles.CollectBudget), (Quantiles.MantissaBits, -1L)))
+      assert(bitRows(Quantiles.percentilesCore(li, "l_returnflag", "l_extendedprice", ps,
+        bits, budget).collect().toSeq) == agg, s"mantissaBits=$bits collectBudget=$budget")
   }
 
-  test("property: rankedPercentiles equals percentile() on random data with ties and nulls") {
+  /** Random (g, v) frames: heavy ties, negatives, nulls, and 0, 1 or 8
+    * special values (NaN, ±∞) per 8 finite ones, so medians land on ±∞
+    * and NaN. Each run's percentilesCore settings must replay
+    * percentile() bit-exactly on every sample. */
+  private def checkPercentilesProperty(runs: Seq[(Int, Long)]): Unit = {
     import graft.operators.Quantiles
     import org.scalacheck.Gen
+    val ps = Seq(0.3, 0.5, 0.9)
     val gen = for {
       n <- Gen.chooseNum(5, 120)
+      w <- Gen.oneOf(0, 1, 8)
       gs <- Gen.listOfN(n, Gen.oneOf("a", "b", "c"))
-      // integers ×0.25: heavy ties, negatives, exact halves
-      vs <- Gen.listOfN(n, Gen.chooseNum(-40, 40).map(_ * 0.25))
+      // integers ×0.1: heavy ties, negatives, and inexact decimals, so
+      // equal neighbours at a fractional rank need percentile()'s
+      // no-interpolation case to stay bit-exact
+      vs <- Gen.listOfN(n, Gen.frequency(8 -> Gen.chooseNum(-40, 40).map(_ * 0.1),
+        w -> Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)))
       nullIdx <- Gen.listOfN(n / 5, Gen.chooseNum(0, n - 1))
     } yield (gs.zip(vs), nullIdx.toSet)
     Iterator.continually(gen.sample).flatten.take(12).foreach { case (rows, nullIdx) =>
@@ -1581,140 +1608,106 @@ class OperatorsSpec extends SparkSpec {
         (g, if (nullIdx(i)) null.asInstanceOf[java.lang.Double] else java.lang.Double.valueOf(v))
       }
       val df = data.toDF("g", "v")
-      val viaAgg = df.groupBy("g")
-        .agg(expr("percentile(v, 0.3)").as("p30"), expr("percentile(v, 0.5)").as("p50"))
-        .collect()
-        .flatMap(r => Seq((r.getString(0), 0.3, if (r.isNullAt(1)) null else r.getDouble(1)),
-          (r.getString(0), 0.5, if (r.isNullAt(2)) null else r.getDouble(2))))
-        .filter(_._3 != null) // all-null group: percentile() yields null, ranked drops the group
-        .map(t => (t._1, t._2, t._3.asInstanceOf[Double])).sorted.toSeq
-      val viaRank = Quantiles.rankedPercentiles(df, "g", "v", Seq(0.3, 0.5))
-        .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).sorted.toSeq
-      assert(viaRank == viaAgg, s"data=$data")
+      val ref = bitRows(percentileRows(df, "g", "v", ps))
+      for ((bits, budget) <- runs)
+        assert(bitRows(Quantiles.percentilesCore(df, "g", "v", ps, bits, budget).collect().toSeq) ==
+          ref, s"mantissaBits=$bits collectBudget=$budget data=$data")
     }
   }
 
-  test("refinedPercentiles is bit-identical to percentile() and to rankedPercentiles") {
+  test("property: percentiles equal percentile() with ties, nulls, NaN and infinities") {
     import graft.operators.Quantiles
-    val li = Tables(spark, sf).lineitem
-    val ps = Seq(0.25, 0.5, 0.9)
-    def collect(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).sorted.toSeq
-    val refined = collect(Quantiles.refinedPercentiles(li, "l_returnflag", "l_extendedprice", ps))
-    val ranked = collect(Quantiles.rankedPercentiles(li, "l_returnflag", "l_extendedprice", ps))
-    assert(refined == ranked, "selection and rank arithmetic must agree bit-exactly")
-    assert(collect(Quantiles.refinedPercentiles(
-      li.repartition(7), "l_returnflag", "l_extendedprice", ps)) == refined,
-      "integer bucket counts are partition-invariant")
-    // tiny bins + tiny budget force MULTIPLE refinement passes and the
-    // terminal distinct-value walk — the driver loop, not just pass 1
-    assert(collect(Quantiles.refinedPercentiles(
-      li, "l_returnflag", "l_extendedprice", ps, bins = 2, collectBudget = 8)) == refined,
-      "multi-pass bisection must converge to the same exact order statistics")
+    // default cells, then the forced sort-rank fallback
+    checkPercentilesProperty(Seq((Quantiles.MantissaBits, Quantiles.CollectBudget),
+      (Quantiles.MantissaBits, -1L)))
   }
 
-  test("property: refinedPercentiles equals percentile() on random data with ties and nulls") {
+  test("property: coarse-cell percentiles equal percentile() on random data") {
     import graft.operators.Quantiles
-    import org.scalacheck.Gen
-    val gen = for {
-      n <- Gen.chooseNum(5, 120)
-      gs <- Gen.listOfN(n, Gen.oneOf("a", "b", "c"))
-      vs <- Gen.listOfN(n, Gen.chooseNum(-40, 40).map(_ * 0.25))
-      nullIdx <- Gen.listOfN(n / 5, Gen.chooseNum(0, n - 1))
-    } yield (gs.zip(vs), nullIdx.toSet)
-    Iterator.continually(gen.sample).flatten.take(10).foreach { case (rows, nullIdx) =>
-      val data = rows.zipWithIndex.map { case ((g, v), i) =>
-        (g, if (nullIdx(i)) null.asInstanceOf[java.lang.Double] else java.lang.Double.valueOf(v))
-      }
-      val df = data.toDF("g", "v")
-      val viaAgg = df.groupBy("g")
-        .agg(expr("percentile(v, 0.3)").as("p30"), expr("percentile(v, 0.5)").as("p50"))
-        .collect()
-        .flatMap(r => Seq((r.getString(0), 0.3, if (r.isNullAt(1)) null else r.getDouble(1)),
-          (r.getString(0), 0.5, if (r.isNullAt(2)) null else r.getDouble(2))))
-        .filter(_._3 != null)
-        .map(t => (t._1, t._2, t._3.asInstanceOf[Double])).sorted.toSeq
-      // bins=4 stresses the descent; ties land whole value classes in one bucket
-      val viaRefined = Quantiles.refinedPercentiles(df, "g", "v", Seq(0.3, 0.5), bins = 4)
-        .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).sorted.toSeq
-      assert(viaRefined == viaAgg, s"data=$data")
-    }
+    // 3 mantissa bits: coarse cells reach every resolution branch
+    checkPercentilesProperty(Seq((3, Quantiles.CollectBudget)))
+  }
+
+  test("percentiles keep the null group; the sort-rank fallback agrees bit-exactly") {
+    import graft.operators.Quantiles
+    // d: at p = 0.3 the interpolation 0.7·0.1 + 0.3·0.1 reads
+    // 0.09999999999999999, where percentile() returns 0.1 uninterpolated
+    val data = Seq[(String, java.lang.Double)](("a", 1.0), ("a", 2.0), ("a", 5.0), ("b", 3.0),
+      ("b", 4.0), (null, 7.0), (null, 9.0), ("c", null), ("d", 0.1), ("d", 0.1))
+    val df = data.toDF("g", "v")
+    val ps = Seq(0.9, 0.3, 0.5) // unordered on purpose: the output orders by p
+    val ref = bitRows(percentileRows(df, "g", "v", ps))
+    assert(ref.map(_.head).distinct == Seq(null, "a", "b", "d"), "the all-null group c is dropped")
+    for (budget <- Seq(Quantiles.CollectBudget, -1L))
+      assert(bitRows(Quantiles.percentilesCore(df, "g", "v", ps, Quantiles.MantissaBits, budget)
+        .collect().toSeq) == ref, s"collectBudget=$budget")
+    for (bad <- Seq(1.5, -0.1, Double.NaN))
+      intercept[IllegalArgumentException](Quantiles.percentiles(df, "g", "v", Seq(0.5, bad)))
   }
 
   test("madByGroup fuses median+MAD and is bit-identical to the percentile() form") {
     import graft.operators.Quantiles
     val li = Tables(spark, sf).lineitem
-    def reference(df: org.apache.spark.sql.DataFrame): Seq[(String, Double, Double)] = {
+    def reference(df: org.apache.spark.sql.DataFrame) = {
       val med = df.groupBy("l_returnflag")
         .agg(expr("percentile(l_extendedprice, 0.5)").as("med"))
-      df.join(broadcast(med), "l_returnflag")
+      sortedBitRows(df.join(broadcast(med), "l_returnflag")
         .withColumn("adev", abs(col("l_extendedprice") - col("med")))
         .groupBy("l_returnflag")
-        .agg(min("med").as("med"), expr("percentile(adev, 0.5)").as("mad"))
-        .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).sorted.toSeq
+        .agg(min("med").as("med"), expr("percentile(adev, 0.5)").as("mad")))
     }
-    def collect(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).sorted.toSeq
     val ref = reference(li.select("l_returnflag", "l_extendedprice"))
-    val fused = collect(Quantiles.madByGroup(li, "l_returnflag", "l_extendedprice"))
+    val fused = sortedBitRows(Quantiles.madByGroup(li, "l_returnflag", "l_extendedprice"))
     assert(fused == ref, "fused selection must replay percentile-median and percentile-MAD bit-exactly")
-    assert(collect(Quantiles.madByGroup(
+    assert(sortedBitRows(Quantiles.madByGroup(
       li.repartition(7), "l_returnflag", "l_extendedprice")) == fused,
       "bits-histogram cells are partition-invariant")
     // coarse cells (2 mantissa bits) force wide ambiguity brackets and a
-    // large terminal collect — stresses the interval-arithmetic path
-    assert(collect(Quantiles.madByGroup(
-      li, "l_returnflag", "l_extendedprice", mantissaBits = 2)) == fused,
-      "coarse cells must still resolve exactly")
-    // zero collect budget forces the two-refinedPercentiles fallback
-    assert(collect(Quantiles.madByGroup(
-      li, "l_returnflag", "l_extendedprice", collectBudget = 0L)) == fused,
-      "budget fallback must agree bit-exactly")
+    // large terminal collect — stresses the interval-arithmetic path; a
+    // budget below zero forces the sort-rank fallback
+    for ((bits, budget) <- Seq((2, Quantiles.CollectBudget), (Quantiles.MantissaBits, -1L)))
+      assert(sortedBitRows(Quantiles.madCore(li, "l_returnflag", "l_extendedprice", None,
+        bits, budget)) == fused, s"mantissaBits=$bits collectBudget=$budget")
   }
 
   test("madOutliers counts threshold exceedances exactly from the same two scans") {
     import graft.operators.Quantiles
     val li = Tables(spark, sf).lineitem
-    def reference(k: Double): Seq[(String, Double, Double, Long, Long)] = {
+    def reference(k: Double) = {
       val med = li.groupBy("l_returnflag")
         .agg(expr("percentile(l_extendedprice, 0.5)").as("med"))
       val dev = li.join(broadcast(med), "l_returnflag")
         .withColumn("adev", abs(col("l_extendedprice") - col("med")))
       val mad = dev.groupBy("l_returnflag").agg(expr("percentile(adev, 0.5)").as("mad"))
-      dev.join(broadcast(mad), "l_returnflag")
+      sortedBitRows(dev.join(broadcast(mad), "l_returnflag")
         .groupBy("l_returnflag", "med", "mad")
         .agg(count(lit(1)).as("n"),
           count(when(col("adev") > lit(k) * col("mad"), 1)).as("n_outliers"))
-        .select("l_returnflag", "med", "mad", "n", "n_outliers")
-        .collect()
-        .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getLong(3), r.getLong(4)))
-        .sorted.toSeq
+        .select("l_returnflag", "med", "mad", "n", "n_outliers"))
     }
-    def run(k: Double, mb: Int = 12) =
-      Quantiles.madOutliers(li, "l_returnflag", "l_extendedprice", k = k, mantissaBits = mb)
-        .collect()
-        .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getLong(3), r.getLong(4)))
-        .sorted.toSeq
+    def run(k: Double, bits: Int = Quantiles.MantissaBits, budget: Long = Quantiles.CollectBudget) =
+      sortedBitRows(Quantiles.madCore(li, "l_returnflag", "l_extendedprice", Some(k), bits, budget))
     for (k <- Seq(1.5, 0.5, 3.0)) {
       val ref = reference(k)
-      assert(run(k) == ref, s"k=$k")
-      assert(run(k, mb = 2) == ref, s"k=$k coarse cells") // wide brackets, big collect
+      assert(sortedBitRows(Quantiles.madOutliers(li, "l_returnflag", "l_extendedprice", k)) == ref,
+        s"k=$k")
+      assert(run(k, bits = 2) == ref, s"k=$k coarse cells") // wide brackets, big collect
     }
-    // budget fallback path must agree too
-    assert(Quantiles.madOutliers(li, "l_returnflag", "l_extendedprice", k = 1.5,
-      collectBudget = 0L)
-      .collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getLong(3), r.getLong(4)))
-      .sorted.toSeq == reference(1.5))
+    assert(run(1.5, budget = -1L) == reference(1.5), "the sort-rank fallback must agree too")
   }
 
   test("property: madByGroup equals percentile() MAD on random data with ties, nulls, negatives") {
     import graft.operators.Quantiles
     import org.scalacheck.Gen
+    val k = 1.5
     val gen = for {
       n <- Gen.chooseNum(4, 120)
+      // 0, 1 or 8 special values per 8 finite ones: medians and MADs
+      // land on ±∞ and NaN
+      w <- Gen.oneOf(0, 1, 8)
       gs <- Gen.listOfN(n, Gen.oneOf("a", "b", "c"))
-      vs <- Gen.listOfN(n, Gen.chooseNum(-40, 40).map(_ * 0.25))
+      vs <- Gen.listOfN(n, Gen.frequency(8 -> Gen.chooseNum(-40, 40).map(_ * 0.25),
+        w -> Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)))
       nullIdx <- Gen.listOfN(n / 5, Gen.chooseNum(0, n - 1))
     } yield (gs.zip(vs), nullIdx.toSet)
     Iterator.continually(gen.sample).flatten.take(12).foreach { case (rows, nullIdx) =>
@@ -1722,22 +1715,26 @@ class OperatorsSpec extends SparkSpec {
         (g, if (nullIdx(i)) null.asInstanceOf[java.lang.Double] else java.lang.Double.valueOf(v))
       }
       val df = data.toDF("g", "v")
-      val med = df.filter(col("v").isNotNull).groupBy("g")
-        .agg(expr("percentile(v, 0.5)").as("med"))
-      val ref = df.join(broadcast(med), "g")
-        .withColumn("adev", abs(col("v") - col("med")))
-        .groupBy("g")
-        .agg(min("med").as("med"), expr("percentile(adev, 0.5)").as("mad"))
-        .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).sorted.toSeq
+      val vals = df.filter(col("v").isNotNull)
+      val med = vals.groupBy("g").agg(expr("percentile(v, 0.5)").as("med"))
+      val dev = vals.join(broadcast(med), "g").withColumn("adev", abs(col("v") - col("med")))
+      val mad = dev.groupBy("g").agg(expr("percentile(adev, 0.5)").as("mad"))
+      val ref = sortedBitRows(dev.join(broadcast(mad), "g")
+        .groupBy("g", "med", "mad")
+        .agg(count(lit(1)).as("n"),
+          count(when(col("adev") > lit(k) * col("mad"), 1)).as("n_outliers"))
+        .select("g", "med", "mad", "n", "n_outliers"))
+      assert(sortedBitRows(Quantiles.madByGroup(df, "g", "v")) == ref.map(_.take(3)), s"data=$data")
       // tiny mantissa bits → single-binade coarse cells, exercising every
-      // resolution branch (exact bounds, point cells, interval sweep)
-      val fused = Quantiles.madByGroup(df, "g", "v", mantissaBits = 3)
-        .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).sorted.toSeq
-      assert(fused == ref, s"data=$data")
+      // resolution branch (exact bounds, point cells, interval sweep); a
+      // budget below zero forces the sort-rank fallback
+      for ((bits, budget) <- Seq((3, Quantiles.CollectBudget), (Quantiles.MantissaBits, -1L)))
+        assert(sortedBitRows(Quantiles.madCore(df, "g", "v", Some(k), bits, budget)) == ref,
+          s"mantissaBits=$bits collectBudget=$budget data=$data")
     }
   }
 
-  test("rankedPercentiles at 100k groups routes distributed and stays bit-identical") {
+  test("percentiles at 100k groups take the sort-rank fallback, bit-identical") {
     import graft.operators.Quantiles
     val nGroups = 100000L
     // 3 values per group, deterministic, with ties and interpolation points
@@ -1746,24 +1743,14 @@ class OperatorsSpec extends SparkSpec {
         ((col("id") / nGroups) * ((col("id") % 17) + lit(1))).cast("double").as("v"))
     val viaAgg = df.groupBy("g").agg(expr("percentile(v, 0.5)").as("m"))
       .collect().map(r => (r.getString(0), r.getDouble(1))).sorted.toSeq
-    // default threshold (10k entries) < 100k groups → distributed path
-    val viaRank = Quantiles.rankedPercentiles(df, "g", "v", Seq(0.5))
-      .collect().map(r => (r.getString(0), r.getDouble(2))).sorted.toSeq
-    assert(viaRank == viaAgg, "distributed-offsets path must replay percentile() bit-exactly")
-  }
-
-  test("rankedPercentiles distributed and broadcast paths agree, incl. null groups") {
-    import graft.operators.Quantiles
-    val data = Seq(("a", 1.0), ("a", 2.0), ("a", 5.0), ("b", 3.0), ("b", 4.0),
-      (null, 7.0), (null, 9.0))
-    val df = data.toDF("g", "v")
-    val ps = Seq(0.25, 0.5, 0.9)
-    def run(threshold: Long) =
-      Quantiles.rankedPercentiles(df, "g", "v", ps, maxBroadcastEntries = threshold)
-        .collect().map(r => (Option(r.getString(0)), r.getDouble(1), r.getDouble(2)))
-        .sorted.toSeq
-    assert(run(0L) == run(1000000L),
-      "forcing the join path must not change a single bit, null group included")
+    val out = Quantiles.percentiles(df, "g", "v", Seq(0.5))
+    // the cell selection builds its rows on the driver (a local relation);
+    // past the group budget the sort-rank fallback stays distributed
+    assert(!out.queryExecution.analyzed.collectLeaves()
+      .exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
+      "100k groups exceed the group budget")
+    val viaRank = out.collect().map(r => (r.getString(0), r.getDouble(2))).sorted.toSeq
+    assert(viaRank == viaAgg, "the sort-rank fallback must replay percentile() bit-exactly")
   }
 
   test("budgetSelect equals the global-window cumsum, partition-invariant, exact boundary") {

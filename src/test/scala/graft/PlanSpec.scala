@@ -764,6 +764,14 @@ class PlanSpec extends SparkSpec {
       "td53_threshold_sweep" -> 23))
   }
 
+  test("every exact-percentile catalog row stays within its job budget") {
+    // the rows on the one cell selection of `Quantiles` (median, MAD and
+    // outliers; percentiles; tertile cuts), the same budget rule as the
+    // ANN rows above
+    assertWithinBudgets(Seq(
+      "x24_mad_outliers" -> 5, "x33_ranked_quantiles" -> 2, "td45_perplexity_buckets" -> 18))
+  }
+
   private def assertWithinBudgets(budgets: Seq[(String, Int)]): Unit = {
     val sc = spark.sparkContext
     // budgets count rows over the uncached tables: a frame another

@@ -285,8 +285,8 @@ def main():
             f.write(f"| {q} | {t1:.2f} | {t10:.2f} | {rs} |\n")
         f.write("\nFootnote — **mm07_real_audio_decode is map-only** (zero "
                 "shuffle at both notches, per the spread JSON) and its per-row "
-                "budget is MEASURED (`tools.AudioBudget`, single-thread tight "
-                "loop on the same fixture clips): full decode ~37 us/row, of "
+                "budget is MEASURED (single-thread tight loop over 20k "
+                "fixture clips, NOTES VERDICT 6): full decode ~37 us/row, of "
                 "which the `AudioSystem` SPI dispatch+stream setup is ~everything "
                 "for short clips — real codec work, linear by construction, not "
                 "a plan defect; wide sf10 "
