@@ -15,10 +15,11 @@ import org.apache.spark.sql.functions._
   *    verification restricted to candidates;
   *  - SimHash: per-row 64-bit sketch via the same kernel family,
   *    near-dup = equal sketch (or banded Hamming buckets);
-  *  - exact n-gram Jaccard / containment ([[Dedup.setSimPairs]]):
-  *    explode distinct shingles → self-join on shingle → per-pair
-  *    intersection counts; the O(pairs) step only materializes pairs
-  *    that share ≥1 shingle.
+  *  - exact n-gram Jaccard / containment ([[Dedup.setSimPairs]],
+  *    [[Dedup.shingleClasses]]): every route materializes one frame,
+  *    each document's sorted distinct gram hashes (id, hs); postings,
+  *    set sizes and class fingerprints are map-only projections of it,
+  *    and the O(pairs) step only forms pairs that share ≥1 shingle.
   */
 object Dedup {
 
@@ -620,21 +621,16 @@ object Dedup {
     graft.functions.Sketches.gramXxHashesCol(col(textCol), k)
   }
 
-  private def gramHashes(textCol: String, k: Int): Column =
-    explode(gramArray(textCol, k)).as("h")
-
-  /** (id, h): one row per distinct gram hash of each document. */
-  private def postings(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
-    df.select(col(idCol).as("id"), gramHashes(textCol, k))
-
   /** (id, hs): each document's distinct gram hashes as one ascending
-    * array (map-only: `gram_xxhashes` already dedupes).
+    * array (map-only: `gram_xxhashes` already dedupes). The one frame
+    * every exact set-similarity route builds from the text; its
+    * postings (id, h) are `explode(hs)`, its set sizes `size(hs)`.
     */
   private def gramSets(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
     df.select(col(idCol).as("id"), array_sort(gramArray(textCol, k)).as("hs"))
 
-  private def sizesOf(sh: DataFrame): DataFrame =
-    sh.groupBy("id").agg(count(lit(1)).as("n")) // postings are distinct already
+  private def postingsOf(sets: DataFrame): DataFrame =
+    sets.select(col("id"), explode(col("hs")).as("h"))
 
   /** (id_a, id_b, n_common, n_a, n_b, extra…) → (id_a, id_b, n_common,
     * <measure scores>, extra…) for the pairs reaching `threshold`.
@@ -695,11 +691,15 @@ object Dedup {
     * operator family whose cost is quadratic in duplicate multiplicity.
     */
   def exactPairFanout(df: DataFrame, textCol: String, k: Int = 3): Long =
+    pairFanout(df.select(gramArray(textCol, k).as("hs")))
+
+  /** [[exactPairFanout]] over gram sets `hs`. */
+  private def pairFanout(sets: DataFrame): Long =
     // n² and its sum run in DECIMAL: a single hyper-frequent shingle at
     // corpus scale squares past 2^63, and an ANSI overflow inside the
     // GATE would kill exactly the oversized run it is supposed to
     // reroute. Saturate to Long.MaxValue — "too big" is all callers ask.
-    df.select(gramHashes(textCol, k))
+    sets.select(explode(col("hs")).as("h"))
       .groupBy("h").agg(count(lit(1)).cast("decimal(19,0)").as("n"))
       .agg(sum(col("n") * col("n")).as("f"))
       .collect().headOption.flatMap(r => Option(r.get(0))).map {
@@ -740,6 +740,10 @@ object Dedup {
     * ([[verifyCandidates]]); standalone it is the oracle-verifiable
     * ground truth.
     *
+    * Every route reads one materialized frame, the per-document sorted
+    * gram-hash arrays (id, hs): postings are a lazy `explode(hs)` of
+    * it, set sizes `size(hs)`, and the gate's probe scans it too.
+    *
     * `maxFanout` picks the route; every route returns the same rows
     * (spec-proven), so the choice trades plan shape, never answers:
     *  - `Long.MaxValue`: all pairs, no probe — self-join every posting
@@ -762,10 +766,8 @@ object Dedup {
     * smaller side: prefix ⋈ full postings, where frequent grams still
     * join, but only through the few docs rare-poor enough to carry them
     * in a prefix — the posting-squared term collapses to Σ_h pfx_h·n_h.
-    * The route materializes one frame, the per-document sorted
-    * gram-hash arrays (id, hs); its postings are a lazy `explode(hs)`
-    * of it. Each candidate pair is then exact-verified by [[verified]]:
-    * one merge of the two docs' arrays, never a second posting join.
+    * Each candidate pair is then exact-verified by [[verified]]: one
+    * merge of the two docs' arrays, never a second posting join.
     */
   def setSimPairs(
       df: DataFrame,
@@ -777,6 +779,11 @@ object Dedup {
       maxFanout: Long = 2000000000L
   ): DataFrame = {
     requireThreshold(threshold)
+    // the one checkpoint: the probe, both self-join sides and the sizes
+    // (all pairs), or the df count, the prefix window, containment's
+    // full side and both verify joins (prefix) read it
+    val sets = gramSets(df, idCol, textCol, k).localCheckpoint()
+    val sh = postingsOf(sets)
     // maxFanout <= 0 decides the route with NO probe: fan ≥ 0 always,
     // and fan = 0 (an empty/shingle-free corpus) yields an empty result
     // from either path — so the probe scan would be paid only to learn
@@ -787,22 +794,15 @@ object Dedup {
     val fan =
       if (maxFanout == Long.MaxValue) 0L
       else if (maxFanout <= 0 && threshold > 0) Long.MaxValue
-      else exactPairFanout(df, textCol, k)
+      else pairFanout(sets)
+    if (fan > maxFanout && threshold <= 0) Checkpoints.dropBlocks(sets) // refused below
     require(fan <= maxFanout || threshold > 0,
       s"exact-pair fan-out $fan exceeds maxFanout=$maxFanout and threshold=0 " +
         "admits no prefix bound: restrict candidates first (minHashCandidates " +
         "→ exact verify) or raise the threshold")
-    if (fan <= maxFanout) {
-      // localCheckpoint: the postings feed the sizes and both self-join
-      // sides; materializing once replaces repeated evaluations of the
-      // regex-split/shingle/hash pipeline with one
-      val sh = postings(df, idCol, textCol, k).localCheckpoint()
-      scored(sh, sizesOf(sh), measure, threshold)
-    } else {
-      // the route's one checkpoint: the df count, the prefix window,
-      // containment's full side and both verify joins read it
-      val sets = gramSets(df, idCol, textCol, k).localCheckpoint()
-      val sh = sets.select(col("id"), explode(col("hs")).as("h"))
+    if (fan <= maxFanout)
+      scored(sh, sets.select(col("id"), size(col("hs")).cast("long").as("n")), measure, threshold)
+    else {
       val prefix = prefixPostings(sh, threshold)
       // prefix ⋈ prefix is symmetric: a.id < b.id names each pair once,
       // and grouping on (a.id, b.id) keeps the join's partitioning on
@@ -842,13 +842,22 @@ object Dedup {
     * component labels / tie-breaks expand exactly (the min over a
     * class IS its rep).
     *
-    * Frames: `perDoc` (id, fp, n) for expansion joins, `classes`
-    * (fp, n, rep, m), `repSh` (id, h) postings restricted to reps.
-    * All checkpointed — each feeds ≥ 2 consumers downstream.
+    * Frames, all over one checkpoint of the [[gramSets]] (id, hs):
+    * `perDoc` (id, fp, n) for expansion joins, map-only — `hs` is
+    * sorted and distinct, so fp = xxhash64(hs) and n = size(hs); the
+    * checkpointed `classes` (fp, n, rep, m); `repSh` (id, h), the lazy
+    * postings of the reps. A document with no k-gram has no postings
+    * and joins no class. [[release]] drops both checkpoints.
     */
-  final case class ShingleClasses(perDoc: DataFrame, classes: DataFrame, repSh: DataFrame) {
-    def release(): Unit =
-      Seq(perDoc, classes, repSh).foreach(Checkpoints.dropBlocks)
+  final class ShingleClasses private[Dedup] (sets: DataFrame) {
+    val perDoc: DataFrame = sets.where(size(col("hs")) > 0)
+      .select(col("id"), xxhash64(col("hs")).as("fp"), size(col("hs")).cast("long").as("n"))
+    val classes: DataFrame = perDoc.groupBy("fp", "n")
+      .agg(min(col("id")).as("rep"), count(lit(1)).as("m"))
+      .localCheckpoint() // rep semi-join + multiplicity joins + aggregates
+    val repSh: DataFrame =
+      postingsOf(sets.join(classes.select(col("rep").as("id")), Seq("id"), "left_semi"))
+    def release(): Unit = Seq(sets, classes).foreach(Checkpoints.dropBlocks)
   }
 
   def shingleClasses(
@@ -856,22 +865,8 @@ object Dedup {
       idCol: String,
       textCol: String,
       k: Int = 3
-  ): ShingleClasses = {
-    val sh = postings(df, idCol, textCol, k)
-      .localCheckpoint() // class fingerprints + rep postings read it
-    val perDoc = sh.groupBy("id")
-      .agg(xxhash64(sort_array(collect_list(col("h")))).as("fp"),
-        count(lit(1)).as("n"))
-      .localCheckpoint() // classes + caller expansion joins read it
-    val classes = perDoc.groupBy("fp", "n")
-      .agg(min(col("id")).as("rep"), count(lit(1)).as("m"))
-      .localCheckpoint() // rep semi-join + multiplicity joins + aggregates
-    val repSh = sh
-      .join(classes.select(col("rep").as("id")), Seq("id"), "left_semi")
-      .localCheckpoint() // both sides of the pair self-join
-    Checkpoints.dropBlocks(sh) // both consumers have materialized
-    ShingleClasses(perDoc, classes, repSh)
-  }
+  ): ShingleClasses =
+    new ShingleClasses(gramSets(df, idCol, textCol, k).localCheckpoint())
 
   /** Exact Jaccard pairs between class REPRESENTATIVES at `threshold`,
     * carrying each side's class multiplicity — the collapsed form of

@@ -1,15 +1,21 @@
 package graft.tools
 
-/** Dump `.explain("formatted")` for catalog queries to files — the
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** Dump the formatted FINAL plans of catalog queries to files — the
   * optimization-round evidence trail (plans/rNN/<query>_{before,after}.txt).
   *
   * Usage: runMain graft.tools.ExplainDump <outDir> <suffix> <q1,q2,...|all> [sfDir]
   *
-  * Each query's FINAL (AQE-executed) formatted plan is written to
-  * `<outDir>/<name>_<suffix>.txt`. The frame is executed first
-  * (noop-style collect of the plan via count on a cloned Dataset is
-  * wrong — we run the real frame) so `AdaptiveSparkPlan isFinalPlan=true`
-  * and the actual join strategies / AQEShuffleRead nodes are visible.
+  * Each query is built and collected once. A `QueryExecutionListener`
+  * records the formatted plan of every SQL execution that run starts:
+  * the checkpoint materializations and driver-side collects its build
+  * runs, then the collect of the returned frame. All are written, in
+  * execution order, to `<outDir>/<name>_<suffix>.txt`. Each plan is
+  * formatted after its execution has finished, so an adaptive plan
+  * shows `== Final Plan ==` with the join strategies and
+  * `AQEShuffleRead` nodes that actually ran.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -27,6 +33,19 @@ object ExplainDump {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
+    // listener events arrive on the bus thread, in execution order; a
+    // sentinel execution run after the query marks the end of its plans
+    val plans = new java.util.concurrent.LinkedBlockingQueue[(QueryExecution, String)]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.put(qe -> s"== SQL execution: $funcName ==\n${qe.explainString(FormattedMode)}")
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        plans.put(qe -> s"== SQL execution: $funcName (failed: ${e.getMessage}) ==\n")
+    })
+    def plansUntil(sentinel: QueryExecution): Seq[String] =
+      Iterator.continually(plans.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .map(p => if (p == null) sys.error("the listener bus did not drain") else p)
+        .takeWhile(_._1 ne sentinel).map(_._2).toSeq
     val all = graft.SparkEntry.queries
     val names =
       if (args(2) == "all") all.keys.toSeq.sorted
@@ -37,17 +56,16 @@ object ExplainDump {
         case Some(fn) =>
           try {
             spark.sparkContext.setJobDescription(s"explaindump: $name")
-            val df = fn(spark, dir)
-            df.write.format("noop").mode("overwrite").save() // finalize AQE plan
-            val formatted = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
-            java.nio.file.Files.writeString(
-              outDir.resolve(s"${name}_$suffix.txt"), formatted)
-            System.err.println(s"[explaindump] wrote $name")
+            fn(spark, dir).collect()
+            System.err.println(s"[explaindump] ran $name")
           } catch {
             case e: Throwable =>
               System.err.println(s"[explaindump] FAIL $name: ${e.getMessage}")
           }
+          val sentinel = spark.range(1)
+          sentinel.collect()
+          java.nio.file.Files.writeString(outDir.resolve(s"${name}_$suffix.txt"),
+            plansUntil(sentinel.queryExecution).mkString("\n"))
           // release checkpoint blocks between queries (Bench does the same)
           spark.sparkContext.getPersistentRDDs.values
             .foreach(_.unpersist(blocking = true))

@@ -4,11 +4,11 @@ import java.nio.file.{Files, Paths}
 
 /** Catalog-wide column-pruning audit: one session, every catalog
   * query, the DISTINCT `ReadSchema` lines of each AQE-final executed
-  * plan — the durable form of [[ExplainProbe]]. A scan that reads all
-  * columns for a two-column projection is wrong at 100 TB, and this is
-  * the artifact that makes such a regression fail loudly instead of
-  * silently: `PLANAUDIT.md` is checked in, and `--check` regenerates
-  * the audit and exits nonzero on ANY drift from the committed file.
+  * plan. A scan that reads all columns for a two-column projection is
+  * wrong at 100 TB, and this is the artifact that makes such a
+  * regression fail loudly instead of silently: `PLANAUDIT.md` is
+  * checked in, and `--check` regenerates the audit and exits nonzero
+  * on ANY drift from the committed file.
   *
   * Usage:
   *   runMain graft.tools.PlanAudit [sfDir]          # rewrite PLANAUDIT.md

@@ -1343,12 +1343,18 @@ class OperatorsSpec extends SparkSpec {
     // flagged docs = Σ m·[m ≥ 2 ∨ maxCross ≥ cut] — all integer-exact.
     // The corpus gets explicit shingle-set replicas (the sf1 GenData
     // shape the collapse exists for): every doc_id % 7 == 0 doc is
-    // re-delivered twice under new ids.
+    // re-delivered twice under new ids. Documents with no 3-gram (under
+    // three words, or NULL text) have no postings, so they must join no
+    // class: two of them sharing the empty set would otherwise form a
+    // class of intra pairs no direct join reports.
+    val noGrams = Seq[(Long, String)](
+      (3000001L, "too short"), (3000002L, "one"), (3000003L, null)).toDF("doc_id", "text")
     val corpus = docs.select("doc_id", "text")
       .unionByName(docs.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
       .unionByName(docs.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
+      .unionByName(noGrams)
       .localCheckpoint()
     val scs = Dedup.shingleClasses(corpus, "doc_id", "text", k = 3)
     val classes = scs.classes.collect()
@@ -1398,6 +1404,20 @@ class OperatorsSpec extends SparkSpec {
       s"components drifted (missing=${directComp -- expandedComp} " +
         s"extra=${expandedComp -- directComp})")
     scs.release()
+  }
+
+  test("shingleClasses then release leaves no persisted RDD behind") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val scs = Dedup.shingleClasses(docs, "doc_id", "text", k = 3)
+    val held = sc.getPersistentRDDs.keySet -- before
+    assert(held.size == 2, s"the gram sets and the classes are the two checkpoints: $held")
+    Dedup.repJaccardPairs(scs, threshold = 0.5).collect()
+    scs.release()
+    // a subset, not equality: the context cleaner may free blocks other
+    // suites left behind while this test runs
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"release() left persisted RDDs $leaked")
   }
 
   test("distributed global rank equals the window forms (rank, ntile)") {

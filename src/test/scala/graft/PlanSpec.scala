@@ -760,8 +760,8 @@ class PlanSpec extends SparkSpec {
     // budget rule as the ANN rows above
     assertWithinBudgets(Seq(
       "dd10_prefix_jaccard" -> 8, "dd22_gated_jaccard" -> 8, "dd23_gated_containment" -> 8,
-      "td06_jaccard_pairs" -> 7, "dd09_containment_pairs" -> 7, "dd05_dedup_groups" -> 19,
-      "td53_threshold_sweep" -> 23))
+      "td06_jaccard_pairs" -> 6, "dd09_containment_pairs" -> 6, "dd05_dedup_groups" -> 16,
+      "td53_threshold_sweep" -> 20))
   }
 
   test("every exact-percentile catalog row stays within its job budget") {
